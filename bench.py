@@ -73,6 +73,15 @@ def host_probe(spark) -> float:
     return round(best, 3)
 
 
+def _cpus() -> int:
+    """The run's core count from ``SPARK_GRAFT_CPUS``; ``*`` (any
+    ``local[]`` spec that is not a number) means every core."""
+    try:
+        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    except ValueError:
+        return os.cpu_count() or 1
+
+
 def main() -> None:
     import gc
 
@@ -334,7 +343,7 @@ def main() -> None:
             # probe normalizes box SPEED, not core count; inherited
             # r12 breakage when the driver's c8 refresh landed as the
             # committed BENCH_DETAIL)
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": _cpus(),
             "sf": sf_val,
         }
     )
@@ -362,7 +371,7 @@ def main() -> None:
             ),
             "host_probe_seconds": probe_sec,
             "fresh_warehouse": fresh_mode,
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": _cpus(),
             "sf": sf_val,
             "queries": timings,
         },

@@ -21,6 +21,22 @@ Every builder takes ``(spark, sf_dir)`` and returns a DataFrame whose
 column names/types exactly match its DuckDB oracle twin in
 ``ORACLE_SQL`` (same module, kept adjacent so they evolve together).
 
+Eight of the nine are projections or global aggregates over two shared
+frames, built from one ``events`` read by ``report_frames``:
+
+- the **daily frame** (``_daily``): one row per event date with the
+  day's avg/max/min and, from an unpartitioned window over those
+  ≤#days rows, the anchor-day flag, the historic average and the last
+  event time — every summary scalar plus the trend series;
+- the **changes frame** (``_changes``): the baseline-vs-current
+  comparison over the 3-day window, holding both the "today" rows
+  slower than their baseline (regressions) and the rows more than 40%
+  faster (improvements), flagged by ``regression``.
+
+``pipeline.run_report`` collects each frame once; the registered
+builders read the same frames, so there is one code path.
+``q_samples_today`` stays its own query.
+
 Scale notes: the anchor date is a 1-row aggregate broadcast into the
 fact scan (no driver round-trip, no collect); the baseline-vs-current
 comparison joins a ≤#distinct-keys row aggregate against the fact
@@ -30,7 +46,7 @@ shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
 from tableau_dashboard_performance_etl_automation_spark.functions.expressions import (
@@ -94,72 +110,165 @@ def _current_window(e_anchored: DataFrame, lookback_days: int = 0) -> DataFrame:
     )
 
 
-def _daily_avg_int() -> F.Column:
-    """floor-int of a float-noise-rounded AVG — deterministic across
-    Spark and DuckDB (see functions.expressions.floor_int)."""
-    return F.floor(F.round(F.avg("value"), 4)).cast("int")
+# --- shared frames --------------------------------------------------------
+
+#: Output columns of the baseline-vs-current comparison (Q7/Q8).
+COMPARISON_COLUMNS = (
+    "avg_elapsed_ms",
+    "current_elapsed_ms",
+    "response_message",
+    "percentage_difference",
+)
+
+
+def _daily(e: DataFrame) -> DataFrame:
+    """One row per event date (the NULL date included), sorted by date.
+
+    ``summary_value``/``max_value``/``min_value`` are the day's
+    floor-int avg/max/min; the avg is rounded before the floor so float
+    noise cannot differ between Spark and DuckDB (see
+    functions.expressions.floor_int). The unpartitioned window runs
+    over the ≤#days aggregate rows, not over events: it adds
+    ``is_anchor`` (the max-date day, the CURRENT_DATE stand-in), the
+    all-time average of the daily avg and the last event time, which
+    are the same on every row.
+    """
+    all_days = Window.partitionBy()
+    days = e.groupBy("event_date").agg(
+        F.round(F.avg("value"), 4).alias("daily_avg"),
+        F.max("value").alias("day_max"),
+        F.min("value").alias("day_min"),
+        F.max("ts").alias("day_last_ts"),
+    )
+    return days.select(
+        F.date_format("event_date", "yyyy-MM-dd").alias("summary_date"),
+        floor_int(F.col("daily_avg")).alias("summary_value"),
+        floor_int(F.col("day_max")).alias("max_value"),
+        floor_int(F.col("day_min")).alias("min_value"),
+        (F.col("event_date") == F.max("event_date").over(all_days)).alias(
+            "is_anchor"
+        ),
+        floor_int(F.round(F.avg("daily_avg").over(all_days), 4)).alias(
+            "average_summary_value"
+        ),
+        F.date_format(
+            F.max("day_last_ts").over(all_days), "yyyy-MM-dd HH:mm:ss.SSSSSS"
+        ).alias("last_run_ts"),
+    ).orderBy("summary_date")
+
+
+def _baseline(e: DataFrame) -> DataFrame:
+    """Per-key all-history baseline (subquery ``aa`` of
+    tabjolt_email.py:385): AVG of int-cast values grouped by key."""
+    return (
+        _key_filter(e)
+        .groupBy(F.col("event_type").alias("response"))
+        .agg(
+            F.round(F.avg(floor_int(F.col("value"))), 4).alias("avg_elapsed_ms")
+        )
+    )
+
+
+def _changes(e: DataFrame) -> DataFrame:
+    """The aa ⋈ bb comparisons of Q7 and Q8 (tabjolt_email.py:385,387)
+    in one frame, sorted by ``percentage_difference`` descending.
+
+    bb is the 3-day window of Q8; ``today`` marks its rows inside Q7's
+    window (at or after the anchor midnight). A row is kept when it is
+    a regression (today and slower than its baseline) or an improvement
+    (faster and below -40%); the two conditions are disjoint, and
+    ``regression`` tells them apart.
+
+    The reference writes ``aa LEFT OUTER JOIN bb`` and then filters on
+    a comparison between the two sides, which drops every
+    null-extended row — observably an inner join. We implement the
+    inner form so the ≤#keys-row baseline side can be broadcast
+    (Spark cannot broadcast the outer-preserved side of a left join),
+    keeping the fact table shuffle-free; the DuckDB oracle retains the
+    literal LEFT OUTER text and hash-matches.
+    """
+    # aa never references the anchor — build it from the bare scan so
+    # Catalyst doesn't drag a degenerate anchor cross-join (and a
+    # second full table scan) into the baseline side.
+    aa = _baseline(e)
+    bb = _key_filter(_current_window(_with_anchor(e), lookback_days=3)).select(
+        floor_int(F.col("value")).alias("current_elapsed_ms"),
+        F.col("event_type").alias("response_message"),
+        (
+            ts_from_epoch_ms_string(F.col("ts_ms"))
+            >= F.col("anchor_date").cast("timestamp")
+        ).alias("today"),
+    )
+    avg, cur = F.col("avg_elapsed_ms"), F.col("current_elapsed_ms")
+    pct = F.col("percentage_difference")
+    return (
+        bb.join(F.broadcast(aa), aa.response == bb.response_message)
+        .select(
+            "avg_elapsed_ms",
+            "current_elapsed_ms",
+            "response_message",
+            guarded_pct_diff(avg, cur).alias("percentage_difference"),
+            (F.col("today") & (avg < cur)).alias("regression"),
+        )
+        .filter(F.col("regression") | ((avg > cur) & (pct < -40.0)))
+        .orderBy(pct.desc())
+    )
+
+
+def report_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The daily and changes frames over one ``events`` read."""
+    e = _events(spark, sf_dir)
+    return _daily(e), _changes(e)
 
 
 # --- §2.7 queries ---------------------------------------------------------
 
 
+def _anchor_day(spark: SparkSession, sf_dir: str, column: str) -> DataFrame:
+    """One daily-frame column on the anchor day, as a one-row global
+    aggregate (NULL when there is no anchor day)."""
+    return (
+        _daily(_events(spark, sf_dir))
+        .filter(F.col("is_anchor"))
+        .agg(F.max(column).alias("summary_value"))
+    )
+
+
 def q_summary_avg_today(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Today's Avg run value (tabjolt_email.py:375)."""
-    e = _with_anchor(_events(spark, sf_dir))
-    return e.filter(F.col("event_date") == F.col("anchor_date")).agg(
-        _daily_avg_int().alias("summary_value")
-    )
+    return _anchor_day(spark, sf_dir, "summary_value")
 
 
 def q_summary_max_today(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Today's Max run value (tabjolt_email.py:376)."""
-    e = _with_anchor(_events(spark, sf_dir))
-    return e.filter(F.col("event_date") == F.col("anchor_date")).agg(
-        floor_int(F.max("value")).alias("summary_value")
-    )
+    return _anchor_day(spark, sf_dir, "max_value")
 
 
 def q_summary_min_today(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Today's Min run value (tabjolt_email.py:377)."""
-    e = _with_anchor(_events(spark, sf_dir))
-    return e.filter(F.col("event_date") == F.col("anchor_date")).agg(
-        floor_int(F.min("value")).alias("summary_value")
-    )
+    return _anchor_day(spark, sf_dir, "min_value")
 
 
 def q_last_run_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``SELECT max(summary_timestamp)`` (tabjolt_email.py:378);
     rendered as a string so Spark/DuckDB timestamp types can't skew
     the schema comparison."""
-    e = _events(spark, sf_dir)
-    return e.agg(
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_run_ts")
+    return _daily(_events(spark, sf_dir)).agg(
+        F.max("last_run_ts").alias("last_run_ts")
     )
 
 
 def q_historic_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-time average of the daily Avg (tabjolt_email.py:379) —
-    two-level aggregate, both map-side-combinable."""
-    e = _events(spark, sf_dir)
-    daily = e.groupBy("event_date").agg(F.round(F.avg("value"), 4).alias("daily_avg"))
-    return daily.agg(
-        F.floor(F.round(F.avg("daily_avg"), 4)).cast("int").alias("average_summary_value")
+    """All-time average of the daily Avg (tabjolt_email.py:379)."""
+    return _daily(_events(spark, sf_dir)).agg(
+        F.max("average_summary_value").alias("average_summary_value")
     )
 
 
 def q_trend_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(date, avg) day-wise trend series for the chart
     (tabjolt_email.py:86)."""
-    e = _events(spark, sf_dir)
-    return (
-        e.groupBy("event_date")
-        .agg(_daily_avg_int().alias("summary_value"))
-        .select(
-            F.date_format("event_date", "yyyy-MM-dd").alias("summary_date"),
-            "summary_value",
-        )
-        .orderBy("summary_date")
-    )
+    return _daily(_events(spark, sf_dir)).select("summary_date", "summary_value")
 
 
 def q_samples_today(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,60 +290,14 @@ def q_samples_today(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _baseline(e: DataFrame) -> DataFrame:
-    """Per-key all-history baseline (subquery ``aa`` of
-    tabjolt_email.py:385): AVG of int-cast values grouped by key."""
-    return (
-        _key_filter(e)
-        .groupBy(F.col("event_type").alias("response"))
-        .agg(
-            F.round(F.avg(floor_int(F.col("value"))), 4).alias("avg_elapsed_ms")
-        )
-    )
-
-
-def _baseline_vs_current(
-    spark: SparkSession, sf_dir: str, lookback_days: int
-) -> DataFrame:
-    """The aa ⋈ bb comparison shared by Q7/Q8 (tabjolt_email.py:385,387).
-
-    The reference writes ``aa LEFT OUTER JOIN bb`` and then filters on
-    a comparison between the two sides, which drops every
-    null-extended row — observably an inner join. We implement the
-    inner form so the ≤#keys-row baseline side can be broadcast
-    (Spark cannot broadcast the outer-preserved side of a left join),
-    keeping the fact table shuffle-free; the DuckDB oracle retains the
-    literal LEFT OUTER text and hash-matches.
-    """
-    e = _events(spark, sf_dir)
-    # aa never references the anchor — build it from the bare scan so
-    # Catalyst doesn't drag a degenerate anchor cross-join (and a
-    # second full table scan) into the baseline side.
-    aa = _baseline(e)
-    bb = _key_filter(_current_window(_with_anchor(e), lookback_days)).select(
-        floor_int(F.col("value")).alias("current_elapsed_ms"),
-        F.col("event_type").alias("response_message"),
-    )
-    return (
-        bb.join(F.broadcast(aa), aa.response == bb.response_message)
-        .select(
-            "avg_elapsed_ms",
-            "current_elapsed_ms",
-            "response_message",
-            guarded_pct_diff(
-                F.col("avg_elapsed_ms"), F.col("current_elapsed_ms")
-            ).alias("percentage_difference"),
-        )
-    )
-
-
 def q_regressions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7 (tabjolt_email.py:385): current-window samples slower than
     their per-key historical baseline, with % difference, sorted
     worst-first."""
-    cmp = _baseline_vs_current(spark, sf_dir, lookback_days=0)
-    return cmp.filter(F.col("avg_elapsed_ms") < F.col("current_elapsed_ms")).orderBy(
-        F.col("percentage_difference").desc()
+    return (
+        _changes(_events(spark, sf_dir))
+        .filter(F.col("regression"))
+        .select(*COMPARISON_COLUMNS)
     )
 
 
@@ -252,11 +315,10 @@ def q_regressions_flagged(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_improvements(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8 (tabjolt_email.py:387): 3-day window, faster-than-baseline
     keys improved by more than 40% (strict < -40.0)."""
-    cmp = _baseline_vs_current(spark, sf_dir, lookback_days=3)
     return (
-        cmp.filter(F.col("avg_elapsed_ms") > F.col("current_elapsed_ms"))
-        .filter(F.col("percentage_difference") < -40.0)
-        .orderBy(F.col("percentage_difference").desc())
+        _changes(_events(spark, sf_dir))
+        .filter(~F.col("regression"))
+        .select(*COMPARISON_COLUMNS)
     )
 
 

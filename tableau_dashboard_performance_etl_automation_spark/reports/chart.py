@@ -28,8 +28,11 @@ except ImportError:  # pragma: no cover
 def trend_points(rows) -> tuple[list, list]:
     """(dates, values) sorted by date — the reference re-sorts
     client-side (tabjolt_email.py:94); sorting here keeps the chart
-    correct regardless of upstream ordering."""
-    pairs = sorted((r[0], int(r[1])) for r in rows)
+    correct regardless of upstream ordering. Points without a date or
+    a value (the NULL-date group, an all-NULL day) are not drawn."""
+    pairs = sorted(
+        (r[0], int(r[1])) for r in rows if r[0] is not None and r[1] is not None
+    )
     if not pairs:
         return [], []
     dates, values = zip(*pairs)

@@ -7,6 +7,8 @@ operator stopped scaling even if its results are still correct.
 
 from __future__ import annotations
 
+import re
+
 from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
 from tableau_dashboard_performance_etl_automation_spark.operators import (
     analytics,
@@ -24,12 +26,24 @@ from tableau_dashboard_performance_etl_automation_spark.plans import (
 
 
 def test_regressions_baseline_broadcasts(spark, sf_dir):
-    df = tabjolt.q_regressions(spark, sf_dir)
-    plan = formatted_plan(df)
-    # the ≤#keys baseline side must broadcast-hash-join into the fact
-    assert "BroadcastHashJoin" in plan
-    # fact side must not shuffle for the join: no sort-merge join
-    assert "SortMergeJoin" not in plan
+    _daily, changes = tabjolt.report_frames(spark, sf_dir)
+    for df in (tabjolt.q_regressions(spark, sf_dir), changes):
+        plan = formatted_plan(df)
+        # the ≤#keys baseline side must broadcast-hash-join into the fact
+        assert "BroadcastHashJoin" in plan
+        # fact side must not shuffle for the join: no sort-merge join
+        assert "SortMergeJoin" not in plan
+
+
+def test_daily_frame_scans_events_once(spark, sf_dir):
+    """The five summary metrics and the trend series come from one
+    aggregate over one scan of ``events``: the anchor date, historic
+    average and last event time are windowed over the per-day rows,
+    not re-derived from the fact table."""
+    daily, _changes = tabjolt.report_frames(spark, sf_dir)
+    plan = formatted_plan(daily)
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
+    assert "Join" not in plan
 
 
 def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):
@@ -910,7 +924,7 @@ def test_perf_budget_gate_heavies_carry_scale_evidence():
     # plan-unchanged TPC-H scan heavies tripped the 32-core floor).
     # Scale the absolute floor by the core deficit; the 3×-median
     # relative guard below is core-count-free and stays as-is.
-    core_factor = max(1.0, 32.0 / bench.get("cpus", 32))
+    core_factor = max(1.0, 32.0 / max(1, bench.get("cpus", 32)))
     budget = max(
         2.0 * host_factor * core_factor,
         3.0 * statistics.median(timings.values()),

@@ -3,12 +3,30 @@ MIME assembly, and the end-to-end report pipeline."""
 
 from __future__ import annotations
 
+import duckdb
+import pytest
+from pyspark.sql import functions as F
+
 from tableau_dashboard_performance_etl_automation_spark import pipeline
+from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
+from tableau_dashboard_performance_etl_automation_spark.operators import tabjolt
 from tableau_dashboard_performance_etl_automation_spark.reports import (
     chart,
     email_sink,
     html,
 )
+from tools.check_correctness import row_multiset
+
+#: The registered query behind each of ``run_report``'s five metrics,
+#: in metric order.
+_METRIC_QUERIES = (
+    "q_summary_avg_today",
+    "q_summary_max_today",
+    "q_summary_min_today",
+    "q_last_run_ts",
+    "q_historic_avg",
+)
+_ROWSET_QUERIES = ("q_regressions", "q_improvements", "q_samples_today", "q_trend_series")
 
 
 def test_regression_table_red_is_strictly_above_20():
@@ -125,6 +143,49 @@ def test_build_message_inlines_chart(tmp_path):
     assert parts[1]["Content-ID"] == "<graph_cid>"
 
 
+def _report_multisets(res) -> dict[str, list[str]]:
+    """``run_report``'s rows per registered query name."""
+    out = {
+        name: row_multiset(["v"], [(value,)])
+        for name, (_label, value) in zip(_METRIC_QUERIES, res.metrics)
+    }
+    cmp_cols = list(tabjolt.COMPARISON_COLUMNS)
+    out["q_regressions"] = row_multiset(cmp_cols, res.regressions)
+    out["q_improvements"] = row_multiset(cmp_cols, res.improvements)
+    out["q_samples_today"] = row_multiset(
+        ["elapsed_time", "user_id", "request_label", "response_message"], res.samples
+    )
+    out["q_trend_series"] = row_multiset(["summary_date", "summary_value"], res.trend)
+    return out
+
+
+def _registry_multisets(spark, sf_dir) -> dict[str, list[str]]:
+    """The registered builders' rows, in ``_report_multisets`` form."""
+    out = {}
+    for name in _METRIC_QUERIES:
+        rows = tabjolt.QUERIES[name](spark, sf_dir).collect()
+        out[name] = row_multiset(["v"], [tuple(r) for r in rows])
+    for name in _ROWSET_QUERIES:
+        df = tabjolt.QUERIES[name](spark, sf_dir)
+        out[name] = row_multiset(df.columns, [tuple(r) for r in df.collect()])
+    return out
+
+
+def _oracle_multisets(events_parquet: str) -> dict[str, list[str]]:
+    """The DuckDB ``ORACLE_SQL`` twins' rows, in ``_report_multisets``
+    form."""
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{events_parquet}/*.parquet'")
+    out = {}
+    for name in _METRIC_QUERIES:
+        rows = con.sql(tabjolt.ORACLE_SQL[name]).fetchall()
+        out[name] = row_multiset(["v"], rows)
+    for name in _ROWSET_QUERIES:
+        res = con.sql(tabjolt.ORACLE_SQL[name])
+        out[name] = row_multiset(res.columns, res.fetchall())
+    return out
+
+
 def test_run_report_end_to_end(spark, sf_dir):
     res = pipeline.run_report(spark, sf_dir)
     assert len(res.metrics) == 5
@@ -132,3 +193,52 @@ def test_run_report_end_to_end(spark, sf_dir):
     assert res.regressions and res.samples
     # every section's rows made it into the html
     assert str(res.regressions[0][1]) in res.html_report
+    # the report's shared frames and the registered builders agree
+    assert _report_multisets(res) == _registry_multisets(spark, sf_dir)
+    # the changes frame arrives worst-first, like Q7 and Q8
+    for rows in (res.regressions, res.improvements):
+        pct = [r[3] for r in rows if r[3] is not None]
+        assert pct == sorted(pct, reverse=True)
+    assert [d for d, _v in res.trend] == sorted(d for d, _v in res.trend)
+
+
+def _degenerate_events(e, kind: str):
+    day = F.col("ts").cast("date")
+    if kind == "empty":
+        return e.limit(0)
+    if kind == "single_day":
+        return e.filter(day == e.agg(F.max(day)).first()[0])
+    if kind == "null_value":
+        return e.withColumn("value", F.lit(None).cast("double"))
+    # null_ts: a third of the rows fall into the NULL event_date group
+    return e.withColumn(
+        "ts", F.when(F.col("event_id") % 3 == 0, F.lit(None)).otherwise(F.col("ts"))
+    )
+
+
+@pytest.mark.parametrize("kind", ["empty", "single_day", "null_value", "null_ts"])
+def test_run_report_degenerate_events(spark, sf_dir, tmp_path, kind):
+    """``run_report`` on an empty table, a single day, an all-NULL
+    ``value`` column and NULL timestamps: the metrics that have no
+    input come back None, and every section equals both the registered
+    builders and their DuckDB twins."""
+    events = tmp_path / "events.parquet"
+    _degenerate_events(load_table(spark, sf_dir, "events"), kind).write.parquet(str(events))
+    res = pipeline.run_report(spark, str(tmp_path), chart_out=str(tmp_path / "g.png"))
+    got = _report_multisets(res)
+    assert got == _registry_multisets(spark, str(tmp_path))
+    assert got == _oracle_multisets(str(events))
+    values = [v for _label, v in res.metrics]
+    if kind == "empty":
+        assert values == [None] * 5
+        assert not (res.regressions or res.improvements or res.samples or res.trend)
+        assert res.chart_path is None
+    elif kind == "null_value":
+        assert values[:3] == [None] * 3 and values[4] is None
+        assert values[3] is not None  # the last event time still exists
+        assert all(v is None for _d, v in res.trend)
+    elif kind == "single_day":
+        assert len(res.trend) == 1 and None not in values
+    else:
+        assert (None, res.trend[0][1]) == res.trend[0]  # NULL date sorts first
+        assert None not in values
