@@ -5,11 +5,20 @@ Mirrors the reference's fixed externally-declared schema model
 DDL): schemas here are known up front, loaders normalize physical
 quirks (nanosecond timestamps) into clean logical types once, at scan
 time, so every downstream operator sees a stable relational catalog.
+
+The schemas are known up front to the reader too: every parquet read
+in the engine (these tables and the warehouse artifacts) goes through
+:func:`read_parquet`, which infers a path's schema once and hands it
+to later reads of the unchanged files, so building a query starts no
+Spark job.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 #: All tables the driver materializes per scale factor (TESTDATA.md).
 TABLES = (
@@ -51,6 +60,68 @@ def ensure_engine_confs(spark: SparkSession) -> None:
             spark.conf.set(key, val)
 
 
+#: Session confs that change what parquet schema inference returns for
+#: the same files; their values are part of a schema's fingerprint.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: path → (fingerprint, inferred schema); one entry per distinct path.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """Sorted (file, size, mtime_ns) of every file under ``path`` plus
+    the inference confs, or ``None`` when ``path`` is not a local file
+    or directory (a URI such as ``s3a://...``, or a missing path)."""
+    if not os.path.exists(path):
+        return None
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = [
+            os.path.join(root, name)
+            for root, _dirs, names in os.walk(path)
+            for name in names
+        ]
+    stats = []
+    for f in sorted(files):
+        st = os.stat(f)
+        stats.append((f, st.st_size, st.st_mtime_ns))
+    confs = tuple(spark.conf.get(key, None) for key in _INFERENCE_CONFS)
+    return tuple(stats), confs
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only once per
+    version of the files.
+
+    Inference is a Spark job (it reads the footers), started on every
+    plain read. Here the inferred schema is kept per path under a
+    fingerprint of the files (name, size, mtime in ns) and of the
+    session confs that change inference; while both match, the read
+    passes the schema and starts no job. A changed fingerprint infers
+    again and replaces the entry. The key comes from the files
+    themselves, so nothing has to invalidate it: the only way to be
+    served a stale schema is a file rewritten in place with the same
+    name, size and mtime to the nanosecond. Non-local and missing paths
+    are read (and fail) exactly as ``spark.read.parquet`` does.
+    """
+    fp = _fingerprint(spark, path)
+    if fp is None:
+        return spark.read.parquet(path)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (fp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table, normalizing physical storage quirks.
 
@@ -62,7 +133,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pruning or predicate pushdown on the other columns.
     """
     ensure_engine_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") in ("bigint", "long"):
         # integer division: `ts / 1000` in double loses precision at
         # 1.7e18 nanos (double ulp ≈ 256 ns → off-by-1 µs vs DuckDB's

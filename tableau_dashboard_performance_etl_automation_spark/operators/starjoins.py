@@ -280,14 +280,13 @@ def order_last_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (which re-read the table and added a join exchange); uniqueness
     (`n_tied = 1`) replaces the NOT EXISTS.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-
     # round-8 squeeze (VERDICT item 6): the (order, supplier,
     # last-ship) pre-aggregate is the only full-fact pass — persist
     # it per corpus so steady state starts from the compacted table
     # (the warehouse-standard shape: a maintained per-order shipment
     # summary) instead of re-scanning lineitem each run.
     def _build_per_supp() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem")
         return li.groupBy("l_orderkey", "l_suppkey").agg(
             F.max("l_shipdate").alias("supp_last")
         )

@@ -16,6 +16,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from tableau_dashboard_performance_etl_automation_spark.catalog import (
+    load_table,
+    read_parquet,
+)
+
 
 def write_date_partitioned(
     df: DataFrame,
@@ -65,7 +70,7 @@ def write_bucketed(
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 #: Meta paths of every artifact this PROCESS has written or trusted —
@@ -193,12 +198,14 @@ def persisted_table(
     reads it). Single-writer-per-corpus is the deployment assumption,
     as with any unmanaged warehouse path.
 
-    The trust check (meta read + distinct-tag collect — two tiny
-    Spark jobs) is memoized per (applicationId, name, tag): a query
-    composing several persisted artifacts would otherwise re-pay it
-    on every invocation. Registered with memo.py, so
-    ``invalidate_session_memos`` clears the trust along with the
-    stamps."""
+    The trust check (meta read + distinct-tag collect — one tiny Spark
+    job once the meta's schema is known to :func:`read_parquet`, two
+    on its first read in the process) is memoized per (applicationId,
+    name, tag): a query composing several persisted artifacts would
+    otherwise re-pay it on every invocation. Registered with memo.py,
+    so ``invalidate_session_memos`` clears the trust along with the
+    stamps. A trusted read of the data itself starts no job: its
+    schema comes from :func:`read_parquet` too."""
     import shutil
     import time
 
@@ -208,7 +215,7 @@ def persisted_table(
     if trust_key in _ARTIFACT_TRUST:
         ARTIFACT_EVENTS.append((name, "hit"))
         _ARTIFACT_META_PATHS.add(meta_path)
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     meta = load_artifact(spark, name + "_meta", tag)
     ARTIFACT_EVENTS.append((name, "hit" if meta is not None else "build"))
     if meta is None:
@@ -233,7 +240,7 @@ def persisted_table(
         )
     _ARTIFACT_META_PATHS.add(meta_path)
     _ARTIFACT_TRUST[trust_key] = True
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def _registered_trust_cache() -> dict:
@@ -255,7 +262,7 @@ def load_artifact(spark: SparkSession, name: str, tag: str) -> DataFrame | None:
     from pyspark.errors import AnalysisException
 
     try:
-        df = spark.read.parquet(_artifact_path(spark, name))
+        df = read_parquet(spark, _artifact_path(spark, name))
     except AnalysisException:
         # path absent / unreadable as a table ⇒ treat as no artifact;
         # transient I/O and permission errors are NOT caught — they
@@ -309,7 +316,7 @@ def compact_parquet(
         for name in files:
             if name.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, name))
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path)
     if partition_col is not None:
         n_tasks = df.select(partition_col).distinct().count()
         (
@@ -373,12 +380,9 @@ def bucketed_fact(
     Without this, every cold session re-paid the full fact shuffle
     (minutes at the 256× decade; a per-session rewrite of a
     "maintained layout" at 100 TB)."""
+    import hashlib
     import os
     import shutil
-
-    from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
-
-    import hashlib
 
     # the FULL path feeds the name: two corpora sharing a basename
     # (e.g. .../a/sf0.1 vs .../b/sf0.1) must not collide on one table
@@ -465,7 +469,7 @@ def register_bucketed_location(
     the re-registered table elide the exchange exactly like the
     original managed table). Metadata-only: no data read or moved."""
     path = _artifact_path(spark, name)
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     cols = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
     )

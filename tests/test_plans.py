@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
 from tableau_dashboard_performance_etl_automation_spark.operators import (
     analytics,
@@ -23,6 +25,33 @@ from tableau_dashboard_performance_etl_automation_spark.plans import (
     pushed_filters,
     read_schemas,
 )
+
+
+#: The stratified sample perfbench's ``query_mix`` workload times
+#: (``perfbench/workloads.py`` ``QUERY_MIX``).
+QUERY_MIX = (
+    "forecast_revenue",
+    "cross_source_dup_matrix",
+    "multimodal_binary_meta",
+    "event_type_share",
+    "neardup_embedding_cosine",
+    "order_last_shippers",
+    "conversion_ab_ztest",
+    "boilerplate_ngram_stats",
+)
+
+
+@pytest.mark.parametrize("name", QUERY_MIX)
+def test_warm_build_starts_no_spark_job(spark, sf_dir, jobs_started, name):
+    """Building a query a second time on the same corpus is pure plan
+    construction: table and artifact schemas are known, artifacts are
+    trusted, so no Spark job runs before the caller's action."""
+    import __spark_entry__
+
+    build = __spark_entry__.queries()[name]
+    build(spark, sf_dir)
+    _df, jobs = jobs_started(lambda: build(spark, sf_dir))
+    assert jobs == [], f"{name}: {len(jobs)} Spark job(s) while building"
 
 
 def test_regressions_baseline_broadcasts(spark, sf_dir):

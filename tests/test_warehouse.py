@@ -4,10 +4,17 @@ joins don't shuffle. Plan-level evidence, not assertion by analogy."""
 from __future__ import annotations
 
 import re
+import uuid
+from collections import Counter
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
+from tableau_dashboard_performance_etl_automation_spark.catalog import (
+    load_table,
+    read_parquet,
+)
 from tableau_dashboard_performance_etl_automation_spark.plans import formatted_plan
 from tableau_dashboard_performance_etl_automation_spark.sources import warehouse
 
@@ -474,3 +481,119 @@ def test_bucketed_fact_rebuilds_when_stamp_outlives_data(spark, sf_dir):
     df2 = bucketed_fact(spark, sf, "region", "r_regionkey", n_buckets=4)
     assert df2.count() == want
     assert BUILD_LOG[name] > first_build  # a second build was paid
+
+
+def _rows(df) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_read_parquet_second_read_starts_no_job(
+    spark, sf_dir, tmp_path, jobs_started
+):
+    """The first read of a path infers its schema (a Spark job); a read
+    of the unchanged files reuses it and starts none."""
+    path = str(tmp_path / "orders")
+    load_table(spark, sf_dir, "orders").write.parquet(path)
+    first, jobs1 = jobs_started(lambda: read_parquet(spark, path))
+    assert jobs1
+    second, jobs2 = jobs_started(lambda: read_parquet(spark, path))
+    assert jobs2 == []
+    assert second.schema == first.schema
+    assert _rows(second) == _rows(first)
+
+
+def test_read_parquet_sees_overwrite_with_new_column(spark, tmp_path):
+    """Overwriting the path changes its files, so the next read infers
+    again: it returns the new column and the new rows."""
+    path = str(tmp_path / "evolving")
+    spark.createDataFrame([(1, "a")], "k BIGINT, v STRING").write.parquet(path)
+    assert read_parquet(spark, path).columns == ["k", "v"]
+    spark.createDataFrame(
+        [(2, "b", 2.5)], "k BIGINT, v STRING, w DOUBLE"
+    ).write.mode("overwrite").parquet(path)
+    df = read_parquet(spark, path)
+    assert df.columns == ["k", "v", "w"]
+    assert [tuple(r) for r in df.collect()] == [(2, "b", 2.5)]
+
+
+def test_read_parquet_partitioned_artifact_matches_inference(
+    spark, sf_dir, jobs_started
+):
+    """A partitioned ``persisted_table`` read with the known schema has
+    the schema (partition column included, in place) and the rows of a
+    plain inference read."""
+    name = f"test_artifact/partitioned_{uuid.uuid4().hex[:8]}"
+
+    def build():
+        return load_table(spark, sf_dir, "events").withColumn(
+            "event_date", F.col("ts").cast("date")
+        )
+
+    warehouse.persisted_table(spark, name, "t", build, partition_by=["event_date"])
+    got, jobs = jobs_started(
+        lambda: warehouse.persisted_table(
+            spark, name, "t", build, partition_by=["event_date"]
+        )
+    )
+    assert jobs == []
+    plain = spark.read.parquet(warehouse._artifact_path(spark, name))
+    assert got.schema == plain.schema
+    assert _rows(got) == _rows(plain)
+
+
+def test_read_parquet_keys_on_inference_confs(spark, sf_dir, tmp_path):
+    """A schema inferred under one value of an inference conf is not
+    served under another. On sf0.001 ``events`` (TIMESTAMP(MICROS),
+    tz-naive) ``inferTimestampNTZ`` picks ``ts``'s type; on a
+    TIMESTAMP(NANOS) copy ``nanosAsLong`` picks BIGINT or a rejection,
+    and ``load_table`` turns the BIGINT into the same timestamps."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    events = f"{sf_dir}/events.parquet"
+    table = pq.read_table(events)
+    i = table.schema.get_field_index("ts")
+    nanos_dir = tmp_path / "nanos"
+    nanos_dir.mkdir()
+    pq.write_table(
+        table.set_column(i, "ts", table["ts"].cast(pa.timestamp("ns"))),
+        str(nanos_dir / "events.parquet"),
+    )
+    nanos_events = str(nanos_dir / "events.parquet")
+    try:
+        spark.conf.set(ntz, "true")
+        assert dict(read_parquet(spark, events).dtypes)["ts"] == "timestamp_ntz"
+        spark.conf.set(ntz, "false")
+        assert dict(read_parquet(spark, events).dtypes)["ts"] == "timestamp"
+
+        spark.conf.set(nanos, "true")
+        assert dict(read_parquet(spark, nanos_events).dtypes)["ts"] == "bigint"
+        spark.conf.set(nanos, "false")
+        with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
+            read_parquet(spark, nanos_events)
+        # load_table restores the engine's conf and converts the nanos
+        got = load_table(spark, str(nanos_dir), "events")
+        assert dict(got.dtypes)["ts"] == "timestamp"
+        want = load_table(spark, sf_dir, "events")
+        assert _rows(got.select("event_id", "ts")) == _rows(
+            want.select("event_id", "ts")
+        )
+    finally:
+        spark.conf.set(ntz, "false")
+        spark.conf.set(nanos, "true")
+
+
+def test_load_artifact_missing_path_returns_none(spark):
+    """A missing path is read as ``spark.read.parquet`` reads it, so
+    ``load_artifact`` still sees the AnalysisException; that holds for a
+    path whose schema was known before it was deleted."""
+    import shutil
+
+    name = f"test_artifact/deleted_{uuid.uuid4().hex[:8]}"
+    assert warehouse.load_artifact(spark, name, "t") is None
+    warehouse.save_artifact(spark.createDataFrame([(1,)], "k INT"), name, "t")
+    assert warehouse.load_artifact(spark, name, "t") is not None
+    shutil.rmtree(warehouse._artifact_path(spark, name))
+    assert warehouse.load_artifact(spark, name, "t") is None
