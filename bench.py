@@ -173,15 +173,18 @@ def main() -> None:
     digest = slug.rsplit("_", 1)[-1]  # fact tables carry digest only
 
     # Current-dial suffixes per artifact family, harvested from the
-    # warm query pass above: every artifact trusted (or built) there
-    # recorded its (name, tag) in the trust cache, and the dial part
-    # of a tag — everything after the corpus path — is
+    # warm query pass above: every persisted artifact trusted (or
+    # built) there left its (name, tag) in the session memo (its name
+    # is "<family>/<corpus slug>"; no other memo name has a "/"), and
+    # the dial part of a tag — everything after the corpus path — is
     # corpus-independent. An on-disk artifact stamped with a dial
     # suffix no current query would accept is STALE (left by an old
     # dial setting); fully reading it would be pure wasted warm-up
     # I/O, so it is skipped and reported (round-9 ADVICE).
     live_suffixes: dict[str, set] = {}
-    for _app, nm, tag in warehouse._ARTIFACT_TRUST:
+    for nm, ((_app, tag), _value) in warehouse._MEMO.items():
+        if "/" not in nm:
+            continue
         family = nm.split("/", 1)[0]
         live_suffixes.setdefault(family, set()).add(
             tag.split("|", 1)[1] if "|" in tag else ""

@@ -24,26 +24,12 @@ from tableau_dashboard_performance_etl_automation_spark.operators.textops import
     text_quality,
     text_token_count,
 )
-from tableau_dashboard_performance_etl_automation_spark.memo import register as _register_memo
+from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
+    session_value,
+)
 
 #: Quality gate: same rule as textops.text_quality's keep flag.
 MIN_WORDS = 20
-
-#: Session-scoped memo of the curated survivor table, written by each
-#: curate_corpus run and reused by curation_summary — the two entries
-#: share one minhash+CC execution instead of re-running the whole
-#: fuzzy-dedup pipeline for the rollup (a real pipeline materializes
-#: the survivor set once and derives reports from it). curate_corpus
-#: itself always recomputes, so its timings stay honest. Keyed by
-#: (applicationId, sf_dir); the checkpointed result is a few thousand
-#: narrow rows. Capped to the single most recent entry (each write
-#: evicts prior ones) so checkpoint blocks from other sf_dirs don't
-#: stay pinned for the application lifetime. Staleness assumption:
-#: an sf_dir's parquet is immutable within a session (true for the
-#: driver's test corpora) — mutate the data, restart the session.
-#: Session memo — assumes sf_dir data is immutable within the
-#: application (see memo.py); registered for global invalidation.
-_SURVIVOR_CACHE: dict[tuple[str, str], DataFrame] = _register_memo({})
 
 
 def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,8 +39,10 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     1. quality: keep == 1 (length / stopword-ratio / word-length gates)
     2. exact dup groups: keep min doc_id
     3. minhash cluster: keep min doc_id per connected component
+
+    Always recomputes, so its timings stay honest; the result is
+    checkpointed (a few thousand narrow rows).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
     quality = text_quality(spark, sf_dir).filter(F.col("keep") == 1)
     tokens = text_token_count(spark, sf_dir)
 
@@ -74,15 +62,15 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # fuzzy survivors: drop non-minimum members of each minhash
-    # cluster (labels from the shared session memo — the stored
-    # cluster-assignment artifact every consumer reads)
+    # cluster (labels from the stored cluster-assignment artifact
+    # every consumer reads)
     labels = _lsh_cluster_labels(spark, sf_dir)
     fuzzy_drop = labels.filter(F.col("doc_id") != F.col("cluster_id")).select(
         "doc_id"
     )
     survivors = exact_keep.join(fuzzy_drop, "doc_id", "left_anti")
 
-    out = (
+    return (
         survivors.join(tokens, "doc_id")
         .join(
             raw.select("doc_id", "lang", F.length("text").alias("text_len")),
@@ -92,20 +80,21 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
         .localCheckpoint()
     )
-    _SURVIVOR_CACHE.clear()  # single-entry cap; see docstring above
-    _SURVIVOR_CACHE[key] = out
-    return out
 
 
 def curation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language byte/token budget of the curated corpus — the
-    numbers a data-mixture plan is built from. Reuses the survivor
-    set materialized by a prior curate_corpus run in this session
-    when available."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    survivors = _SURVIVOR_CACHE.get(key)
-    if survivors is None:
-        survivors = curate_corpus(spark, sf_dir)
+    numbers a data-mixture plan is built from. The survivor set is
+    materialized once per session and corpus (``session_value``), so
+    repeat rollups do not re-run the whole fuzzy-dedup pipeline (a
+    real pipeline materializes the survivor set once and derives
+    reports from it)."""
+    survivors = session_value(
+        spark,
+        "curation_survivors",
+        sf_dir,
+        lambda: curate_corpus(spark, sf_dir),
+    )
     return (
         survivors
         .groupBy("lang")

@@ -27,6 +27,8 @@ from pyspark.sql.window import Window
 from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
 from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
     corpus_slug,
+    persisted_table,
+    session_value,
 )
 from tableau_dashboard_performance_etl_automation_spark.functions.text import (
     seeded_md5,
@@ -34,7 +36,6 @@ from tableau_dashboard_performance_etl_automation_spark.functions.text import (
     word_shingles,
     words,
 )
-from tableau_dashboard_performance_etl_automation_spark.memo import register as _register_memo
 
 #: MinHash signature size and LSH banding (8 hashes → 4 bands × 2).
 MINHASH_HASHES = 8
@@ -64,58 +65,33 @@ def simhash_fingerprint_bits(n_docs: int) -> int:
 JACCARD_MAX_DF = 100
 
 
-#: Session memo of the distinct (doc_id, shingle) table — the
-#: decomposition EVERY shingle-based diagnostic starts from (LSH
-#: bands, Jaccard index, containment, estimator calibration).  Since
-#: round 5 the memo holds a DISK-BACKED parquet scan
-#: (``warehouse.persisted_table``), not checkpoint blocks: the table
-#: is stored once per corpus (what a production pipeline does — the
-#: build never amortizes per query) and costs zero executor heap.
-#: Single-entry capped.
-#: Session memo — assumes sf_dir data is immutable within the
-#: application (see memo.py); registered for global invalidation.
-_SHINGLES_CACHE: dict[tuple[str, str], DataFrame] = _register_memo({})
-
-
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc_id, shingle) pairs — the shared decomposition,
-    PERSISTED as a warehouse parquet table (round-5: the prior
-    ``localCheckpoint`` memo pinned the whole decomposition in
-    executor storage, which is what exhausted the heap at the 256×+
-    corpus decades; a disk-backed scan is both the production shape
-    and O(1) heap). Deterministic, so a loaded table is bit-identical
-    to a rebuild; tag-guarded per sf_dir."""
-    import os
+    """Distinct (doc_id, shingle) pairs — the decomposition EVERY
+    shingle-based diagnostic starts from (LSH bands, Jaccard index,
+    containment, estimator calibration), PERSISTED as a warehouse
+    parquet table (round-5: the prior ``localCheckpoint`` memo pinned
+    the whole decomposition in executor storage, which is what
+    exhausted the heap at the 256×+ corpus decades; a disk-backed scan
+    is both the production shape and O(1) heap). Deterministic, so a
+    loaded table is bit-identical to a rebuild; tag-guarded per
+    sf_dir."""
 
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLES_CACHE.get(key)
-    if cached is None:
-
-        def build() -> DataFrame:
-            # doc_id is part of the distinct key, so "distinct
-            # (doc_id, sh)" is pure WITHIN-doc dedup — array_distinct
-            # on the per-doc shingle array before the explode computes
-            # it narrowly, with NO corpus shuffle (the row-level
-            # .distinct() spelling hash-shuffled the whole exploded
-            # corpus; its sort-spill at fixed partition counts was the
-            # round-10 superlinear residual, PERF.md)
-            docs = load_table(spark, sf_dir, "documents")
-            return docs.withColumn("w", words()).select(
-                "doc_id",
-                F.explode(F.array_distinct(word_shingles())).alias("sh"),
-            )
-
-        base = corpus_slug(sf_dir)
-        cached = persisted_table(
-            spark, f"doc_shingles/{base}", sf_dir, build
+    def build() -> DataFrame:
+        # doc_id is part of the distinct key, so "distinct
+        # (doc_id, sh)" is pure WITHIN-doc dedup — array_distinct
+        # on the per-doc shingle array before the explode computes
+        # it narrowly, with NO corpus shuffle (the row-level
+        # .distinct() spelling hash-shuffled the whole exploded
+        # corpus; its sort-spill at fixed partition counts was the
+        # round-10 superlinear residual, PERF.md)
+        docs = load_table(spark, sf_dir, "documents")
+        return docs.withColumn("w", words()).select(
+            "doc_id",
+            F.explode(F.array_distinct(word_shingles())).alias("sh"),
         )
-        _SHINGLES_CACHE.clear()  # single-entry cap
-        _SHINGLES_CACHE[key] = cached
-    return cached
+
+    base = corpus_slug(sf_dir)
+    return persisted_table(spark, f"doc_shingles/{base}", sf_dir, build)
 
 
 _SHINGLES_CTE = f"""
@@ -145,39 +121,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session memo of the band-signature table — since round 5 a
-#: DISK-BACKED parquet scan (``warehouse.persisted_table``): stored
-#: once per corpus, zero executor heap, shared across sessions; six
-#: registered diagnostics consume it and re-shingling per query
-#: never amortizes. Signatures are deterministic (md5 of shingle
-#: text), so the loaded table is bit-identical to a recompute. The
-#: incremental probe additionally keeps its bucketed ``_band_index``
-#: variant for the zero-exchange probe join.
-#: Session memo — assumes sf_dir data is immutable within the
-#: application (see memo.py); registered for global invalidation.
-_BANDS_CACHE: dict[tuple[str, str], DataFrame] = _register_memo({})
-
-#: Session memo for the persisted full signature table (same
-#: discipline; single-entry cap).
-_SIGS_CACHE: dict[tuple[str, str], DataFrame] = _register_memo({})
-
-
 def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, mh0..mh{H-1}) full MinHash signature table, persisted
     per corpus — feeds both the band decomposition (below) and the
     estimator-calibration diagnostic's signature comparison, which
     was re-running the H seeded-md5 aggregations per invocation.
     Deterministic md5s → loaded table is bit-identical to a rebuild."""
-    import os
-
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SIGS_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     def build() -> DataFrame:
         sh = _doc_shingles(spark, sf_dir)
@@ -189,30 +138,19 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     base = corpus_slug(sf_dir)
-    out = persisted_table(spark, f"minhash_sigs/{base}", sf_dir, build)
-    _SIGS_CACHE.clear()  # single-entry cap
-    _SIGS_CACHE[key] = out
-    return out
+    return persisted_table(spark, f"minhash_sigs/{base}", sf_dir, build)
 
 
 def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, band_id, band_val) MinHash LSH band signatures —
     shingle → 8-way minhash → 4 bands of 2. Shared by the full-corpus
-    pair join and the incremental index probe. Persisted like the
-    shingle decomposition (round-5): disk-backed parquet scan instead
-    of pinned checkpoint blocks — heap-free at any corpus scale, and
+    pair join, six registered diagnostics and the incremental index
+    probe (which also keeps a bucketed ``_band_index`` copy for its
+    zero-exchange probe join). Persisted like the shingle
+    decomposition (round-5): disk-backed parquet scan instead of
+    pinned checkpoint blocks — heap-free at any corpus scale, and
     signatures are deterministic md5s so the loaded table is
     bit-identical to a rebuild."""
-    import os
-
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BANDS_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     def build() -> DataFrame:
         sig = _minhash_sigs(spark, sf_dir)
@@ -238,22 +176,7 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("doc_id", "band.band_id", "band.band_val")
 
     base = corpus_slug(sf_dir)
-    out = persisted_table(spark, f"minhash_bands/{base}", sf_dir, build)
-    _BANDS_CACHE.clear()  # single-entry cap
-    _BANDS_CACHE[key] = out
-    return out
-
-
-#: Session memo for the persisted LSH pair table (same discipline as
-#: ``_BANDS_CACHE``): the pair set feeds ELEVEN registered consumers
-#: (k-core, triangles, graph stats, degree histogram, link
-#: prediction, BFS, CC labels, source-overlap matrix, recall
-#: agreement, …) — re-running the band self-join + distinct per
-#: consumer never amortizes. The set is deterministic (md5-seeded
-#: minhash bands), so the loaded parquet is value-identical to a
-#: rebuild; row ORDER is not part of the contract (every consumer is
-#: a join/aggregate; the registered query re-sorts).
-_LSH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = _register_memo({})
+    return persisted_table(spark, f"minhash_bands/{base}", sf_dir, build)
 
 
 def lsh_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,17 +185,14 @@ def lsh_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries' shared edge list. Disk-backed scan instead of a per-query
     band self-join or pinned ``localCheckpoint`` blocks: heap-free at
     any corpus scale, and the edge list is exactly the table a
-    production dedup pipeline stores anyway."""
-    import os
-
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LSH_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    production dedup pipeline stores anyway. It feeds ELEVEN
+    registered consumers (k-core, triangles, graph stats, degree
+    histogram, link prediction, BFS, CC labels, source-overlap
+    matrix, recall agreement, …). The set is deterministic
+    (md5-seeded minhash bands), so the loaded parquet is
+    value-identical to a rebuild; row ORDER is not part of the
+    contract (every consumer is a join/aggregate; the registered
+    query re-sorts)."""
 
     def build() -> DataFrame:
         bands = _minhash_bands(spark, sf_dir)
@@ -292,10 +212,7 @@ def lsh_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     base = corpus_slug(sf_dir)
-    out = persisted_table(spark, f"lsh_pairs/{base}", sf_dir, build)
-    _LSH_PAIRS_CACHE.clear()  # single-entry cap
-    _LSH_PAIRS_CACHE[key] = out
-    return out
+    return persisted_table(spark, f"lsh_pairs/{base}", sf_dir, build)
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -309,13 +226,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic output ordering.
     """
     return lsh_pair_table(spark, sf_dir).orderBy("doc_a", "doc_b")
-
-
-#: Session memo for the two persisted shingle-intersection variants
-#: (capped = JACCARD_MAX_DF stop-shingle cap applied). Keyed by
-#: (applicationId, sf_dir, variant); both variants of the current
-#: corpus may stay resident.
-_INTER_CACHE: dict[tuple, DataFrame] = _register_memo({})
 
 
 def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,17 +250,7 @@ def shingle_pair_intersections(
     minhash calibration diagnostics (their exact-Jaccard ground
     truth is defined cap-free). Counts are exact integers, so the
     loaded parquet is value-identical to a rebuild."""
-    import os
-
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
     variant = "capped" if capped else "full"
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    cached = _INTER_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     def build() -> DataFrame:
         sh = (
@@ -373,14 +273,9 @@ def shingle_pair_intersections(
         )
 
     base = corpus_slug(sf_dir)
-    out = persisted_table(
+    return persisted_table(
         spark, f"shingle_inter_{variant}/{base}", sf_dir, build
     )
-    # keep at most the current corpus' two variants resident
-    for k in [k for k in _INTER_CACHE if k[:2] != key[:2]]:
-        del _INTER_CACHE[k]
-    _INTER_CACHE[key] = out
-    return out
 
 
 def shingle_doc_sizes(
@@ -390,17 +285,7 @@ def shingle_doc_sizes(
     :func:`shingle_pair_intersections` — persisted alongside it (the
     capped variant must re-derive the DF census to know which
     shingles count, which is exactly the work worth storing)."""
-    import os
-
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
     variant = "capped" if capped else "full"
-    key = (spark.sparkContext.applicationId, sf_dir, f"sz_{variant}")
-    cached = _INTER_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     def build() -> DataFrame:
         sh = (
@@ -411,13 +296,9 @@ def shingle_doc_sizes(
         return sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
 
     base = corpus_slug(sf_dir)
-    out = persisted_table(
+    return persisted_table(
         spark, f"shingle_sizes_{variant}/{base}", sf_dir, build
     )
-    for k in [k for k in _INTER_CACHE if k[:2] != key[:2]]:
-        del _INTER_CACHE[k]
-    _INTER_CACHE[key] = out
-    return out
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -649,10 +530,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding join + hamming confirm over doc_id + 1-2 BIGINTs."""
     import os
 
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     bits = simhash_fingerprint_bits(docs.count())
     base = corpus_slug(sf_dir)
@@ -791,14 +668,11 @@ NEWBATCH_REM = 9
 
 #: Persisted LSH index: the existing corpus' band signatures live in
 #: a table bucketed on ``band_val``, so every probe join reads the
-#: index pre-distributed — no index-side exchange, ever. Memoized per
-#: (applicationId, sf_dir) like the IVF codebook: built once per
-#: session, single-entry cap so a stale sf_dir's table isn't trusted.
+#: index pre-distributed — no index-side exchange, ever. Built once
+#: per session and corpus (``session_value``); another corpus
+#: rewrites the one table, so a stale sf_dir's table isn't trusted.
 BAND_INDEX_TABLE = "minhash_band_index"
 BAND_INDEX_BUCKETS = 16
-#: Session memo — assumes sf_dir data is immutable within the
-#: application (see memo.py); registered for global invalidation.
-_BAND_INDEX_CACHE: dict[tuple[str, str], str] = _register_memo({})
 
 
 def _band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,8 +685,7 @@ def _band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_bucketed,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if _BAND_INDEX_CACHE.get(key) is None:
+    def build() -> str:
         is_new = F.col("doc_id") % NEWBATCH_MOD == NEWBATCH_REM
         idx = (
             _minhash_bands(spark, sf_dir)
@@ -824,9 +697,9 @@ def _band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_bucketed(
             idx, BAND_INDEX_TABLE, "band_val", n_buckets=BAND_INDEX_BUCKETS
         )
-        _BAND_INDEX_CACHE.clear()  # single-entry cap
-        _BAND_INDEX_CACHE[key] = BAND_INDEX_TABLE
-    return spark.table(BAND_INDEX_TABLE)
+        return BAND_INDEX_TABLE
+
+    return spark.table(session_value(spark, "band_index", sf_dir, build))
 
 
 def dedup_incremental_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1164,11 +1037,6 @@ def dedup_subdoc_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     like ``emb_neardup_pairs``/``lsh_pairs``, so every run after the
     first is a 3-column parquet scan + sort. Build plan exposed as
     :func:`_subdoc_pair_build` for the plan-contract audit."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        corpus_slug,
-        persisted_table,
-    )
-
     pairs = persisted_table(
         spark,
         f"subdoc_pair_counts/{corpus_slug(sf_dir)}",
@@ -1837,11 +1705,6 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists per corpus like the other dedup deliverable tables;
     every run after the first is a scan + sort. Build plan exposed
     as :func:`_bloom_decon_build`."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        corpus_slug,
-        persisted_table,
-    )
-
     rep = persisted_table(
         spark,
         f"bloom_decon_doc/{corpus_slug(sf_dir)}",
@@ -2151,10 +2014,6 @@ def _winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 4× the extraction cost at sf0.1), and the stored
     fingerprint index is the production shape for repeated
     plagiarism/overlap probes anyway."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         arr = word_shingles(k=WINNOW_K)
@@ -2428,10 +2287,6 @@ def _prefix_verified_rep_pairs(
     persisted ``prefix_pairs/{base}`` artifact (see
     :func:`dedup_prefix_filter_pairs` for the guarantee proofs).
     Runs once per corpus; steady state reads the stored pairs."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
     reps = members.filter(F.col("doc_id") == F.col("rep")).select(
         F.col("doc_id").alias("rid"), "sz"
     )
@@ -2602,10 +2457,6 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins on the rep key; expansion is two joins linear in the
     OUTPUT pair count. No all-pairs stage anywhere."""
     import os
-
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
 
     base = corpus_slug(sf_dir)
     sh_all = _doc_shingles(spark, sf_dir)

@@ -28,6 +28,8 @@ from pyspark.sql.window import Window
 from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
 from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
     corpus_slug,
+    persisted_table,
+    session_value,
 )
 from tableau_dashboard_performance_etl_automation_spark.functions.vectors import (
     as_double_array,
@@ -36,7 +38,6 @@ from tableau_dashboard_performance_etl_automation_spark.functions.vectors import
     dot,
     norm,
 )
-from tableau_dashboard_performance_etl_automation_spark.memo import register as _register_memo
 
 #: Near-dup threshold for embedding pairs (LSH-bucketed candidates).
 NEARDUP_COSINE = 0.35
@@ -133,21 +134,6 @@ def ivf_train_permille(n_vectors: int, k: int) -> int | None:
         return None
     return max(1, (1000 * s) // n_vectors)
 
-#: Session-scoped memo of the TRAINED codebook (the collected K×dim
-#: centroid doubles, a plain Python list — no pinned checkpoint
-#: blocks). A real deployment trains the IVF codebook once and
-#: persists it; re-deriving it per query is the one cost that doesn't
-#: amortize. Training is deterministic (exact integer-micro-unit
-#: sums), so a cached codebook is bit-identical to a retrained one and
-#: the oracle replay is unaffected. Keyed by (applicationId, sf_dir);
-#: capped to the single most recent entry so stale codebooks from
-#: other sf_dirs don't accumulate, and because the cache assumes the
-#: sf_dir's parquet is immutable within a session (as the driver's
-#: test corpora are).
-#: Session memo — assumes sf_dir data is immutable within the
-#: application (see memo.py); registered for global invalidation.
-_CODEBOOK_CACHE: dict[tuple[str, str], list] = _register_memo({})
-
 _COS_SQL = (
     "list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[])"
 )
@@ -184,10 +170,6 @@ def _persisted_band_signatures(
     rebuilds.  Signatures are exact integer-unit sign decisions —
     deterministic, so loaded equals recomputed."""
     import os
-
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
 
     base = corpus_slug(sf_dir)
     return persisted_table(
@@ -286,10 +268,6 @@ def neardup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on every run. The build plan (exposed as
     # :func:`_neardup_pair_build` for the plan-contract test) replays
     # the original query exactly.
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
     # tag carries the dials (round-8 ADVICE): a threshold or banding
     # change must invalidate the pair table, not silently reuse it
     pairs = persisted_table(
@@ -395,10 +373,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``emb_neardup_pairs``); every run after the first is a 3-column
     parquet scan + the TOP_K window.  The build plan is exposed as
     :func:`_lsh_scored_build` for the plan-contract audit."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
     scored = persisted_table(
         spark,
         f"lsh_topk_scores/{corpus_slug(sf_dir)}",
@@ -589,10 +563,6 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`knn_label_vote`); after the first run the brute-force
     scan is a 3-column parquet read + the TOP_K window. Build plan
     exposed as :func:`_exact_scored_build`."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
     scored = persisted_table(
         spark,
         f"exact_topk_scores/{corpus_slug(sf_dir)}",
@@ -958,23 +928,23 @@ def _artifact_name(base: str, sf_dir: str) -> str:
     return f"{base}/{corpus_slug(sf_dir)}"
 
 
-def _codebook(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
-    """Trained centroid set, memoized per (applicationId, sf_dir) AND
+def _codebook_rows(spark: SparkSession, sf_dir: str, e: DataFrame) -> list:
+    """Trained centroid rows ``[(cent_id, cvec)]`` — the collected K×dim
+    centroid doubles, a plain Python list with no pinned checkpoint
+    blocks — kept per (application, sf_dir) by ``session_value`` AND
     persisted as a warehouse artifact: the first session ever to need
     it trains and saves; every later session — including a COLD one —
     reads the K-row parquet back instead of paying the Lloyd rounds.
     Training is deterministic (exact integer micro-unit sums), so the
     loaded codebook is bit-identical to a retrain and oracle parity
-    is unaffected.  Tag = sf_dir (immutable-input assumption,
-    memo.py)."""
+    is unaffected.  Tag = sf_dir (immutable-input assumption, see
+    ``sources/warehouse.py``)."""
     from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
         load_artifact,
         save_artifact,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rows = _CODEBOOK_CACHE.get(key)
-    if rows is None:
+    def build() -> list:
         # K self-derives from the corpus count (ivf_n_centroids) and
         # versions the artifact path, so codebooks built under a
         # different dial value can never be read back by mistake
@@ -983,31 +953,23 @@ def _codebook(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
         art = _artifact_name(f"{IVF_CODEBOOK_ARTIFACT}/k{k}", sf_dir)
         stored = load_artifact(spark, art, sf_dir)
         if stored is not None:
-            rows = [(r.cent_id, r.cvec) for r in stored.collect()]
-        else:
-            rows = _train_centroids(e, k, n)
-            save_artifact(
-                spark.createDataFrame(
-                    rows, "cent_id BIGINT, cvec ARRAY<DOUBLE>"
-                ),
-                art,
-                sf_dir,
-            )
-        _CODEBOOK_CACHE.clear()  # single-entry cap; see docstring above
-        _CODEBOOK_CACHE[key] = rows
-    return spark.createDataFrame(rows, "cent_id BIGINT, cvec ARRAY<DOUBLE>")
+            return [(r.cent_id, r.cvec) for r in stored.collect()]
+        rows = _train_centroids(e, k, n)
+        save_artifact(
+            spark.createDataFrame(rows, "cent_id BIGINT, cvec ARRAY<DOUBLE>"),
+            art,
+            sf_dir,
+        )
+        return rows
+
+    return session_value(spark, "ivf_codebook", sf_dir, build)
 
 
-#: Session-scoped memo of the corpus→centroid ASSIGNMENT — the IVF
-#: index's inverted lists. A deployed IVF index persists BOTH halves
-#: (codebook + posting lists); re-deriving the assignment per query
-#: is a full corpus scan that never amortizes. localCheckpointed
-#: (narrow rows: id, cent_id, vec) and capped to the most recent
-#: (applicationId, sf_dir) so stale checkpoint blocks don't pin;
-#: same immutable-sf_dir assumption as the codebook cache.
-#: Session memo — assumes sf_dir data is immutable within the
-#: application (see memo.py); registered for global invalidation.
-_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = _register_memo({})
+def _codebook(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
+    """The trained centroid set of :func:`_codebook_rows`."""
+    return spark.createDataFrame(
+        _codebook_rows(spark, sf_dir, e), "cent_id BIGINT, cvec ARRAY<DOUBLE>"
+    )
 
 
 IVF_POSTINGS_ARTIFACT = "ivf_postings"
@@ -1027,30 +989,18 @@ def _assignments(
     AFTER the postings, and its absence/mismatch forces a rebuild.
     Deterministic assignment (exact integer centroid training +
     rounded cosine) keeps the loaded postings bit-identical to a
-    recompute, so oracle parity is unaffected."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _ASSIGN_CACHE.get(key)
-    if df is None:
-        # table-backed: no localCheckpoint, no pinned blocks — reads
-        # prune to the probed cent_id partitions
-        # postings version-stamped by the codebook size (K is the
-        # local count of the tiny centroid frame — no corpus job)
-        df = persisted_table(
-            spark,
-            _artifact_name(
-                f"{IVF_POSTINGS_ARTIFACT}/k{cent.count()}", sf_dir
-            ),
-            sf_dir,
-            lambda: _nearest(e, cent),
-            partition_by=["cent_id"],
-        ).select("vec_id", "cent_id", "vec")
-        _ASSIGN_CACHE.clear()  # single-entry cap
-        _ASSIGN_CACHE[key] = df
-    return df
+    recompute, so oracle parity is unaffected.  ``cent`` is
+    :func:`_codebook`'s frame for the same corpus."""
+    # postings version-stamped by the codebook size, read from the
+    # driver-side rows ``cent`` was made from — no Spark job
+    k = len(_codebook_rows(spark, sf_dir, e))
+    return persisted_table(
+        spark,
+        _artifact_name(f"{IVF_POSTINGS_ARTIFACT}/k{k}", sf_dir),
+        sf_dir,
+        lambda: _nearest(e, cent),
+        partition_by=["cent_id"],
+    ).select("vec_id", "cent_id", "vec")
 
 
 def ann_ivf_topk(
@@ -1392,18 +1342,14 @@ def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session memo for the dim²-row covariance result (tiny; shared by
-#: ``embedding_effective_rank`` — saves the posexplode self-join
-#: rebuild). Assumes immutable sf_dir data like every memo here.
-_COV_CACHE: dict[tuple[str, str], DataFrame] = _register_memo({})
-
-
 def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upper-triangle covariance matrix of the embedding dimensions —
     the moment matrix PCA/whitening starts from (``cov(i,j) =
     E[x_i·x_j] − E[x_i]·E[x_j]``), computed as one pass of exact
     integer micro-unit moments; the dim·(dim+1)/2-row result is
-    localCheckpoint-memoized per (application, sf_dir).
+    localCheckpointed and kept per (application, sf_dir) by
+    ``session_value`` (``embedding_effective_rank`` shares it and
+    skips the posexplode self-join rebuild).
 
     Scale shape: posexplode → co-partitioned self-equi-join on
     ``vec_id`` (both sides are the same exploded projection, so AQE
@@ -1414,10 +1360,16 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors per partial; at larger corpora drop to 1e4 units). The
     final covariance divides exact integer sums, rounded to 8.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _COV_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return session_value(
+        spark,
+        "embedding_covariance",
+        sf_dir,
+        lambda: _covariance(spark, sf_dir),
+    )
+
+
+def _covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The checkpointed result of :func:`embedding_covariance`."""
     e = _emb(spark, sf_dir)
     flat = e.select(
         "vec_id", F.posexplode("vec").alias("dim", "x")
@@ -1443,7 +1395,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("b.xm")).alias("s_j"),
         )
     )
-    out = (
+    return (
         moments.select(
             "dim_i",
             "dim_j",
@@ -1460,9 +1412,6 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("dim_i", "dim_j")
         .localCheckpoint()
     )
-    _COV_CACHE.clear()  # single-entry cap
-    _COV_CACHE[key] = out
-    return out
 
 
 QUERIES = {
@@ -1947,15 +1896,6 @@ PQ_RERANK_DIV = 20
 def pq_rerank_size(n_vectors: int) -> int:
     return max(PQ_RERANK_MIN, n_vectors // PQ_RERANK_DIV)
 
-#: Session memo of the whole PQ index — (codebook rows, encoded-corpus
-#: codes frame, corpus count): a deployed PQ index persists BOTH
-#: halves (codebook + codes); re-encoding the corpus per query is the
-#: cost that never amortizes. Same single-entry cap and
-#: (applicationId, sf_dir) keying as the IVF caches.
-#: Session memo — assumes sf_dir data is immutable within the
-#: application (see memo.py); registered for global invalidation.
-_PQ_CACHE: dict[tuple[str, str], tuple] = _register_memo({})
-
 PQ_CODEBOOK_ARTIFACT = "pq_codebook"
 
 
@@ -2183,10 +2123,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus alongside the codebook/code artifacts; every run after
     the first is a 3-column parquet scan + the TOP_K window.  Build
     plan exposed as :func:`_pq_scored_build` for the plan audit."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
     scored = persisted_table(
         spark,
         f"pq_topk_scores/{corpus_slug(sf_dir)}",
@@ -2216,9 +2152,8 @@ def _pq_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, neighbor_id, cos6); see :func:`ann_pq_topk` for the
     scale argument. The plan-contract test audits THIS plan."""
     e = _emb(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PQ_CACHE.get(key)
-    if cached is None:
+
+    def build_index() -> tuple:
         # index build (once per CORPUS, round-5): both halves of the
         # PQ index persist as warehouse artifacts — the trained
         # codebook (tiny, tagged parquet) and the encoded corpus
@@ -2230,7 +2165,6 @@ def _pq_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         # training keeps loaded artifacts bit-identical to a rebuild.
         from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
             load_artifact,
-            persisted_table,
             save_artifact,
         )
 
@@ -2272,11 +2206,14 @@ def _pq_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             sf_dir,
             _build_codes,
         )
-        cb_rows = _cb_rows()
-        _PQ_CACHE.clear()  # single-entry cap
-        cached = (cb_rows, codes, e.count())
-        _PQ_CACHE[key] = cached
-    cb_rows, codes, n_vectors = cached
+        return _cb_rows(), codes, e.count()
+
+    # the whole PQ index — (codebook rows, encoded-corpus codes frame,
+    # corpus count) — kept per (application, sf_dir): re-encoding the
+    # corpus per query is the cost that never amortizes
+    cb_rows, codes, n_vectors = session_value(
+        spark, "pq_index", sf_dir, build_index
+    )
     cb = spark.createDataFrame(
         cb_rows, "m INT, cent_id BIGINT, cvec ARRAY<DOUBLE>"
     )
@@ -3751,13 +3688,6 @@ ORACLE_SQL["embedding_maha_outliers"] = f"""
 #: fast at this scale.
 ANN_AUTO_EXACT_MAX = 1_000_000
 
-#: Corpus-count memo for the dispatcher — the count is a per-corpus
-#: constant, so repeat invocations (bench warm-up + timed samples)
-#: must not each pay a full-table count job at plan-construction
-#: time (round-5 ADVICE item).
-_ANN_AUTO_COUNT_CACHE: dict[tuple[str, str], int] = _register_memo({})
-
-
 def _ann_auto_exact_max() -> int:
     """Crossover threshold, env-overridable
     (``SPARK_GRAFT_ANN_AUTO_EXACT_MAX``) so a correctness sweep at
@@ -3801,11 +3731,15 @@ def ann_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-invariant and the hash compare describes the live path at
     ANY scale factor; `tools/bench_scaleup.py` exercises both sides.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n_vecs = _ANN_AUTO_COUNT_CACHE.get(key)
-    if n_vecs is None:
-        n_vecs = load_table(spark, sf_dir, "embeddings").count()
-        _ANN_AUTO_COUNT_CACHE[key] = n_vecs
+    # the count is a per-corpus constant, so repeat invocations (bench
+    # warm-up + timed samples) must not each pay a full-table count
+    # job at plan-construction time (round-5 ADVICE item)
+    n_vecs = session_value(
+        spark,
+        "ann_auto_count",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
     if n_vecs <= _ANN_AUTO_EXACT_MAX_PINNED:
         return ann_cosine_topk(spark, sf_dir)
     return ann_ivf_topk(spark, sf_dir, nprobe=2)

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
 from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
     corpus_slug,
+    persisted_table,
 )
 from tableau_dashboard_performance_etl_automation_spark.functions.hashing import (
     md5_hex_int,
@@ -165,9 +166,6 @@ _KMV_HALF_SPACE = 16**_KMV_HALF_DIGITS
 _KMV_SPACE = _KMV_HALF_SPACE * _KMV_HALF_SPACE
 
 
-_KMV_HASHED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _kmv_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (event_type, 48-bit user hash) pairs — the compaction
     BOTH KMV queries (`kmv_distinct_users`, `kmv_type_overlap`) build
@@ -176,43 +174,21 @@ def _kmv_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline is deterministic, so a loaded table is bit-identical to
     a rebuild, and the 3-4 plan branches that consume it read a
     parquet scan instead of re-hashing the corpus."""
-    import os
 
-    from tableau_dashboard_performance_etl_automation_spark.memo import (
-        register as _reg,
-    )
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
-    if not getattr(_kmv_hashed, "_registered", False):
-        _reg(_KMV_HASHED_CACHE)
-        _kmv_hashed._registered = True
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _KMV_HASHED_CACHE.get(key)
-    if cached is None:
-
-        def build() -> DataFrame:
-            events = load_table(spark, sf_dir, "events")
-            h = F.md5(F.col("user_id").cast("string"))
-            h48 = (
-                md5_hex_int(h, 1, _KMV_HALF_DIGITS).cast("bigint")
-                * F.lit(_KMV_HALF_SPACE)
-                + md5_hex_int(
-                    h, 1 + _KMV_HALF_DIGITS, _KMV_HALF_DIGITS
-                ).cast("bigint")
+    def build() -> DataFrame:
+        events = load_table(spark, sf_dir, "events")
+        h = F.md5(F.col("user_id").cast("string"))
+        h48 = (
+            md5_hex_int(h, 1, _KMV_HALF_DIGITS).cast("bigint")
+            * F.lit(_KMV_HALF_SPACE)
+            + md5_hex_int(h, 1 + _KMV_HALF_DIGITS, _KMV_HALF_DIGITS).cast(
+                "bigint"
             )
-            return events.select(
-                "event_type", h48.alias("h")
-            ).distinct()
-
-        base = corpus_slug(sf_dir)
-        cached = persisted_table(
-            spark, f"kmv_hashed/{base}", sf_dir, build
         )
-        _KMV_HASHED_CACHE.clear()
-        _KMV_HASHED_CACHE[key] = cached
-    return cached
+        return events.select("event_type", h48.alias("h")).distinct()
+
+    base = corpus_slug(sf_dir)
+    return persisted_table(spark, f"kmv_hashed/{base}", sf_dir, build)
 
 
 def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,8 +40,63 @@ QUERY_MIX = (
     "boilerplate_ngram_stats",
 )
 
+#: The other registered queries that read the session memo
+#: (``sources.warehouse.session_value``, directly or through
+#: ``persisted_table`` / ``bucketed_fact``) and start no Spark job on
+#: a warm build at sf0.001.
+MEMO_CONSUMERS = (
+    "ann_auto_topk",
+    "ann_cosine_topk",
+    "ann_lsh_ranking_quality",
+    "ann_lsh_topk",
+    "ann_pq_topk",
+    "bloom_decontaminate",
+    "bm25_ranked_docs",
+    "brand_affinity_topk",
+    "char_bigram_lm_scores",
+    "cluster_balanced_sample",
+    "cluster_centroid_margin",
+    "cluster_lang_purity",
+    "curation_summary",
+    "dedup_clusters",
+    "dedup_containment",
+    "dedup_incremental_newbatch",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_policy_token_savings",
+    "dedup_prefix_filter_pairs",
+    "dedup_subdoc_neardup",
+    "dedup_weighted_sample",
+    "doc_ngram_novelty",
+    "dsir_target_scores",
+    "dup_cluster_size_histogram",
+    "embedding_covariance",
+    "embedding_effective_rank",
+    "hybrid_rank_fusion",
+    "kmv_distinct_users",
+    "knn_accuracy_by_label",
+    "knn_label_vote",
+    "leakfree_split_assign",
+    "market_basket_brand_pairs",
+    "minhash_banding_precision",
+    "minhash_estimate_error",
+    "nation_pagerank",
+    "neardup_degree_histogram",
+    "neardup_graph_stats",
+    "neardup_link_prediction",
+    "neardup_triangles",
+    "part_golden_records",
+    "prefix_vs_lsh_agreement",
+    "semantic_dedup_prune",
+    "semantic_dedup_summary",
+    "split_leakage_report",
+    "supplier_lead_time_percentiles",
+    "winnow_decontaminate",
+    "word_bigram_kn_scores",
+)
 
-@pytest.mark.parametrize("name", QUERY_MIX)
+
+@pytest.mark.parametrize("name", QUERY_MIX + MEMO_CONSUMERS)
 def test_warm_build_starts_no_spark_job(spark, sf_dir, jobs_started, name):
     """Building a query a second time on the same corpus is pure plan
     construction: table and artifact schemas are known, artifacts are

@@ -32,23 +32,30 @@ def test_lsh_band_bits_dial_turns_itself():
 
 
 def test_codebook_is_memoized_per_session(spark, sf_dir):
-    similarity._CODEBOOK_CACHE.clear()
+    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
+        _MEMO,
+    )
+
+    _MEMO.pop("ivf_codebook", None)
     e = similarity._emb(spark, sf_dir)
     c1 = similarity._codebook(spark, sf_dir, e)
     key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in similarity._CODEBOOK_CACHE
-    cached = similarity._CODEBOOK_CACHE[key]
+    assert _MEMO["ivf_codebook"][0] == key
+    cached = _MEMO["ivf_codebook"][1]
     c2 = similarity._codebook(spark, sf_dir, e)
     # second call must reuse the cached rows object (no retraining)
-    assert similarity._CODEBOOK_CACHE[key] is cached
+    assert _MEMO["ivf_codebook"] == (key, cached)
+    assert _MEMO["ivf_codebook"][1] is cached
     assert sorted(r.cent_id for r in c1.collect()) == sorted(
         r.cent_id for r in c2.collect()
     )
-    # single-entry cap: a different sf_dir evicts the old key
-    similarity._CODEBOOK_CACHE.clear()
-    similarity._CODEBOOK_CACHE[("stale", "dir")] = [(0, [0.0])]
-    similarity._codebook(spark, sf_dir, e)
-    assert ("stale", "dir") not in similarity._CODEBOOK_CACHE
+    # single-entry cap: a different sf_dir's entry is replaced
+    _MEMO["ivf_codebook"] = (("stale", "dir"), [(0, [0.0])])
+    c3 = similarity._codebook(spark, sf_dir, e)
+    assert _MEMO["ivf_codebook"][0] == key
+    assert sorted(r.cent_id for r in c3.collect()) == sorted(
+        r.cent_id for r in c1.collect()
+    )
 
 
 def test_grouped_median_matches_statistics_median(spark):

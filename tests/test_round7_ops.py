@@ -71,15 +71,20 @@ def test_ann_auto_oracle_is_corpus_invariant(spark, monkeypatch):
 
 def test_pagerank_df_resident_matches_driver_path(spark, monkeypatch):
     from tableau_dashboard_performance_etl_automation_spark.operators import clustering
+    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
+        _MEMO,
+    )
 
-    clustering._PR_CACHE.clear()
+    _MEMO.pop("nation_pagerank", None)
     driver = clustering.nation_pagerank(spark, SF).collect()
+    assert isinstance(_MEMO["nation_pagerank"][1], dict)
     # force the dispatch bound below the 25-node nation graph: the
     # DataFrame-resident iteration must produce bit-identical ranks
-    clustering._PR_CACHE.clear()
+    _MEMO.pop("nation_pagerank")
     monkeypatch.setenv("SPARK_GRAFT_PR_MAX_DRIVER_NODES", "1")
     distributed = clustering.nation_pagerank(spark, SF).collect()
-    clustering._PR_CACHE.clear()
+    assert not isinstance(_MEMO["nation_pagerank"][1], dict)
+    _MEMO.pop("nation_pagerank")
     assert distributed == driver
 
 

@@ -9,7 +9,7 @@ from collections import Counter
 
 import pytest
 from pyspark.errors import AnalysisException
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from tableau_dashboard_performance_etl_automation_spark.catalog import (
     load_table,
@@ -223,10 +223,10 @@ def test_ivf_codebook_persists_across_cold_session(spark, sf_dir):
     )
     assert wh.load_artifact(spark, art, sf_dir) is not None
 
-    # simulate the cold session: clear ONLY the in-process dict memo.
-    # (invalidate_session_memos would be wrong here — it also revokes
+    # simulate the cold session: drop ONLY the in-process memo entry.
+    # (invalidate_artifacts would be wrong here — it also revokes
     # artifact trust, which models INPUT MUTATION, not a fresh session)
-    sim._CODEBOOK_CACHE.clear()
+    wh._MEMO.pop("ivf_codebook")
     # sabotage the trainer: a cold load must NOT call it
     orig = sim._train_centroids
     sim._train_centroids = lambda e, k: (_ for _ in ()).throw(
@@ -278,11 +278,65 @@ def test_persisted_table_rebuilds_on_tag_change(spark, tmp_path):
     assert calls == ["a", "b"]
 
 
-def test_invalidate_session_memos_revokes_artifact_trust(spark):
-    """After invalidate_session_memos(), disk artifacts this process
+def test_persisted_table_returning_tag_rebuilds(spark):
+    """tag1 → tag2 → tag1 on one name: the tag2 build overwrote the
+    data and the stamp, so the third call must rebuild tag1's rows,
+    not serve tag2's from a trust entry left by the first call."""
+    name = f"test_artifact/retag_{uuid.uuid4().hex[:8]}"
+    calls = []
+
+    def build(k, v):
+        def run():
+            calls.append(v)
+            return spark.createDataFrame([(k, v)], "k BIGINT, v STRING")
+
+        return run
+
+    out1 = warehouse.persisted_table(spark, name, "tag1", build(1, "a"))
+    assert [tuple(r) for r in out1.collect()] == [(1, "a")]
+    out2 = warehouse.persisted_table(spark, name, "tag2", build(2, "b"))
+    assert [tuple(r) for r in out2.collect()] == [(2, "b")]
+    out3 = warehouse.persisted_table(spark, name, "tag1", build(1, "a"))
+    assert [tuple(r) for r in out3.collect()] == [(1, "a")]
+    assert calls == ["a", "b", "a"]
+
+
+def test_invalidate_artifacts_empties_memo(spark, sf_dir):
+    """One entry of each kind — a persisted artifact, a checkpointed
+    session value, a driver value and a bucketed fact layout — is gone
+    after ``invalidate_artifacts()``, and the next persisted call
+    rebuilds."""
+    from tableau_dashboard_performance_etl_automation_spark.operators import (
+        dedup,
+        similarity,
+    )
+
+    slug = warehouse.corpus_slug(sf_dir)
+    digest = slug.rsplit("_", 1)[1]
+    dedup.lsh_pair_table(spark, sf_dir)
+    similarity.embedding_covariance(spark, sf_dir)
+    similarity.ann_auto_topk(spark, sf_dir)
+    warehouse.bucketed_fact(spark, sf_dir, "nation", "n_nationkey", 4)
+    kinds = {
+        f"lsh_pairs/{slug}": DataFrame,
+        "embedding_covariance": DataFrame,
+        "ann_auto_count": int,
+        f"fact_nation_{digest}_by_n_nationkey_4b": str,
+    }
+    for name, kind in kinds.items():
+        assert isinstance(warehouse._MEMO[name][1], kind), name
+
+    warehouse.invalidate_artifacts()
+    assert warehouse._MEMO == {}
+    n0 = len(warehouse.ARTIFACT_EVENTS)
+    dedup.lsh_pair_table(spark, sf_dir)
+    assert (f"lsh_pairs/{slug}", "build") in warehouse.ARTIFACT_EVENTS[n0:]
+
+
+def test_invalidate_artifacts_revokes_artifact_trust(spark):
+    """After invalidate_artifacts(), disk artifacts this process
     touched must NOT be trusted (their path-based tags cannot see an
     in-place input mutation) — the next consumer rebuilds."""
-    from tableau_dashboard_performance_etl_automation_spark import memo
     from tableau_dashboard_performance_etl_automation_spark.sources import warehouse as wh
 
     import uuid
@@ -299,7 +353,7 @@ def test_invalidate_session_memos_revokes_artifact_trust(spark):
     wh.persisted_table(spark, name, "t", build)
     wh.persisted_table(spark, name, "t", build)
     assert calls == [1]  # trusted, no rebuild
-    memo.invalidate_session_memos()
+    wh.invalidate_artifacts()
     out = wh.persisted_table(spark, name, "t", build)
     assert calls == [1, 1]  # trust revoked -> rebuilt
     assert [r.v for r in out.collect()] == [2]
@@ -332,7 +386,7 @@ def test_bucketed_fact_reuses_files_across_sessions(spark, sf_dir, tmp_path):
 
     from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
         BUILD_LOG,
-        _FACT_BUCKET_CACHE,
+        _MEMO,
         _artifact_path,
         bucketed_fact,
     )
@@ -347,8 +401,7 @@ def test_bucketed_fact_reuses_files_across_sessions(spark, sf_dir, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     shutil.rmtree(_artifact_path(spark, name), ignore_errors=True)
     shutil.rmtree(_artifact_path(spark, name + "_meta"), ignore_errors=True)
-    for k in [k for k, n in list(_FACT_BUCKET_CACHE.items()) if n == name]:
-        del _FACT_BUCKET_CACHE[k]
+    _MEMO.pop(name, None)
     BUILD_LOG.pop(name, None)
 
     df1 = bucketed_fact(spark, sf, "supplier", "s_suppkey", n_buckets=8)
@@ -367,8 +420,7 @@ def test_bucketed_fact_reuses_files_across_sessions(spark, sf_dir, tmp_path):
     assert not os.path.exists(data_dir)  # managed drop removed data
     assert os.path.exists(meta_dir)  # stamp untouched by the drop
     shutil.copytree(os.path.join(stash, name), data_dir)
-    for k in [k for k, n in _FACT_BUCKET_CACHE.items() if n == name]:
-        del _FACT_BUCKET_CACHE[k]
+    _MEMO.pop(name)
 
     df2 = bucketed_fact(spark, sf, "supplier", "s_suppkey", n_buckets=8)
     # no rebuild: BUILD_LOG unchanged, content identical
@@ -391,14 +443,12 @@ def test_persisted_table_events_tags_and_trust(spark, sf_dir, tmp_path):
     build logs a 'build' event and BUILD_LOG entry; (2) a re-read
     logs 'hit' (trust-memoized — no meta job needed); (3) a TAG
     change (dial moved) invalidates and rebuilds rather than
-    silently reusing; (4) invalidate_session_memos revokes the trust
+    silently reusing; (4) invalidate_artifacts revokes the trust
     memo AND the stamp, forcing a rebuild."""
-    from tableau_dashboard_performance_etl_automation_spark.memo import (
-        invalidate_session_memos,
-    )
     from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
         ARTIFACT_EVENTS,
         BUILD_LOG,
+        invalidate_artifacts,
         persisted_table,
     )
 
@@ -431,7 +481,7 @@ def test_persisted_table_events_tags_and_trust(spark, sf_dir, tmp_path):
     assert builds == [1, 1]
 
     # global invalidation revokes stamp AND trust memo
-    invalidate_session_memos()
+    invalidate_artifacts()
     n3 = len(ARTIFACT_EVENTS)
     persisted_table(spark, name, "tag|dial=2", build).count()
     assert events_since(n3) == ["build"]
@@ -451,7 +501,7 @@ def test_bucketed_fact_rebuilds_when_stamp_outlives_data(spark, sf_dir):
 
     from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
         BUILD_LOG,
-        _FACT_BUCKET_CACHE,
+        _MEMO,
         _artifact_path,
         bucketed_fact,
     )
@@ -462,8 +512,7 @@ def test_bucketed_fact_rebuilds_when_stamp_outlives_data(spark, sf_dir):
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     shutil.rmtree(_artifact_path(spark, name), ignore_errors=True)
     shutil.rmtree(_artifact_path(spark, name + "_meta"), ignore_errors=True)
-    for k in [k for k, n in list(_FACT_BUCKET_CACHE.items()) if n == name]:
-        del _FACT_BUCKET_CACHE[k]
+    _MEMO.pop(name, None)
     BUILD_LOG.pop(name, None)
 
     df1 = bucketed_fact(spark, sf, "region", "r_regionkey", n_buckets=4)
@@ -474,8 +523,7 @@ def test_bucketed_fact_rebuilds_when_stamp_outlives_data(spark, sf_dir):
     spark.sql(f"DROP TABLE {name}")
     assert not os.path.exists(_artifact_path(spark, name))
     assert os.path.exists(_artifact_path(spark, name + "_meta"))
-    for k in [k for k, n in list(_FACT_BUCKET_CACHE.items()) if n == name]:
-        del _FACT_BUCKET_CACHE[k]
+    _MEMO.pop(name, None)
 
     # must NOT raise; must rebuild (BUILD_LOG accumulates) and serve rows
     df2 = bucketed_fact(spark, sf, "region", "r_regionkey", n_buckets=4)

@@ -289,25 +289,12 @@ def main() -> None:
             )
         report["scales"][f"{factor}x"] = row
         print(json.dumps({f"{factor}x": row}), flush=True)
-        # free the finished factor's memoized localCheckpoint blocks
-        # (shingles/bands/CC labels are keyed by sf_dir, so the next
-        # factor never reuses them): drop the Python references, then
-        # nudge both collectors so the ContextCleaner unpins the
-        # blocks before the larger corpus runs — same hygiene as
-        # bench.py; the 24g heap stays as the backstop
+        # nudge both collectors before the larger corpus runs so the
+        # ContextCleaner unpins the finished factor's unreferenced
+        # checkpoint blocks — same hygiene as bench.py; the 24g heap
+        # stays as the backstop
         import gc
 
-        from tableau_dashboard_performance_etl_automation_spark.operators.clustering import (
-            _CC_LABELS_CACHE,
-        )
-        from tableau_dashboard_performance_etl_automation_spark.operators.dedup import (
-            _BANDS_CACHE,
-            _SHINGLES_CACHE,
-        )
-
-        _SHINGLES_CACHE.clear()
-        _BANDS_CACHE.clear()
-        _CC_LABELS_CACHE.clear()
         gc.collect()
         spark._jvm.System.gc()
     print(json.dumps(report), flush=True)
