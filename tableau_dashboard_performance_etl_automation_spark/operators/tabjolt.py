@@ -31,20 +31,32 @@ frames, built from one ``events`` read by ``report_frames``:
 - the **changes frame** (``_changes``): the baseline-vs-current
   comparison over the 3-day window, holding both the "today" rows
   slower than their baseline (regressions) and the rows more than 40%
-  faster (improvements), flagged by ``regression``.
+  faster (improvements), flagged by ``regression``. It is not sorted.
 
 ``pipeline.run_report`` collects each frame once; the registered
 builders read the same frames, so there is one code path.
 ``q_samples_today`` stays its own query.
 
-Scale notes: the anchor date is a 1-row aggregate broadcast into the
-fact scan (no driver round-trip, no collect); the baseline-vs-current
-comparison joins a ≤#distinct-keys row aggregate against the fact
-table — the small side is explicitly broadcast so the fact side never
-shuffles.
+Where the anchor date comes from, and who sorts:
+
+- the registered builders derive it in the plan (``_with_anchor``, a
+  1-row ``max(event_date)`` aggregate broadcast into the fact scan: no
+  driver round trip), and Q7/Q8 sort with ``orderBy`` like their
+  DuckDB twins;
+- ``pipeline.run_report`` has already collected the daily frame, whose
+  ``is_anchor`` row holds the anchor date, so it builds the changes
+  frame with that date as a DATE literal (``report_frames``) and sorts
+  the collected rows on the driver. That drops the aggregate, its
+  broadcast and the cross join, and the Spark jobs they cost.
+
+Scale notes: the baseline-vs-current comparison joins a
+≤#distinct-keys row aggregate against the fact table — the small side
+is explicitly broadcast so the fact side never shuffles.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -169,9 +181,10 @@ def _baseline(e: DataFrame) -> DataFrame:
     )
 
 
-def _changes(e: DataFrame) -> DataFrame:
+def _changes(e: DataFrame, e_anchored: DataFrame) -> DataFrame:
     """The aa ⋈ bb comparisons of Q7 and Q8 (tabjolt_email.py:385,387)
-    in one frame, sorted by ``percentage_difference`` descending.
+    in one frame, unsorted. ``e_anchored`` is ``e`` with an
+    ``anchor_date`` column, from ``_with_anchor`` or a literal.
 
     bb is the 3-day window of Q8; ``today`` marks its rows inside Q7's
     window (at or after the anchor midnight). A row is kept when it is
@@ -191,7 +204,7 @@ def _changes(e: DataFrame) -> DataFrame:
     # Catalyst doesn't drag a degenerate anchor cross-join (and a
     # second full table scan) into the baseline side.
     aa = _baseline(e)
-    bb = _key_filter(_current_window(_with_anchor(e), lookback_days=3)).select(
+    bb = _key_filter(_current_window(e_anchored, lookback_days=3)).select(
         floor_int(F.col("value")).alias("current_elapsed_ms"),
         F.col("event_type").alias("response_message"),
         (
@@ -200,7 +213,6 @@ def _changes(e: DataFrame) -> DataFrame:
         ).alias("today"),
     )
     avg, cur = F.col("avg_elapsed_ms"), F.col("current_elapsed_ms")
-    pct = F.col("percentage_difference")
     return (
         bb.join(F.broadcast(aa), aa.response == bb.response_message)
         .select(
@@ -210,15 +222,38 @@ def _changes(e: DataFrame) -> DataFrame:
             guarded_pct_diff(avg, cur).alias("percentage_difference"),
             (F.col("today") & (avg < cur)).alias("regression"),
         )
-        .filter(F.col("regression") | ((avg > cur) & (pct < -40.0)))
-        .orderBy(pct.desc())
+        .filter(
+            F.col("regression")
+            | ((avg > cur) & (F.col("percentage_difference") < -40.0))
+        )
     )
 
 
-def report_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """The daily and changes frames over one ``events`` read."""
+def _registered_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The changes frame the registered Q7/Q8 builders read: anchored in
+    the plan and sorted worst-first, like their DuckDB twins."""
     e = _events(spark, sf_dir)
-    return _daily(e), _changes(e)
+    return _changes(e, _with_anchor(e)).orderBy(F.col("percentage_difference").desc())
+
+
+def report_frames(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, Callable[[str | None], DataFrame]]:
+    """The daily frame, and the changes frame for a given anchor date,
+    over one ``events`` read.
+
+    The anchor date is the daily frame's ``is_anchor`` ``summary_date``
+    (``yyyy-MM-dd``), cast to a DATE literal; ``None`` (no such row)
+    selects no changes, as the NULL in-plan anchor does.
+    """
+    e = _events(spark, sf_dir)
+
+    def changes_at(anchor_date: str | None) -> DataFrame:
+        return _changes(
+            e, e.withColumn("anchor_date", F.lit(anchor_date).cast("date"))
+        )
+
+    return _daily(e), changes_at
 
 
 # --- §2.7 queries ---------------------------------------------------------
@@ -295,7 +330,7 @@ def q_regressions(spark: SparkSession, sf_dir: str) -> DataFrame:
     their per-key historical baseline, with % difference, sorted
     worst-first."""
     return (
-        _changes(_events(spark, sf_dir))
+        _registered_changes(spark, sf_dir)
         .filter(F.col("regression"))
         .select(*COMPARISON_COLUMNS)
     )
@@ -316,7 +351,7 @@ def q_improvements(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8 (tabjolt_email.py:387): 3-day window, faster-than-baseline
     keys improved by more than 40% (strict < -40.0)."""
     return (
-        _changes(_events(spark, sf_dir))
+        _registered_changes(spark, sf_dir)
         .filter(~F.col("regression"))
         .select(*COMPARISON_COLUMNS)
     )

@@ -18,6 +18,13 @@ are three Spark actions: ``q_samples_today``, then the daily frame
 by ``tabjolt.report_frames``. The registered builders of the other
 eight queries are projections of those two frames, so the report and
 the registry share one code path.
+
+The changes frame is built after the daily frame is collected: its
+anchor date (the CURRENT_DATE stand-in) is the date of the daily
+frame's ``is_anchor`` row, passed as a literal, so the changes plan
+does not derive it again. The collected changes are sorted here, on
+the driver, in the order Spark's ``percentage_difference DESC`` gives
+the registered Q7/Q8 builders: descending, NULLs last.
 """
 
 from __future__ import annotations
@@ -58,6 +65,13 @@ def _field(row, name: str):
     return None if row is None else row[name]
 
 
+def _worst_first(row) -> tuple:
+    """Sort key for ``percentage_difference`` descending, NULLs last
+    (a zero baseline gives a NULL percentage)."""
+    pct = row.percentage_difference
+    return (pct is None, 0.0 if pct is None else -pct)
+
+
 def run_report(
     spark: SparkSession,
     sf_dir: str,
@@ -77,11 +91,13 @@ def run_report(
     samples = [
         tuple(r) for r in tabjolt.QUERIES["q_samples_today"](spark, sf_dir).collect()
     ]
-    daily_df, changes_df = tabjolt.report_frames(spark, sf_dir)
+    daily_df, changes_at = tabjolt.report_frames(spark, sf_dir)
     daily = daily_df.collect()
-    changes = changes_df.collect()
-
     anchor = next((d for d in daily if d.is_anchor), None)
+    changes = sorted(
+        changes_at(_field(anchor, "summary_date")).collect(), key=_worst_first
+    )
+
     overall = daily[0] if daily else None
     metrics = [
         ("Average time for the latest run (ms)", _field(anchor, "summary_value")),

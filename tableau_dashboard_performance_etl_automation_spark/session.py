@@ -16,6 +16,15 @@ Design notes (100 TB target, tested on local[32]):
 - **nanosAsLong**: the driver's ``events.parquet`` stores
   TIMESTAMP(NANOS) which Spark's vectorized reader rejects; we read
   nanos as BIGINT and convert in the catalog layer (catalog.py).
+- **No DataFrame call-site capture**: PySpark 4.1 captures the Python
+  call site of every ``functions.*`` call and ``Column`` method by
+  default (a stack walk plus about ten py4j round trips each). Building
+  the eight queries of perfbench's ``query_mix`` sample once took
+  2,964 py4j calls with it and 1,240 without.
+  The cost of turning it off: runtime errors no longer name the Python
+  file and line that built the failing expression. Analysis errors
+  (unknown column, type mismatch) read the same. PySpark reads the
+  setting once per process, from the first active session.
 """
 
 from __future__ import annotations
@@ -95,6 +104,11 @@ def get_spark(app_name: str = "tdpe-spark", master: str | None = None) -> SparkS
         # keeps epoch functions valid and matches the DuckDB oracle
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Call-site capture off (design notes above): it costs a stack
+        # walk and py4j round trips per expression call while a query
+        # is built. Runtime errors then lose the Python file and line
+        # that built the failing expression; analysis errors do not.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # 128 MB input splits: right-sized tasks at 100 TB (≈800k
         # tasks) without tiny-file overhead at test scale.

@@ -110,13 +110,19 @@ def test_warm_build_starts_no_spark_job(spark, sf_dir, jobs_started, name):
 
 
 def test_regressions_baseline_broadcasts(spark, sf_dir):
-    _daily, changes = tabjolt.report_frames(spark, sf_dir)
+    _daily, changes_at = tabjolt.report_frames(spark, sf_dir)
+    changes = changes_at("2024-07-30")
     for df in (tabjolt.q_regressions(spark, sf_dir), changes):
         plan = formatted_plan(df)
         # the ≤#keys baseline side must broadcast-hash-join into the fact
         assert "BroadcastHashJoin" in plan
         # fact side must not shuffle for the join: no sort-merge join
         assert "SortMergeJoin" not in plan
+    # the report's anchor is a literal: no max(event_date) aggregate
+    # broadcast and cross-joined into the fact scan
+    plan = formatted_plan(changes)
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert not re.search(r"max\(event_date", plan), plan
 
 
 def test_daily_frame_scans_events_once(spark, sf_dir):

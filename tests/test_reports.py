@@ -171,6 +171,14 @@ def _registry_multisets(spark, sf_dir) -> dict[str, list[str]]:
     return out
 
 
+def _assert_registry_order(spark, sf_dir, res) -> None:
+    """The report lists its changes in the order the registered Q7 and
+    Q8 builders sort them (``percentage_difference`` desc, NULLs last)."""
+    for name, rows in (("q_regressions", res.regressions), ("q_improvements", res.improvements)):
+        want = tabjolt.QUERIES[name](spark, sf_dir).collect()
+        assert [r[3] for r in rows] == [r.percentage_difference for r in want], name
+
+
 def _oracle_multisets(events_parquet: str) -> dict[str, list[str]]:
     """The DuckDB ``ORACLE_SQL`` twins' rows, in ``_report_multisets``
     form."""
@@ -195,11 +203,22 @@ def test_run_report_end_to_end(spark, sf_dir):
     assert str(res.regressions[0][1]) in res.html_report
     # the report's shared frames and the registered builders agree
     assert _report_multisets(res) == _registry_multisets(spark, sf_dir)
+    _assert_registry_order(spark, sf_dir, res)
     # the changes frame arrives worst-first, like Q7 and Q8
     for rows in (res.regressions, res.improvements):
         pct = [r[3] for r in rows if r[3] is not None]
         assert pct == sorted(pct, reverse=True)
     assert [d for d, _v in res.trend] == sorted(d for d, _v in res.trend)
+
+
+def test_run_report_spark_jobs(spark, sf_dir, jobs_started):
+    """A warm ``run_report`` runs 11 Spark jobs at sf0.001: the changes
+    frame takes its anchor date from the collected daily frame, so its
+    plan has no ``max(event_date)`` aggregate to broadcast (15 jobs
+    when it derived the anchor in the plan)."""
+    pipeline.run_report(spark, sf_dir)
+    _res, jobs = jobs_started(lambda: pipeline.run_report(spark, sf_dir))
+    assert len(jobs) == 11, jobs
 
 
 def _degenerate_events(e, kind: str):
@@ -228,6 +247,7 @@ def test_run_report_degenerate_events(spark, sf_dir, tmp_path, kind):
     got = _report_multisets(res)
     assert got == _registry_multisets(spark, str(tmp_path))
     assert got == _oracle_multisets(str(events))
+    _assert_registry_order(spark, str(tmp_path), res)
     values = [v for _label, v in res.metrics]
     if kind == "empty":
         assert values == [None] * 5
