@@ -92,9 +92,8 @@ def _stale_green_names() -> set[str]:
     driver-green round (VERDICT r9 #1: rework-aware rotation).
 
     ``GREEN_DIGESTS.json`` (maintained by ``tools/update_green_digests.py``,
-    run at round start BEFORE code changes so the working tree still
-    matches the driver-tested tree) records each query's source digest
-    at its last green.  A green query whose *current* digest mismatches
+    which computes digests in the tree each green round was recorded
+    against) records each query's source digest at its last green.  A green query whose *current* digest mismatches
     — or that has no recorded digest — is treated as unchecked and
     re-enters the 50-slot window ahead of fresh greens."""
     global _STALE_CACHE

@@ -3729,7 +3729,7 @@ def ann_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     or below the crossover it is the exact-scan SQL, above it the
     nprobe=2 IVF replay (:func:`_ivf_oracle`) — so the oracle is
     corpus-invariant and the hash compare describes the live path at
-    ANY scale factor; `tools/bench_scaleup.py` exercises both sides.
+    ANY scale factor; `tools/ladder.py corpus` exercises both sides.
     """
     # the count is a per-corpus constant, so repeat invocations (bench
     # warm-up + timed samples) must not each pay a full-table count

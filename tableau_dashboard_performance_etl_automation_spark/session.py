@@ -84,20 +84,15 @@ def get_spark(app_name: str = "tdpe-spark", master: str | None = None) -> SparkS
         # with lowered thresholds in tests/test_plans.py.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # Shuffled-hash over sort-merge when the planner's size
-        # conditions allow it (guide §3.1/§9): measured on the round-12
-        # fact ladder (tools/bench_r12_ladder.py, GC-clean interleaved
-        # A/Bs on five shuffle-join fact shapes) — geomean ≈1.06×
-        # faster at 16×/64× and ≈1.26× at 256× (153.6M lineitem), the
-        # gap GROWING with scale because SMJ's per-partition sorts grow
-        # n log n while SHJ's build stays linear. Production-safe by
-        # the planner's own gate: a side only builds a hash map when
-        # its estimated per-partition size fits (canBuildLocalHashMap),
-        # so 100 TB fact-fact joins still fall back to sort-merge.
-        # SPARK_GRAFT_PREFER_SMJ=1 restores the Spark default for A/Bs.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1" else "false",
-        )
+        # conditions allow it (guide §3.1/§9). The round-12 fact-ladder
+        # geomeans that motivated it (≈1.06× faster at 16×/64×, ≈1.26×
+        # at 256×) were never committed as ladder rows or plan pairs
+        # (r12 VERDICT #1), so the setting rests on no recorded
+        # evidence. The planner's own gate bounds the risk: a side only
+        # builds a hash map when its estimated per-partition size fits
+        # (canBuildLocalHashMap). An A/B of this setting runs a parent
+        # tree and a change tree through `tools/ladder.py fact`.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # tz-naive parquet micros → TIMESTAMP (session-UTC), not NTZ;

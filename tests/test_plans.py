@@ -1028,7 +1028,7 @@ def test_perf_budget_gate_heavies_carry_scale_evidence():
     )
     assert not missing, (
         f"queries over the {budget:.2f}s bench budget without PERF.md "
-        f"scale evidence (add a ladder cell via tools/bench_factscale.py "
-        f"or tools/bench_scaleup.py, or a worked cost analysis): "
+        f"scale evidence (add a ladder cell via `tools/ladder.py "
+        f"fact|corpus`, or a worked cost analysis): "
         f"{missing}"
     )

@@ -1,0 +1,435 @@
+"""Scale ladder: time registered queries on replicated copies of a corpus.
+
+    python tools/ladder.py AXIS BASE_DIR FACTORS [QUERY ...]
+
+``AXIS`` picks which tables grow; every other table is symlinked to
+``BASE_DIR`` unchanged:
+
+- ``fact``: ``orders``, ``lineitem`` and ``events`` — facts accumulate,
+  dimensions don't, the way a real warehouse grows;
+- ``corpus``: ``documents`` and ``embeddings`` — the pair-producing
+  dedup/similarity operators must stay near-linear in corpus size;
+- ``part``: ``part`` — record linkage is bounded by block volume, not
+  table rows.
+
+``FACTORS`` is a comma list such as ``1,4,16``; factor 1 runs on
+``BASE_DIR`` itself. With no ``QUERY`` names the axis's probe list runs.
+
+Replica ``r`` of a table shifts its key by ``r × (max key + 1)`` so keys
+stay unique and joins keep their 1:N shape (``lineitem`` shifts by the
+``orders`` key domain, so every line keeps its order). Replicas are also
+decorrelated so they form no artificial duplicates: every third word of
+a document is tagged with ``r``, embeddings are rotated cyclically by
+``r`` (norm-preserving), and part names of replicas ``r ≥ 1`` carry an
+``r{r} `` prefix. A replica is one ``factor``-row broadcast cross join,
+written as 32 hash-partitioned files under ``SCALE_ROOT/AXIS/{factor}x``.
+Its marker, written last, records the base path, the base row counts and
+the factor; a missing or mismatched marker rebuilds the replica.
+
+The session runs on an empty warehouse under ``SCALE_ROOT``, so each
+cell's ``first_s`` includes its artifact builds (index, persisted pair
+tables) and ``steady_s`` is the min of two more runs. Timed runs write
+to the noop sink; ``rows`` comes from one untimed ``count()``. One JSON
+line is printed per finished cell, then the whole report.
+"""
+
+from __future__ import annotations
+
+import argparse
+import gc
+import json
+import os
+import shutil
+import sys
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from tableau_dashboard_performance_etl_automation_spark.catalog import (  # noqa: E402
+    TABLES,
+    load_table,
+)
+from tableau_dashboard_performance_etl_automation_spark.operators.similarity import (  # noqa: E402
+    EMB_DIM,
+)
+from tableau_dashboard_performance_etl_automation_spark.session import (  # noqa: E402
+    ENV_DRIVER_MEM,
+    ENV_WAREHOUSE_DIR,
+    get_spark,
+)
+
+SCALE_ROOT = "/tmp/tdpe-ladder"
+MARKER = "_ladder.json"
+
+#: Per-replica column rewrites, as SQL over the replica index ``r``.
+_WORD_TAG = (
+    "concat_ws(' ', transform(split(text, ' '), (w, i) -> "
+    "CASE WHEN (i + r) % 3 = 0 THEN concat(w, '_', CAST(r AS STRING)) "
+    "ELSE w END))"
+)
+_ROTATE = (
+    f"concat(slice(embedding, (r % {EMB_DIM}) + 1, {EMB_DIM} - (r % {EMB_DIM})), "
+    f"slice(embedding, 1, r % {EMB_DIM}))"
+)
+_NAME_TAG = (
+    "CASE WHEN r = 0 THEN p_name "
+    "ELSE concat('r', CAST(r AS STRING), ' ', p_name) END"
+)
+
+#: axis → replicated table → (key column, table whose key domain sets
+#: the shift, column rewrites).
+AXES = {
+    "fact": {
+        "orders": ("o_orderkey", "orders", {}),
+        "lineitem": ("l_orderkey", "orders", {}),
+        "events": ("event_id", "events", {}),
+    },
+    "corpus": {
+        "documents": ("doc_id", "documents", {"text": _WORD_TAG}),
+        "embeddings": ("vec_id", "embeddings", {"embedding": _ROTATE}),
+    },
+    "part": {
+        "part": ("p_partkey", "part", {"p_name": _NAME_TAG}),
+    },
+}
+
+#: Representative relational slice: scan-agg, broadcast star joins,
+#: fact-fact join, windows, distinct-agg, top-k.
+FACT_PROBES = [
+    "pricing_summary",
+    "shipping_priority",
+    "nation_market_share",
+    "top_revenue_orders",
+    "daily_active_users",
+    "user_sessionization",
+    "rolling_value_7d",
+    "order_quartiles",
+    # round-4 fact-table shapes
+    "sole_late_suppliers",
+    "market_basket_brand_pairs",
+    "user_running_balance",
+    "daily_value_twap",
+    # round-4e interval machinery (binned range join, sweep line,
+    # gap-filled spine, run-length collapse)
+    "events_in_anomaly_windows",
+    "daily_peak_concurrency",
+    "gapfilled_daily_counts",
+    "event_run_lengths",
+    # round-4e session/stat analytics
+    "session_path_mining",
+    "session_type_pmi",
+    "signup_purchase_survival",
+    "value_drift_psi",
+    "event_type_dow_chisq",
+    # round-5e: the Space-Saving guarantee set (events-shaped
+    # compaction + broadcast totals join)
+    "guaranteed_heavy_hitters",
+    "daily_value_autocorrelation",
+    # round-5b event-table shapes: sketches (fixed-state aggregates),
+    # the interval attribution join, and the quasi-identifier census
+    "hll_distinct_users",
+    "kmv_type_overlap",
+    "purchase_click_attribution_final",
+    "small_cell_suppression_report",
+    # round-5d statistical testing shapes: the value-domain KS
+    # cumsum window (the one global ordered window in the layer),
+    # day-compaction changepoint, orders-scan Benford digits, the
+    # orders⋈customer OLS trend, and the user-domain A/B aggregate
+    "daily_value_ks_test",
+    "daily_changepoint",
+    "benford_price_digits",
+    "nation_revenue_trend",
+    "conversion_ab_ztest",
+    # round-5f inequality/dependence shapes: per-customer compaction +
+    # distinct-value windows (gini, lorenz), bounded-cell MI table
+    "nation_revenue_gini",
+    "customer_revenue_lorenz",
+    "event_hour_mi_terms",
+    # round-5f cont.: revenue-weighted cohort window, 3-level
+    # erasure-cascade semi-joins
+    "cohort_ltv_curve",
+    "customer_erasure_audit",
+    # round-5f cont.: interval-join credit buckets, integer HHI rollup
+    "multi_touch_attribution",
+    "part_supplier_hhi",
+    # bounded (flag, quantity) compaction rank test
+    "returnflag_quantity_kruskal",
+    # mergeable-distribution rolling percentile (7-way fan-out join)
+    "rolling_p95_value_7d",
+    # round-6: the two-phase leaderboard top-k (local WindowGroupLimit
+    # per split — must stay flat as per-priority row counts grow) and
+    # the zero-exchange bucketed-fact cold build
+    "price_rank_gaps",
+    "brand_affinity_cold_bucketed",
+    # round-6: value-domain range planner (flat — domain-bounded),
+    # the incremental rollup merge (linear full scan), and the
+    # salted skew-safe join (one fact shuffle on (key, salt))
+    "range_partition_plan",
+    "incremental_agg_refresh",
+    "skewsafe_user_join",
+    # round-7: the >2s bench heavies brought under the perf-budget
+    # gate (tests/test_plans.py): TPC-H fact-fact shapes (Q9/Q20/Q21
+    # analogs), the per-(part,supp) min-cost argmin, the 3-table FK
+    # audit, per-supplier exact percentiles, and the events-shaped
+    # Markov entropy rate
+    # round-11: the events-payload JSON census (bench outlier in
+    # r10; ladder proves the from_json scan flat through 16×)
+    "props_json_key_census",
+    "nation_year_profit",
+    "excess_stock_suppliers",
+    "order_last_shippers",
+    "priority_return_orders",
+    "important_parts_value",
+    "fk_integrity_audit",
+    "supplier_lead_time_percentiles",
+    "markov_entropy_rate",
+    # round-7 cont.: borderline gate heavies on the fact axis — the
+    # sampled join-cardinality estimator audit and the events-shaped
+    # robust outlier rates
+    "join_estimate_accuracy",
+    "value_robust_outlier_rates",
+    # the 1.6-2.2s band noise can push over the gate budget
+    "event_type_robust_stats",
+    "lineitem_price_correlations",
+    # round-7 cont.: two more borderline-band queries that run noise
+    # pushed over the budget in a full-bench sample — the CMS-verified
+    # heavy-hitter census (events-shaped fixed-width sketch + exact
+    # confirm join) and the per-(part) min-cost supplier argmin
+    "heavy_hitter_users_cms",
+    "min_cost_supplier",
+    # round-9: the bench heavies the round-8 verdict flagged
+    # without ladder cells — the orders profiler (one full-scan
+    # aggregate), the events winsorizer (percentile pair + clamp
+    # aggregate), and the CDC upsert (orders-derived change stream
+    # merged onto the customer dim)
+    "profile_orders",
+    "winsorized_event_stats",
+    "cdc_upsert_customers",
+]
+
+#: The pair-producing dedup/similarity operators and the document- and
+#: embedding-shaped heavies.
+CORPUS_PROBES = [
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_ngram_jaccard",
+    # the persisted verified-pair table (steady state is an artifact
+    # scan; first sample per factor carries the build)
+    "neardup_embedding_cosine",
+    "dedup_subdoc_blocks",
+    "dedup_incremental_newbatch",
+    # round-4e: the char-level stats after the linear split()
+    # rewrite — the probe that would have caught the O(n²)
+    # substring walk (per-doc cost grows with doc length, so a
+    # corpus replicate holds it fixed; still worth the trend line)
+    "doc_char_entropy",
+    "char_bigram_lm_scores",
+    "vocab_coverage_curve",
+    # round-5b: the span-level fingerprint family (per-doc window
+    # min + capped inverted index) and the clustered semantic
+    # prune (within-cluster pair join over the persisted IVF
+    # postings) — both must stay near-linear as the corpus grows
+    "winnowing_overlap_pairs",
+    "semantic_dedup_prune",
+    # round-5d: the binary-signature linear scan and the
+    # 4-budget truncation-fidelity pair sweep — both must stay
+    # linear in corpus size (queries broadcast, corpus streams)
+    "ann_hamming_topk",
+    "matryoshka_truncation_fidelity",
+    # round-5e: label propagation rides the LSH edge list (two
+    # join+aggregate rounds over it — must track the edge count,
+    # not the corpus square); the ANN scorecard composes the
+    # exact scan (linear in corpus) with the LSH probe
+    "lang_label_propagation",
+    "ann_lsh_ranking_quality",
+    # round-5f: the exact-Jaccard prefix-filter join (candidates
+    # must track prefix-shingle collisions, never corpus²) and
+    # the k-core peel (8 bounded rounds over the LSH edge list)
+    "dedup_prefix_filter_pairs",
+    "neardup_kcore_rounds",
+    # round-5f cont.: LSH-vs-exact agreement (composes both pair
+    # sets), per-doc readability projection, grouped lift curve
+    "prefix_vs_lsh_agreement",
+    "doc_readability",
+    "quality_decile_lift",
+    # round-6: the Kneser-Ney LM (scores once per bigram TYPE —
+    # vocab²-bounded — then broadcast-joined; was the #2 heavy in
+    # BENCH_DETAIL with no trajectory) and the two rank-window
+    # rewrites (value-domain decompositions must stay flat as
+    # corpus rows grow past the value domain)
+    "word_bigram_kn_scores",
+    "quantile_normalized_quality",
+    "quality_percentile_filter",
+    # round-7: the remaining document-shaped >2s bench heavies
+    # brought under the perf-budget gate (tests/test_plans.py):
+    # broadcast-bloom decontamination (linear scan), sub-doc
+    # block near-dup (block-shingle equi-join), and the two
+    # LSH-edge-list graph probes (common-neighbor join, bounded
+    # BFS rounds)
+    "bloom_decontaminate",
+    "dedup_subdoc_neardup",
+    "neardup_link_prediction",
+    "neardup_bfs_hops",
+    # round-7 cont.: borderline ~2.2-2.7s heavies under the
+    # perf-budget gate — n-gram census, containment join, fused
+    # BM25+ANN ranking, kNN eval, and the minhash-vs-exact sweep
+    "boilerplate_ngram_stats",
+    "dedup_containment",
+    "hybrid_rank_fusion",
+    "knn_accuracy_by_label",
+    "minhash_estimate_error",
+    # round-7 cont.: the 1.6-2.2s band that run-to-run noise can
+    # push over the gate budget — covered pre-emptively
+    "knn_label_vote",
+    "embedding_decontaminate",
+    "hard_negative_mining",
+    "ann_cosine_topk",
+    "benchmark_decontaminate",
+    # round-9: the remaining verdict-flagged heavies without
+    # ladder cells — the BM25 posting-list scorer, the OOV census
+    # (both linear document scans with broadcast vocab), and the
+    # two ANN index probes whose steady state is now a persisted
+    # scored-candidate scan (first sample per factor carries the
+    # index + score build)
+    "bm25_ranked_docs",
+    "dsir_target_scores",
+    "bootstrap_mean_tokens_ci",
+    "oov_rate_by_source",
+    "ann_lsh_topk",
+    "ann_pq_topk",
+    # the IVF index: first_s carries the codebook train and posting
+    # assignment, steady_s is the pruned scan
+    "ann_ivf_topk",
+]
+
+#: Record linkage over ``part``: blocking, sorted neighbourhood,
+#: Fellegi-Sunter, and the golden-record survivorship built on it.
+PART_PROBES = [
+    "part_fs_linkage",
+    "part_record_linkage",
+    "part_sorted_neighborhood",
+    # round-6 flagship: FS matches -> CC -> survivorship; the match
+    # labels persist per corpus, so min-of-2 reports the warm read
+    "part_golden_records",
+]
+
+PROBES = {"fact": FACT_PROBES, "corpus": CORPUS_PROBES, "part": PART_PROBES}
+
+
+def build_replica(
+    spark, axis: str, base_dir: str, factor: int, root: str = SCALE_ROOT
+) -> str:
+    """Return a directory holding ``base_dir`` grown ``factor``× along
+    ``axis``, building it unless its marker matches."""
+    # the symlinks must not dangle, so the base path is absolute
+    base_dir = os.path.abspath(base_dir)
+    if factor == 1:
+        return base_dir
+    tables = AXES[axis]
+    out = os.path.join(root, axis, f"{factor}x")
+    marker = {
+        "base": base_dir,
+        "rows": {t: load_table(spark, base_dir, t).count() for t in tables},
+        "factor": factor,
+    }
+    try:
+        with open(os.path.join(out, MARKER)) as fh:
+            if json.load(fh) == marker:
+                return out
+    except (OSError, ValueError):
+        pass
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    for name in TABLES:
+        if name not in tables and os.path.exists(f"{base_dir}/{name}.parquet"):
+            os.symlink(f"{base_dir}/{name}.parquet", f"{out}/{name}.parquet")
+    reps = F.broadcast(spark.range(factor).select(F.col("id").cast("int").alias("r")))
+    for name, (key, domain, rewrites) in tables.items():
+        domain_max = load_table(spark, base_dir, domain).agg(F.max(tables[domain][0]))
+        shift = domain_max.first()[0] + 1
+        cols = {key: F.col(key) + F.col("r").cast("bigint") * F.lit(shift)}
+        cols.update({c: F.expr(sql) for c, sql in rewrites.items()})
+        df = load_table(spark, base_dir, name)
+        (
+            df.crossJoin(reps)
+            .select([cols.get(c, F.col(c)).alias(c) for c in df.columns])
+            .repartition(32, key)
+            .write.parquet(f"{out}/{name}.parquet")
+        )
+    with open(os.path.join(out, MARKER), "w") as fh:
+        json.dump(marker, fh)
+    return out
+
+
+def time_cell(spark, fn, sf_dir: str) -> dict:
+    samples = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        samples.append(time.perf_counter() - t0)
+    return {
+        "first_s": round(samples[0], 3),
+        "steady_s": round(min(samples[1:]), 3),
+        "rows": fn(spark, sf_dir).count(),
+    }
+
+
+def _factors(text: str) -> list[int]:
+    factors = [int(f) for f in text.split(",") if f.strip()]
+    if not factors or min(factors) < 1:
+        raise argparse.ArgumentTypeError(f"not a list of factors >= 1: {text!r}")
+    return factors
+
+
+def main(argv: list[str] | None = None) -> None:
+    parser = argparse.ArgumentParser(
+        description="Time registered queries on replicated copies of a corpus."
+    )
+    parser.add_argument("axis", choices=sorted(AXES))
+    parser.add_argument("base_dir")
+    parser.add_argument("factors", type=_factors, help="comma list, e.g. 1,4,16")
+    parser.add_argument("queries", nargs="*", help="default: the axis's probe list")
+    args = parser.parse_args(argv)
+
+    import __spark_entry__ as entry_mod
+
+    registry = entry_mod.queries()
+    probe = args.queries or PROBES[args.axis]
+    unknown = sorted(set(probe) - registry.keys())
+    if unknown:
+        parser.error(f"queries not registered: {unknown}")
+
+    # One JVM runs every cell back-to-back; the roomy heap and the
+    # collections between factors keep pinned checkpoint blocks from
+    # stalling later cells (the same hygiene as bench.py).
+    os.environ.setdefault(ENV_DRIVER_MEM, "24g")
+    warehouse_dir = os.path.join(SCALE_ROOT, "warehouse")
+    shutil.rmtree(warehouse_dir, ignore_errors=True)
+    os.environ[ENV_WAREHOUSE_DIR] = warehouse_dir
+    spark = get_spark(f"tdpe-ladder-{args.axis}")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    report: dict = {"axis": args.axis, "base": args.base_dir, "scales": {}}
+    for factor in args.factors:
+        sf_dir = build_replica(spark, args.axis, args.base_dir, factor)
+        scale = {
+            "table_rows": {
+                t: load_table(spark, sf_dir, t).count() for t in AXES[args.axis]
+            },
+            "cells": {},
+        }
+        report["scales"][f"{factor}x"] = scale
+        for name in probe:
+            cell = time_cell(spark, registry[name], sf_dir)
+            scale["cells"][name] = cell
+            print(json.dumps({"factor": factor, "query": name, **cell}), flush=True)
+        gc.collect()
+        spark._jvm.System.gc()
+    print(json.dumps(report), flush=True)
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()
