@@ -19,6 +19,8 @@ different execution strategies for the same semantics.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -150,85 +152,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 PR_DAMPING = 0.85
 PR_ITERS = 5
 PR_UNIT = 1_000_000_000
-#: Ceiling on driver-resident rank-vector size.  The nation graph
-#: has 25 nodes; above this the operator DISPATCHES to the
-#: DataFrame-resident iteration (:func:`_pagerank_df_resident`)
-#: instead of holding the vector in a driver dict (round-7: the
-#: former loud guard is now a slow-path dispatch).
-PR_MAX_DRIVER_NODES = 100_000
-
-
-def _pr_max_driver_nodes() -> int:
-    """Dispatch bound, env-overridable
-    (``SPARK_GRAFT_PR_MAX_DRIVER_NODES``) so tests can force the
-    DataFrame-resident path on a small graph and prove it
-    bit-identical to the driver-dict path."""
-    import os
-
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_PR_MAX_DRIVER_NODES", PR_MAX_DRIVER_NODES
-        )
-    )
-
-
-def _pagerank_df_resident(
-    spark: SparkSession, ew: DataFrame, nodes: DataFrame, n: int
-) -> DataFrame:
-    """Weighted PageRank with the rank vector AS A DATAFRAME — the
-    unbounded-node-domain path. Per round: one equi-join of the rank
-    table into the (pre-aggregated, never-moving) edge table, one
-    map-side-combinable integer SUM onto ``dst``, one left-anti
-    aggregate for the dangling mass (a single scalar collected per
-    round — O(iters) driver traffic, not O(nodes)), and a left join
-    back onto the node table. ``localCheckpoint`` per round truncates
-    the iteration's lineage.
-
-    Bit-identical to the driver-dict path by construction: the
-    per-edge contribution is the same
-    ``FLOOR(CAST(0.85 AS DOUBLE) · r · w / out_w)`` expression, the
-    dangling share is the same Python ``int(0.85 · dangling / n)``
-    (dangling is an exact integer scalar either way), and the update
-    is the same integer addition — so dispatch changes WHERE the
-    vector lives, never the numbers. ``nodes``: one ``node BIGINT``
-    column; ``ew``: (src, dst, w, out_w)."""
-    base = int(PR_UNIT // n)
-    teleport = int((1 - PR_DAMPING) * PR_UNIT / n)
-    srcs = ew.select("src").distinct()
-    contrib = F.expr(
-        f"CAST(FLOOR(CAST({PR_DAMPING} AS DOUBLE)"
-        " * r * w / out_w) AS BIGINT)"
-    )
-    ranks = nodes.select(
-        "node", F.lit(base).cast("bigint").alias("r")
-    ).localCheckpoint()
-    for _ in range(PR_ITERS):
-        contribs = (
-            ew.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(contrib).alias("c"))
-        )
-        dangling = (
-            ranks.join(srcs, ranks["node"] == srcs["src"], "left_anti")
-            .agg(F.sum("r"))
-            .collect()[0][0]
-            or 0
-        )
-        dshare = int(PR_DAMPING * dangling / n)
-        ranks = (
-            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport + dshare)
-                    + F.coalesce(F.col("c"), F.lit(0))
-                )
-                .cast("bigint")
-                .alias("r"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,12 +185,10 @@ def nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     importance-propagation pass (site rank for crawl prioritization,
     source trust scoring for data curation).
 
-    Scale shape: the heavy step is building the edge aggregate from
-    the fact table — one shuffle on (src, dst), dims broadcast. The
-    iterations then run on the AGGREGATED edge table: the rank vector
-    (O(nodes), tiny) broadcasts into an edge join each round and the
-    edges never move — at billions of edges the per-round cost is one
-    broadcast join + one map-side-combinable SUM, no edge shuffle.
+    Scale shape: the distributed step is building the edge aggregate
+    from the fact table — one shuffle on (src, dst), dims broadcast.
+    Its output is bounded by nations² (25 × 25) at every scale factor,
+    so the iterations run in plain Python on the collected edge list.
 
     Determinism: ranks are BIGINT nano-units; every per-edge
     contribution is ``FLOOR(damping · rank · w / out_w)`` — FLOOR of
@@ -276,95 +197,58 @@ def nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-integer-moments discipline; ROUND is avoided because
     engines disagree on tie semantics, FLOOR has no ties).
 
-    The converged rank vector — a plain dict on the small-domain
-    path, a localCheckpointed (node, r) DataFrame on the
-    DataFrame-resident path — is kept per (application, sf_dir) by
+    The converged rank vector is kept per (application, sf_dir) by
     ``session_value``, for the same reason as the IVF codebook: a
     deployed rank is computed once and persisted, re-deriving it per
     query never amortizes, and determinism makes the cached vector
-    bit-identical to a recompute.
-
-    Node domains above ``PR_MAX_DRIVER_NODES`` dispatch to
-    :func:`_pagerank_df_resident` (rank vector as a DataFrame joined
-    to the edge table each round) instead of a driver dict — same
-    arithmetic, unbounded domain (round-7: formerly a loud guard).
+    bit-identical to a recompute. An empty trade graph ranks nothing
+    and returns no rows.
     """
     ranks = session_value(
-        spark, "nation_pagerank", sf_dir, lambda: _pagerank(spark, sf_dir)
+        spark,
+        "nation_pagerank",
+        sf_dir,
+        lambda: _pagerank(
+            [tuple(r) for r in _trade_edges(spark, sf_dir).collect()]
+        ),
     )
     return _pr_output(spark, sf_dir, ranks)
 
 
-def _pagerank(spark: SparkSession, sf_dir: str):
-    """The converged rank vector of :func:`nation_pagerank`: a driver
-    dict, or a (node, r) DataFrame above the driver-node bound."""
-    edges = _trade_edges(spark, sf_dir).localCheckpoint()
-    outw = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    ew = edges.join(outw, "src").localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # LIMIT bound+1 keeps the dispatch probe ONE job and caps driver
-    # memory even when the domain is huge
-    bound = _pr_max_driver_nodes()
-    probe = nodes.limit(bound + 1).collect()
-    if len(probe) > bound:
-        # unbounded node domain: rank vector stays a DataFrame —
-        # same numbers (see _pagerank_df_resident), different home
-        return _pagerank_df_resident(spark, ew, nodes, nodes.count())
-    node_rows = sorted(r.node for r in probe)
-    n = len(node_rows)
-    base = int(PR_UNIT // n)
+def _pagerank(edges: list[tuple]) -> dict:
+    """The converged rank vector (node → rank units) of the weighted
+    (src, dst, w) edge list, in the arithmetic of
+    :func:`_pagerank_oracle`."""
+    out_w: dict = {}
+    for src, _dst, w in edges:
+        out_w[src] = out_w.get(src, 0) + (w or 0)
+    nodes = sorted({e[0] for e in edges} | {e[1] for e in edges})
+    n = len(nodes)
+    if n == 0:
+        return {}
     teleport = int((1 - PR_DAMPING) * PR_UNIT / n)
-    src_set = {r.src for r in edges.select("src").distinct().collect()}
-    ranks = {node: base for node in node_rows}
+    ranks = dict.fromkeys(nodes, PR_UNIT // n)
     for _ in range(PR_ITERS):
-        rdf = spark.createDataFrame(
-            [(k, v) for k, v in ranks.items()], "src BIGINT, r BIGINT"
-        )
-        contribs = {
-            row.dst: row.c
-            for row in ew.join(F.broadcast(rdf), "src")
-            .groupBy("dst")
-            .agg(
-                # CAST AS DOUBLE: a bare 0.85 literal parses as
-                # DECIMAL in both engines with *different* arithmetic;
-                # forcing DOUBLE makes the expression identical IEEE
-                # math everywhere
-                F.sum(
-                    F.expr(
-                        f"CAST(FLOOR(CAST({PR_DAMPING} AS DOUBLE)"
-                        " * r * w / out_w) AS BIGINT)"
-                    )
-                ).alias("c")
-            )
-            .collect()
-        }
-        dangling = sum(v for k, v in ranks.items() if k not in src_set)
+        contribs = dict.fromkeys(nodes, 0)
+        for src, dst, w in edges:
+            # the oracle's FLOOR(CAST(0.85 AS DOUBLE) * r * w / out_w):
+            # the same IEEE double operations in the same order. A NULL
+            # or zero weight adds nothing there either (0 / 0 is NULL).
+            if w:
+                contribs[dst] += math.floor(
+                    PR_DAMPING * ranks[src] * w / out_w[src]
+                )
+        dangling = sum(r for node, r in ranks.items() if node not in out_w)
         dshare = int(PR_DAMPING * dangling / n)
-        ranks = {
-            node: teleport + dshare + contribs.get(node, 0)
-            for node in node_rows
-        }
+        ranks = {node: teleport + dshare + contribs[node] for node in nodes}
     return ranks
 
 
-def _pr_output(spark: SparkSession, sf_dir: str, ranks) -> DataFrame:
-    """``ranks``: driver dict (small-domain path) or (node, r)
-    DataFrame (DataFrame-resident path) — same downstream join."""
+def _pr_output(spark: SparkSession, sf_dir: str, ranks: dict) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
-    if isinstance(ranks, dict):
-        rdf = spark.createDataFrame(
-            [(k, v) for k, v in ranks.items()],
-            "n_nationkey BIGINT, rank_units BIGINT",
-        )
-    else:
-        rdf = ranks.select(
-            F.col("node").alias("n_nationkey"),
-            F.col("r").alias("rank_units"),
-        )
+    rdf = spark.createDataFrame(
+        list(ranks.items()), "n_nationkey BIGINT, rank_units BIGINT"
+    )
     return (
         rdf.join(
             F.broadcast(nation),
@@ -742,80 +626,6 @@ ORACLE_SQL["neardup_degree_histogram"] = f"""
 """
 
 
-def pagerank_df(
-    edges: DataFrame, iters: int = PR_ITERS, damping: float = PR_DAMPING
-) -> DataFrame:
-    """DataFrame-resident weighted PageRank for UNBOUNDED node
-    domains — the generalization :func:`nation_pagerank`'s driver
-    guard points to: ranks live in a (node, rank_units) DataFrame
-    that joins the edge table each round, so neither the rank vector
-    nor the edges ever concentrate on the driver.
-
-    ``edges`` must have columns (src, dst, w) with positive integer
-    weights.  Same exact-integer nano-unit arithmetic as
-    :func:`nation_pagerank` — identical results where both are
-    applicable (pinned by ``tests/test_clustering.py``) — but each
-    round is an equi-join on ``src`` (ranks hash-partitioned by node,
-    edges by src — co-located after the first round) + one map-side
-    combinable SUM, and a ``localCheckpoint`` truncates lineage so
-    round N never replays rounds 1..N-1.  The per-round dangling mass
-    and the node count are the only driver scalars.
-
-    At 100 TB scale: rank updates shuffle O(nodes) rows per round;
-    the edge table shuffles once at build. When nodes ≪ edges (the
-    usual web/trade graph regime) the broadcast variant wins; when
-    the node set itself outgrows executor memory this is the only
-    correct shape — same trade-off as broadcast vs sort-merge join.
-    """
-    sym = edges.select("src", "dst", "w").localCheckpoint()
-    outw = sym.groupBy("src").agg(F.sum("w").alias("out_w"))
-    ew = sym.join(outw, "src").localCheckpoint()
-    nodes = (
-        sym.select(F.col("src").alias("node"))
-        .union(sym.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    base = int(PR_UNIT // n)
-    teleport = int((1 - damping) * PR_UNIT / n)
-    srcs = sym.select(F.col("src").alias("node")).distinct()
-    ranks = nodes.withColumn("r", F.lit(base).cast("bigint"))
-    for _ in range(iters):
-        contribs = (
-            ew.join(ranks, ew.src == ranks.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.sum(
-                    F.expr(
-                        f"CAST(FLOOR(CAST({damping} AS DOUBLE)"
-                        " * r * w / out_w) AS BIGINT)"
-                    )
-                ).alias("c")
-            )
-        )
-        dangling = (
-            ranks.join(srcs, "node", "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0)))
-            .collect()[0][0]
-        )
-        dshare = int(damping * dangling / n)
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport + dshare)
-                    + F.coalesce(F.col("c"), F.lit(0))
-                )
-                .cast("bigint")
-                .alias("r"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select("node", F.col("r").alias("rank_units"))
-
-
 def dedup_policy_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What dedup actually BUYS, in tokens: for the near-dup clusters
     (MinHash-LSH pairs → connected components), the training-token
@@ -1180,78 +990,6 @@ ORACLE_SQL["leakfree_split_assign"] = _leakfree_oracle()
 #: engines).
 MARKOV_ITERS = 8
 MARKOV_UNIT = 1_000_000_000
-#: Bound on the driver-resident transition matrix (|types|² cells);
-#: above it the operator dispatches to the DataFrame-resident power
-#: iteration (:func:`_markov_df_resident`) instead of raising
-#: (round-7: guard → dispatch).
-MARKOV_MAX_CELLS = 100_000
-
-
-def _markov_max_cells() -> int:
-    """Dispatch bound, env-overridable
-    (``SPARK_GRAFT_MARKOV_MAX_CELLS``) so tests can force the
-    DataFrame-resident path on the real corpus and prove it
-    row-identical to the driver-dict path."""
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_MARKOV_MAX_CELLS", MARKOV_MAX_CELLS)
-    )
-
-
-def _markov_df_resident(
-    spark: SparkSession, trans: DataFrame
-) -> DataFrame:
-    """Markov power iteration with the mass vector AS A DATAFRAME —
-    the unbounded-state-space path. The closed sub-chain restriction,
-    out-mass census, and per-cell ``(v·w) DIV out`` integer update
-    replicate the driver-dict arithmetic exactly (integer floor
-    division of non-negative BIGINTs is engine- and
-    reduction-order-independent), so dispatch changes where the
-    vector lives, not the numbers. Each round: two equi-joins of the
-    (never-moving) cell table against the |states|-row vector and
-    out tables, one hash aggregate onto ``nxt``, a left join back
-    onto the state table; ``localCheckpoint`` truncates lineage.
-
-    Overflow bound (documented, loud): ``v ≤ MARKOV_UNIT = 1e9`` so
-    ``v·w`` stays in BIGINT while any single transition cell has
-    ``w < 9.2e9`` observations — beyond that, pre-scale ``w`` (only
-    the ratio ``w/out`` matters).
-
-    Returns (event_type, stationary_micro, stationary) ordered by
-    event_type — same schema as the driver path."""
-    states = trans.select(F.col("cur").alias("t")).distinct()
-    closed = trans.join(
-        states.withColumnRenamed("t", "nxt"), "nxt", "left_semi"
-    ).localCheckpoint()
-    out = closed.groupBy("cur").agg(F.sum("w").alias("out"))
-    n_states = states.count()
-    v = states.select(
-        "t",
-        F.lit(int(MARKOV_UNIT // n_states)).cast("bigint").alias("v"),
-    ).localCheckpoint()
-    for _ in range(MARKOV_ITERS):
-        nv = (
-            closed.join(v, closed["cur"] == v["t"])
-            .join(out, "cur")
-            .groupBy("nxt")
-            .agg(F.sum(F.expr("(v * w) DIV out")).alias("nv"))
-        )
-        v = (
-            states.join(nv, states["t"] == nv["nxt"], "left")
-            .select(
-                "t",
-                F.coalesce("nv", F.lit(0)).cast("bigint").alias("v"),
-            )
-            .localCheckpoint()
-        )
-    return v.select(
-        F.col("t").alias("event_type"),
-        F.col("v").alias("stationary_micro"),
-        F.round(F.col("v") / F.lit(float(MARKOV_UNIT)), 6).alias(
-            "stationary"
-        ),
-    ).orderBy("event_type")
 
 
 def event_markov_stationary(
@@ -1266,12 +1004,10 @@ def event_markov_stationary(
 
     Scale shape: the DISTRIBUTED work is the transition census — a
     per-user lead window (each partition sorts only its own user's
-    events) into a |types|² hash aggregate. At bounded type domains
-    (≤ ``MARKOV_MAX_CELLS`` cells) the power iteration runs
-    driver-side on exact integers, like the 25-node PageRank vector;
-    larger state spaces DISPATCH to :func:`_markov_df_resident`
-    (mass vector as a DataFrame — same integer arithmetic, unbounded
-    domain; round-7: formerly a loud guard). Mass updates are
+    events) into a |types|² hash aggregate. The type domain does not
+    grow with the data (5 event types at every scale factor), so the
+    census is collected and the power iteration runs in plain Python
+    on exact integers, like the 25-node PageRank vector. Mass updates are
     ``floor(v·w/out)`` BIGINT ops — deterministic in both engines.
     Types that never appear as a transition SOURCE are excluded from
     the state space (they would silently absorb mass).
@@ -1279,17 +1015,7 @@ def event_markov_stationary(
     Returns (event_type, stationary_micro, stationary) ordered by
     event_type.
     """
-    trans = _markov_trans(spark, sf_dir)
-    # LIMIT bound+1 keeps the dispatch probe ONE job and caps driver
-    # memory: if the limit fills past the bound, the domain is large —
-    # dispatch to the DataFrame-resident path without ever collecting
-    # the full matrix
-    max_cells = _markov_max_cells()
-    rows = trans.limit(max_cells + 1).collect()
-    if len(rows) > max_cells:
-        # unbounded state space: the matrix and mass vector stay
-        # DataFrames — same numbers (see _markov_df_resident)
-        return _markov_df_resident(spark, trans)
+    rows = _markov_trans(spark, sf_dir).collect()
     srcs, v = _markov_stationary_from_rows(rows)
     out_rows = [
         (t, v[t], round(v[t] / MARKOV_UNIT, 6)) for t in srcs
@@ -1323,8 +1049,8 @@ def _markov_trans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _markov_stationary_from_rows(rows) -> tuple[list, dict]:
     """Driver-side exact-integer power iteration over collected census
-    rows (the bounded-domain path): restrict to the closed sub-chain
-    over source types, iterate ``floor(v·w/out)`` updates. Returns
+    rows: restrict to the closed sub-chain over source types, iterate
+    ``floor(v·w/out)`` updates. Returns
     (sorted source types, stationary micro-mass per type)."""
     srcs = sorted({r.cur for r in rows})
     sset = set(srcs)
@@ -1543,31 +1269,6 @@ KCORE_K = 2
 KCORE_ROUNDS = 8
 
 
-#: Collected-edge-list bound for the k-core driver path: 1M edges
-#: arrives as two Arrow int64 columns (~16 MB on the wire) and lands
-#: as a Python list of 2-tuples of ints — ~100-150 MB of driver heap
-#: at the bound (tuples, not Row objects; measured order-of-magnitude,
-#: not the old "~16 MB" claim) — acceptable on any real driver, far
-#: over every test/bench corpus; the distributed loop covers
-#: everything bigger.
-KCORE_MAX_DRIVER_EDGES = 1_000_000
-
-
-def _kcore_max_driver_edges() -> int:
-    """Dispatch bound, env-overridable
-    (``SPARK_GRAFT_KCORE_MAX_DRIVER_EDGES``) so tests can force the
-    distributed path on a small graph and prove it bit-identical to
-    the driver path (the ``_pr_max_driver_nodes`` discipline)."""
-    import os
-
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_KCORE_MAX_DRIVER_EDGES",
-            KCORE_MAX_DRIVER_EDGES,
-        )
-    )
-
-
 def neardup_kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative k-core peel of the MinHash near-dup graph: round r
     drops every node whose degree in round r-1's edge set is below
@@ -1580,79 +1281,29 @@ def neardup_kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     target (the same edges feed ``neardup_triangles``; the core is
     where the triangles live).
 
-    Scale shape: each round is one degree aggregate (hash, map-side
-    combinable) + two semi-joins on the node key, localCheckpoint'd
-    like :func:`connected_components` so round N never replays rounds
-    1..N-1; only the two per-round COUNTS cross to the driver. Rounds
-    are a fixed constant, so the DuckDB oracle unrolls the identical
-    peel as ``KCORE_ROUNDS`` nested CTEs — both engines compute all 8
-    rounds even after fixpoint (idempotent peels), keeping the row
-    sets identical by construction.
-
-    Dispatch (round 8, the :func:`nation_pagerank` pattern): the LSH
-    edge list is pair-mass, not corpus-mass — a few thousand rows at
-    sf0.1, ~100k at the 256× decade — so below
-    ``KCORE_MAX_DRIVER_EDGES`` the peel runs as plain Python dicts on
-    the collected edge list (integer degree counts: bit-identical by
-    construction) instead of paying 8 Spark job launches to count a
-    driver-sized table; above the bound the distributed
-    semi-join/checkpoint loop takes over unchanged."""
+    Scale shape: the LSH edge list is pair-mass, not corpus-mass — a
+    few thousand rows at sf0.1, ~100k at the 256× decade — so it is
+    collected once and the peel runs as plain Python dicts (integer
+    degree counts: bit-identical by construction) instead of paying a
+    Spark job per round to count a few thousand rows. Rounds are a
+    fixed constant, so the DuckDB oracle unrolls the identical peel as
+    ``KCORE_ROUNDS`` nested CTEs — both engines compute all 8 rounds
+    even after fixpoint (idempotent peels), keeping the row sets
+    identical by construction."""
     edges = lsh_pair_table(spark, sf_dir).select("doc_a", "doc_b")
-    n_edges = edges.count()
-    if n_edges <= _kcore_max_driver_edges():
-        # Arrow transfer + plain int 2-tuples, not collect()'s Row
-        # objects (round-9 ADVICE: Rows cost ~10x the heap); n_edges
-        # is reused as the round-0 edge count instead of len()-ing
-        # the freshly built list.
-        pdf = edges.toPandas()
-        pairs = list(zip(pdf["doc_a"].tolist(), pdf["doc_b"].tolist()))
-        assert len(pairs) == n_edges
-        rows = []
-        for rnd in range(1, KCORE_ROUNDS + 1):
-            deg: dict = {}
-            for a, b in pairs:
-                deg[a] = deg.get(a, 0) + 1
-                deg[b] = deg.get(b, 0) + 1
-            surv = {v for v, d in deg.items() if d >= KCORE_K}
-            pairs = [(a, b) for a, b in pairs if a in surv and b in surv]
-            rows.append((rnd, len(surv), len(pairs)))
-        return spark.createDataFrame(
-            rows, "round INT, n_nodes BIGINT, n_edges BIGINT"
-        ).orderBy("round")
+    # Arrow transfer + plain int 2-tuples, not collect()'s Row objects
+    # (Rows cost ~10x the heap)
+    pdf = edges.toPandas()
+    pairs = list(zip(pdf["doc_a"].tolist(), pdf["doc_b"].tolist()))
     rows = []
     for rnd in range(1, KCORE_ROUNDS + 1):
-        deg = (
-            edges.select(F.col("doc_a").alias("v"))
-            .unionAll(edges.select(F.col("doc_b").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        surv = deg.filter(F.col("deg") >= KCORE_K).select("v")
-        # LAZY checkpoint: the one union-aggregate action below both
-        # materializes this round's edge set (truncating lineage for
-        # round r+1) and returns the two counts — one Spark job per
-        # round instead of three (checkpoint + count + count)
-        edges = (
-            edges.join(
-                surv.select(F.col("v").alias("doc_a")), "doc_a", "left_semi"
-            )
-            .join(
-                surv.select(F.col("v").alias("doc_b")), "doc_b", "left_semi"
-            )
-            .localCheckpoint(eager=False)
-        )
-        stats = {
-            r["k"]: r["c"]
-            for r in surv.agg(F.count(F.lit(1)).alias("c"))
-            .withColumn("k", F.lit("n"))
-            .unionAll(
-                edges.agg(F.count(F.lit(1)).alias("c")).withColumn(
-                    "k", F.lit("e")
-                )
-            )
-            .collect()
-        }
-        rows.append((rnd, stats["n"], stats["e"]))
+        deg: dict = {}
+        for a, b in pairs:
+            deg[a] = deg.get(a, 0) + 1
+            deg[b] = deg.get(b, 0) + 1
+        surv = {v for v, d in deg.items() if d >= KCORE_K}
+        pairs = [(a, b) for a, b in pairs if a in surv and b in surv]
+        rows.append((rnd, len(surv), len(pairs)))
     return spark.createDataFrame(
         rows, "round INT, n_nodes BIGINT, n_edges BIGINT"
     ).orderBy("round")

@@ -3680,36 +3680,10 @@ ORACLE_SQL["embedding_maha_outliers"] = f"""
 #: tax, bit-identical by the sequential-fold construction), and the
 #: one-time K=1008 IVF build dropped 1618 → 186 s (codebook
 #: 664 → 38 s). The crossover is therefore far above 10⁶ for
-#: one-shot scans; repeated-query deployments can still pin it lower
-#: via ``SPARK_GRAFT_ANN_AUTO_EXACT_MAX`` once the per-query 10 s
-#: exceeds the amortized probe (+build) cost for their query volume.
-#: 10⁶ stays the default: exact/recall-1.0 is the safe answer when
-#: the workload is unknown, and it is now cheap enough to be safe AND
-#: fast at this scale.
+#: one-shot scans. 10⁶ stays: exact/recall-1.0 is the safe answer
+#: when the workload is unknown, and it is now cheap enough to be safe
+#: AND fast at this scale.
 ANN_AUTO_EXACT_MAX = 1_000_000
-
-def _ann_auto_exact_max() -> int:
-    """Crossover threshold, env-overridable
-    (``SPARK_GRAFT_ANN_AUTO_EXACT_MAX``) so a correctness sweep at
-    above-crossover corpora can PIN the exact path (set it huge) and
-    keep the registered exact-scan oracle valid — the dispatch is
-    explicit, not a silent data-size-dependent result change."""
-    import os
-
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_ANN_AUTO_EXACT_MAX", ANN_AUTO_EXACT_MAX
-        )
-    )
-
-
-#: The env knob is read ONCE, at import, into this pin — and BOTH the
-#: live dispatcher (:func:`ann_auto_topk`) and the registered oracle
-#: (:func:`_ann_auto_oracle`, baked below at module import) consume
-#: it, so a post-import env change can never diverge the two (round-9
-#: ADVICE: the dispatcher used to re-read the env per call while the
-#: oracle baked it at import). Set-before-launch remains the contract.
-_ANN_AUTO_EXACT_MAX_PINNED = _ann_auto_exact_max()
 
 
 def ann_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3740,7 +3714,7 @@ def ann_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         lambda: load_table(spark, sf_dir, "embeddings").count(),
     )
-    if n_vecs <= _ANN_AUTO_EXACT_MAX_PINNED:
+    if n_vecs <= ANN_AUTO_EXACT_MAX:
         return ann_cosine_topk(spark, sf_dir)
     return ann_ivf_topk(spark, sf_dir, nprobe=2)
 
@@ -3753,13 +3727,10 @@ def _ann_auto_oracle() -> str:
     VERDICT item 3): the COUNT(*)-driven dispatch is folded into the
     SQL itself — two mutually exclusive branches gated on the same
     corpus count the engine's dispatcher reads, so the oracle
-    describes the LIVE path at ANY scale factor and the old
-    ``ORACLE_SCOPE`` pin-the-exact-path side channel (which the
-    round driver never read) is gone. The crossover constant is the
-    import-time pin ``_ANN_AUTO_EXACT_MAX_PINNED`` — the SAME value
-    the live dispatcher consumes, so the two agree by construction
-    (set the env knob before launch)."""
-    xmax = _ANN_AUTO_EXACT_MAX_PINNED
+    describes the LIVE path at ANY scale factor. The crossover is the
+    constant ``ANN_AUTO_EXACT_MAX`` the live dispatcher reads, so the
+    two agree by construction."""
+    xmax = ANN_AUTO_EXACT_MAX
     return f"""
         WITH ncorp AS (SELECT COUNT(*) AS c FROM embeddings)
         SELECT * FROM ({ORACLE_SQL["ann_cosine_topk"]}) exact_path

@@ -1984,55 +1984,30 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2(|types|) = uniform chaos), with the uniform bound alongside.
 
     Composes :func:`clustering.event_markov_stationary`'s solver
-    (exact integer-unit pi) — from ONE shared census: the previous
-    form ran the full per-user lead window TWICE per execution (once
-    eagerly inside the stationary solver's collect, once lazily in
-    its own transition census). Now the bounded-domain path collects
-    the census once, power-iterates pi driver-side from those same
-    rows, and feeds the |types|²-bounded cell grid back as local
-    data — the entropy expressions below are unchanged Spark
-    expressions, so every double is bit-identical. Each cell's term
-    is a closed-form double of exact integers quantized to 1e-6
-    units, so the final sum over the bounded grid is order-free."""
+    (exact integer-unit pi) from ONE shared census: it collects the
+    |types|²-bounded census once, power-iterates pi in Python from
+    those rows, and feeds the cell grid back as local data — the
+    entropy expressions below are unchanged Spark expressions, so
+    every double is bit-identical. Each cell's term is a closed-form
+    double of exact integers quantized to 1e-6 units, so the final sum
+    over the bounded grid is order-free. An empty chain returns
+    ``(0, 0, NULL, NULL)``."""
     from tableau_dashboard_performance_etl_automation_spark.operators.clustering import (
         MARKOV_UNIT,
-        _markov_max_cells,
         _markov_stationary_from_rows,
         _markov_trans,
-        event_markov_stationary,
     )
 
-    trans = _markov_trans(spark, sf_dir)
-    max_cells = _markov_max_cells()
-    rows = trans.limit(max_cells + 1).collect()
-    if len(rows) <= max_cells:
-        srcs, v = _markov_stationary_from_rows(rows)
-        sset = set(srcs)
-        # restrict to the closed sub-chain the solver used (both
-        # endpoints source types); every cur is a source by
-        # construction, so only the nxt restriction filters
-        cells = spark.createDataFrame(
-            [
-                (r.cur, r.nxt, r.w, v[r.cur])
-                for r in rows
-                if r.nxt in sset
-            ],
-            "cur STRING, nxt STRING, tw BIGINT, pi_u BIGINT",
-        )
-    else:
-        # unbounded state space: keep everything DataFrame-resident
-        # (the solver dispatches likewise; numbers identical)
-        pi = F.broadcast(
-            event_markov_stationary(spark, sf_dir).select(
-                F.col("event_type").alias("cur"),
-                F.col("stationary_micro").alias("pi_u"),
-            )
-        )
-        cells = (
-            trans.withColumnRenamed("w", "tw")
-            .join(pi, "cur")
-            .join(F.broadcast(pi.select(F.col("cur").alias("nxt"))), "nxt")
-        )
+    rows = _markov_trans(spark, sf_dir).collect()
+    srcs, v = _markov_stationary_from_rows(rows)
+    sset = set(srcs)
+    # restrict to the closed sub-chain the solver used (both endpoints
+    # source types); every cur is a source by construction, so only
+    # the nxt restriction filters
+    cells = spark.createDataFrame(
+        [(r.cur, r.nxt, r.w, v[r.cur]) for r in rows if r.nxt in sset],
+        "cur STRING, nxt STRING, tw BIGINT, pi_u BIGINT",
+    )
     outw = cells.groupBy("cur").agg(F.sum("tw").alias("out_w"))
     term = (
         F.col("pi_u")
@@ -2154,8 +2129,9 @@ def _oracle_sql5() -> dict[str, str]:
                    ROUND((SELECT SUM(term_u) FROM terms)
                          / {float(MARKOV_UNIT)!r}, 6)
                        AS entropy_rate_bits,
-                   ROUND(log2(CAST(n_states AS DOUBLE)), 6)
-                       AS max_entropy_bits
+                   CASE WHEN n_states > 0
+                        THEN ROUND(log2(CAST(n_states AS DOUBLE)), 6)
+                   END AS max_entropy_bits
             FROM ns
         """,
     }

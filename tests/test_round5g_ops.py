@@ -214,7 +214,7 @@ def test_ann_auto_dispatch_boundary(spark, monkeypatch):
 
     # force the crossover below this corpus: the dispatcher must take
     # the indexed path (same schema, IVF recall may differ)
-    monkeypatch.setattr(similarity, "_ANN_AUTO_EXACT_MAX_PINNED", 0)
+    monkeypatch.setattr(similarity, "ANN_AUTO_EXACT_MAX", 0)
     ivf = similarity.ann_ivf_topk(spark, SF, nprobe=2).collect()
     auto_big = similarity.ann_auto_topk(spark, SF).collect()
     assert auto_big == ivf

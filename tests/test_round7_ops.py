@@ -1,5 +1,6 @@
-"""Round-7 contracts: the ann_auto_topk oracle-scope declaration and
-the DataFrame-resident iteration dispatch for PageRank / Markov.
+"""Round-7 contracts: the ann_auto_topk oracle-scope declaration, the
+stdlib PNG decoder, the numpy cosine fold and the empty-query-set ANN
+path.
 Value-level parity with DuckDB remains the mirror/driver gate's job;
 these pin the dispatch semantics on ANY corpus."""
 
@@ -43,21 +44,11 @@ def test_ann_auto_oracle_is_corpus_invariant(spark, monkeypatch):
     assert live == exact
     assert sorted(_run(sql)) == sorted(live)
 
-    # a post-import ENV change must affect NEITHER side — the knob is
-    # pinned at import so dispatcher and oracle cannot skew (round-9
-    # ADVICE #2); set-before-launch is the contract
-    monkeypatch.setenv("SPARK_GRAFT_ANN_AUTO_EXACT_MAX", "0")
-    still_exact = [
-        tuple(r) for r in similarity.ann_auto_topk(spark, SF).collect()
-    ]
-    assert still_exact == exact
-    assert str(similarity._ANN_AUTO_EXACT_MAX_PINNED) in similarity._ann_auto_oracle()
-
-    # ABOVE the crossover (pin forced to 0 — flips BOTH the live
+    # ABOVE the crossover (constant forced to 0 — flips BOTH the live
     # dispatcher and a fresh oracle bake together, by construction):
     # live dispatch is the IVF nprobe=2 probe, and the re-baked
     # oracle's second branch reproduces THAT — full value parity
-    monkeypatch.setattr(similarity, "_ANN_AUTO_EXACT_MAX_PINNED", 0)
+    monkeypatch.setattr(similarity, "ANN_AUTO_EXACT_MAX", 0)
     ivf = [
         tuple(r)
         for r in similarity.ann_ivf_topk(spark, SF, nprobe=2).collect()
@@ -67,77 +58,6 @@ def test_ann_auto_oracle_is_corpus_invariant(spark, monkeypatch):
     ]
     assert live_hi == ivf
     assert sorted(_run(similarity._ann_auto_oracle())) == sorted(ivf)
-
-
-def test_pagerank_df_resident_matches_driver_path(spark, monkeypatch):
-    from tableau_dashboard_performance_etl_automation_spark.operators import clustering
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        _MEMO,
-    )
-
-    _MEMO.pop("nation_pagerank", None)
-    driver = clustering.nation_pagerank(spark, SF).collect()
-    assert isinstance(_MEMO["nation_pagerank"][1], dict)
-    # force the dispatch bound below the 25-node nation graph: the
-    # DataFrame-resident iteration must produce bit-identical ranks
-    _MEMO.pop("nation_pagerank")
-    monkeypatch.setenv("SPARK_GRAFT_PR_MAX_DRIVER_NODES", "1")
-    distributed = clustering.nation_pagerank(spark, SF).collect()
-    assert not isinstance(_MEMO["nation_pagerank"][1], dict)
-    _MEMO.pop("nation_pagerank")
-    assert distributed == driver
-
-
-def test_pagerank_df_resident_synthetic_large_domain(spark):
-    """A 300-node synthetic graph (ring + hub + dangling tail) runs
-    the distributed helper directly and must equal a pure-Python
-    replica of the driver-path arithmetic."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from tableau_dashboard_performance_etl_automation_spark.operators import clustering
-
-    n_nodes = 300
-    edges = []  # (src, dst, w)
-    for i in range(n_nodes - 50):  # last 50 nodes dangle (no out-edges)
-        edges.append((i, (i + 1) % (n_nodes - 50), 10 + i % 7))
-        edges.append((i, n_nodes - 1, 3 + i % 5))  # hub in dangling set
-    edf = spark.createDataFrame(edges, "src BIGINT, dst BIGINT, w BIGINT")
-    outw = edf.groupBy("src").agg(F.sum("w").alias("out_w"))
-    ew = edf.join(outw, "src")
-    nodes = (
-        edf.select(F.col("src").alias("node"))
-        .union(edf.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    n = nodes.count()
-    got = {
-        r.node: r.r
-        for r in clustering._pagerank_df_resident(spark, ew, nodes, n).collect()
-    }
-
-    # pure-Python replica of the driver-dict semantics
-    node_list = sorted(got)
-    base = int(clustering.PR_UNIT // n)
-    teleport = int((1 - clustering.PR_DAMPING) * clustering.PR_UNIT / n)
-    out = {}
-    for s, _, w in edges:
-        out[s] = out.get(s, 0) + w
-    ranks = {v: base for v in node_list}
-    for _ in range(clustering.PR_ITERS):
-        contribs = {}
-        for s, d, w in edges:
-            c = int(
-                math.floor(clustering.PR_DAMPING * ranks[s] * w / out[s])
-            )
-            contribs[d] = contribs.get(d, 0) + c
-        dangling = sum(v for k, v in ranks.items() if k not in out)
-        dshare = int(clustering.PR_DAMPING * dangling / n)
-        ranks = {
-            v: teleport + dshare + contribs.get(v, 0) for v in node_list
-        }
-    assert got == ranks
 
 
 def test_png_decode_roundtrip_and_reference_golden():
@@ -242,15 +162,6 @@ def test_numpy_sequential_fold_bit_identical_to_hof_cosine(spark):
             assert sc is None
         else:
             assert sc == d_acc[i] / denom[i]
-
-
-def test_markov_df_resident_matches_driver_path(spark, monkeypatch):
-    from tableau_dashboard_performance_etl_automation_spark.operators import clustering
-
-    driver = clustering.event_markov_stationary(spark, SF).collect()
-    monkeypatch.setenv("SPARK_GRAFT_MARKOV_MAX_CELLS", "1")
-    distributed = clustering.event_markov_stationary(spark, SF).collect()
-    assert [tuple(r) for r in distributed] == [tuple(r) for r in driver]
 
 
 def test_ann_int8_topk_empty_query_set_returns_empty(spark, tmp_path):

@@ -105,19 +105,6 @@ def test_kruskal_h_term_is_exact_integer_on_both_engines(spark):
     ]
 
 
-def test_kcore_driver_path_matches_distributed(spark, monkeypatch):
-    """Round-8 dispatch (the nation_pagerank discipline): the
-    collected-edges Python peel and the distributed semi-join loop
-    must emit identical (round, n_nodes, n_edges) trajectories."""
-    from tableau_dashboard_performance_etl_automation_spark.operators import clustering
-
-    driver = clustering.neardup_kcore_rounds(spark, SF).collect()
-    monkeypatch.setenv("SPARK_GRAFT_KCORE_MAX_DRIVER_EDGES", "0")
-    distributed = clustering.neardup_kcore_rounds(spark, SF).collect()
-    assert distributed == driver
-    assert len(driver) == clustering.KCORE_ROUNDS
-
-
 def test_zeller_dow_sql_century_boundaries():
     """Zeller handles the Gregorian century rules (1900 non-leap,
     2000 leap) — events data may drift decades from the TPC-H span."""
