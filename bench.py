@@ -190,24 +190,6 @@ def main() -> None:
             tag.split("|", 1)[1] if "|" in tag else ""
         )
 
-    def _meta_tag_suffix(meta_dir: str) -> "str | None":
-        """Dial suffix stamped in an artifact's _meta dir, or None if
-        unreadable (pyarrow skips _SUCCESS/_-prefixed files)."""
-        try:
-            import pyarrow.parquet as pq
-
-            tags = (
-                pq.read_table(meta_dir, columns=["_artifact_tag"])
-                .column("_artifact_tag")
-                .to_pylist()
-            )
-            if not tags:
-                return None
-            tag = tags[0]
-            return tag.split("|", 1)[1] if "|" in tag else ""
-        except Exception:
-            return None
-
     wdir = spark.conf.get("spark.sql.warehouse.dir", "")
     if wdir.startswith("file:"):
         wdir = wdir[len("file:") :]
@@ -216,12 +198,13 @@ def main() -> None:
     for root, dirs, _files in os.walk(wdir):
         for d in list(dirs):
             p = os.path.join(root, d)
-            if (slug in d or digest in d) and not d.endswith("_meta"):
+            if slug in d or digest in d:
                 dirs.remove(d)  # don't descend into parquet layout
                 rel = os.path.relpath(p, wdir)
                 family = rel.split(os.sep, 1)[0]
                 if family in live_suffixes:
-                    suffix = _meta_tag_suffix(p + "_meta")
+                    tag = warehouse.artifact_tag(p)
+                    suffix = None if tag is None else tag.partition("|")[2]
                     if suffix is None or suffix not in live_suffixes[family]:
                         # no/unreadable stamp, or stamped under OLD
                         # dials: the timed run would rebuild anyway —

@@ -26,9 +26,9 @@ from pyspark.sql.window import Window
 
 from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
 from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
+    bucketed_table,
     corpus_slug,
     persisted_table,
-    session_value,
 )
 from tableau_dashboard_performance_etl_automation_spark.functions.text import (
     seeded_md5,
@@ -528,8 +528,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashing, width-many weighted sums — 208 s of the 258 s at the
     512× decade) runs once per corpus; the recurring cost is the
     banding join + hamming confirm over doc_id + 1-2 BIGINTs."""
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
     bits = simhash_fingerprint_bits(docs.count())
     base = corpus_slug(sf_dir)
@@ -668,9 +666,10 @@ NEWBATCH_REM = 9
 
 #: Persisted LSH index: the existing corpus' band signatures live in
 #: a table bucketed on ``band_val``, so every probe join reads the
-#: index pre-distributed — no index-side exchange, ever. Built once
-#: per session and corpus (``session_value``); another corpus
-#: rewrites the one table, so a stale sf_dir's table isn't trusted.
+#: index pre-distributed — no index-side exchange, ever. One stamped
+#: table per corpus (``sources/warehouse.bucketed_table``), named by
+#: this prefix and the corpus slug's digest (a table name cannot hold
+#: every character a corpus basename may).
 BAND_INDEX_TABLE = "minhash_band_index"
 BAND_INDEX_BUCKETS = 16
 
@@ -679,27 +678,23 @@ def _band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The existing corpus' (existing_id, band_id, band_val) MinHash
     band signatures as a bucketed table — the stored half of the
     incremental-dedup index. The one-time write pays the only
-    index-side shuffle it will ever do; every subsequent probe joins
-    against bucket-co-located files."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        write_bucketed,
-    )
+    index-side shuffle it will ever do; every later probe, in this
+    session or a later one, joins against bucket-co-located files."""
 
-    def build() -> str:
+    def build() -> DataFrame:
         is_new = F.col("doc_id") % NEWBATCH_MOD == NEWBATCH_REM
-        idx = (
+        return (
             _minhash_bands(spark, sf_dir)
             .filter(~is_new)
             .select(
                 F.col("doc_id").alias("existing_id"), "band_id", "band_val"
             )
         )
-        write_bucketed(
-            idx, BAND_INDEX_TABLE, "band_val", n_buckets=BAND_INDEX_BUCKETS
-        )
-        return BAND_INDEX_TABLE
 
-    return spark.table(session_value(spark, "band_index", sf_dir, build))
+    name = f"{BAND_INDEX_TABLE}_{corpus_slug(sf_dir).rsplit('_', 1)[1]}"
+    return bucketed_table(
+        spark, name, sf_dir, build, "band_val", BAND_INDEX_BUCKETS
+    )
 
 
 def dedup_incremental_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -718,8 +713,8 @@ def dedup_incremental_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     within the index side, so cost ∝ batch, not ∝ corpus.
 
     The index side IS persisted: ``_band_index`` writes the existing
-    corpus' signatures once per session as a table bucketed on
-    ``band_val`` (``sources/warehouse.write_bucketed``), and every
+    corpus' signatures once per corpus as a table bucketed on
+    ``band_val`` (``sources/warehouse.bucketed_table``), and every
     probe reads it bucket-co-located — the plan contract
     (``tests/test_plans.py``) asserts the index side joins with no
     Exchange, so only the batch ever moves."""
@@ -2456,8 +2451,6 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     on prefix shingles (each rep's rarest); verification = two hash
     equi-joins on the rep key; expansion is two joins linear in the
     OUTPUT pair count. No all-pairs stage anywhere."""
-    import os
-
     base = corpus_slug(sf_dir)
     sh_all = _doc_shingles(spark, sf_dir)
 

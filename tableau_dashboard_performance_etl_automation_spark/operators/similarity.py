@@ -169,8 +169,6 @@ def _persisted_band_signatures(
     with the band-width dial, so a corpus crossing a width threshold
     rebuilds.  Signatures are exact integer-unit sign decisions —
     deterministic, so loaded equals recomputed."""
-    import os
-
     base = corpus_slug(sf_dir)
     return persisted_table(
         spark,
@@ -932,17 +930,13 @@ def _codebook_rows(spark: SparkSession, sf_dir: str, e: DataFrame) -> list:
     """Trained centroid rows ``[(cent_id, cvec)]`` — the collected K×dim
     centroid doubles, a plain Python list with no pinned checkpoint
     blocks — kept per (application, sf_dir) by ``session_value`` AND
-    persisted as a warehouse artifact: the first session ever to need
-    it trains and saves; every later session — including a COLD one —
-    reads the K-row parquet back instead of paying the Lloyd rounds.
-    Training is deterministic (exact integer micro-unit sums), so the
-    loaded codebook is bit-identical to a retrain and oracle parity
-    is unaffected.  Tag = sf_dir (immutable-input assumption, see
-    ``sources/warehouse.py``)."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        load_artifact,
-        save_artifact,
-    )
+    persisted as a warehouse artifact (``persisted_table``): the first
+    session ever to need it trains and saves; every later session —
+    including a COLD one — reads the K-row parquet back instead of
+    paying the Lloyd rounds. Training is deterministic (exact integer
+    micro-unit sums), so the loaded codebook is bit-identical to a
+    retrain and oracle parity is unaffected.  Tag = sf_dir
+    (immutable-input assumption, see ``sources/warehouse.py``)."""
 
     def build() -> list:
         # K self-derives from the corpus count (ivf_n_centroids) and
@@ -950,17 +944,15 @@ def _codebook_rows(spark: SparkSession, sf_dir: str, e: DataFrame) -> list:
         # different dial value can never be read back by mistake
         n = e.count()
         k = ivf_n_centroids(n)
-        art = _artifact_name(f"{IVF_CODEBOOK_ARTIFACT}/k{k}", sf_dir)
-        stored = load_artifact(spark, art, sf_dir)
-        if stored is not None:
-            return [(r.cent_id, r.cvec) for r in stored.collect()]
-        rows = _train_centroids(e, k, n)
-        save_artifact(
-            spark.createDataFrame(rows, "cent_id BIGINT, cvec ARRAY<DOUBLE>"),
-            art,
+        stored = persisted_table(
+            spark,
+            _artifact_name(f"{IVF_CODEBOOK_ARTIFACT}/k{k}", sf_dir),
             sf_dir,
+            lambda: spark.createDataFrame(
+                _train_centroids(e, k, n), "cent_id BIGINT, cvec ARRAY<DOUBLE>"
+            ),
         )
-        return rows
+        return [(r.cent_id, r.cvec) for r in stored.collect()]
 
     return session_value(spark, "ivf_codebook", sf_dir, build)
 
@@ -985,8 +977,8 @@ def _assignments(
     directory, so a probed search can prune to the ``nprobe``
     touched clusters at the FILE level (partition pruning / DPP), the
     layout a deployed IVF index stores.  A torn write cannot be
-    trusted: the tiny ``_meta`` tag artifact is written strictly
-    AFTER the postings, and its absence/mismatch forces a rebuild.
+    trusted: the artifact's stamp is written strictly AFTER the
+    postings, and its absence/mismatch forces a rebuild.
     Deterministic assignment (exact integer centroid training +
     rounded cosine) keeps the loaded postings bit-identical to a
     recompute, so oracle parity is unaffected.  ``cent`` is
@@ -2156,47 +2148,35 @@ def _pq_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build_index() -> tuple:
         # index build (once per CORPUS, round-5): both halves of the
         # PQ index persist as warehouse artifacts — the trained
-        # codebook (tiny, tagged parquet) and the encoded corpus
+        # codebook (tiny, collected back) and the encoded corpus
         # codes (vec_id, m, code — the 8-bytes-per-vector layout a PQ
         # store ships).  A cold session loads both and touches the
         # full-width corpus only for the query vectors + the
         # shortlist re-rank; only the first session ever pays the
         # subvector pass, training, and encoding.  Deterministic
         # training keeps loaded artifacts bit-identical to a rebuild.
-        from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-            load_artifact,
-            save_artifact,
-        )
+        trained: dict = {}
 
-        art = _artifact_name(PQ_CODEBOOK_ARTIFACT, sf_dir)
-        cb_holder: dict = {}
+        def _train() -> DataFrame:
+            # the codes build below reuses the training subvectors
+            trained["sub"] = _subvectors(e).localCheckpoint()
+            return spark.createDataFrame(
+                _train_pq(spark, trained["sub"]),
+                "m INT, cent_id BIGINT, cvec ARRAY<DOUBLE>",
+            )
 
-        def _cb_rows() -> list:
-            if "rows" not in cb_holder:
-                stored = load_artifact(spark, art, sf_dir)
-                if stored is not None:
-                    cb_holder["rows"] = [
-                        (r.m, r.cent_id, r.cvec) for r in stored.collect()
-                    ]
-                else:
-                    sub = _subvectors(e).localCheckpoint()
-                    cb_holder["sub"] = sub
-                    cb_holder["rows"] = _train_pq(spark, sub)
-                    save_artifact(
-                        spark.createDataFrame(
-                            cb_holder["rows"],
-                            "m INT, cent_id BIGINT, cvec ARRAY<DOUBLE>",
-                        ),
-                        art,
-                        sf_dir,
-                    )
-            return cb_holder["rows"]
+        cb_rows = [
+            (r.m, r.cent_id, r.cvec)
+            for r in persisted_table(
+                spark, _artifact_name(PQ_CODEBOOK_ARTIFACT, sf_dir), sf_dir, _train
+            ).collect()
+        ]
 
         def _build_codes() -> DataFrame:
-            sub = cb_holder.get("sub")
+            sub = trained.get("sub")
             if sub is None:
                 sub = _subvectors(e).localCheckpoint()
-            return _pq_assign(sub, _cb_rows()).select(
+            return _pq_assign(sub, cb_rows).select(
                 "vec_id", "m", F.col("cent_id").alias("code")
             )
 
@@ -2206,7 +2186,7 @@ def _pq_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             sf_dir,
             _build_codes,
         )
-        return _cb_rows(), codes, e.count()
+        return cb_rows, codes, e.count()
 
     # the whole PQ index — (codebook rows, encoded-corpus codes frame,
     # corpus count) — kept per (application, sf_dir): re-encoding the

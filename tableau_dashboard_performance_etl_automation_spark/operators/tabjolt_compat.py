@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from tableau_dashboard_performance_etl_automation_spark.sources.delimited import (
-    load_delimited,
+    load_manifest,
 )
 
 #: Column layouts reverse-engineered in SURVEY.md §1.2.
@@ -85,20 +85,12 @@ def load_tabjolt_tables(
 ) -> dict[str, DataFrame]:
     """Load any subset of the four tables from delimited files and
     register them as temp views (the ``tabjolt.<table>`` namespace)."""
-    out: dict[str, DataFrame] = {}
-    for name, path in files.items():
-        schema, delimiter, skip_header = LOAD_MANIFEST[name]
-        res = load_delimited(
-            spark,
-            path,
-            schema,
-            delimiter=delimiter,
-            skip_header=skip_header,
-            reject_path=f"{reject_path}/{name}" if reject_path else None,
-        )
-        res.good.createOrReplaceTempView(name)
-        out[name] = res.good
-    return out
+    results = load_manifest(
+        spark,
+        [(path, name, *LOAD_MANIFEST[name]) for name, path in files.items()],
+        reject_path=reject_path,
+    )
+    return {name: res.good for name, res in results.items()}
 
 
 def _as_of(as_of: str | None) -> str:

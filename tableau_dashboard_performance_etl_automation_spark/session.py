@@ -35,7 +35,6 @@ from pyspark.sql import SparkSession
 
 #: Default parallelism knobs, overridable via environment.
 ENV_CPUS = "SPARK_GRAFT_CPUS"
-ENV_SHUFFLE_PARTITIONS = "SPARK_GRAFT_SHUFFLE_PARTITIONS"
 ENV_DRIVER_MEM = "SPARK_GRAFT_DRIVER_MEM"
 #: Warehouse location for managed/bucketed tables and persisted
 #: artifacts. Overridable so the bench's fresh-warehouse mode
@@ -59,7 +58,6 @@ def get_spark(app_name: str = "tdpe-spark", master: str | None = None) -> SparkS
     explicit, and no config pins data to a single JVM.
     """
     cpus = os.environ.get(ENV_CPUS, "*")
-    shuffle_parts = os.environ.get(ENV_SHUFFLE_PARTITIONS, "32")
     driver_mem = os.environ.get(ENV_DRIVER_MEM, "8g")
     extra_java = os.environ.get(ENV_EXTRA_JAVA, "")
     builder = (
@@ -67,7 +65,7 @@ def get_spark(app_name: str = "tdpe-spark", master: str | None = None) -> SparkS
         .master(master or f"local[{cpus}]")
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -6,14 +6,22 @@ import pytest
 
 sys.path.insert(0, "/root/repo")
 
-from tableau_dashboard_performance_etl_automation_spark.session import get_spark
+from tableau_dashboard_performance_etl_automation_spark.session import (
+    ENV_WAREHOUSE_DIR,
+    get_spark,
+)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
-def spark():
-    spark = get_spark("tdpe-tests")
+def spark(tmp_path_factory):
+    # one empty warehouse per run: artifacts built from tmp corpora do
+    # not pile up in a shared one, and no run trusts artifacts that
+    # another version of the code built
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv(ENV_WAREHOUSE_DIR, str(tmp_path_factory.mktemp("warehouse")))
+        spark = get_spark("tdpe-tests")
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
 

@@ -275,3 +275,42 @@ def test_catalog_timestamps_surface_as_session_tz_not_ntz(spark, sf_dir):
     assert isinstance(orders.schema["o_orderdate"].dataType, TimestampType)
     # and the epoch path that broke under NTZ analyzes cleanly
     events.selectExpr("unix_millis(ts)").schema
+
+
+def test_tabjolt_tables_load_through_the_manifest(spark, tmp_path):
+    """``load_tabjolt_tables`` loads the reference's four files with
+    their layouts, registers each as a view and spills a malformed line
+    to that table's reject directory."""
+    from tableau_dashboard_performance_etl_automation_spark.operators import (
+        tabjolt_compat,
+    )
+
+    files = {
+        "wincounter": "1722333534328\tHOST\tgrp\tcnt\tinst\t61.5\t2024-07-30\n",
+        "summary_line": "Avg,12661,2024-07-30\nMax,12973,2024-07-30,EXTRA\n",
+        "thread_details": "1722333534328\tworker-1\tRUNNABLE\n",
+        "performance_samples": "t,lt,ts,s,lb,rc,rm,tn,dt,by,ng,na,trail\n"
+        "2218,0,1722333534328,true,lbl,200,msg,tn,,99,1,1,x\n",
+    }
+    paths = {}
+    for name, text in files.items():
+        paths[name] = str(tmp_path / name)
+        (tmp_path / name).write_text(text)
+    reject_dir = tmp_path / "rejects"
+    tables = tabjolt_compat.load_tabjolt_tables(
+        spark, paths, reject_path=str(reject_dir)
+    )
+    assert {n: t.count() for n, t in tables.items()} == {
+        "wincounter": 1,
+        "summary_line": 1,
+        "thread_details": 1,
+        "performance_samples": 1,
+    }
+    assert spark.table("wincounter").first().value == "61.5"
+    assert spark.table("performance_samples").first().elapsed_time_ms == "2218"
+    spilled = [
+        ln
+        for f in (reject_dir / "summary_line").glob("part-*")
+        for ln in f.read_text().splitlines()
+    ]
+    assert spilled == ["Max,12973,2024-07-30,EXTRA"]

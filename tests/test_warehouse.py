@@ -23,7 +23,7 @@ def test_date_partitioned_scan_prunes(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events")
     path = str(tmp_path / "events_by_date")
     warehouse.write_date_partitioned(events, path)
-    df = warehouse.read_partitioned(spark, path).filter(
+    df = read_parquet(spark, path).filter(
         F.col("event_date") == "2024-01-15"
     )
     plan = formatted_plan(df)
@@ -188,22 +188,33 @@ def test_dynamic_partition_overwrite_replaces_only_touched_day(
     assert abs(s_new - 2 * s_old) < 1e-6
 
 
-def test_artifact_roundtrip_and_tag_guard(spark, sf_dir, tmp_path):
-    from tableau_dashboard_performance_etl_automation_spark.sources import warehouse as wh
+def test_artifact_roundtrip_and_tag_guard(spark):
+    """An artifact round-trips ARRAY<DOUBLE> exactly and its stamp holds
+    its tag; a lookup under another tag (different inputs) refuses the
+    files and rebuilds, and an absent artifact has no stamp."""
+    name = f"test_artifact/x_{uuid.uuid4().hex[:8]}"
+    built = []
 
-    df = spark.createDataFrame(
-        [(1, [0.5, 1.25]), (2, [2.0, -3.5])], "k BIGINT, v ARRAY<DOUBLE>"
-    )
-    wh.save_artifact(df, "test_artifact/x", tag="tagA")
-    back = wh.load_artifact(spark, "test_artifact/x", tag="tagA")
-    assert back is not None
+    def build():
+        built.append(True)
+        return spark.createDataFrame(
+            [(1, [0.5, 1.25]), (2, [2.0, -3.5])], "k BIGINT, v ARRAY<DOUBLE>"
+        )
+
+    back = warehouse.persisted_table(spark, name, "tagA", build)
     assert sorted((r.k, tuple(r.v)) for r in back.collect()) == [
         (1, (0.5, 1.25)),
         (2, (2.0, -3.5)),
     ]
+    path = warehouse._artifact_path(spark, name)
+    assert warehouse.artifact_tag(path) == "tagA"
+    assert built == [True]
     # wrong tag (different inputs) must refuse, absent must refuse
-    assert wh.load_artifact(spark, "test_artifact/x", tag="tagB") is None
-    assert wh.load_artifact(spark, "test_artifact/missing", tag="tagA") is None
+    warehouse.persisted_table(spark, name, "tagB", build)
+    assert built == [True, True]
+    assert warehouse.artifact_tag(path) == "tagB"
+    missing = warehouse._artifact_path(spark, "test_artifact/missing")
+    assert warehouse.artifact_tag(missing) is None
 
 
 def test_ivf_codebook_persists_across_cold_session(spark, sf_dir):
@@ -221,12 +232,13 @@ def test_ivf_codebook_persists_across_cold_session(spark, sf_dir):
     art = sim._artifact_name(
         f"{sim.IVF_CODEBOOK_ARTIFACT}/k{k}", sf_dir
     )
-    assert wh.load_artifact(spark, art, sf_dir) is not None
+    assert wh.artifact_tag(wh._artifact_path(spark, art)) == sf_dir
 
-    # simulate the cold session: drop ONLY the in-process memo entry.
+    # simulate the cold session: drop ONLY the in-process memo entries.
     # (invalidate_artifacts would be wrong here — it also revokes
     # artifact trust, which models INPUT MUTATION, not a fresh session)
     wh._MEMO.pop("ivf_codebook")
+    wh._MEMO.pop(art)
     # sabotage the trainer: a cold load must NOT call it
     orig = sim._train_centroids
     sim._train_centroids = lambda e, k: (_ for _ in ()).throw(
@@ -379,8 +391,8 @@ def test_bucketed_fact_reuses_files_across_sessions(spark, sf_dir, tmp_path):
     bucketed fact layout — it re-registers an external bucketed table
     over the stamped files. Simulated end-to-end in one process by
     dropping the catalog entry (the only thing a session restart
-    loses) while preserving the data files and the meta stamp, then
-    dispatching through ``bucketed_fact`` again."""
+    loses) while preserving the data files and the stamp among them,
+    then dispatching through ``bucketed_fact`` again."""
     import os
     import shutil
 
@@ -388,6 +400,7 @@ def test_bucketed_fact_reuses_files_across_sessions(spark, sf_dir, tmp_path):
         BUILD_LOG,
         _MEMO,
         _artifact_path,
+        artifact_tag,
         bucketed_fact,
     )
 
@@ -400,7 +413,6 @@ def test_bucketed_fact_reuses_files_across_sessions(spark, sf_dir, tmp_path):
     name = f"fact_supplier_{digest}_by_s_suppkey_8b"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     shutil.rmtree(_artifact_path(spark, name), ignore_errors=True)
-    shutil.rmtree(_artifact_path(spark, name + "_meta"), ignore_errors=True)
     _MEMO.pop(name, None)
     BUILD_LOG.pop(name, None)
 
@@ -413,13 +425,12 @@ def test_bucketed_fact_reuses_files_across_sessions(spark, sf_dir, tmp_path):
     # survive. DROP on the managed table would delete the files, so
     # stash them first and restore after the drop.
     data_dir = _artifact_path(spark, name)
-    meta_dir = _artifact_path(spark, name + "_meta")
     stash = str(tmp_path / "stash")
     shutil.copytree(data_dir, os.path.join(stash, name))
     spark.sql(f"DROP TABLE {name}")
     assert not os.path.exists(data_dir)  # managed drop removed data
-    assert os.path.exists(meta_dir)  # stamp untouched by the drop
     shutil.copytree(os.path.join(stash, name), data_dir)
+    assert artifact_tag(data_dir) == os.path.abspath(sf)  # stamp restored
     _MEMO.pop(name)
 
     df2 = bucketed_fact(spark, sf, "supplier", "s_suppkey", n_buckets=8)
@@ -441,7 +452,7 @@ def test_bucketed_fact_reuses_files_across_sessions(spark, sf_dir, tmp_path):
 def test_persisted_table_events_tags_and_trust(spark, sf_dir, tmp_path):
     """Round-9 infrastructure contracts in one flow: (1) a first
     build logs a 'build' event and BUILD_LOG entry; (2) a re-read
-    logs 'hit' (trust-memoized — no meta job needed); (3) a TAG
+    logs 'hit' (trust-memoized — no stamp read needed); (3) a TAG
     change (dial moved) invalidates and rebuilds rather than
     silently reusing; (4) invalidate_artifacts revokes the trust
     memo AND the stamp, forcing a rebuild."""
@@ -488,47 +499,83 @@ def test_persisted_table_events_tags_and_trust(spark, sf_dir, tmp_path):
     assert builds == [1, 1, 1]
 
 
-def test_bucketed_fact_rebuilds_when_stamp_outlives_data(spark, sf_dir):
-    """Round-9 ADVICE (warehouse.py bucketed_fact): DROP TABLE on the
-    managed bucketed table deletes the data files but NOT the meta
-    stamp. The next cold dispatch used to hit the 'stamped and not
-    registered' branch and die in register_bucketed_location's
-    parquet read (PATH_NOT_FOUND); it must instead revoke the stale
-    stamp and rebuild."""
+def _region_fact(spark, sf_dir):
+    """(name, lookup, delete) of a bucketed fact layout; a managed
+    ``DROP TABLE`` deletes its directory."""
     import hashlib
     import os
     import shutil
 
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        BUILD_LOG,
-        _MEMO,
-        _artifact_path,
-        bucketed_fact,
-    )
-
-    sf = sf_dir
-    digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
+    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     name = f"fact_region_{digest}_by_r_regionkey_4b"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(_artifact_path(spark, name), ignore_errors=True)
-    shutil.rmtree(_artifact_path(spark, name + "_meta"), ignore_errors=True)
-    _MEMO.pop(name, None)
-    BUILD_LOG.pop(name, None)
+    shutil.rmtree(warehouse._artifact_path(spark, name), ignore_errors=True)
+    return (
+        name,
+        lambda: warehouse.bucketed_fact(
+            spark, sf_dir, "region", "r_regionkey", n_buckets=4
+        ),
+        lambda: spark.sql(f"DROP TABLE {name}"),
+    )
 
-    df1 = bucketed_fact(spark, sf, "region", "r_regionkey", n_buckets=4)
-    want = df1.count()
-    first_build = BUILD_LOG[name]
 
-    # the asymmetry: managed drop removes data, stamp survives
-    spark.sql(f"DROP TABLE {name}")
-    assert not os.path.exists(_artifact_path(spark, name))
-    assert os.path.exists(_artifact_path(spark, name + "_meta"))
-    _MEMO.pop(name, None)
+def _region_table(spark, sf_dir):
+    """(name, lookup, delete) of a persisted table."""
+    import shutil
+
+    name = f"test_artifact/region_{uuid.uuid4().hex[:8]}"
+    return (
+        name,
+        lambda: warehouse.persisted_table(
+            spark, name, sf_dir, lambda: load_table(spark, sf_dir, "region")
+        ),
+        lambda: shutil.rmtree(warehouse._artifact_path(spark, name)),
+    )
+
+
+ARTIFACT_KINDS = {"bucketed_fact": _region_fact, "persisted_table": _region_table}
+
+
+@pytest.mark.parametrize("kind", sorted(ARTIFACT_KINDS))
+def test_bucketed_fact_rebuilds_when_stamp_outlives_data(spark, sf_dir, kind):
+    """Deleting an artifact's data directory (a managed DROP TABLE, or by
+    hand) deletes its stamp with it, so the next lookup with the memo
+    dropped rebuilds and serves rows. A stamp kept beside the data
+    outlived it: a bucketed fact needed a repair branch, and a
+    persisted table raised PATH_NOT_FOUND."""
+    import os
+
+    name, lookup, delete = ARTIFACT_KINDS[kind](spark, sf_dir)
+    path = warehouse._artifact_path(spark, name)
+    warehouse._MEMO.pop(name, None)
+    warehouse.BUILD_LOG.pop(name, None)
+
+    want = _rows(lookup())
+    first_build = warehouse.BUILD_LOG[name]
+    assert os.path.exists(os.path.join(path, warehouse.STAMP_FILE))
+
+    delete()
+    assert not os.path.exists(path)
+    warehouse._MEMO.pop(name)
 
     # must NOT raise; must rebuild (BUILD_LOG accumulates) and serve rows
-    df2 = bucketed_fact(spark, sf, "region", "r_regionkey", n_buckets=4)
-    assert df2.count() == want
-    assert BUILD_LOG[name] > first_build  # a second build was paid
+    assert _rows(lookup()) == want
+    assert warehouse.BUILD_LOG[name] > first_build  # a second build was paid
+
+
+@pytest.mark.parametrize("kind", sorted(ARTIFACT_KINDS))
+def test_trusted_lookup_starts_no_spark_job(spark, sf_dir, jobs_started, kind):
+    """With the memo dropped and the stamp present, the trust check is a
+    file read and the lookup starts no Spark job."""
+    name, lookup, _delete = ARTIFACT_KINDS[kind](spark, sf_dir)
+    warehouse._MEMO.pop(name, None)
+    want = _rows(lookup())
+    warehouse._MEMO.pop(name)
+    n0 = len(warehouse.ARTIFACT_EVENTS)
+    got, jobs = jobs_started(lookup)
+    assert jobs == []
+    assert warehouse.ARTIFACT_EVENTS[n0:] == [(name, "hit")]
+    assert _rows(got) == want
 
 
 def _rows(df) -> Counter:
@@ -634,14 +681,17 @@ def test_read_parquet_keys_on_inference_confs(spark, sf_dir, tmp_path):
 
 
 def test_load_artifact_missing_path_returns_none(spark):
-    """A missing path is read as ``spark.read.parquet`` reads it, so
-    ``load_artifact`` still sees the AnalysisException; that holds for a
-    path whose schema was known before it was deleted."""
+    """An absent artifact has no stamp; a built one has its tag; after
+    its directory is deleted (its schema known to ``read_parquet``) it
+    has no stamp again, so nothing trusts the missing path."""
     import shutil
 
     name = f"test_artifact/deleted_{uuid.uuid4().hex[:8]}"
-    assert warehouse.load_artifact(spark, name, "t") is None
-    warehouse.save_artifact(spark.createDataFrame([(1,)], "k INT"), name, "t")
-    assert warehouse.load_artifact(spark, name, "t") is not None
-    shutil.rmtree(warehouse._artifact_path(spark, name))
-    assert warehouse.load_artifact(spark, name, "t") is None
+    path = warehouse._artifact_path(spark, name)
+    assert warehouse.artifact_tag(path) is None
+    warehouse.persisted_table(
+        spark, name, "t", lambda: spark.createDataFrame([(1,)], "k INT")
+    ).collect()
+    assert warehouse.artifact_tag(path) == "t"
+    shutil.rmtree(path)
+    assert warehouse.artifact_tag(path) is None
