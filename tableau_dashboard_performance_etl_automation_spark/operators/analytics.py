@@ -47,6 +47,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.count(F.lit(1)).alias("count_order"),
         )
+        .repartition(1)
         .orderBy("l_returnflag", "l_linestatus")
     )
 
@@ -109,6 +110,7 @@ def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue")
         )
+        .repartition(1)
         .orderBy(F.col("revenue").desc(), F.col("n_name"))
     )
 
@@ -130,6 +132,7 @@ def supplier_part_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lines"),
             F.countDistinct("s_suppkey").alias("n_suppliers"),
         )
+        .repartition(1)
         .orderBy("p_brand")
     )
 
@@ -147,6 +150,7 @@ def top_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("price_rank") <= 3)
         .select("p_brand", "p_partkey", "p_name",
                 F.round("p_retailprice", 2).alias("retail_price"), "price_rank")
+        .repartition(1)
         .orderBy("p_brand", "price_rank")
     )
 
@@ -168,6 +172,7 @@ def daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "total_value",
         )
+        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -293,6 +298,7 @@ def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cohorted.groupBy("cohort_week", "weeks_since")
         .agg(F.countDistinct("user_id").alias("active_users"))
+        .repartition(1)
         .orderBy("cohort_week", "weeks_since")
     )
 
@@ -462,6 +468,7 @@ def daily_open_close(spark: SparkSession, sf_dir: str) -> DataFrame:
             "low_value",
             "high_value",
         )
+        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -563,6 +570,7 @@ def event_type_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("m1") + F.col("m2")) / F.lit(400.0)).alias("mad_value"),
             F.col("n").alias("n_events"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -625,6 +633,7 @@ def value_robust_outlier_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("n_outliers", F.lit(0)) / F.col("n"), 4
             ).alias("outlier_rate"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -785,6 +794,7 @@ def hourly_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents") / (F.lit(100.0) * F.count(F.lit(1))), 4
             ).alias("avg_value"),
         )
+        .repartition(1)
         .orderBy("wd", "hh")
     )
 
@@ -892,6 +902,7 @@ def decayed_event_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("dn"), 4).alias("decayed_count"),
             F.round(F.sum("dv"), 4).alias("decayed_value"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -1152,6 +1163,7 @@ def order_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("gap_days").alias("min_gap_days"),
             F.max("gap_days").alias("max_gap_days"),
         )
+        .repartition(1)
         .orderBy("c_mktsegment")
     )
 
@@ -1178,6 +1190,7 @@ def order_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),
         )
+        .repartition(1)
         .orderBy("month_of_year", "day_of_week")
     )
 
@@ -1904,6 +1917,7 @@ def daily_value_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "twap_value"
             ),
         )
+        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -2117,6 +2131,7 @@ def winsorized_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.round(F.col("lo") / F.lit(100.0), 2)).alias("p_lo"),
             F.min(F.round(F.col("hi") / F.lit(100.0), 2)).alias("p_hi"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -2196,6 +2211,7 @@ def event_lateness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("late_us") / F.lit(1000000.0) / F.count(F.lit(1)), 3
             ).alias("mean_late_s"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -2259,6 +2275,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ),
         )
+        .repartition(1)
         .orderBy("from_type", "to_type")
     )
 
@@ -2326,6 +2343,7 @@ def equidepth_value_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents") / F.lit(100.0) / F.count(F.lit(1)), 4
             ).alias("mean_val"),
         )
+        .repartition(1)
         .orderBy("event_type", "bin")
     )
 
@@ -2425,6 +2443,7 @@ def late_data_restatement(spark: SparkSession, sf_dir: str) -> DataFrame:
             "restated_delta",
             "needs_restatement",
         )
+        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -2510,6 +2529,7 @@ def event_run_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("collapse_pct"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -2602,6 +2622,7 @@ def event_type_dow_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("chi2_term"),
         )
+        .repartition(1)
         .orderBy("event_type", "dow")
     )
 
@@ -2731,6 +2752,7 @@ def value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (p_cur - p_base) * F.log(p_cur / p_base), 6
             ).alias("psi_term"),
         )
+        .repartition(1)
         .orderBy("bin_id")
     )
 
@@ -3102,6 +3124,7 @@ def session_type_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("n_both") / F.col("n_sess").cast("double"), 6)
             .alias("support"),
         )
+        .repartition(1)
         .orderBy("type_a", "type_b")
     )
 
@@ -3219,6 +3242,7 @@ def daily_value_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round((n * sxy - sx * sy) / F.sqrt(var_x * var_y), 6),
             ).alias("acf"),
         )
+        .repartition(1)
         .orderBy("lag")
     )
 
@@ -3327,6 +3351,7 @@ def event_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "psi_term"
             ),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 

@@ -125,6 +125,7 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("mix_weight"),
         )
+        .repartition(1)
         .orderBy("source")
     )
 
@@ -180,6 +181,7 @@ def sequence_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ),
         )
+        .repartition(1)
         .orderBy("source")
     )
 
@@ -237,6 +239,7 @@ def temperature_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("boost"),
         )
+        .repartition(1)
         .orderBy("source")
     )
 

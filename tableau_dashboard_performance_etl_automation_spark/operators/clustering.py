@@ -261,6 +261,7 @@ def _pr_output(spark: SparkSession, sf_dir: str, ranks: dict) -> DataFrame:
                 "rank"
             ),
         )
+        .repartition(1)
         .orderBy(F.col("rank_units").desc(), "n_name")
     )
 
@@ -885,6 +886,7 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "leaks",
             (F.col("split_a") != F.col("split_b")).cast("int"),
         )
+        .repartition(1)
         .orderBy("split_a", "split_b")
     )
 
@@ -1023,7 +1025,7 @@ def event_markov_stationary(
     return spark.createDataFrame(
         out_rows,
         "event_type STRING, stationary_micro BIGINT, stationary DOUBLE",
-    ).orderBy("event_type")
+    ).repartition(1).orderBy("event_type")
 
 
 def _markov_trans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1306,7 +1308,7 @@ def neardup_kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((rnd, len(surv), len(pairs)))
     return spark.createDataFrame(
         rows, "round INT, n_nodes BIGINT, n_edges BIGINT"
-    ).orderBy("round")
+    ).repartition(1).orderBy("round")
 
 
 QUERIES["neardup_kcore_rounds"] = neardup_kcore_rounds
@@ -1541,6 +1543,7 @@ def neardup_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(
             unreachable.select(F.col("hop").cast("int"), "n_docs")
         )
+        .repartition(1)
         .orderBy("hop")
     )
 

@@ -65,6 +65,7 @@ def weekly_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("week_offset"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_active"))
+        .repartition(1)
         .orderBy("cohort_week", "week_offset")
     )
 
@@ -101,6 +102,7 @@ def session_bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_bounces") * 100.0 / F.col("n_sessions"), 4
             ),
         )
+        .repartition(1)
         .orderBy("session_date")
     )
 
@@ -297,6 +299,7 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("monetary") / (F.count(F.lit(1)) * 100.0), 4
             ).alias("avg_monetary"),
         )
+        .repartition(1)
         .orderBy("r_band", "f_band", "m_band")
     )
 
@@ -403,7 +406,7 @@ def segment_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_gaps",
         ((F.col("m1") + F.col("m2")) / 2.0).alias("median_gap_days"),
         "p90_gap_days",
-    ).orderBy("c_mktsegment")
+    ).repartition(1).orderBy("c_mktsegment")
 
 
 def skyline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -798,7 +801,7 @@ def nation_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s1") != 0,
             F.round(num.cast("double") / den.cast("double"), 6),
         ).alias("gini"),
-    ).orderBy("n_name")
+    ).repartition(1).orderBy("n_name")
 
 
 def customer_revenue_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1020,6 +1023,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cum_cents") / 100.0 / F.col("cohort_size"), 4
             ).alias("cum_ltv_per_user"),
         )
+        .repartition(1)
         .orderBy("cohort_week", "week_offset")
     )
 

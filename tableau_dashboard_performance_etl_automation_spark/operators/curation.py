@@ -104,6 +104,7 @@ def curation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("ws_tokens").alias("total_ws_tokens"),
             F.sum("bpe_ish_tokens").alias("total_bpe_ish_tokens"),
         )
+        .repartition(1)
         .orderBy("lang")
     )
 
@@ -167,6 +168,7 @@ def quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("kept_tokens"),
         )
+        .repartition(1)
         .orderBy("source")
     )
 
@@ -318,6 +320,7 @@ def source_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("kept_checksum"),
         )
+        .repartition(1)
         .orderBy("source")
     )
 

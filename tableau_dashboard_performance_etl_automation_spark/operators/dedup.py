@@ -600,6 +600,7 @@ def minhash_banding_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
             "confirm_rate",
             F.round(F.col("n_confirmed") * F.lit(1.0) / F.col("n_pairs"), 6),
         )
+        .repartition(1)
         .orderBy("band_overlap")
     )
 
@@ -654,6 +655,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             "matching", "n_pairs", "est_jaccard",
             "avg_exact_jaccard", "mean_abs_err",
         )
+        .repartition(1)
         .orderBy("matching")
     )
 
@@ -873,6 +875,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
+        .repartition(1)
         .orderBy("source_a", "source_b")
     )
 
@@ -1958,6 +1961,7 @@ def source_dedup_burden(spark: SparkSession, sf_dir: str) -> DataFrame:
             "drop_share",
             F.round(F.col("n_dropped") / F.col("n_docs"), 6),
         )
+        .repartition(1)
         .orderBy("source")
     )
 

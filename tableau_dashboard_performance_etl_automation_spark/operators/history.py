@@ -320,6 +320,7 @@ def scd2_point_in_time_purchases(
             F.count(F.lit(1)).cast("bigint").alias("n_purchases"),
             F.sum("cents").cast("bigint").alias("value_cents"),
         )
+        .repartition(1)
         .orderBy("band")
     )
 
@@ -448,6 +449,7 @@ def snapshot_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.sum("kh").cast("bigint").alias("key_checksum"),
         )
+        .repartition(1)
         .orderBy("diff_class")
     )
 
@@ -564,6 +566,7 @@ def incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
             "max_cents",
         )
+        .repartition(1)
         .orderBy("event_type", "day")
     )
 

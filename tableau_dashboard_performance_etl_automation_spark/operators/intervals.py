@@ -123,6 +123,7 @@ def events_in_anomaly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_users",
             "window_value",
         )
+        .repartition(1)
         .orderBy("anchor_date")
     )
 
@@ -194,6 +195,7 @@ def daily_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_sessions",
             "peak_concurrent",
         )
+        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -256,7 +258,7 @@ def gapfilled_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "locf_avg",
         )
     )
-    return filled.orderBy("event_type", "event_date")
+    return filled.repartition(1).orderBy("event_type", "event_date")
 
 
 QUERIES = {
@@ -487,7 +489,7 @@ def rolling_p95_value_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 100.0,
             4,
         ).alias("p95_7d"),
-    ).orderBy("event_date")
+    ).repartition(1).orderBy("event_date")
 
 
 QUERIES["rolling_p95_value_7d"] = rolling_p95_value_7d

@@ -8,6 +8,13 @@ through Python with zero driver involvement, partition counts bound
 memory, and the JVM↔Python hop is amortized over whole record
 batches instead of rows.
 
+A per-row result ordered by ``doc_id`` (metadata, frames, thumbnails,
+audio windows) range-partitions the payloads on ``doc_id`` *before*
+the pandas function and sorts each partition after it. A plain final
+``orderBy`` would range-partition the UDF's output instead, and the
+sampling job that picks the range bounds would run the UDF a second
+time; this way it re-reads the scan, and the UDF runs once per row.
+
 The decode step itself is STUBBED: the image/audio libraries are not
 in this container, so ``decode_image`` raises ``NotImplementedError``
 with the intended contract documented, and the tested paths use
@@ -299,7 +306,8 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_multimodal_dims.py runs both sides on actual image
     bytes)."""
     docs = load_table(spark, sf_dir, "documents")
-    return extract_binary_meta(with_binary_payload(docs)).orderBy("doc_id")
+    payloads = with_binary_payload(docs).repartitionByRange("doc_id")
+    return extract_binary_meta(payloads).sortWithinPartitions("doc_id")
 
 
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,9 +323,8 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.octet_length("text") == F.length("text")
     )
-    return sample_frames(with_binary_payload(docs)).orderBy(
-        "doc_id", "frame_idx"
-    )
+    payloads = with_binary_payload(docs).repartitionByRange("doc_id")
+    return sample_frames(payloads).sortWithinPartitions("doc_id", "frame_idx")
 
 
 def multimodal_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,7 +340,8 @@ def multimodal_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.octet_length("text") == F.length("text")
     )
-    return resize_thumbnails(with_binary_payload(docs)).orderBy("doc_id")
+    payloads = with_binary_payload(docs).repartitionByRange("doc_id")
+    return resize_thumbnails(payloads).sortWithinPartitions("doc_id")
 
 
 #: Shard count for training-shard packing (a dial: ≈ total_bytes /
@@ -365,6 +373,7 @@ def multimodal_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("nb").alias("max_bytes"),
             F.round(F.sum("nb") / F.count(F.lit(1)), 4).alias("avg_bytes"),
         )
+        .repartition(1)
         .orderBy("shard_id")
     )
 
@@ -454,9 +463,8 @@ def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.octet_length("text") == F.length("text")
     )
-    return audio_chunk_windows(with_binary_payload(docs)).orderBy(
-        "doc_id", "win_idx"
-    )
+    payloads = with_binary_payload(docs).repartitionByRange("doc_id")
+    return audio_chunk_windows(payloads).sortWithinPartitions("doc_id", "win_idx")
 
 
 def _img_dims_sql(src: str) -> str:

@@ -409,6 +409,7 @@ def props_json_key_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             "coverage", F.round(F.col("n_rows") / F.col("n_total"), 4)
         )
         .drop("n_total")
+        .repartition(1)
         .orderBy("key")
     )
 
@@ -803,6 +804,7 @@ def consistent_hash_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("shard_before", "shard_after")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+        .repartition(1)
         .orderBy("shard_before", "shard_after")
     )
 

@@ -68,6 +68,7 @@ def priority_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         late_orders.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_orders"))
+        .repartition(1)
         .orderBy("o_orderpriority")
     )
 
@@ -95,6 +96,7 @@ def brand_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_parts"),
             F.round(F.avg("p_retailprice"), 4).alias("avg_price"),
         )
+        .repartition(1)
         .orderBy(
             F.col("p_brand").asc_nulls_first(), F.col("p_type").asc_nulls_first()
         )
@@ -120,6 +122,7 @@ def event_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "pct_of_events"
             ),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -149,6 +152,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= 3 * rsd * F.col("exact_users")
             ).alias("estimate_ok"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -163,6 +167,7 @@ def event_type_counts_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         salted_count(e.select("event_type"), "event_type", n_salts=16)
         .select("event_type", F.col("n").alias("n_events"))
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -213,6 +218,7 @@ def skewsafe_user_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").cast("bigint").alias("n_users"),
             (F.sum("cents") / F.lit(100.0)).alias("total_value"),
         )
+        .repartition(1)
         .orderBy("c_mktsegment")
     )
 
@@ -233,6 +239,7 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("k").alias("max_k"),
             F.round(F.avg("k"), 4).alias("avg_k"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -270,6 +277,7 @@ def daily_metric_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("event_date", "yyyy-MM-dd").alias("event_date"),
             *[F.col(t).alias(f"avg_{t}") for t in types],
         )
+        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -331,6 +339,7 @@ def part_cube_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_parts",
             (F.col("sum_cents") / F.lit(100.0)).alias("total_retail"),
         )
+        .repartition(1)
         .orderBy(
             "gid",
             F.col("p_brand").asc_nulls_first(),
@@ -404,6 +413,7 @@ def order_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_price"
             ),
         )
+        .repartition(1)
         .orderBy("o_orderpriority", "quartile")
     )
 
@@ -492,6 +502,7 @@ def price_rank_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pct_rank",
             "gap_to_next",
         )
+        .repartition(1)
         .orderBy("o_orderpriority", "pos")
     )
 
@@ -528,6 +539,7 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("CAST(total_units DIV 100 AS DOUBLE)") / F.lit(100.0)
             ).alias("total_revenue"),
         )
+        .repartition(1)
         .orderBy("ship_year")
     )
 
@@ -552,6 +564,7 @@ def brand_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("l_suppkey").alias("supplier_cnt"),
             F.count(F.lit(1)).alias("n_lines"),
         )
+        .repartition(1)
         .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type")
     )
 
@@ -613,6 +626,7 @@ def quantity_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "band_revenue"
             ),
         )
+        .repartition(1)
         .orderBy("p_type")
     )
 
@@ -633,6 +647,7 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("n_orders")
         .agg(F.count(F.lit(1)).alias("n_customers"))
+        .repartition(1)
         .orderBy(F.col("n_customers").desc(), F.col("n_orders").desc())
     )
 
@@ -706,6 +721,7 @@ def dormant_segment_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(100.0)
             ).alias("total_balance"),
         )
+        .repartition(1)
         .orderBy("c_mktsegment")
     )
 
@@ -744,6 +760,7 @@ def rolling_distinct_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.date_format("d", "yyyy-MM-dd").alias("day"), "users_7d"
         )
+        .repartition(1)
         .orderBy("day")
     )
 
@@ -797,6 +814,7 @@ def revenue_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("top80_share"),
         )
+        .repartition(1)
         .orderBy("c_mktsegment")
     )
 
@@ -1358,6 +1376,7 @@ def daily_metric_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("substring(metric, 5)").alias("event_type"),
             "avg_value",
         )
+        .repartition(1)
         .orderBy("event_date", "event_type")
     )
 
@@ -1438,6 +1457,7 @@ def part_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_sole_sourced"),
         )
+        .repartition(1)
         .orderBy("p_brand")
     )
 
@@ -1583,6 +1603,7 @@ def _affinity_from_cb(cb: DataFrame) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= 3)
+        .repartition(1)
         .orderBy("brand", "rank")
     )
 

@@ -58,6 +58,7 @@ def dataset_split_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         dataset_split(spark, sf_dir)
         .groupBy("split", "lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
+        .repartition(1)
         .orderBy("split", "lang")
     )
 
@@ -135,6 +136,7 @@ def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             F.count(F.lit(1)).alias("n_events"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -193,6 +195,7 @@ def approx_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= tol * F.abs(F.col("exact_p50"))
             ).alias("estimate_ok"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -388,6 +391,7 @@ def grouped_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("k_rank", F.row_number().over(w))
         .filter(F.col("k_rank") <= GROUP_K)
         .select("source", "k_rank", "doc_id", "lang")
+        .repartition(1)
         .orderBy("source", "k_rank")
     )
 
@@ -699,6 +703,7 @@ def shard_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_tokens") * 100.0 / F.col("total_tokens"), 4
             ).alias("token_share_pct"),
         )
+        .repartition(1)
         .orderBy("shard_id")
     )
 
@@ -797,6 +802,7 @@ def token_packed_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("toks").cast("bigint").alias("total_tokens"),
             F.max("toks").cast("bigint").alias("max_tokens"),
         )
+        .repartition(1)
         .orderBy("bin_id")
     )
 
@@ -1184,6 +1190,7 @@ def temporal_embargo_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ms").cast("bigint").alias("min_ms"),
             F.max("ms").cast("bigint").alias("max_ms"),
         )
+        .repartition(1)
         .orderBy("split", "event_type")
     )
 
@@ -1273,6 +1280,7 @@ def user_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_purchase").cast("bigint").alias("n_purchases"),
             F.sum("cents").cast("bigint").alias("total_cents"),
         )
+        .repartition(1)
         .orderBy("fold")
     )
 

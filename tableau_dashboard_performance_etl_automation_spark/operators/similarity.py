@@ -340,7 +340,7 @@ def _neardup_pair_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-k — the third ANN tier next to
     the exact brute-force baseline (:func:`ann_cosine_topk`) and the
     IVF index (:func:`ann_ivf_topk`): candidates are corpus vectors
@@ -389,8 +389,12 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("cos6"), 4).alias("cosine"),
             "rank",
         )
-        .orderBy("query_id", "rank")
     )
+
+
+def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The LSH top-k (:func:`_lsh_topk`) on one partition, ordered."""
+    return _lsh_topk(spark, sf_dir).repartition(1).orderBy("query_id", "rank")
 
 
 def _lsh_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,7 +551,7 @@ def _arrow_scored_candidates(
     )
 
 
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: broadcast the query set, score every
     corpus partition locally, rank per query. The exact baseline any
     approximate index is measured against. Scoring runs in the
@@ -580,8 +584,12 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("cos6"), 4).alias("cosine"),
             "rank",
         )
-        .orderBy("query_id", "rank")
     )
+
+
+def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact top-k (:func:`_exact_topk`) on one partition, ordered."""
+    return _exact_topk(spark, sf_dir).repartition(1).orderBy("query_id", "rank")
 
 
 def _exact_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -612,7 +620,7 @@ def _exact_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _arrow_scored_candidates(c, query_rows, TOP_K)
 
 
-def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _knn_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN classification by majority vote over the exact top-k
     neighbor set: each query vector takes the label its TOP_K nearest
     neighbors (cosine) hold most often; ties break toward the label
@@ -625,7 +633,7 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     a MAX(struct) argmax per query) — map-side combinable, no window,
     no extra shuffle beyond the label equi-join.
     """
-    topk = ann_cosine_topk(spark, sf_dir)
+    topk = _exact_topk(spark, sf_dir)
     labels = _emb(spark, sf_dir).select(
         F.col("vec_id").alias("neighbor_id"), "label"
     )
@@ -651,7 +659,12 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         (-F.col("m.neg_label")).cast("int").alias("label"),
         F.col("m.votes").alias("votes"),
         (-F.col("m.neg_rank")).cast("int").alias("best_rank"),
-    ).orderBy("query_id")
+    )
+
+
+def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The k-NN votes (:func:`_knn_votes`) on one partition, ordered."""
+    return _knn_votes(spark, sf_dir).repartition(1).orderBy("query_id")
 
 
 def embedding_centroid_by_label(
@@ -686,6 +699,7 @@ def embedding_centroid_by_label(
             "mean_val",
             F.round(F.col("sum_micro") / (F.col("n_vecs") * F.lit(1e6)), 6),
         )
+        .repartition(1)
         .orderBy("label", "dim")
     )
 
@@ -1033,6 +1047,7 @@ def ann_ivf_topk(
             F.round(F.col("cos6"), 4).alias("cosine"),
             "rank",
         )
+        .repartition(1)
         .orderBy("query_id", "rank")
     )
 
@@ -1167,6 +1182,7 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("qcos6"), 4).alias("qcosine"),
             "rank",
         )
+        .repartition(1)
         .orderBy("query_id", "rank")
     )
 
@@ -1330,6 +1346,7 @@ def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("dot") / F.sqrt(F.col("sq_a") * F.col("sq_b")), 4
             ).alias("cosine"),
         )
+        .repartition(1)
         .orderBy("label_a", "label_b")
     )
 
@@ -2134,6 +2151,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("cos6"), 4).alias("cosine"),
             "rank",
         )
+        .repartition(1)
         .orderBy("query_id", "rank")
     )
 
@@ -2431,6 +2449,7 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("u") / F.lit(1e6), 6).alias("min_val"),
             F.round(F.max("u") / F.lit(1e6), 6).alias("max_val"),
         )
+        .repartition(1)
         .orderBy("dim")
     )
 
@@ -2535,6 +2554,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("neg.s"), 4).alias("neg_cos"),
             F.round(F.col("pos.s") - F.col("neg.s"), 4).alias("margin"),
         )
+        .repartition(1)
         .orderBy("query_id")
     )
 
@@ -2634,6 +2654,7 @@ def embedding_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("centroid_cosine"),
         )
+        .repartition(1)
         .orderBy("label")
     )
 
@@ -2678,7 +2699,7 @@ def knn_accuracy_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``lang_id_confusion`` (which grades the text classifier). Pure
     composition: :func:`knn_label_vote` joined back to the true
     labels, two tiny aggregates."""
-    pred = knn_label_vote(spark, sf_dir)
+    pred = _knn_votes(spark, sf_dir)
     truth = _emb(spark, sf_dir).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("true_label"),
@@ -2696,6 +2717,7 @@ def knn_accuracy_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             "accuracy",
             F.round(F.col("n_correct") / F.col("n_queries"), 6),
         )
+        .repartition(1)
         .orderBy("true_label")
     )
 
@@ -3223,6 +3245,7 @@ def ann_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "hamming", "rank")
+        .repartition(1)
         .orderBy("query_id", "rank")
     )
 
@@ -3342,6 +3365,7 @@ def matryoshka_truncation_fidelity(
                 "mae_cosine"
             ),
         )
+        .repartition(1)
         .orderBy("m")
     )
 
@@ -3459,12 +3483,12 @@ def ann_lsh_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (N_QUERIES × k rows); everything downstream is a tiny hash
     aggregate. The expensive parts — exact scan and LSH probe — are
     the composed operators' plans, shared via the signature memo."""
-    exact = ann_cosine_topk(spark, sf_dir).select(
+    exact = _exact_topk(spark, sf_dir).select(
         "query_id",
         "neighbor_id",
         F.col("rank").alias("rank_e"),
     )
-    approx = ann_lsh_topk(spark, sf_dir).select(
+    approx = _lsh_topk(spark, sf_dir).select(
         "query_id",
         "neighbor_id",
         F.col("rank").alias("rank_a"),
@@ -3498,6 +3522,7 @@ def ann_lsh_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("ndcg_h"),
         )
+        .repartition(1)
         .orderBy("query_id")
     )
 

@@ -241,6 +241,7 @@ def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (est - F.col("n_exact")) / F.col("n_exact"), 4
             ).alias("rel_err"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -379,6 +380,7 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (est - F.col("n_exact")) / F.col("n_exact"), 4
             ).alias("rel_err"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 
@@ -564,6 +566,7 @@ def kmv_type_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("abs_err"),
         )
+        .repartition(1)
         .orderBy("type_a", "type_b")
     )
 
@@ -677,6 +680,7 @@ def guaranteed_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.join(F.broadcast(totals), "event_type")
         .filter(F.col("cnt") * SS_CAPACITY > F.col("n_type"))
         .select("event_type", "user_id", "cnt", "n_type")
+        .repartition(1)
         .orderBy("event_type", F.col("cnt").desc(), "user_id")
     )
 

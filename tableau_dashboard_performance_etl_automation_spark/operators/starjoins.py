@@ -81,6 +81,7 @@ def local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(F.sum(rev_units()).alias("units"))
         .select("n_name", (F.col("units") / F.lit(1e4)).alias("revenue"))
+        .repartition(1)
         .orderBy(F.col("revenue").desc(), "n_name")
     )
 
@@ -133,6 +134,7 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_year",
             (F.col("units") / F.lit(1e4)).alias("volume"),
         )
+        .repartition(1)
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -195,6 +197,7 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "mkt_share"
             ),
         )
+        .repartition(1)
         .orderBy("o_year")
     )
 
@@ -261,6 +264,7 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             (F.col("units") / F.lit(1e4)).alias("total_revenue"),
         )
+        .repartition(1)
         .orderBy("s_suppkey")
     )
 
@@ -490,6 +494,7 @@ def order_fill_rate_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fill_rate",
             F.round(F.col("n_filled") / F.col("n_orders"), 6),
         )
+        .repartition(1)
         .orderBy("o_orderpriority")
     )
 

@@ -529,6 +529,7 @@ def mixture_water_filling(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("alloc_tokens"),
             F.round(theta, 2).alias("water_level"),
         )
+        .repartition(1)
         .orderBy("source")
     )
 
@@ -931,6 +932,7 @@ def benford_price_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round((F.col("obs") - exp) * (F.col("obs") - exp) / exp, 6)
             .alias("chi_term"),
         )
+        .repartition(1)
         .orderBy("digit")
     )
 
@@ -1082,6 +1084,7 @@ def event_type_leadlag(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_days",
             F.round(F.when(den > 0, num / den), 6).alias("r"),
         )
+        .repartition(1)
         .orderBy("lag")
     )
 
@@ -1145,6 +1148,7 @@ def dow_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("within_var"),
         )
+        .repartition(1)
         .orderBy("dow")
     )
 
@@ -1299,6 +1303,7 @@ def nation_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(det > 0, intercept / 100.0), 4
             ).alias("intercept"),
         )
+        .repartition(1)
         .orderBy("n_name")
     )
 
@@ -1644,7 +1649,7 @@ def nation_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             / F.lit(1e4)
         ).alias("theilsen_slope"),
-    ).orderBy("n_name")
+    ).repartition(1).orderBy("n_name")
 
 
 def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1714,6 +1719,7 @@ def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("ape_u") / F.count(F.lit(1)) / 1e6, 4
             ).alias("mape_pct"),
         )
+        .repartition(1)
         .orderBy("model")
     )
 
@@ -1972,6 +1978,7 @@ def length_qq_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_b",
             (F.col("q_a") - F.col("q_b")).alias("shift"),
         )
+        .repartition(1)
         .orderBy("decile")
     )
 
@@ -2426,6 +2433,7 @@ def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "res_term"
             ),
         )
+        .repartition(1)
         .orderBy("bin")
     )
 
@@ -2525,6 +2533,7 @@ def event_hour_mi_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "mi_term"
             ),
         )
+        .repartition(1)
         .orderBy("event_type", "hr")
     )
 
@@ -2774,6 +2783,7 @@ def returnflag_quantity_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " + (2 * (t % den) * 1000000 + den) div (2 * den)"
             ).alias("h_term_e6"),
         )
+        .repartition(1)
         .orderBy("l_returnflag")
     )
 
@@ -3114,6 +3124,7 @@ def median_confidence_interval(
             (value_at("r_hi") / 100.0).alias("ci_hi"),
         )
         .select("event_type", "n", "ci_lo", "median", "ci_hi")
+        .repartition(1)
         .orderBy("event_type")
     )
 

@@ -42,6 +42,7 @@ def running_profile_final(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("total_value"),
             F.max("value").alias("max_value"),
         )
+        .repartition(1)
         .orderBy("event_type")
     )
 

@@ -125,6 +125,7 @@ def priority_return_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
+        .repartition(1)
         .orderBy("o_orderpriority")
     )
 
@@ -172,6 +173,7 @@ def nation_year_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("profit_units") / 10000.0).alias("profit"),
             F.count(F.lit(1)).cast("bigint").alias("n_lines"),
         )
+        .repartition(1)
         .orderBy("n_name", F.col("o_year").desc())
     )
 
@@ -213,6 +215,7 @@ def disjunctive_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum(rev_units()) / 10000.0).alias("revenue"),
             F.count(F.lit(1)).cast("bigint").alias("n_lines"),
         )
+        .repartition(1)
         .orderBy("p_brand")
     )
 

@@ -152,7 +152,10 @@ def _daily(e: DataFrame) -> DataFrame:
         F.min("value").alias("day_min"),
         F.max("ts").alias("day_last_ts"),
     )
-    return days.select(
+    # one partition before the window: the window needs no exchange of
+    # its own, and the final sort no range exchange, also where a
+    # projection (q_trend_series) prunes the window away
+    return days.repartition(1).select(
         F.date_format("event_date", "yyyy-MM-dd").alias("summary_date"),
         floor_int(F.col("daily_avg")).alias("summary_value"),
         floor_int(F.col("day_max")).alias("max_value"),
@@ -233,7 +236,11 @@ def _registered_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The changes frame the registered Q7/Q8 builders read: anchored in
     the plan and sorted worst-first, like their DuckDB twins."""
     e = _events(spark, sf_dir)
-    return _changes(e, _with_anchor(e)).orderBy(F.col("percentage_difference").desc())
+    return (
+        _changes(e, _with_anchor(e))
+        .repartition(1)
+        .orderBy(F.col("percentage_difference").desc())
+    )
 
 
 def report_frames(
@@ -321,6 +328,7 @@ def q_samples_today(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("request_label"),
             F.col("props").alias("response_message"),
         )
+        .repartition(1)
         .orderBy(F.col("elapsed_time").desc())
     )
 

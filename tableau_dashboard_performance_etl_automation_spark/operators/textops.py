@@ -214,6 +214,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "class_share"
             ),
         )
+        .repartition(1)
         .orderBy("lang", "predicted_lang")
     )
 
@@ -308,6 +309,7 @@ def source_quality_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "avg_chars"
             ),
         )
+        .repartition(1)
         .orderBy("source", "lang")
     )
 
@@ -332,6 +334,7 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "avg_chars"
             ),
         )
+        .repartition(1)
         .orderBy("bucket_lo")
     )
 
@@ -399,6 +402,7 @@ def vocab_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("decile")
         .agg(F.count(F.lit(1)).alias("new_words"))
+        .repartition(1)
         .orderBy("decile")
     )
 
@@ -953,7 +957,7 @@ _BM25_K1P1 = BM25_K1 + 1
 _BM25_1MB = 1 - BM25_B
 
 
-def bm25_ranked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval for a fixed term query — the lexical
     search primitive of a corpus-exploration stack (find training
     documents about X), composing the tf / df / doc-length statistics
@@ -980,14 +984,22 @@ def bm25_ranked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         persisted_table,
     )
 
-    ranked = persisted_table(
+    return persisted_table(
         spark,
         f"bm25_topk/{corpus_slug(sf_dir)}",
         f"{sf_dir}|terms={','.join(BM25_QUERY_TERMS)}"
         f"|k1={BM25_K1}|b={BM25_B}|k={BM25_TOP_K}",
         lambda: _bm25_build(spark, sf_dir),
     )
-    return ranked.orderBy(F.col("bm25").desc(), "doc_id")
+
+
+def bm25_ranked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The BM25 page (:func:`_bm25_ranked`) on one partition, ordered."""
+    return (
+        _bm25_ranked(spark, sf_dir)
+        .repartition(1)
+        .orderBy(F.col("bm25").desc(), "doc_id")
+    )
 
 
 def _bm25_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1151,6 +1163,7 @@ def boilerplate_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bp_frac",
             F.round(F.col("n_boilerplate") / F.col("n_shingles"), 4),
         )
+        .repartition(1)
         .orderBy("source")
     )
 
@@ -1274,6 +1287,7 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "oov_rate", F.round(F.col("n_oov") / F.col("n_tokens"), 4)
         )
+        .repartition(1)
         .orderBy("source")
     )
 
@@ -1389,7 +1403,7 @@ DSIR_TARGET_LANG = "en"
 DSIR_TOP_N = 100
 
 
-def dsir_target_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dsir_selected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style importance scores: per-document average
     log-likelihood ratio ``log2 p_target(bg) / p_general(bg)`` over
     the document's character bigrams, add-one smoothed against the
@@ -1419,14 +1433,21 @@ def dsir_target_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         persisted_table,
     )
 
-    sel = persisted_table(
+    return persisted_table(
         spark,
         f"dsir_topk/{corpus_slug(sf_dir)}",
         f"{sf_dir}|lang={DSIR_TARGET_LANG}|n={DSIR_TOP_N}",
         lambda: _dsir_build(spark, sf_dir),
     )
+
+
+def dsir_target_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The DSIR selection (:func:`_dsir_selected`) on one partition,
+    ordered by its 6-decimal score."""
     return (
-        sel.orderBy(F.col("score6").desc(), F.col("doc_id"))
+        _dsir_selected(spark, sf_dir)
+        .repartition(1)
+        .orderBy(F.col("score6").desc(), F.col("doc_id"))
         .select("doc_id", "lang", "n_bigrams", "dsir_score")
     )
 
@@ -1571,8 +1592,8 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     rrf_score), rank columns NULL where a doc appears in only one
     list.
     """
-    bm = bm25_ranked_docs(spark, sf_dir).select("doc_id", "bm25")
-    ds = dsir_target_scores(spark, sf_dir).select(
+    bm = _bm25_ranked(spark, sf_dir).select("doc_id", "bm25")
+    ds = _dsir_selected(spark, sf_dir).select(
         "doc_id", "dsir_score"
     )
     wb = Window.orderBy(F.col("bm25").desc(), F.col("doc_id"))
@@ -1596,6 +1617,7 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rank_dsir").cast("int").alias("rank_dsir"),
             F.round(rrf, 6).alias("rrf_score"),
         )
+        .repartition(1)
         .orderBy(F.col("rrf_score").desc(), F.col("doc_id"))
         .limit(RRF_TOP)
     )

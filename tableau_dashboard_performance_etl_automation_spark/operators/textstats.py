@@ -301,6 +301,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("toks") / F.count(F.lit(1)).cast("double"), 4
             ).alias("tokens_per_doc"),
         )
+        .repartition(1)
         .orderBy("lang")
     )
 

@@ -3,6 +3,7 @@ from tableau_dashboard_performance_etl_automation_spark.plans.explain import (
     has_broadcast_hash_join,
     has_cartesian_product,
     pushed_filters,
+    range_exchanges,
     read_schemas,
     shuffle_count,
 )
@@ -12,6 +13,7 @@ __all__ = [
     "has_broadcast_hash_join",
     "has_cartesian_product",
     "pushed_filters",
+    "range_exchanges",
     "read_schemas",
     "shuffle_count",
 ]

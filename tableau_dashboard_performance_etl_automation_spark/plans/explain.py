@@ -35,6 +35,66 @@ def shuffle_count(df: DataFrame) -> int:
     return len(re.findall(r"\bExchange\b", formatted_plan(df)))
 
 
+#: Physical nodes that run Python code (pandas UDFs and row-at-a-time UDFs).
+PYTHON_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+    "AggregateInPandas",
+    "WindowInPandas",
+)
+
+#: A node of the formatted plan's tree: indent and branch marks, name, (id).
+_TREE_LINE = re.compile(
+    r"^(?P<pre>[ :+\-*]*)(?P<name>[A-Za-z][\w .]*?) \((?P<id>\d+)\)$"
+)
+#: An Exchange's details section: its id and its partitioning kind.
+_ARGS = re.compile(r"^\((\d+)\) Exchange\n(?:.*\n)*?Arguments: (\w+)", re.M)
+
+
+def range_exchanges(df: DataFrame) -> list[bool]:
+    """One entry per range-partitioning Exchange in the physical plan:
+    True when the stage feeding it runs a Python node.
+
+    Spark plans a global sort as a range exchange, whose bounds come
+    from a sampling job over that input stage, so the stage runs twice;
+    with a Python node in it, the UDF runs twice too."""
+    plan = formatted_plan(df)
+    kinds = {int(i): kind for i, kind in _ARGS.findall(plan)}
+    children: dict[int, list[int]] = {}
+    names: dict[int, str] = {}
+    stack: list[tuple[int, int]] = []  # (column, node id) of open ancestors
+    for line in plan.splitlines():
+        m = _TREE_LINE.match(line)
+        if m is None:
+            continue
+        col, node = len(m["pre"]), int(m["id"])
+        names[node] = m["name"].strip()
+        while stack and stack[-1][0] >= col:
+            stack.pop()
+        if stack:
+            children.setdefault(stack[-1][1], []).append(node)
+        stack.append((col, node))
+
+    def runs_python(node: int) -> bool:
+        for child in children.get(node, []):
+            name = names[child]
+            if name.startswith(PYTHON_NODES):
+                return True
+            if not name.endswith(("Exchange", "QueryStage")) and runs_python(child):
+                return True
+        return False
+
+    return [
+        runs_python(node)
+        for node, name in names.items()
+        if name == "Exchange" and kinds.get(node) == "rangepartitioning"
+    ]
+
+
 def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters lists that reached a parquet scan."""
     return re.findall(r"PushedFilters: \[([^\]]*)\]", formatted_plan(df))

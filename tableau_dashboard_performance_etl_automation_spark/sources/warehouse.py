@@ -29,8 +29,10 @@ old inputs over half-new files. Spark's file listing skips names that
 start with ``_`` (as it skips ``_SUCCESS``), so the stamp is never read
 as data; and because it lives inside the data directory, deleting the
 directory (by hand, or ``DROP TABLE`` on a managed bucketed table)
-deletes the stamp too. A stamp cannot outlive its data, so the next
-lookup rebuilds instead of trusting a missing path.
+deletes the stamp too. A stamp cannot outlive its data, and every
+lookup checks that the stamp still exists before it trusts its memo
+entry, so the next lookup rebuilds instead of trusting a missing path,
+in a new session or in the one that deleted it.
 
 The memo and the stamps share one contract:
 
@@ -39,7 +41,8 @@ The memo and the stamps share one contract:
   appended or rewritten under it, so every entry assumes the data under
   its ``sf_dir`` does not change within one Spark application; if it
   does, every consumer silently serves results computed from the old
-  data. Writers that mutate inputs in-session must call
+  data. Deleting an artifact needs nothing more (see above); only a
+  writer that mutates inputs in place within a session must call
   :func:`invalidate_artifacts`, which empties the memo and deletes the
   stamps of every artifact this process touched, so the next consumer
   rebuilds from the new inputs.
@@ -189,7 +192,9 @@ def _stamped_artifact(
 
     Returns ``value(path)`` for the artifact directory ``path``, kept by
     :func:`session_value` per (application, ``tag``); a call served
-    from the memo logs ``"hit"``. Otherwise the stamp decides. When it
+    from the memo logs ``"hit"``, but an entry whose stamp file is gone
+    (its directory was deleted, say by ``DROP TABLE``) is dropped first.
+    Otherwise the stamp decides. When it
     holds ``tag`` the files are trusted, and the routine logs the event
     ``reuse()`` returns (``"hit"`` without one). When it does not, the
     routine logs ``"build"``, deletes the stale stamp, runs
@@ -218,6 +223,9 @@ def _stamped_artifact(
         BUILD_LOG[name] = round(BUILD_LOG.get(name, 0.0) + time.time() - t0, 3)
         return value(path)
 
+    # a memo entry cannot outlive its files: one stat per call, no job
+    if not os.path.exists(stamp):
+        _MEMO.pop(name, None)
     out = session_value(spark, name, tag, resolve)
     if not resolved:
         ARTIFACT_EVENTS.append((name, "hit"))

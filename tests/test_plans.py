@@ -23,6 +23,7 @@ from tableau_dashboard_performance_etl_automation_spark.plans import (
     has_broadcast_hash_join,
     has_cartesian_product,
     pushed_filters,
+    range_exchanges,
     read_schemas,
 )
 
@@ -93,6 +94,110 @@ MEMO_CONSUMERS = (
     "supplier_lead_time_percentiles",
     "winnow_decontaminate",
     "word_bigram_kn_scores",
+)
+
+
+#: The registered queries whose plan keeps a range-partitioning exchange:
+#: their final ``orderBy`` sorts a result that grows with the data, so it
+#: stays spread over many partitions. Grouped by why the output grows.
+#: Every other query either sorts a bounded result on one partition
+#: (``.repartition(1).orderBy``) or needs no exchange to sort (README
+#: "Result ordering").
+RANGE_SORTED = (
+    # one row per document, chunk or embedding: the corpus itself
+    "char_bigram_lm_scores",
+    "dataset_split",
+    "dedup_canonical",
+    "dedup_exact",
+    "dedup_subdoc_blocks",
+    "doc_char_entropy",
+    "doc_chunks",
+    "doc_ngram_novelty",
+    "doc_rarity",
+    "doc_readability",
+    "doc_repetition",
+    "doc_top_terms",
+    "embedding_quantize",
+    "global_shuffle_shards",
+    "lang_label_propagation",
+    "leakfree_split_assign",
+    "multimodal_content_dedup",
+    "pii_scrub_stats",
+    "quantile_normalized_quality",
+    "text_fingerprint",
+    "text_lang_id",
+    "text_quality",
+    "text_token_count",
+    "word_bigram_kn_scores",
+    # per-row pandas-UDF outputs keyed by doc_id; the range exchange sits
+    # before the UDF, over the scan
+    "multimodal_audio_windows",
+    "multimodal_binary_meta",
+    "multimodal_frame_sample",
+    "multimodal_thumbnail",
+    # documents or vectors a filter, sample or prune keeps: a share of the corpus
+    "benchmark_decontaminate",
+    "bloom_decontaminate",
+    "cluster_balanced_sample",
+    "dedup_incremental_newbatch",
+    "dedup_weighted_sample",
+    "embedding_decontaminate",
+    "poisson_token_sample",
+    "pps_systematic_sample",
+    "semantic_dedup_prune",
+    "stratified_sample",
+    "winnow_decontaminate",
+    # near-duplicate pairs, groups and graph histograms: grow with the duplicates
+    "dedup_clusters",
+    "dedup_containment",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_prefix_filter_pairs",
+    "dedup_simhash",
+    "dedup_subdoc_neardup",
+    "dedup_survivorship_conflicts",
+    "dup_cluster_size_histogram",
+    "neardup_degree_histogram",
+    "neardup_embedding_cosine",
+    "neardup_link_prediction",
+    "neardup_triangles",
+    "winnowing_overlap_pairs",
+    # one row per k-means cluster: the codebook size grows with the corpus
+    "cluster_centroid_margin",
+    "cluster_lang_purity",
+    "semantic_dedup_summary",
+    # one row per user, session, customer, order, part, supplier, event or
+    # lineitem zone: keys of the fact tables
+    "active_high_value_buyers",
+    "buyer_cohort_setops",
+    "cdc_upsert_customers",
+    "closed_sessions_final",
+    "customers_without_orders",
+    "dedup_replayed_events",
+    "excess_stock_suppliers",
+    "extreme_orders_union",
+    "important_parts_value",
+    "min_cost_supplier",
+    "mode_event_type_per_user",
+    "order_last_shippers",
+    "part_golden_records",
+    "purchase_click_attribution_final",
+    "purchase_click_outer_final",
+    "purchase_click_window_join",
+    "purchases_with_last_click",
+    "scd2_user_bands",
+    "session_window_stats",
+    "skyline_orders",
+    "supplier_lead_time_percentiles",
+    "time_decay_attribution",
+    "user_activity_merge",
+    "user_activity_span",
+    "user_first_purchase",
+    "user_running_balance",
+    "user_sequence_perplexity",
+    "user_sessionization",
+    "value_outliers",
+    "zonemap_pruning_stats",
 )
 
 
@@ -1032,3 +1137,66 @@ def test_perf_budget_gate_heavies_carry_scale_evidence():
         f"fact|corpus`, or a worked cost analysis): "
         f"{missing}"
     )
+
+
+def test_range_exchanges_sees_python_input(spark):
+    """``range_exchanges`` flags a range exchange fed by a pandas UDF,
+    not one over the scan below it, and sees none under a one-partition
+    sort."""
+
+    def ident(batches):
+        yield from batches
+
+    base = spark.range(100)
+    udf_then_sort = base.mapInPandas(ident, "id long").orderBy("id")
+    range_then_udf = base.repartitionByRange("id").mapInPandas(ident, "id long")
+    assert range_exchanges(udf_then_sort) == [True]
+    assert range_exchanges(range_then_udf) == [False]
+    assert range_exchanges(base.repartition(1).orderBy("id")) == []
+
+
+def test_range_sorts_are_the_growing_results(spark, sf_dir):
+    """Every registered query at sf0.001: its plan has a range exchange
+    exactly when it is in ``RANGE_SORTED``, and no range exchange is fed
+    by a Python stage, whose UDF the range-bounds sampling job would
+    run a second time."""
+    import __spark_entry__
+
+    assert len(set(RANGE_SORTED)) == len(RANGE_SORTED)
+    ranged, python_fed = set(), set()
+    for name, build in __spark_entry__.queries().items():
+        exchanges = range_exchanges(build(spark, sf_dir))
+        if exchanges:
+            ranged.add(name)
+        if any(exchanges):
+            python_fed.add(name)
+    assert sorted(ranged - set(RANGE_SORTED)) == []
+    assert sorted(set(RANGE_SORTED) - ranged) == []
+    assert sorted(python_fed) == []
+
+
+@pytest.mark.parametrize(
+    "name,keys",
+    [
+        ("multimodal_binary_meta", ("doc_id",)),
+        ("multimodal_frame_sample", ("doc_id", "frame_idx")),
+        ("multimodal_thumbnail", ("doc_id",)),
+        ("multimodal_audio_windows", ("doc_id", "win_idx")),
+    ],
+)
+def test_per_row_udf_results_keep_global_order(spark, sf_dir, name, keys):
+    """Range-partitioned on ``doc_id`` before the UDF and sorted within
+    each partition after it, the rows still come back in global key
+    order, also with every range kept as its own partition."""
+    import __spark_entry__
+
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        df = __spark_entry__.queries()[name](spark, sf_dir)
+        rows = [tuple(r) for r in df.select(*keys).collect()]
+    finally:
+        spark.conf.set(conf, saved)
+    assert len(rows) > 1
+    assert rows == sorted(rows)

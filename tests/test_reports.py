@@ -212,13 +212,15 @@ def test_run_report_end_to_end(spark, sf_dir):
 
 
 def test_run_report_spark_jobs(spark, sf_dir, jobs_started):
-    """A warm ``run_report`` runs 11 Spark jobs at sf0.001: the changes
+    """A warm ``run_report`` runs 10 Spark jobs at sf0.001: the changes
     frame takes its anchor date from the collected daily frame, so its
     plan has no ``max(event_date)`` aggregate to broadcast (15 jobs
-    when it derived the anchor in the plan)."""
+    when it derived the anchor in the plan), and ``q_samples_today``
+    sorts on one partition, so its collect starts no range-bounds
+    sampling job (11 jobs with a global ``orderBy``)."""
     pipeline.run_report(spark, sf_dir)
     _res, jobs = jobs_started(lambda: pipeline.run_report(spark, sf_dir))
-    assert len(jobs) == 11, jobs
+    assert len(jobs) == 10, jobs
 
 
 def _degenerate_events(e, kind: str):

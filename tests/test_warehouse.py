@@ -564,6 +564,23 @@ def test_bucketed_fact_rebuilds_when_stamp_outlives_data(spark, sf_dir, kind):
 
 
 @pytest.mark.parametrize("kind", sorted(ARTIFACT_KINDS))
+def test_memo_entry_does_not_outlive_deleted_artifact(spark, sf_dir, kind):
+    """Deleting an artifact in the session that memoized it (``DROP
+    TABLE`` on a bucketed fact, or removing a persisted table's
+    directory) leaves its memo entry behind; the next lookup finds the
+    stamp gone, drops the entry itself and rebuilds, with no caller
+    touching ``_MEMO``."""
+    name, lookup, delete = ARTIFACT_KINDS[kind](spark, sf_dir)
+    want = _rows(lookup())
+    assert name in warehouse._MEMO
+
+    delete()
+    n0 = len(warehouse.ARTIFACT_EVENTS)
+    assert _rows(lookup()) == want
+    assert warehouse.ARTIFACT_EVENTS[n0:] == [(name, "build")]
+
+
+@pytest.mark.parametrize("kind", sorted(ARTIFACT_KINDS))
 def test_trusted_lookup_starts_no_spark_job(spark, sf_dir, jobs_started, kind):
     """With the memo dropped and the stamp present, the trust check is a
     file read and the lookup starts no Spark job."""

@@ -20,10 +20,11 @@ Usage::
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def normalize_cell(v):
@@ -102,8 +103,6 @@ def main() -> int:
         # driver testdata ships single .parquet FILES; ladder corpora
         # are Spark-written DIRECTORIES — glob those for DuckDB
         path = f"{sf_dir}/{t}.parquet"
-        import os
-
         if os.path.isdir(path):
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")

@@ -1,6 +1,7 @@
 """Physical-plan audit: one row per registered query summarizing the
 scale-critical plan properties — shuffle count, broadcast joins,
-cartesian products, Python stages, scans, and pushed filters.
+cartesian products, Python stages, range sorts, scans, and pushed
+filters.
 
 Writes PLANS.md (markdown table + flagged anomalies). This is the
 evidence artifact for "would this plan survive 100×": anything with a
@@ -25,6 +26,7 @@ from tableau_dashboard_performance_etl_automation_spark.plans import (  # noqa: 
     has_broadcast_hash_join,
     has_cartesian_product,
     pushed_filters,
+    range_exchanges,
     shuffle_count,
 )
 from tableau_dashboard_performance_etl_automation_spark.session import get_spark  # noqa: E402
@@ -46,6 +48,7 @@ def audit(sf_dir: str, out_md: str) -> int:
             for tag in ("ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas", "BatchEvalPython")
         )
         row_python = plan.count("BatchEvalPython")
+        ranges = range_exchanges(df)
         n_scans = plan.count("Location: InMemoryFileIndex")
         pushed = len(pushed_filters(df))
         # a plan whose inputs are checkpointed RDDs (localCheckpoint /
@@ -60,7 +63,7 @@ def audit(sf_dir: str, out_md: str) -> int:
         )
         rows.append(
             (name, n_shuffles, int(bcast), int(cartesian), python_stages,
-             n_scans, pushed, opaque)
+             len(ranges), n_scans, pushed, opaque)
         )
         if cartesian:
             # the only sanctioned cross joins are 1-row broadcast
@@ -69,6 +72,10 @@ def audit(sf_dir: str, out_md: str) -> int:
             flagged.append(f"- `{name}`: CartesianProduct in plan")
         if row_python:
             flagged.append(f"- `{name}`: row-at-a-time BatchEvalPython stage")
+        if any(ranges):
+            # the range bounds come from a sampling job over the input
+            # stage, so its Python UDF runs twice
+            flagged.append(f"- `{name}`: range exchange re-runs a Python stage")
     lines = [
         "# PLANS — per-query physical-plan audit",
         "",
@@ -76,17 +83,19 @@ def audit(sf_dir: str, out_md: str) -> int:
         "shuffle exchanges in the final plan, broadcast join present,",
         "cartesian product present (must be 0 everywhere), Python",
         "stages (Arrow-batched only — row-at-a-time BatchEvalPython is",
+        "a flag), range sorts (range-partitioning exchanges: each runs",
+        "a sampling job over its input stage; a Python stage there is",
         "a flag), parquet scans, pushed parquet filters, and OPAQUE —",
         "the final plan reads checkpointed/driver-built RDDs so the",
         "upstream stages are invisible here (their shapes are pinned",
         "by plan contracts in tests/test_plans.py instead).",
         "",
-        "| query | shuffles | bcast | cartesian | py stages | scans | pushed filters | opaque |",
-        "|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | bcast | cartesian | py stages | range sorts | scans | pushed filters | opaque |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
-    for name, sh, bc, ca, py, sc, pu, op in rows:
+    for name, sh, bc, ca, py, rs, sc, pu, op in rows:
         lines.append(
-            f"| {name} | {sh} | {bc} | {ca} | {py} | {sc} | {pu} | {op} |"
+            f"| {name} | {sh} | {bc} | {ca} | {py} | {rs} | {sc} | {pu} | {op} |"
         )
     lines.append("")
     if flagged:
@@ -94,8 +103,9 @@ def audit(sf_dir: str, out_md: str) -> int:
         lines.extend(flagged)
     else:
         lines.append(
-            "## Flags\n\nNone: no cartesian products and no "
-            "row-at-a-time Python stages in any registered query plan."
+            "## Flags\n\nNone: no cartesian products, no row-at-a-time "
+            "Python stages and no range exchange over a Python stage in "
+            "any registered query plan."
         )
     lines.append("")
     with open(out_md, "w") as f:
