@@ -172,7 +172,6 @@ def daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "total_value",
         )
-        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -298,7 +297,6 @@ def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cohorted.groupBy("cohort_week", "weeks_since")
         .agg(F.countDistinct("user_id").alias("active_users"))
-        .repartition(1)
         .orderBy("cohort_week", "weeks_since")
     )
 
@@ -468,7 +466,6 @@ def daily_open_close(spark: SparkSession, sf_dir: str) -> DataFrame:
             "low_value",
             "high_value",
         )
-        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -1917,7 +1914,6 @@ def daily_value_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "twap_value"
             ),
         )
-        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -2443,7 +2439,6 @@ def late_data_restatement(spark: SparkSession, sf_dir: str) -> DataFrame:
             "restated_delta",
             "needs_restatement",
         )
-        .repartition(1)
         .orderBy("event_date")
     )
 

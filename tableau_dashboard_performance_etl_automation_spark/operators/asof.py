@@ -239,7 +239,6 @@ def multi_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("middle_c").cast("bigint").alias("middle_credit"),
             F.sum("last_c").cast("bigint").alias("last_credit"),
         )
-        .repartition(1)
         .orderBy("purchase_date")
     )
 

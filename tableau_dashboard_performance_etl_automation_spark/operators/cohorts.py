@@ -65,7 +65,6 @@ def weekly_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("week_offset"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_active"))
-        .repartition(1)
         .orderBy("cohort_week", "week_offset")
     )
 
@@ -102,7 +101,6 @@ def session_bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_bounces") * 100.0 / F.col("n_sessions"), 4
             ),
         )
-        .repartition(1)
         .orderBy("session_date")
     )
 
@@ -1023,7 +1021,6 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cum_cents") / 100.0 / F.col("cohort_size"), 4
             ).alias("cum_ltv_per_user"),
         )
-        .repartition(1)
         .orderBy("cohort_week", "week_offset")
     )
 

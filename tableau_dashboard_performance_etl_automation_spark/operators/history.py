@@ -566,7 +566,6 @@ def incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
             "max_cents",
         )
-        .repartition(1)
         .orderBy("event_type", "day")
     )
 

@@ -123,7 +123,6 @@ def events_in_anomaly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_users",
             "window_value",
         )
-        .repartition(1)
         .orderBy("anchor_date")
     )
 
@@ -195,7 +194,6 @@ def daily_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_sessions",
             "peak_concurrent",
         )
-        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -258,7 +256,7 @@ def gapfilled_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "locf_avg",
         )
     )
-    return filled.repartition(1).orderBy("event_type", "event_date")
+    return filled.orderBy("event_type", "event_date")
 
 
 QUERIES = {
@@ -489,7 +487,7 @@ def rolling_p95_value_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 100.0,
             4,
         ).alias("p95_7d"),
-    ).repartition(1).orderBy("event_date")
+    ).orderBy("event_date")
 
 
 QUERIES["rolling_p95_value_7d"] = rolling_p95_value_7d

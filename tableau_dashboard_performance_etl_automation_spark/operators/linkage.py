@@ -85,7 +85,6 @@ def part_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lev_dist",
             "sim",
         )
-        .repartition(1)
         .orderBy("p_name")
     )
 
@@ -469,7 +468,6 @@ def part_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_parts_a",
             "n_parts_b",
         )
-        .repartition(1)
         .orderBy("block", "name_a", "name_b", "window_dist")
     )
 

@@ -409,7 +409,6 @@ def props_json_key_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             "coverage", F.round(F.col("n_rows") / F.col("n_total"), 4)
         )
         .drop("n_total")
-        .repartition(1)
         .orderBy("key")
     )
 

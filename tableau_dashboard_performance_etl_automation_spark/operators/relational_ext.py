@@ -277,7 +277,6 @@ def daily_metric_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("event_date", "yyyy-MM-dd").alias("event_date"),
             *[F.col(t).alias(f"avg_{t}") for t in types],
         )
-        .repartition(1)
         .orderBy("event_date")
     )
 
@@ -539,7 +538,6 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("CAST(total_units DIV 100 AS DOUBLE)") / F.lit(100.0)
             ).alias("total_revenue"),
         )
-        .repartition(1)
         .orderBy("ship_year")
     )
 
@@ -647,7 +645,6 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("n_orders")
         .agg(F.count(F.lit(1)).alias("n_customers"))
-        .repartition(1)
         .orderBy(F.col("n_customers").desc(), F.col("n_orders").desc())
     )
 
@@ -760,7 +757,6 @@ def rolling_distinct_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.date_format("d", "yyyy-MM-dd").alias("day"), "users_7d"
         )
-        .repartition(1)
         .orderBy("day")
     )
 
@@ -1376,7 +1372,6 @@ def daily_metric_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("substring(metric, 5)").alias("event_type"),
             "avg_value",
         )
-        .repartition(1)
         .orderBy("event_date", "event_type")
     )
 

@@ -165,7 +165,7 @@ def small_cell_suppression_report(
         "n_users",
         "n_events",
         (F.col("n_users") < K_ANON).cast("int").alias("suppress"),
-    ).repartition(1).orderBy("event_type", "dow", "value_decade")
+    ).orderBy("event_type", "dow", "value_decade")
 
 
 QUERIES["small_cell_suppression_report"] = small_cell_suppression_report
@@ -349,7 +349,7 @@ def dp_noisy_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "n_true",
         F.round(F.col("n_true") + noise, 4).alias("noisy_count"),
-    ).repartition(1).orderBy("day")
+    ).orderBy("day")
 
 
 QUERIES["dp_noisy_daily_counts"] = dp_noisy_daily_counts
@@ -452,7 +452,7 @@ def dp_user_level_daily_counts(
         "day",
         "n_capped",
         F.round(F.col("n_capped") + noise, 4).alias("noisy_count"),
-    ).repartition(1).orderBy("day")
+    ).orderBy("day")
 
 
 QUERIES["dp_user_level_daily_counts"] = dp_user_level_daily_counts

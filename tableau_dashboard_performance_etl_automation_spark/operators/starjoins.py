@@ -134,7 +134,6 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_year",
             (F.col("units") / F.lit(1e4)).alias("volume"),
         )
-        .repartition(1)
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -264,7 +263,6 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             (F.col("units") / F.lit(1e4)).alias("total_revenue"),
         )
-        .repartition(1)
         .orderBy("s_suppkey")
     )
 

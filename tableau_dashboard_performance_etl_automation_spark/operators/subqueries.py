@@ -173,7 +173,6 @@ def nation_year_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("profit_units") / 10000.0).alias("profit"),
             F.count(F.lit(1)).cast("bigint").alias("n_lines"),
         )
-        .repartition(1)
         .orderBy("n_name", F.col("o_year").desc())
     )
 

@@ -334,7 +334,6 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "avg_chars"
             ),
         )
-        .repartition(1)
         .orderBy("bucket_lo")
     )
 
@@ -1617,7 +1616,6 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rank_dsir").cast("int").alias("rank_dsir"),
             F.round(rrf, 6).alias("rrf_score"),
         )
-        .repartition(1)
         .orderBy(F.col("rrf_score").desc(), F.col("doc_id"))
         .limit(RRF_TOP)
     )

@@ -1,4 +1,5 @@
 from tableau_dashboard_performance_etl_automation_spark.plans.explain import (
+    PYTHON_NODES,
     formatted_plan,
     has_broadcast_hash_join,
     has_cartesian_product,
@@ -9,6 +10,7 @@ from tableau_dashboard_performance_etl_automation_spark.plans.explain import (
 )
 
 __all__ = [
+    "PYTHON_NODES",
     "formatted_plan",
     "has_broadcast_hash_join",
     "has_cartesian_product",

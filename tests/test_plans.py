@@ -102,7 +102,11 @@ MEMO_CONSUMERS = (
 #: stays spread over many partitions. Grouped by why the output grows.
 #: Every other query either sorts a bounded result on one partition
 #: (``.repartition(1).orderBy``) or needs no exchange to sort (README
-#: "Result ordering").
+#: "Result ordering"). Bounded means bounded by the query's own
+#: construction: its constants, bins, top-k limits and iteration counts,
+#: or a categorical column of the schema. A row count that stays flat
+#: from one generated scale to the next is not enough: the generator
+#: draws names, dates and values from fixed pools that real data outgrows.
 RANGE_SORTED = (
     # one row per document, chunk or embedding: the corpus itself
     "char_bigram_lm_scores",
@@ -147,7 +151,8 @@ RANGE_SORTED = (
     "semantic_dedup_prune",
     "stratified_sample",
     "winnow_decontaminate",
-    # near-duplicate pairs, groups and graph histograms: grow with the duplicates
+    # near-duplicate and candidate pairs, groups and graph histograms: grow
+    # with the duplicates
     "dedup_clusters",
     "dedup_containment",
     "dedup_minhash_lsh",
@@ -161,13 +166,14 @@ RANGE_SORTED = (
     "neardup_embedding_cosine",
     "neardup_link_prediction",
     "neardup_triangles",
+    "part_sorted_neighborhood",
     "winnowing_overlap_pairs",
     # one row per k-means cluster: the codebook size grows with the corpus
     "cluster_centroid_margin",
     "cluster_lang_purity",
     "semantic_dedup_summary",
-    # one row per user, session, customer, order, part, supplier, event or
-    # lineitem zone: keys of the fact tables
+    # one row per user, session, customer, order, part, part name, supplier,
+    # event or lineitem zone: keys of the fact tables
     "active_high_value_buyers",
     "buyer_cohort_setops",
     "cdc_upsert_customers",
@@ -181,6 +187,7 @@ RANGE_SORTED = (
     "mode_event_type_per_user",
     "order_last_shippers",
     "part_golden_records",
+    "part_record_linkage",
     "purchase_click_attribution_final",
     "purchase_click_outer_final",
     "purchase_click_window_join",
@@ -198,6 +205,38 @@ RANGE_SORTED = (
     "user_sessionization",
     "value_outliers",
     "zonemap_pruning_stats",
+    # one row per day, week or year of the data's span: calendar series
+    # (a year window fixed by the query, as in nation_market_share, is bounded)
+    "cohort_ltv_curve",
+    "daily_active_users",
+    "daily_metric_pivot",
+    "daily_metric_unpivot",
+    "daily_open_close",
+    "daily_peak_concurrency",
+    "daily_value_twap",
+    "dp_noisy_daily_counts",
+    "dp_user_level_daily_counts",
+    "events_in_anomaly_windows",
+    "gapfilled_daily_counts",
+    "incremental_agg_refresh",
+    "late_data_restatement",
+    "multi_touch_attribution",
+    "nation_trade_flows",
+    "nation_year_profit",
+    "promo_revenue_share",
+    "rolling_distinct_users_7d",
+    "rolling_p95_value_7d",
+    "session_bounce_rate_daily",
+    "user_retention_cohorts",
+    "weekly_cohort_retention",
+    # one row per value the data defines, not the query: JSON keys, order
+    # counts per customer, length buckets, value decades, suppliers tied at
+    # the top revenue
+    "customer_order_distribution",
+    "doc_length_histogram",
+    "props_json_key_census",
+    "small_cell_suppression_report",
+    "top_supplier_revenue",
 )
 
 

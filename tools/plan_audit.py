@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
 
 from tableau_dashboard_performance_etl_automation_spark.plans import (  # noqa: E402
+    PYTHON_NODES,
     formatted_plan,
     has_broadcast_hash_join,
     has_cartesian_product,
@@ -43,10 +44,7 @@ def audit(sf_dir: str, out_md: str) -> int:
         n_shuffles = shuffle_count(df)
         bcast = has_broadcast_hash_join(df) or "BroadcastNestedLoopJoin" in plan
         cartesian = has_cartesian_product(df)
-        python_stages = sum(
-            plan.count(tag)
-            for tag in ("ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas", "BatchEvalPython")
-        )
+        python_stages = sum(plan.count(tag) for tag in PYTHON_NODES)
         row_python = plan.count("BatchEvalPython")
         ranges = range_exchanges(df)
         n_scans = plan.count("Location: InMemoryFileIndex")
