@@ -1,4 +1,4 @@
-"""Skew-mitigation helpers: key salting for hot-key joins/aggregates.
+"""Skew-mitigation helpers: key salting for hot-key aggregates.
 
 AQE's skew-join splitting (enabled in session.py) handles most skew at
 runtime; salting is the explicit tool for the pathological case AQE
@@ -6,9 +6,10 @@ can't fix — a single key so hot that even a split partition's *build*
 side overwhelms one task (e.g. 40% of events carrying one
 event_type at 100 TB).
 
-Pattern: fan the hot side out over ``n_salts`` sub-keys, replicate the
-small side across every sub-key, join on (key, salt), then drop the
-salt. Aggregations salt → partial-agg → final-agg on the bare key.
+Pattern: fan the hot side out over ``n_salts`` sub-keys, then
+partial-agg on (key, salt) → final-agg on the bare key. (The salted
+join, which also replicates the small side across every sub-key, is
+``relational_ext.skewsafe_user_join``.)
 """
 
 from __future__ import annotations
@@ -30,36 +31,11 @@ def salted(df: DataFrame, key: str, n_salts: int = 16,
     ``monotonically_increasing_id()``, which is row-unique but
     partition-layout-dependent (Spark marks it nondeterministic): the
     salted *results* are still salt-invariant — downstream
-    ``salted_count``/``salted_join`` re-aggregate on the bare key —
+    ``salted_count`` re-aggregates on the bare key —
     but individual task retries may re-deal rows across salts, so
     prefer ``id_col`` when one exists."""
     src = F.col(id_col) if id_col is not None else F.monotonically_increasing_id()
     return df.withColumn(salt_col, F.pmod(F.xxhash64(src), F.lit(n_salts)))
-
-
-def replicated(df: DataFrame, n_salts: int = 16,
-               salt_col: str = "_salt") -> DataFrame:
-    """Explode the small side once per salt value so every salted
-    partition finds its match."""
-    return df.withColumn(
-        salt_col,
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<bigint>")),
-    )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    id_col: str | None = None,
-) -> DataFrame:
-    """Equi-join where ``big`` has hot keys: shuffle spreads each key
-    over ``n_salts`` partitions instead of one."""
-    salt_col = "_salt"
-    b = salted(big, key, n_salts, salt_col, id_col)
-    s = replicated(small, n_salts, salt_col)
-    return b.join(s, [key, salt_col]).drop(salt_col)
 
 
 def salted_count(

@@ -179,7 +179,7 @@ def daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: 30-minute sessionization inactivity gap — THE session definition,
 #: shared by every sessionizing operator (user_sessionization,
 #: session_path_mining, intervals.daily_peak_concurrency) and
-#: mirrored by the streaming layer.
+#: used by the converged-state queries in streaming_twins.
 SESSION_GAP_MS = 30 * 60 * 1000
 
 
@@ -470,28 +470,22 @@ def daily_open_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _grouped_median_parts(df: DataFrame, key: str, val: str) -> DataFrame:
-    """Exact weighted median per key, fully distributed: compact to
-    (key, value, count) — a hash aggregate with map-side combine —
-    then locate the two middle order statistics via cumulative counts.
-    Returns (key, m1, m2, n) with median = (m1 + m2) / 2
-    (``quantile_cont`` semantics on the raw rows).
+def _median_from_counts(counts: DataFrame, key: str, val: str) -> DataFrame:
+    """Exact weighted median per key, fully distributed, from a
+    PRE-COMPACTED (key, value, cnt) frame — a hash aggregate with
+    map-side combine — by locating the two middle order statistics via
+    cumulative counts. Returns (key, m1, m2, n) with
+    median = (m1 + m2) / 2 (``quantile_cont`` semantics on the raw
+    rows).
 
     Memory is bounded by DISTINCT values per key (the window sorts the
     compacted counts, never the rows), so no executor ever holds a
     key's row set — the scale-safe exact-median shape. The per-key
     window is a sort over the value domain; at 100 TB the domain
     (integer cents) stays thousands of rows per key while the row
-    count grows unbounded."""
-    counts = df.groupBy(key, val).agg(F.count(F.lit(1)).alias("cnt"))
-    return _median_from_counts(counts, key, val)
-
-
-def _median_from_counts(counts: DataFrame, key: str, val: str) -> DataFrame:
-    """:func:`_grouped_median_parts` on a PRE-COMPACTED
-    (key, value, cnt) frame.  The per-key total ``n`` comes from a
+    count grows unbounded. The per-key total ``n`` comes from a
     second window over the SAME (key)-partitioning as the cumulative
-    window — one exchange, one sort — instead of the old
+    window — one exchange, one sort — instead of a
     ``df.groupBy(key).count()`` + join-back, which re-ran the whole
     upstream subtree (a full input scan per call: round-11 plan audit
     counted 11 scans in ``value_robust_outlier_rates``) and paid an
@@ -2054,7 +2048,7 @@ def winsorized_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     clipped SUM are exact integer arithmetic in both engines; the
     two divisions happen once per output row.
 
-    Plan (round-5 rewrite, the ``_grouped_median_parts`` discipline):
+    Plan (round-5 rewrite, the ``_median_from_counts`` discipline):
     EVERYTHING runs on the (event_type, cents, count) compaction — a
     map-side-combinable hash aggregate.  The per-type window sorts
     DISTINCT cents values with cumulative counts (the value domain,

@@ -92,8 +92,7 @@ def purchase_click_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark evaluates the equi-part (user_id) as the join key — only the
     time-range predicate is post-join, so this shuffles once on
-    user_id, never a cross product. The streaming twin (bounded state
-    via watermarks) is streaming/trend.purchase_click_attribution.
+    user_id, never a cross product.
     """
     e = load_table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(

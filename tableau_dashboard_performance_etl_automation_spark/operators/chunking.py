@@ -186,11 +186,7 @@ def sequence_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Sampling temperature for the multilingual-style mixture plan
-#: (weight ∝ share^alpha; 0.5 is the common multilingual default).
-MIX_ALPHA = 0.5
-
-
+# α = 0.5 is the common multilingual sampling temperature.
 def temperature_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-flattened source mixture: the standard
     ``p_s ∝ share_s^α`` re-weighting (α = 0.5) that up-samples

@@ -6,7 +6,7 @@ altitude: cohorts, funnels, Pareto curves, RFM segments).
 
 Scale discipline shared by the file: aggregates are keyed on bounded
 or per-user domains (map-side combinable), order statistics run over
-VALUE-DOMAIN compactions (the ``analytics._grouped_median_parts`` /
+VALUE-DOMAIN compactions (the ``analytics._median_from_counts`` /
 ``relational_ext.order_quartiles`` shape — windows sort distinct
 values, never rows), and every money/ratio number stays in exact
 integer cents until a single final division so both engines produce
@@ -337,7 +337,7 @@ def segment_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The lag window partitions per customer (bounded state); median
     and p90 come from the value-domain compaction
-    (``_grouped_median_parts`` discipline) — windows sort distinct
+    (``analytics._median_from_counts`` discipline) — windows sort distinct
     gap values, never rows."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")

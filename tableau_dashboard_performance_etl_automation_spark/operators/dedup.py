@@ -373,11 +373,15 @@ def _simhash_signed_bit(bit: int) -> F.Column:
 
 def simhash_signatures(docs: DataFrame, fingerprint_bits: int) -> DataFrame:
     """Per-document SimHash fingerprints (doc_id, sh0[, sh1]) at an
-    arbitrary word-aligned width — the EXPENSIVE half of the simhash
-    pipeline (token counts, per-vocab-word md5 bit hashing, the
-    width-many weighted sums). Split out so it can persist as a
-    corpus artifact; :func:`simhash_pairs_from_signatures` is the
-    cheap recurring half."""
+    arbitrary word-aligned width (64 → one BIGINT word, 128 → two) —
+    the EXPENSIVE half of the simhash pipeline (token counts,
+    per-vocab-word md5 bit hashing, the width-many weighted sums).
+    Split out so it can persist as a corpus artifact;
+    :func:`simhash_pairs_from_signatures` is the cheap recurring half.
+
+    Per (doc, token) counts weight the ±1 bit contributions, which
+    keeps documents with identical vocab *sets* but different word
+    counts from collapsing into one quadratic bucket."""
     n_words = fingerprint_bits // 64
     assert fingerprint_bits % 64 == 0 and n_words >= 1
     tokens = (
@@ -438,7 +442,13 @@ def simhash_pairs_from_signatures(
 ) -> DataFrame:
     """Banding + hamming-confirm over a precomputed signature table —
     the recurring half of the simhash pipeline (cheap: the signature
-    table is doc_id + 1-2 BIGINTs)."""
+    table is doc_id + 1-2 BIGINTs). The fingerprint's
+    ``SIMHASH_BANDS`` bands block candidate pairs (equality join),
+    then exact hamming distance ≤ 3 confirms. The top bit of each word
+    makes that BIGINT negative in two's complement — harmless:
+    xor/bit_count/masked band extraction are bit-pattern operations,
+    identical in both engines. Bands are word-aligned by construction
+    (bits/4 is 16 or 32), so a band never straddles words."""
     n_words = fingerprint_bits // 64
     bits_per_band = fingerprint_bits // SIMHASH_BANDS
     assert 64 % bits_per_band == 0 or bits_per_band % 64 == 0
@@ -493,25 +503,6 @@ def simhash_pairs_from_signatures(
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
         .orderBy("doc_a", "doc_b")
-    )
-
-
-def simhash_pairs(docs: DataFrame, fingerprint_bits: int) -> DataFrame:
-    """Frequency-weighted SimHash near-dup pairs at an arbitrary
-    word-aligned fingerprint width (64 → one BIGINT word, 128 → two).
-
-    Per (doc, token) counts weight the ±1 bit contributions; the
-    fingerprint's ``SIMHASH_BANDS`` bands block candidate pairs
-    (equality join), then exact hamming distance ≤ 3 confirms.
-    Weighting by term frequency keeps documents with identical vocab
-    *sets* but different word counts from collapsing into one
-    quadratic bucket. The top bit of each word makes that BIGINT
-    negative in two's complement — harmless: xor/bit_count/masked
-    band extraction are bit-pattern operations, identical in both
-    engines. Bands are word-aligned by construction (bits/4 is 16 or
-    32), so a band never straddles words."""
-    return simhash_pairs_from_signatures(
-        simhash_signatures(docs, fingerprint_bits), fingerprint_bits
     )
 
 
@@ -802,17 +793,15 @@ def benchmark_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_replayed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of ``streaming.trend.dedup_events_stream``
-    (dropDuplicatesWithinWatermark): an at-least-once upstream
-    re-delivers the newest day's file (the reference's cron extract
-    re-runs exactly this way, tabjolt_email.py:351-359); dedup keeps
-    one row per ``event_id`` and reports the delivery count.
+    """Dedup of an at-least-once delivery: the upstream re-delivers
+    the newest day's file (the reference's cron extract re-runs
+    exactly this way, tabjolt_email.py:351-359); dedup keeps one row
+    per ``event_id`` and reports the delivery count.
 
     Deterministic replay model — re-deliver every event of the
-    corpus's max date — so the DuckDB oracle replays it; the streaming
-    equivalence is pytest-asserted against the watermarked stream
-    (tests/test_streaming.py). Shape: one union (no shuffle) + one
-    hash aggregate on event_id; the 1-row max-date anchor broadcasts.
+    corpus's max date — so the DuckDB oracle replays it. Shape: one
+    union (no shuffle) + one hash aggregate on event_id; the 1-row
+    max-date anchor broadcasts.
     """
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"

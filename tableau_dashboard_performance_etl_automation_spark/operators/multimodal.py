@@ -15,11 +15,10 @@ the pandas function and sorts each partition after it. A plain final
 sampling job that picks the range bounds would run the UDF a second
 time; this way it re-reads the scan, and the UDF runs once per row.
 
-The decode step itself is STUBBED: the image/audio libraries are not
-in this container, so ``decode_image`` raises ``NotImplementedError``
-with the intended contract documented, and the tested paths use
-deterministic byte-level extraction (length + content digest) so the
-plumbing — schema, batching, partitioning — is real and verified.
+No pixel decode runs: the registered queries use deterministic
+byte-level extraction (length + content digest) and stdlib header
+parsing (:func:`image_dims`), so the plumbing — schema, batching,
+partitioning — is real and verified without an image library.
 """
 
 from __future__ import annotations
@@ -134,53 +133,6 @@ FRAME_SCHEMA = StructType(
         StructField("frame_sig", StringType()),
     ]
 )
-
-
-def decode_image(payload: bytes) -> "object":
-    """Decode an image payload into an HxWxC uint8 numpy array.
-
-    Decoder ladder (round 7 — formerly a pure env-gated stub):
-
-    1. Pillow, when installed (every format PIL reads);
-    2. the repo's own stdlib PNG decoder
-       (``reports.png_mini.decode_png`` — 8-bit gray/GA/RGB/RGBA,
-       all five scanline filters) for PNG payloads, so the common
-       LLM-corpus case works with NO image library in the container;
-    3. ``NotImplementedError`` for non-PNG payloads without a
-       library (JPEG/WebP entropy coding needs a real codec). The
-       gate covers PIXEL decode only — header metadata (width,
-       height, channels) parses stdlib-side for both PNG and JPEG
-       via :func:`image_dims`.
-
-    The production call site is inside the ``mapInPandas`` batch loop
-    (one import per executor, not per row), returning arrays for
-    downstream feature extraction.
-    """
-    import numpy as np
-
-    try:  # pragma: no cover - environment-dependent
-        import io
-
-        from PIL import Image
-
-        return np.asarray(Image.open(io.BytesIO(payload)).convert("RGBA"))
-    except ImportError:
-        pass
-    if bytes(payload[:8]) == b"\x89PNG\r\n\x1a\n":
-        from tableau_dashboard_performance_etl_automation_spark.reports.png_mini import (
-            decode_png,
-        )
-
-        w, h, channels, samples = decode_png(bytes(payload))
-        return np.frombuffer(samples, dtype=np.uint8).reshape(
-            h, w, channels
-        )
-    raise NotImplementedError(
-        "non-PNG image decoding requires an image library not present "
-        "in this container; PNG payloads decode via the stdlib "
-        "decoder, and the Spark plumbing (schema, batching, "
-        "partitioning) is real — see extract_binary_meta/sample_frames"
-    )
 
 
 def with_binary_payload(docs: DataFrame) -> DataFrame:

@@ -352,7 +352,7 @@ def order_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolled up to per-(priority, quartile) stats — computed WITHOUT a
     per-key row sort (tabjolt_email.py has no window ops; this is the
     engine's scale-safe exact-ntile shape, same discipline as
-    ``analytics._grouped_median_parts``).
+    ``analytics._median_from_counts``).
 
     Exact-ntile-without-row-sort argument: compact to
     (priority, price, count) — a hash aggregate with map-side combine

@@ -1439,7 +1439,6 @@ QUERIES = {
 
 _cos_ab = _COS_SQL.format(a="a.embedding", b="b.embedding")
 _cos_qc = _COS_SQL.format(a="q.embedding", b="c.embedding")
-_cos_vc = _COS_SQL.format(a="v.embedding", b="cent.embedding")
 
 #: Shared SQL replay of the sign-random-projection pipeline
 #: (``_band_signatures`` + the ``lsh_band_bits`` dial): hyperplanes

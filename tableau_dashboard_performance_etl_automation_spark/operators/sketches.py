@@ -31,15 +31,16 @@ from tableau_dashboard_performance_etl_automation_spark.functions.hashing import
     md5_hex_int_sql,
 )
 
-#: Sketch geometry: D independent hash rows × W buckets. W=256 keeps
-#: the toy corpora colliding enough to exercise the min (the point of
-#: the test); at scale W is the ε dial (ε ≈ e/W of total count) and
-#: the state stays D×W counters regardless of key cardinality.
+#: Sketch depth: D independent hash rows (× the 256 buckets of
+#: :func:`_bucket`).
 CMS_DEPTH = 4
-CMS_WIDTH = 256
 TOP_N = 20
 
 
+# Sketch width: 256 buckets per row keeps the toy corpora colliding
+# enough to exercise the min (the point of the test); at scale the
+# width is the ε dial (ε ≈ e/W of total count) and the state stays
+# D×W counters regardless of key cardinality.
 def _bucket(row: int, key: Column) -> Column:
     """Bucket of ``key`` in hash row ``row``: first two hex digits of
     the seeded md5 → 0..255 (shared helper, see functions/hashing)."""
@@ -660,11 +661,10 @@ SS_CAPACITY = 128
 
 def guaranteed_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type users whose EXACT count clears the Space-Saving
-    guarantee threshold ``count * SS_CAPACITY > N_type`` — the set the
-    streaming Space-Saving summary (``streaming/stateful.py:
-    spacesaving_topk_stream``) provably contains regardless of arrival
-    order; the reconciliation test checks that containment plus the
-    ``count ≤ count_hat ≤ count + err`` bounds.
+    guarantee threshold ``count * SS_CAPACITY > N_type`` — the set a
+    Space-Saving summary of ``SS_CAPACITY`` counters provably contains
+    regardless of arrival order, each with
+    ``count ≤ count_hat ≤ count + err``.
 
     Scale shape: one scan → (type, user) hash aggregate with map-side
     combine → per-type totals re-aggregated from that compaction (no

@@ -32,12 +32,6 @@ from tableau_dashboard_performance_etl_automation_spark.operators.sampling impor
     _bucket,
 )
 
-#: EWMA decay per day (1 - lambda). 0.5 = one-day half-life, chosen
-#: because 2^t weight scaling is EXACT in binary floating point
-#: (computed as a shifted integer, not libm pow), so both engines
-#: build bit-identical weights.
-EWMA_R_INV = 2  # 1 / (1 - lambda)
-
 #: Mann-Whitney comparison pair (two document sources).
 MW_SRC_A = "src0"
 MW_SRC_B = "src1"
@@ -113,6 +107,9 @@ def daily_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Decay per day r = 0.5 (one-day half-life), chosen because 2^t weight
+# scaling is EXACT in binary floating point (a shifted integer, not
+# libm pow), so both engines build bit-identical weights.
 def daily_value_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA-smoothed daily mean value (pandas ``adjust=True``
     semantics: ``ewma_t = sum(r^(t-i) x_i) / sum(r^(t-i))``) — the

@@ -1,16 +1,14 @@
-"""Batch twins of the pytest-only streaming operators.
+"""Converged per-key state over the whole events table: running
+profiles, first purchases, closed sessions and click attribution.
 
-The streaming layer (``streaming/``) proves its semantics against
-batch equivalents in ``tests/test_streaming.py``; these queries
-register those batch equivalents with the driver gate, so the
-semantics every stream must converge to are themselves
-oracle-verified each round (the ``dedup_replayed_events`` pattern —
-reference behavior: the cron extract's nightly re-run,
-tabjolt_email.py:351-359, makes every streaming pipeline restartable
-from batch state).
+Each query is the final state an incremental (per-batch) pipeline
+reaches once every event has arrived, computed in one batch pass — the
+state the reference's nightly cron re-run rebuilds from scratch
+(tabjolt_email.py:351-359). Every result is independent of arrival
+order, so the oracle replays it as plain SQL.
 
-Scale shapes are all single hash-aggregates over the events table —
-map-side combinable, one shuffle on the group key, no windows.
+Scale shapes are hash aggregates or user-keyed joins over the events
+table — one shuffle on the group or join key.
 """
 
 from __future__ import annotations
@@ -24,13 +22,10 @@ from tableau_dashboard_performance_etl_automation_spark.operators.analytics impo
 
 
 def running_profile_final(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Converged state of ``streaming.stateful.running_key_profile``
-    (the ``applyInPandasWithState`` per-key profile): after the stream
-    drains, each key's state is exactly this per-type profile.
-    ``total_value`` sums integer cents so the driver's value hash is
-    order-independent in both engines (SUM(DOUBLE) is not);
-    ``tests/test_streaming.py`` asserts the stateful operator's final
-    update matches this frame key-for-key."""
+    """Per-event-type running profile over all events: event count,
+    total value and max value. ``total_value`` sums integer cents so
+    the driver's value hash is order-independent in both engines
+    (SUM(DOUBLE) is not)."""
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("event_type")
@@ -48,11 +43,10 @@ def running_profile_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def user_first_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Converged state of ``streaming.trend.first_purchase_stream``:
-    running MIN(purchase date) per user — the acquisition assignment
-    behind ``new_users_daily``, at user grain. MIN is
-    order-insensitive, which is precisely why the streaming operator
-    converges to this batch result regardless of micro-batch order."""
+    """First purchase date per user: MIN(purchase date) — the
+    acquisition assignment behind ``new_users_daily``, at user grain.
+    MIN is order-insensitive, so a running minimum over any arrival
+    order ends at this result."""
     e = load_table(spark, sf_dir, "events")
     return (
         e.filter(F.col("event_type") == "purchase")
@@ -90,12 +84,10 @@ ORACLE_SQL = {
 
 
 def closed_sessions_final(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch semantics of ``streaming.stateful.session_collapse``:
-    every session the gap-based sessionizer would have CLOSED once the
-    stream drains — all sessions except each user's last (still-open)
-    one, with the same per-user 1-based session ids, event counts,
-    and first→last-event duration. ``tests/test_streaming.py``
-    asserts the streamed output equals this frame row-for-row.
+    """Every CLOSED session of the gap-based sessionizer
+    (``analytics.with_session_ids``): all sessions except each user's
+    last one, which a later event could still extend, with per-user
+    1-based session ids, event counts, and first→last-event duration.
 
     One sessionization window (shuffle on user_id) + one per-session
     aggregate + an anti-join on each user's max session id — all
@@ -165,27 +157,21 @@ ORACLE_SQL["closed_sessions_final"] = f"""
 
 
 #: Attribution lookback: clicks within this many minutes BEFORE the
-#: purchase are credited (same-window twin of
-#: ``streaming.trend.purchase_click_attribution``'s 1-hour gap).
+#: purchase are credited.
 ATTRIB_GAP_MIN = 60
 
 
 def purchase_click_attribution_final(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Batch semantics of ``streaming.trend.purchase_click_attribution``
-    (the watermarked stream-stream interval join): every (purchase,
-    click) pair for the same user with the click in the
-    ``ATTRIB_GAP_MIN``-minute window ending at the purchase. After the
-    stream drains, the streaming join has emitted exactly these pairs
-    — the reconciliation contract ``tests/test_streaming.py`` asserts.
+    """Click attribution as an interval join: every (purchase, click)
+    pair for the same user with the click in the
+    ``ATTRIB_GAP_MIN``-minute window ending at the purchase.
 
     Scale shape: an equi-join on ``user_id`` with the time-range
     predicate applied inside the join — both sides shuffle once on
     the user key and each user's pairs materialize within one task;
-    the range never becomes a cross join. The streaming variant
-    bounds the SAME computation's state by watermark instead of by
-    partition.
+    the range never becomes a cross join.
     """
     e = load_table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
@@ -244,18 +230,17 @@ ORACLE_SQL["purchase_click_attribution_final"] = f"""
 def purchase_click_outer_final(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Batch semantics of ``streaming.trend.purchase_click_left_join``
-    (the LEFT OUTER watermarked stream-stream interval join): every
+    """Click attribution as a LEFT OUTER interval join: every
     purchase with its window clicks, or one NULL-padded row when the
     user had no click in the ``ATTRIB_GAP_MIN`` window — the
     unmatched purchases are the "organic conversion" rows an
     attribution pipeline reports separately.
 
-    Scale shape identical to the inner twin (one shuffle on the user
+    Scale shape identical to the inner join
+    (:func:`purchase_click_attribution_final`: one shuffle on the user
     key; range predicate inside the join); the outer rows cost
     nothing extra — they are the probe rows that found no build
-    match. The streaming variant emits the SAME null rows, just
-    gated on watermark timeout instead of partition completion."""
+    match."""
     e = load_table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),

@@ -198,9 +198,8 @@ def decode_png_header(data: bytes) -> tuple[int, int, int, int]:
 
 def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     """Full stdlib PNG decode → ``(width, height, channels,
-    row-major samples)`` — the read-side twin of :func:`encode_png`
-    and the real decoder behind ``multimodal.decode_image`` when no
-    image library is installed.
+    row-major samples)`` — the read-side twin of :func:`encode_png`,
+    the reference decoder the tests check the encoder against.
 
     Supports the non-interlaced 8-bit-per-sample formats (grayscale,
     gray+alpha, RGB, RGBA) with all five scanline filters (None /

@@ -1,15 +1,11 @@
-"""Warehouse-layout writers: date-partitioned and bucketed tables.
+"""Warehouse artifacts: persisted parquet tables and bucketed tables.
 
-These are the layouts the 100 TB deployment depends on (PERF.md):
-
-- **partition by date** → the daily-window queries (today / 3-day
-  lookback) become partition-pruned scans instead of full scans;
-- **bucket by join key** → repeated co-located joins (baseline vs
-  current, IVF cluster lookups) skip their shuffle entirely — the
-  exchange happens once at write time, then never again.
-
-Both are thin, explicit wrappers so operators/tests can build and
-verify the layouts rather than assert them rhetorically.
+**Bucket by join key** is the layout the 100 TB deployment depends on
+(PERF.md): repeated co-located joins (baseline vs current, IVF cluster
+lookups) skip their shuffle entirely — the exchange happens once at
+write time, then never again. :func:`write_bucketed` is a thin,
+explicit wrapper so operators and tests build and verify the layout
+rather than assert it rhetorically.
 
 The module also owns the engine's one session memo, :func:`session_value`
 (``_MEMO``: name → ((applicationId, tag), value), one entry per name, so
@@ -63,29 +59,12 @@ import contextlib
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from tableau_dashboard_performance_etl_automation_spark.catalog import (
     load_table,
     read_parquet,
 )
-
-
-def write_date_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "ts",
-    partition_col: str = "event_date",
-) -> None:
-    """Write parquet partitioned by the date of ``ts_col``. Readers
-    filtering on ``partition_col`` get partition pruning (directory
-    elimination) — the scan never opens out-of-window files."""
-    (
-        df.withColumn(partition_col, F.col(ts_col).cast("date"))
-        .write.mode("overwrite")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
 
 
 def write_bucketed(
@@ -309,54 +288,6 @@ def persisted_table(
     return _stamped_artifact(
         spark, name, tag, write, lambda path: read_parquet(spark, path)
     )
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_col: str | None = None,
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into files
-    sized for the scan path. Returns the number of output tasks.
-
-    The small-files problem is the classic death-by-metadata failure
-    mode of a streaming or per-batch writer at 100 TB: thousands of
-    KB-scale files per partition turn every scan into an open/seek
-    storm and blow up the driver's file index. Compaction is a pure
-    rewrite:
-
-    - unpartitioned: repartition to ceil(total_bytes / target) tasks
-      (bytes measured from the actual file listing, not row counts,
-      so compression ratio is accounted for);
-    - partitioned: repartition ON the partition column, so each
-      partition's rows collapse into one task → one file per
-      partition directory (the layout partition pruning wants).
-
-    The rewrite is a narrow shuffle — no aggregation state — and at
-    scale it runs per-partition-subtree, embarrassingly parallel.
-    """
-    import math
-
-    total = 0
-    for root, _dirs, files in os.walk(src_path):
-        for name in files:
-            if name.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, name))
-    df = read_parquet(spark, src_path)
-    if partition_col is not None:
-        n_tasks = df.select(partition_col).distinct().count()
-        (
-            df.repartition(F.col(partition_col))
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(out_path)
-        )
-    else:
-        n_tasks = max(1, math.ceil(total / target_file_bytes))
-        df.repartition(n_tasks).write.mode("overwrite").parquet(out_path)
-    return n_tasks
 
 
 def bucketed_table(

@@ -187,79 +187,6 @@ def test_manifest_local_fallback_with_s3_config(spark, tmp_path):
     assert results["summary_line_s3fb"].good.count() == 1
 
 
-def test_jsonl_row_conservation_and_reject_classes(spark, tmp_path):
-    """JSONL corpus ingest: good + rejected == input lines, with all
-    three reject classes diverted (invalid JSON, type-coercion
-    failure, missing required field)."""
-    from tableau_dashboard_performance_etl_automation_spark.sources.jsonl import (
-        load_jsonl,
-    )
-
-    lines = [
-        '{"doc_id": 1, "text": "alpha beta", "lang": "en"}',
-        '{"doc_id": 2, "text": "gamma delta", "lang": "de"}',
-        '{"doc_id": "not-a-number", "text": "x", "lang": "en"}',  # coercion
-        '{"doc_id": 4, "lang": "en"}',  # missing required text
-        '{broken json',  # invalid
-        '{"doc_id": 6, "text": "epsilon", "lang": null}',  # null ok (not req)
-    ]
-    src = tmp_path / "docs.jsonl"
-    src.write_text("\n".join(lines) + "\n")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-        ]
-    )
-    res = load_jsonl(
-        spark, str(src), schema, required=("doc_id", "text")
-    )
-    n_good, n_rej = res.counts()
-    assert n_good == 3 and n_rej == 3
-    assert n_good + n_rej == len(lines)
-    got_ids = sorted(r.doc_id for r in res.good.collect())
-    assert got_ids == [1, 2, 6]
-    # rejects are raw re-parseable text
-    rej = [r.rejected_row for r in res.rejected.collect()]
-    assert any("broken json" in r for r in rej)
-    assert all(isinstance(r, str) and r for r in rej)
-
-
-def test_orc_round_trip_preserves_rows_and_pushdown(spark, sf_dir, tmp_path):
-    """ORC source: a lineitem round-trip must conserve every row and
-    value, and date filters must push into the ORC scan exactly as
-    they do for parquet."""
-    from pyspark.sql import functions as F
-
-    from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
-    from tableau_dashboard_performance_etl_automation_spark.plans import (
-        formatted_plan,
-        pushed_filters,
-    )
-    from tableau_dashboard_performance_etl_automation_spark.sources.formats import (
-        read_orc,
-        write_orc,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    path = str(tmp_path / "lineitem_orc")
-    write_orc(li, path)
-    back = read_orc(spark, path)
-    assert back.count() == li.count()
-    # value conservation: exact-cents grand total survives the round trip
-    total = lambda df: df.agg(  # noqa: E731
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
-    ).collect()[0][0]
-    assert total(back) == total(li)
-    # pushdown + pruning reach the ORC scan
-    q = back.filter(
-        F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp_ntz")
-    ).select("l_orderkey", "l_quantity")
-    assert "l_shipdate" in " ".join(pushed_filters(q))
-    assert "ORC" in formatted_plan(q) or "orc" in formatted_plan(q)
-
-
 def test_catalog_timestamps_surface_as_session_tz_not_ntz(spark, sf_dir):
     """Testdata parquet stores tz-naive TIMESTAMP(MICROS); the catalog
     must surface plain TIMESTAMP (session-UTC), not TIMESTAMP_NTZ —

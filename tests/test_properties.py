@@ -19,7 +19,6 @@ from tableau_dashboard_performance_etl_automation_spark.functions.expressions im
 from tableau_dashboard_performance_etl_automation_spark.functions.skew import (
     salted,
     salted_count,
-    salted_join,
 )
 from tableau_dashboard_performance_etl_automation_spark.functions.text import (
     word_shingles,
@@ -96,30 +95,6 @@ def test_salted_count_equals_plain_count(spark, rows):
     assert plain == salted
 
 
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=2),
-            st.integers(min_value=-(2**31), max_value=2**31),
-        ),
-        min_size=1,
-        max_size=20,
-    )
-)
-@_SETTINGS
-def test_salted_join_equals_plain_join(spark, rows):
-    big = spark.createDataFrame(rows, ["k", "v"])
-    small = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], ["k", "name"])
-    plain = sorted(
-        (r.k, r.v, r.name) for r in big.join(small, "k").collect()
-    )
-    salted = sorted(
-        (r.k, r.v, r.name)
-        for r in salted_join(big, small, "k", n_salts=4).collect()
-    )
-    assert plain == salted
-
-
 def test_salt_actually_spreads_hot_keys(spark):
     """A single hot key must fan out over >1 salt even when the
     projection carries ONLY the key column — the round-1 regression
@@ -189,19 +164,21 @@ def test_struct_argmax_equals_rank_window_top1(spark, rows):
 )
 @_SETTINGS
 def test_grouped_median_matches_quantile_cont(spark, rows):
-    """The distributed weighted-median parts must reproduce
+    """The distributed weighted-median parts, computed from the
+    (k, v, cnt) compaction the query sites build, must reproduce
     statistics.median (== quantile_cont 0.5) for arbitrary grouped
     integer multisets — including ties, negatives, and 1-row groups."""
     import statistics
 
     from tableau_dashboard_performance_etl_automation_spark.operators.analytics import (
-        _grouped_median_parts,
+        _median_from_counts,
     )
 
     df = spark.createDataFrame(rows, "k string, v bigint")
+    counts = df.groupBy("k", "v").agg(F.count(F.lit(1)).alias("cnt"))
     got = {
         r.k: ((r.m1 + r.m2) / 2, r.n)
-        for r in _grouped_median_parts(df, "k", "v").collect()
+        for r in _median_from_counts(counts, "k", "v").collect()
     }
     by_key: dict[str, list[int]] = {}
     for k, v in rows:
@@ -326,130 +303,6 @@ def test_poisson_keep_set_matches_md5_replay(spark, docs_words):
         assert abs(got[k][1] - w) < 1e-9
 
 
-class _FakeState:
-    """Minimal GroupState stand-in for driving _collapse_runs directly."""
-
-    def __init__(self):
-        self.exists = False
-        self._v = None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-        self.exists = True
-
-
-@given(
-    st.lists(
-        st.sampled_from(["click", "view", "purchase"]),
-        min_size=1,
-        max_size=40,
-    ),
-    st.integers(min_value=1, max_value=5),
-)
-@_SETTINGS
-def test_collapse_runs_state_machine_matches_reference(seq, n_batches):
-    """Feeding a type sequence in ANY batch split must emit exactly the
-    reference run-length encoding minus the final open run — and state
-    must carry the open run across batch boundaries."""
-    import pandas as pd
-
-    from tableau_dashboard_performance_etl_automation_spark.streaming.stateful import (
-        _collapse_runs,
-    )
-
-    # reference RLE of the whole sequence
-    rle = []
-    for et in seq:
-        if rle and rle[-1][0] == et:
-            rle[-1][1] += 1
-        else:
-            rle.append([et, 1])
-
-    state = _FakeState()
-    emitted = []
-    size = max(1, len(seq) // n_batches)
-    chunks = [seq[i : i + size] for i in range(0, len(seq), size)]
-    for pos, chunk in enumerate(chunks):
-        base = sum(len(c) for c in chunks[:pos])
-        pdf = pd.DataFrame(
-            {
-                "ts": range(base, base + len(chunk)),
-                "event_id": range(base, base + len(chunk)),
-                "event_type": chunk,
-            }
-        )
-        for out in _collapse_runs((7,), [pdf], state):
-            emitted.extend(zip(out["event_type"], out["run_len"]))
-    assert emitted == [tuple(r) for r in rle[:-1]]
-    # state now also carries the (ts, event_id) late-data frontier
-    assert state.get[:2] == tuple(rle[-1])
-    assert state.get[2:] == (len(seq) - 1, len(seq) - 1)
-
-
-def test_collapse_runs_drops_late_cross_batch_rows():
-    """A row arriving in a later micro-batch with an older
-    (ts, event_id) than the state frontier must be DROPPED (never
-    folded into already-emitted runs)."""
-    import pandas as pd
-
-    from tableau_dashboard_performance_etl_automation_spark.streaming.stateful import (
-        _collapse_runs,
-    )
-
-    state = _FakeState()
-    b1 = pd.DataFrame(
-        {"ts": [10, 20], "event_id": [1, 2], "event_type": ["a", "b"]}
-    )
-    emitted = []
-    for out in _collapse_runs((7,), [b1], state):
-        emitted.extend(zip(out["event_type"], out["run_len"]))
-    assert emitted == [("a", 1)]  # open run: ("b", 1)
-    # late arrival (ts=15 < frontier 20) would have split the a-run
-    b2 = pd.DataFrame(
-        {"ts": [15, 30], "event_id": [3, 4], "event_type": ["a", "b"]}
-    )
-    for out in _collapse_runs((7,), [b2], state):
-        emitted.extend(zip(out["event_type"], out["run_len"]))
-    assert emitted == [("a", 1)]  # late "a" dropped; open run b extends
-    assert state.get[:2] == ("b", 2)
-    assert state.get[2:] == (30, 4)
-
-
-def test_collapse_runs_drops_redelivered_frontier_event():
-    """An at-least-once redelivery of the exact frontier event (equal
-    ts AND event_id) must be idempotent — dropped, not folded into
-    the open run twice."""
-    import pandas as pd
-
-    from tableau_dashboard_performance_etl_automation_spark.streaming.stateful import (
-        _close_sessions,
-        _collapse_runs,
-    )
-
-    state = _FakeState()
-    b1 = pd.DataFrame({"ts": [10], "event_id": [1], "event_type": ["a"]})
-    list(_collapse_runs((7,), [b1], state))
-    b2 = pd.DataFrame(
-        {"ts": [10, 20], "event_id": [1, 2], "event_type": ["a", "a"]}
-    )
-    list(_collapse_runs((7,), [b2], state))
-    assert state.get[:2] == ("a", 2)  # duplicate NOT triple-counted
-
-    sstate = _FakeState()
-    s1 = pd.DataFrame({"ts": [10], "event_id": [1], "event_type": ["a"]})
-    list(_close_sessions((7,), [s1], sstate))
-    s2 = pd.DataFrame(
-        {"ts": [10, 20], "event_id": [1, 2], "event_type": ["a", "a"]}
-    )
-    list(_close_sessions((7,), [s2], sstate))
-    # open session has exactly 2 events (the redelivery dropped)
-    assert sstate.get[3] == 2
-
-
 @given(st.lists(_word, min_size=8, max_size=30))
 @_SETTINGS
 def test_winnowing_guarantee_on_shared_runs(spark, tokens):
@@ -492,7 +345,8 @@ def test_winnowing_guarantee_on_shared_runs(spark, tokens):
 @_SETTINGS
 def test_hll_register_fold_is_permutation_invariant(spark, uids):
     """Register maxima must not depend on arrival order — the
-    mergeability property the streaming HLL's state relies on."""
+    mergeability property that lets per-partition HLL registers
+    combine by max."""
     import hashlib
 
     from tableau_dashboard_performance_etl_automation_spark.operators.sketches import HLL_M

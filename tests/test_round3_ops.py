@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from tableau_dashboard_performance_etl_automation_spark.operators import similarity
 from tableau_dashboard_performance_etl_automation_spark.operators.analytics import (
-    _grouped_median_parts,
+    _median_from_counts,
 )
 from tableau_dashboard_performance_etl_automation_spark.operators.clustering import (
     connected_components,
@@ -65,9 +65,10 @@ def test_grouped_median_matches_statistics_median(spark):
         ("b", v) for v in [10, 20, 30]
     ]
     df = spark.createDataFrame(data, "k string, v bigint")
+    counts = df.groupBy("k", "v").agg(F.count(F.lit(1)).alias("cnt"))
     got = {
         r.k: (r.m1 + r.m2) / 2
-        for r in _grouped_median_parts(df, "k", "v").collect()
+        for r in _median_from_counts(counts, "k", "v").collect()
     }
     assert got["a"] == statistics.median([5, 1, 9, 3, 3, 7])
     assert got["b"] == statistics.median([10, 20, 30])
@@ -118,7 +119,8 @@ def test_simhash_128bit_two_word_fingerprint(spark):
     words. Identical docs must pair at hamming 0; unrelated docs must
     not pair within the radius."""
     from tableau_dashboard_performance_etl_automation_spark.operators.dedup import (
-        simhash_pairs,
+        simhash_pairs_from_signatures,
+        simhash_signatures,
     )
 
     docs = spark.createDataFrame(
@@ -133,7 +135,9 @@ def test_simhash_128bit_two_word_fingerprint(spark):
     )
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in simhash_pairs(docs, 128).collect()
+        for r in simhash_pairs_from_signatures(
+            simhash_signatures(docs, 128), 128
+        ).collect()
     }
     assert got[(1, 2)] == 0
     assert got[(3, 4)] == 0

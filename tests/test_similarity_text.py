@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from tableau_dashboard_performance_etl_automation_spark.functions.vectors import (
@@ -150,18 +149,3 @@ def test_resize_thumbnails_shape_and_determinism(spark, tmp_path):
     assert all(r.height == 8 and r.width == 8 for r in out.values())
     # doc 1 is all 'x' (0x78): resized mean must be exactly 120
     assert out[1].pixel_mean == "120.0000"
-
-
-def test_decode_image_png_real_other_formats_gated():
-    # PNG payloads decode for real via the stdlib decoder (round 7);
-    # non-PNG formats stay gated on an image library
-    from tableau_dashboard_performance_etl_automation_spark.reports import png_mini
-
-    cv = png_mini.Canvas(4, 3, bg=(10, 20, 30, 255))
-    cv.set_pixel(2, 1, (200, 100, 50, 255))
-    arr = multimodal.decode_image(png_mini.encode_png(cv))
-    assert arr.shape == (3, 4, 4)
-    assert tuple(arr[1, 2]) == (200, 100, 50, 255)
-    assert tuple(arr[0, 0]) == (10, 20, 30, 255)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\xff\xd8\xff\xe0 not a png")

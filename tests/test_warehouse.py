@@ -1,9 +1,9 @@
-"""Storage-layout guarantees: partition pruning prunes, bucketed
-joins don't shuffle. Plan-level evidence, not assertion by analogy."""
+"""Storage-layout guarantees: bucketed joins don't shuffle, and
+warehouse artifacts are trusted only while their stamp matches.
+Plan-level evidence, not assertion by analogy."""
 
 from __future__ import annotations
 
-import re
 import uuid
 from collections import Counter
 
@@ -17,21 +17,6 @@ from tableau_dashboard_performance_etl_automation_spark.catalog import (
 )
 from tableau_dashboard_performance_etl_automation_spark.plans import formatted_plan
 from tableau_dashboard_performance_etl_automation_spark.sources import warehouse
-
-
-def test_date_partitioned_scan_prunes(spark, sf_dir, tmp_path):
-    events = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_by_date")
-    warehouse.write_date_partitioned(events, path)
-    df = read_parquet(spark, path).filter(
-        F.col("event_date") == "2024-01-15"
-    )
-    plan = formatted_plan(df)
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "event_date" in m.group(1)
-    # pruned read returns exactly that day's rows
-    want = events.filter(F.col("ts").cast("date") == "2024-01-15").count()
-    assert df.count() == want
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
@@ -77,56 +62,6 @@ def test_bucketed_aggregate_skips_shuffle(spark, sf_dir):
         spark.table("events_bucketed_agg").groupBy("user_id").agg(F.sum("value"))
     )
     assert "hashpartitioning" not in formatted_plan(agg_bucketed)
-
-
-def test_compaction_shrinks_file_count_preserving_rows(spark, sf_dir, tmp_path):
-    """A 64-small-file table compacts to the byte-target file count
-    with identical content; a partitioned table compacts to one file
-    per partition directory."""
-    import os
-
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        compact_parquet,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    frag = str(tmp_path / "fragmented")
-    events.repartition(64).write.parquet(frag)
-    n_frag = sum(
-        1 for n in os.listdir(frag) if n.endswith(".parquet")
-    )
-    assert n_frag >= 32
-
-    out = str(tmp_path / "compacted")
-    n_tasks = compact_parquet(spark, frag, out, target_file_bytes=64 * 1024 * 1024)
-    n_out = sum(1 for n in os.listdir(out) if n.endswith(".parquet"))
-    assert n_out == n_tasks < n_frag
-    assert spark.read.parquet(out).count() == events.count()
-    # content identical: order-insensitive id multiset
-    assert (
-        spark.read.parquet(out).select("event_id").exceptAll(
-            events.select("event_id")
-        ).count()
-        == 0
-    )
-
-    # partitioned compaction: one file per partition dir
-    part_src = str(tmp_path / "part_src")
-    events.withColumn(
-        "event_date", F.col("ts").cast("date")
-    ).repartition(16).write.partitionBy("event_date").parquet(part_src)
-    part_out = str(tmp_path / "part_out")
-    compact_parquet(
-        spark, part_src, part_out, partition_col="event_date"
-    )
-    for d in os.listdir(part_out):
-        if d.startswith("event_date="):
-            files = [
-                f
-                for f in os.listdir(os.path.join(part_out, d))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 1, d
 
 
 def test_parquet_schema_evolution_merges_new_column(spark, sf_dir, tmp_path):
