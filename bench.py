@@ -83,19 +83,8 @@ def _cpus() -> int:
 
 
 def main() -> None:
-    import gc
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    # One JVM runs every registered query back-to-back; some operators
-    # localCheckpoint intermediates, whose blocks stay pinned until
-    # the Python-side DataFrame is garbage-collected AND the
-    # ContextCleaner runs. On the default heap the accumulated blocks
-    # push the old gen into multi-second collection stalls that land
-    # on random queries (observed: the same trivial aggregate at
-    # 0.37 s in one full run and 15.3 s min-of-2 in another). A
-    # roomier heap is bench harness hygiene, not a query speedup.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
     # Fresh-warehouse mode (round-11 VERDICT item 6): point the
     # session at an empty warehouse so this one invocation measures
@@ -152,8 +141,6 @@ def main() -> None:
         warm_dir = sf_dir
     for name, fn in queries.items():
         fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-        gc.collect()
-    spark._jvm.System.gc()
 
     from tableau_dashboard_performance_etl_automation_spark.sources import warehouse
 
@@ -267,8 +254,6 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.time() - t0)
             extra += 1
-            gc.collect()
-            spark._jvm.System.gc()
         timings[name] = round(best, 3)
         # per-query artifact hit/build/register trail: a cache MISS
         # inside a timed window shows up here by name instead of as
@@ -276,18 +261,6 @@ def main() -> None:
         ev = warehouse.ARTIFACT_EVENTS[ev0:]
         if ev:
             artifact_events[name] = [f"{n}:{kind}" for n, kind in ev]
-        # drop Python references to the query's DataFrames so the
-        # ContextCleaner can unpin their localCheckpoint blocks
-        # before the next query runs (outside the timed window)
-        gc.collect()
-        # ...and force the JVM collection NOW rather than letting the
-        # old gen grow until a multi-second stop-the-world lands
-        # inside some later query's timed window (observed: a 0.5 s
-        # aggregate reported at 10.5 s min-of-2 in a full run, solo
-        # timing normal). An explicit System.gc() per query moves
-        # that pause outside every timed window; harness hygiene
-        # only, identical plans.
-        spark._jvm.System.gc()
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf

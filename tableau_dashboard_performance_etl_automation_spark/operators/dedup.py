@@ -29,6 +29,7 @@ from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import
     bucketed_table,
     corpus_slug,
     persisted_table,
+    session_value,
 )
 from tableau_dashboard_performance_etl_automation_spark.functions.text import (
     seeded_md5,
@@ -389,10 +390,8 @@ def simhash_signatures(docs: DataFrame, fingerprint_bits: int) -> DataFrame:
         .select("doc_id", F.explode("w").alias("word"))
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        # materialized once: both the vocabulary pass and the
-        # weighted-sum join consume it — without this the explode +
-        # count runs twice (same sharing pattern as ngram_jaccard)
-        .localCheckpoint()
+        # both the vocabulary pass and the weighted-sum join consume
+        # it; this runs only when the signature artifact is built
     )
     # Hash each DISTINCT word once (the vocabulary is tiny relative to
     # the corpus — this is a broadcast-joined lookup, not a per-row
@@ -520,7 +519,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     512× decade) runs once per corpus; the recurring cost is the
     banding join + hamming confirm over doc_id + 1-2 BIGINTs."""
     docs = load_table(spark, sf_dir, "documents")
-    bits = simhash_fingerprint_bits(docs.count())
+    # the corpus count is a driver value: counted once per session
+    bits = session_value(
+        spark,
+        "simhash_bits",
+        sf_dir,
+        lambda: simhash_fingerprint_bits(docs.count()),
+    )
     base = corpus_slug(sf_dir)
     sig = persisted_table(
         spark,
@@ -2065,11 +2070,10 @@ def winnowing_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") <= WINNOW_MAX_DF)
         .select("fp")
     )
-    # materialize the capped fingerprint table once: three consumers
-    # (per-doc counts + both self-join sides) otherwise each re-run
-    # the fp⋈keep shuffle join — the self-join sides share an
-    # exchange at runtime but the counts branch never did
-    fpk = fp.join(keep, "fp").localCheckpoint(eager=False)
+    # three consumers (per-doc counts + both self-join sides) read
+    # the capped fingerprint table: a scan of the persisted
+    # fingerprints and a join, never the extraction
+    fpk = fp.join(keep, "fp")
     counts = fpk.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nfp"))
     a, b = fpk.alias("a"), fpk.alias("b")
     pairs = (

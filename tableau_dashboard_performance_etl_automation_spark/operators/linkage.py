@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
 from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
     corpus_slug,
+    persisted_table,
 )
 
 
@@ -136,7 +137,33 @@ FS_MATCH_SIM = 0.9
 FS_TOP_N = 50
 
 
+def _fs_algo() -> str:
+    """Hash of the scoring and blocking code and its threshold: it tags
+    every artifact built from the scored pairs, so a change to that
+    logic invalidates them instead of serving the old algorithm's
+    output."""
+    import hashlib
+    import inspect
+
+    src = inspect.getsource(_fs_scored_build)
+    return hashlib.md5(
+        f"{src}|FS_MATCH_SIM={FS_MATCH_SIM}".encode()
+    ).hexdigest()[:10]
+
+
 def _fs_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The scored candidate pairs of :func:`_fs_scored_build`, persisted
+    per corpus: its two driver collects (u- and m-probabilities) and
+    the blocked joins run once, when the artifact is built."""
+    return persisted_table(
+        spark,
+        f"fs_scored_pairs/{corpus_slug(sf_dir)}",
+        f"{sf_dir}|algo={_fs_algo()}",
+        lambda: _fs_scored_build(spark, sf_dir),
+    )
+
+
+def _fs_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter scored record linkage over part records: each
     candidate pair gets the classic log-likelihood-ratio weight
     ``sum_f log2(m_f/u_f)`` (agree) / ``log2((1-m_f)/(1-u_f))``
@@ -210,9 +237,6 @@ def _fs_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.greatest(F.length("na"), F.length("nb")),
         4,
     )
-    # The blocked pairs feed two actions (the m-probability
-    # aggregation and the final scored output) — materialize them once
-    # so the joins + Levenshtein don't run twice.
     flagged = cand.select(
         "ka",
         "kb",
@@ -221,7 +245,7 @@ def _fs_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ba") == F.col("bb")).cast("int").alias("f_brand"),
         (F.col("ta") == F.col("tb")).cast("int").alias("f_type"),
         (F.col("sa") == F.col("sb")).cast("int").alias("f_size"),
-    ).localCheckpoint()
+    )
     # u-probabilities: chance two distinct random records agree on
     # the field — exact frequency arithmetic on the full table.
     # sum f_v(f_v-1) folds Spark-side per field; ONE job returns five
@@ -298,8 +322,8 @@ def _fs_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def part_fs_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``FS_TOP_N`` view of :func:`_fs_scored_pairs` (the full
-    Fellegi-Sunter docstring lives there) — the human-review queue of
-    the highest-weight candidate matches."""
+    Fellegi-Sunter docstring is on :func:`_fs_scored_build`) — the
+    human-review queue of the highest-weight candidate matches."""
     return (
         _fs_scored_pairs(spark, sf_dir)
         .select(
@@ -546,12 +570,6 @@ def part_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    import os
-
-    from tableau_dashboard_performance_etl_automation_spark.sources.warehouse import (
-        persisted_table,
-    )
-
     def _build() -> DataFrame:
         edges = (
             _fs_scored_pairs(spark, sf_dir)
@@ -564,28 +582,16 @@ def part_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # the match-label table is a per-corpus artifact (same discipline
-    # as the LSH cluster labels): the FS scoring + CC fixpoint runs
-    # once per corpus EVER, every later call reads the stored
-    # assignment — measured 6.1 s -> sub-second recurring at sf0.1.
-    # The tag folds in an ALGORITHM hash (source of the scoring/
-    # blocking pipeline + FS_GOLD_MIN), not just the corpus: the
-    # labels bake in the blocking keys and threshold, so any change
-    # to that logic must invalidate the stored clusters instead of
-    # silently serving the old algorithm's output (round-6 ADVICE)
-    import hashlib
-    import inspect
-
-    algo = hashlib.md5(
-        (
-            inspect.getsource(_fs_scored_pairs)
-            + f"|FS_GOLD_MIN={FS_GOLD_MIN}"
-        ).encode()
-    ).hexdigest()[:10]
+    # as the LSH cluster labels): the CC fixpoint runs once per corpus
+    # EVER, every later call reads the stored assignment — measured
+    # 6.1 s -> sub-second recurring at sf0.1. The tag folds in the
+    # scoring algorithm hash and FS_GOLD_MIN, not just the corpus: the
+    # labels bake in the blocking keys and threshold (round-6 ADVICE)
     base = corpus_slug(sf_dir)
     labels = persisted_table(
         spark,
         f"part_match_labels/{base}",
-        f"{sf_dir}|algo={algo}",
+        f"{sf_dir}|algo={_fs_algo()}|FS_GOLD_MIN={FS_GOLD_MIN}",
         _build,
     )
     part = load_table(spark, sf_dir, "part")

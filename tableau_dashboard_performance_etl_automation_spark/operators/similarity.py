@@ -704,7 +704,7 @@ def embedding_centroid_by_label(
     )
 
 
-def _nearest(e: DataFrame, cent: DataFrame, nprobe: int = 1) -> DataFrame:
+def _nearest(e: DataFrame, cent_rows: list, nprobe: int = 1) -> DataFrame:
     """Nearest-centroid assignment. ``nprobe=1`` (the storage
     assignment and every Lloyd round — the corpus-sized path) streams
     the vectors through the Arrow-batched numpy scorer with the K
@@ -716,11 +716,13 @@ def _nearest(e: DataFrame, cent: DataFrame, nprobe: int = 1) -> DataFrame:
     oracle's ROW_NUMBER (``ccos DESC, cent_id ASC``) via the negated
     cent_id in the ``MAX(struct(...))``. ``nprobe>1`` (the query-side
     widened search) keeps the HOF broadcast join + rank window, which
-    only ever sees the tiny query set."""
+    only ever sees the tiny query set. ``cent_rows`` are the
+    ``(cent_id, cvec)`` codebook rows."""
     if nprobe == 1:
-        return _nearest_arrow(
-            e, [(r.cent_id, r.cvec) for r in cent.collect()]
-        )
+        return _nearest_arrow(e, cent_rows)
+    cent = e.sparkSession.createDataFrame(
+        cent_rows, "cent_id BIGINT, cvec ARRAY<DOUBLE>"
+    )
     scored = e.crossJoin(F.broadcast(cent)).withColumn(
         "ccos", F.round(cosine(F.col("vec"), F.col("cvec")), 6)
     )
@@ -874,31 +876,26 @@ def _train_centroids(
     centroids are the same doubles in Spark and the DuckDB oracle
     replay. At corpus scale this is the standard k-means-on-a-sample
     pattern: train on a sampled fraction, then assign everything."""
-    spark = e.sparkSession
-    # Materialize the training sample once (localCheckpoint) instead
-    # of re-scanning parquet every Lloyd round, and compact it — the
-    # sample is a small fraction of the corpus, so leaving it spread
-    # over full-scan partitioning makes every round pay scan-width
-    # task overhead for near-empty partitions. On a cluster, size the
-    # partition count to sample_rows / desired_rows_per_partition.
+    # Compact the training sample: it is a small fraction of the
+    # corpus, so leaving it spread over full-scan partitioning makes
+    # every round pay scan-width task overhead for near-empty
+    # partitions. On a cluster, size the partition count to
+    # sample_rows / desired_rows_per_partition.
     pm = ivf_train_permille(n_corpus, n_centroids)
     keep = (
         (F.col("vec_id") % TRAIN_MOD) < TRAIN_KEEP
         if pm is None
         else (F.col("vec_id") % 1000) < pm
     )
-    train = (
-        e.filter(keep)
+    train = e.filter(keep).select("vec_id", "vec").coalesce(8)
+    rows = [
+        (r.vec_id, r.vec)
+        for r in e.filter(F.col("vec_id") < n_centroids)
         .select("vec_id", "vec")
-        .coalesce(8)
-        .localCheckpoint()
-    )
-    cent = e.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cent_id"), F.col("vec").alias("cvec")
-    )
-    rows = [(r.cent_id, r.cvec) for r in cent.collect()]
+        .collect()
+    ]
     for _ in range(IVF_ITERS):
-        assign = _nearest(train, cent)
+        assign = _nearest(train, rows)
         quant = assign.select(
             "cent_id",
             F.posexplode(
@@ -924,9 +921,6 @@ def _train_centroids(
         # is the standard k-means broadcast step (MLlib does the
         # same); Python floats are IEEE doubles, so values are exact.
         rows = [(r.cent_id, r.cvec) for r in updated.collect()]
-        cent = spark.createDataFrame(
-            rows, "cent_id BIGINT, cvec ARRAY<DOUBLE>"
-        )
     return rows
 
 
@@ -981,9 +975,7 @@ def _codebook(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
 IVF_POSTINGS_ARTIFACT = "ivf_postings"
 
 
-def _assignments(
-    spark: SparkSession, sf_dir: str, e: DataFrame, cent: DataFrame
-) -> DataFrame:
+def _assignments(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
     """The IVF posting lists, persisted like the codebook (round-5):
     the first session ever to need them pays the full-corpus assign
     pass ONCE and writes the (vec_id, vec, cent_id) table as parquet
@@ -995,16 +987,15 @@ def _assignments(
     postings, and its absence/mismatch forces a rebuild.
     Deterministic assignment (exact integer centroid training +
     rounded cosine) keeps the loaded postings bit-identical to a
-    recompute, so oracle parity is unaffected.  ``cent`` is
-    :func:`_codebook`'s frame for the same corpus."""
+    recompute, so oracle parity is unaffected."""
     # postings version-stamped by the codebook size, read from the
-    # driver-side rows ``cent`` was made from — no Spark job
-    k = len(_codebook_rows(spark, sf_dir, e))
+    # driver-side codebook rows — no Spark job
+    rows = _codebook_rows(spark, sf_dir, e)
     return persisted_table(
         spark,
-        _artifact_name(f"{IVF_POSTINGS_ARTIFACT}/k{k}", sf_dir),
+        _artifact_name(f"{IVF_POSTINGS_ARTIFACT}/k{len(rows)}", sf_dir),
         sf_dir,
-        lambda: _nearest(e, cent),
+        lambda: _nearest(e, rows),
         partition_by=["cent_id"],
     ).select("vec_id", "cent_id", "vec")
 
@@ -1017,13 +1008,14 @@ def ann_ivf_topk(
     ~nprobe/K candidate cut — the scale path when the corpus is
     billions of vectors."""
     e = _emb(spark, sf_dir)
-    cent = _codebook(spark, sf_dir, e)
-    assign = _assignments(spark, sf_dir, e, cent)
+    assign = _assignments(spark, sf_dir, e)
     # score only the query vectors against the codebook — per-vector
     # assignment is independent, so filtering before _nearest gives
     # the same rows as filtering after, minus a full-corpus pass
     q = _nearest(
-        e.filter(F.col("vec_id") < N_QUERIES), cent, nprobe=nprobe
+        e.filter(F.col("vec_id") < N_QUERIES),
+        _codebook_rows(spark, sf_dir, e),
+        nprobe=nprobe,
     ).select(
         F.col("vec_id").alias("query_id"),
         F.col("cent_id"),
@@ -1097,10 +1089,12 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ssq = (codes * codes).sum(axis=1)
         return codes, ssq
 
-    q_rows = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "vec")
-        .collect()
+    # the query vectors are a driver value, collected once per session
+    q_rows = session_value(
+        spark,
+        "ann_query_vectors",
+        sf_dir,
+        e.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "vec").collect,
     )
     if not q_rows:
         # empty/tiny corpus: no query vectors — the SQL pipeline this
@@ -1355,10 +1349,9 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upper-triangle covariance matrix of the embedding dimensions —
     the moment matrix PCA/whitening starts from (``cov(i,j) =
     E[x_i·x_j] − E[x_i]·E[x_j]``), computed as one pass of exact
-    integer micro-unit moments; the dim·(dim+1)/2-row result is
-    localCheckpointed and kept per (application, sf_dir) by
-    ``session_value`` (``embedding_effective_rank`` shares it and
-    skips the posexplode self-join rebuild).
+    integer micro-unit moments; the dim·(dim+1)/2-row result is a
+    persisted per-corpus artifact (``embedding_effective_rank`` reads
+    it too and skips the posexplode self-join rebuild).
 
     Scale shape: posexplode → co-partitioned self-equi-join on
     ``vec_id`` (both sides are the same exploded projection, so AQE
@@ -1369,16 +1362,23 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors per partial; at larger corpora drop to 1e4 units). The
     final covariance divides exact integer sums, rounded to 8.
     """
-    return session_value(
+    cells = covariance_cells(spark, sf_dir)
+    return cells.repartition(1).orderBy("dim_i", "dim_j")
+
+
+def covariance_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unsorted rows of :func:`embedding_covariance`, persisted per
+    corpus (the frame composers such as ``embedding_effective_rank``
+    aggregate)."""
+    return persisted_table(
         spark,
-        "embedding_covariance",
+        f"embedding_covariance/{corpus_slug(sf_dir)}",
         sf_dir,
         lambda: _covariance(spark, sf_dir),
     )
 
 
 def _covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The checkpointed result of :func:`embedding_covariance`."""
     e = _emb(spark, sf_dir)
     flat = e.select(
         "vec_id", F.posexplode("vec").alias("dim", "x")
@@ -1404,22 +1404,17 @@ def _covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("b.xm")).alias("s_j"),
         )
     )
-    return (
-        moments.select(
-            "dim_i",
-            "dim_j",
-            F.round(
-                (
-                    F.col("s_ij") / F.col("n")
-                    - (F.col("s_i") / F.col("n"))
-                    * (F.col("s_j") / F.col("n"))
-                )
-                / F.lit(1e12),
-                8,
-            ).alias("cov"),
-        )
-        .orderBy("dim_i", "dim_j")
-        .localCheckpoint()
+    return moments.select(
+        "dim_i",
+        "dim_j",
+        F.round(
+            (
+                F.col("s_ij") / F.col("n")
+                - (F.col("s_i") / F.col("n")) * (F.col("s_j") / F.col("n"))
+            )
+            / F.lit(1e12),
+            8,
+        ).alias("cov"),
     )
 
 
@@ -2061,16 +2056,14 @@ def _pq_assign(sub: DataFrame, cb_rows: list) -> DataFrame:
     )
 
 
-def _train_pq(spark: SparkSession, sub: DataFrame) -> list:
+def _train_pq(sub: DataFrame) -> list:
     """Grouped Lloyd: all PQ_M codebooks train simultaneously (the
     subspace index is just another group key). Means accumulate exact
     integer micro-units, so the trained codebooks are the same doubles
     in Spark and the oracle replay; the K×M×SUBDIM codebook collects
     to the driver each round (1 KB) — the standard k-means broadcast
     step."""
-    train = sub.filter(
-        (F.col("vec_id") % TRAIN_MOD) < TRAIN_KEEP
-    ).localCheckpoint()
+    train = sub.filter((F.col("vec_id") % TRAIN_MOD) < TRAIN_KEEP)
     cb_rows = [
         (r.m, r.vec_id, r.sv)
         for r in sub.filter(F.col("vec_id") < PQ_K).collect()
@@ -2172,13 +2165,9 @@ def _pq_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shortlist re-rank; only the first session ever pays the
         # subvector pass, training, and encoding.  Deterministic
         # training keeps loaded artifacts bit-identical to a rebuild.
-        trained: dict = {}
-
         def _train() -> DataFrame:
-            # the codes build below reuses the training subvectors
-            trained["sub"] = _subvectors(e).localCheckpoint()
             return spark.createDataFrame(
-                _train_pq(spark, trained["sub"]),
+                _train_pq(_subvectors(e)),
                 "m INT, cent_id BIGINT, cvec ARRAY<DOUBLE>",
             )
 
@@ -2190,10 +2179,7 @@ def _pq_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
 
         def _build_codes() -> DataFrame:
-            sub = trained.get("sub")
-            if sub is None:
-                sub = _subvectors(e).localCheckpoint()
-            return _pq_assign(sub, cb_rows).select(
+            return _pq_assign(_subvectors(e), cb_rows).select(
                 "vec_id", "m", F.col("cent_id").alias("code")
             )
 
@@ -2771,8 +2757,7 @@ def semantic_dedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (vec_id, cent_id, dup_of, cos4) ordered by vec_id.
     """
     e = _emb(spark, sf_dir)
-    cent = _codebook(spark, sf_dir, e)
-    assign = _assignments(spark, sf_dir, e, cent)
+    assign = _assignments(spark, sf_dir, e)
     a = assign.select(
         F.col("cent_id"),
         F.col("vec_id"),
@@ -2818,8 +2803,7 @@ def semantic_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (cent_id, n_vecs, n_pruned, n_kept, prune_frac).
     """
     e = _emb(spark, sf_dir)
-    cent = _codebook(spark, sf_dir, e)
-    assign = _assignments(spark, sf_dir, e, cent)
+    assign = _assignments(spark, sf_dir, e)
     totals = assign.groupBy("cent_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vecs")
     )
@@ -2943,8 +2927,7 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cent_id, pick_rank).
     """
     e = _emb(spark, sf_dir)
-    cent = _codebook(spark, sf_dir, e)
-    assign = _assignments(spark, sf_dir, e, cent)
+    assign = _assignments(spark, sf_dir, e)
     w = Window.partitionBy("cent_id").orderBy(
         F.md5(F.concat(F.lit("cbs|"), F.col("vec_id").cast("string"))),
         F.col("vec_id"),
@@ -3007,8 +2990,7 @@ def cluster_lang_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (cent_id, n_vecs, top_lang, top_share, lang_entropy).
     """
     e = _emb(spark, sf_dir)
-    cent = _codebook(spark, sf_dir, e)
-    assign = _assignments(spark, sf_dir, e, cent)
+    assign = _assignments(spark, sf_dir, e)
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "lang"
     )
@@ -3066,7 +3048,7 @@ def cluster_centroid_margin(
     """
     e = _emb(spark, sf_dir)
     cent = _codebook(spark, sf_dir, e)
-    assign = _assignments(spark, sf_dir, e, cent)
+    assign = _assignments(spark, sf_dir, e)
     # norms fold once per ROW below the n×K cross join (every member
     # scores against ALL K centroids): one interpreted array pass per
     # pair instead of three, bit-identical denominator

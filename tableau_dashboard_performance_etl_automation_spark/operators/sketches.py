@@ -468,11 +468,9 @@ def kmv_type_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed.withColumn("rn", F.row_number().over(wk))
         .filter(F.col("rn") <= KMV_K)
         .select("event_type", "h")
-        # the sketch subtree (full scan + md5 + distinct + window)
-        # feeds FOUR branches below (a, b, and both type spines);
-        # materialize it once — strictly bounded at |types|·K rows,
-        # so pinning it is safe at any corpus size
-        .localCheckpoint()
+        # the sketch subtree (artifact scan + window) feeds FOUR
+        # branches below (a, b, and both type spines); each re-reads
+        # the persisted compaction, not the events
     )
     a = sk.select(
         F.col("event_type").alias("type_a"), F.col("h")

@@ -298,16 +298,16 @@ def embedding_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     size.  A collapsing embedding model shows up here as eff_rank
     falling toward 1 long before retrieval metrics degrade.
 
-    Composes :func:`similarity.embedding_covariance` (upper-triangle
+    Composes :func:`similarity.covariance_cells` (the upper-triangle
     covariance from exact micro-unit moments, rounded to 8): the
     rounded cells are re-quantized to exact 1e-8 integer units, so
     trace and Frobenius sums are exact BIGINTs (off-diagonal cells
     count twice) and the ratio is one final division."""
     from tableau_dashboard_performance_etl_automation_spark.operators.similarity import (
-        embedding_covariance,
+        covariance_cells,
     )
 
-    cov = embedding_covariance(spark, sf_dir)
+    cov = covariance_cells(spark, sf_dir)
     u = cov.select(
         "dim_i",
         "dim_j",
@@ -465,56 +465,49 @@ def mixture_water_filling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(F.sum("toks").alias("c"))
     )
-    totals = F.broadcast(
-        per_src.agg(
-            F.sum("c").alias("total_toks"),
-            F.count(F.lit(1)).cast("bigint").alias("k"),
-        )
-    )
     wo = Window.orderBy("c", "source")
     wc = wo.rowsBetween(Window.unboundedPreceding, 0)
-    # lazy checkpoint of the ≤|sources|-row ranked frame: it feeds
-    # the boundary probe, the cut sum AND the final projection, and
-    # each consumer otherwise re-executes the whole corpus tokenize +
-    # per-source aggregate subtree (the un-materialized plan held ~8
-    # corpus passes / 30 exchanges). The barrier is bounded by the
-    # source domain, never the corpus.
-    ranked = (
-        per_src.crossJoin(totals)
-        .withColumn(
-            "budget",
-            F.expr(f"total_toks * {WATERFILL_BUDGET_PCT} DIV 100"),
-        )
-        .withColumn("i", F.row_number().over(wo).cast("bigint"))
-        .withColumn("cum", F.sum("c").over(wc))
-    ).localCheckpoint(eager=False)
+    # every step below is a window over the ≤|sources|-row per-source
+    # frame, so the plan is one chain over one corpus aggregate: no
+    # branch re-executes the corpus tokenize
+    everything = Window.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    ranked = per_src.select(
+        "source",
+        "c",
+        F.sum("c").over(everything).alias("total_toks"),
+        F.count(F.lit(1)).over(everything).cast("bigint").alias("k"),
+        F.row_number().over(wo).cast("bigint").alias("i"),
+        F.sum("c").over(wc).alias("cum"),
+    ).withColumn(
+        "budget", F.expr(f"total_toks * {WATERFILL_BUDGET_PCT} DIV 100")
+    )
     # boundary i is valid iff capping sources 1..i leaves a water
     # level still above c_i; i=0 (nothing capped) is always valid
-    boundary = F.broadcast(
-        ranked.filter(
-            F.col("budget") - F.col("cum")
-            >= F.col("c") * (F.col("k") - F.col("i"))
-        )
-        .agg(
-            F.coalesce(F.max("i"), F.lit(0).cast("bigint")).alias("i_star")
-        )
+    valid = F.col("budget") - F.col("cum") >= F.col("c") * (
+        F.col("k") - F.col("i")
     )
-    cut = F.broadcast(
-        ranked.crossJoin(boundary)
-        .filter(F.col("i") <= F.col("i_star"))
-        .agg(
-            F.coalesce(F.sum("c"), F.lit(0).cast("bigint")).alias(
-                "cum_star"
-            )
-        )
+    starred = ranked.withColumn(
+        "i_star",
+        F.coalesce(
+            F.max(F.when(valid, F.col("i"))).over(everything),
+            F.lit(0).cast("bigint"),
+        ),
+    ).withColumn(
+        "cum_star",
+        F.coalesce(
+            F.sum(
+                F.when(F.col("i") <= F.col("i_star"), F.col("c"))
+            ).over(everything),
+            F.lit(0).cast("bigint"),
+        ),
     )
     theta = (F.col("budget") - F.col("cum_star")) / (
         F.col("k") - F.col("i_star") * 1.0
     )
     return (
-        ranked.crossJoin(boundary)
-        .crossJoin(cut)
-        .select(
+        starred.select(
             "source",
             F.col("c").alias("available_tokens"),
             (F.col("i") > F.col("i_star")).cast("int").alias("at_cap"),
@@ -1988,9 +1981,10 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2(|types|) = uniform chaos), with the uniform bound alongside.
 
     Composes :func:`clustering.event_markov_stationary`'s solver
-    (exact integer-unit pi) from ONE shared census: it collects the
-    |types|²-bounded census once, power-iterates pi in Python from
-    those rows, and feeds the cell grid back as local data — the
+    (exact integer-unit pi) from ONE shared census: it reads the
+    |types|²-bounded census rows, collected once per session,
+    power-iterates pi in Python from those rows, and feeds the cell
+    grid back as local data — the
     entropy expressions below are unchanged Spark expressions, so
     every double is bit-identical. Each cell's term is a closed-form
     double of exact integers quantized to 1e-6 units, so the final sum
@@ -2002,7 +1996,7 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _markov_trans,
     )
 
-    rows = _markov_trans(spark, sf_dir).collect()
+    rows = _markov_trans(spark, sf_dir)
     srcs, v = _markov_stationary_from_rows(rows)
     sset = set(srcs)
     # restrict to the closed sub-chain the solver used (both endpoints
@@ -2502,14 +2496,11 @@ def event_hour_mi_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``(n_xy·1.0·N)/(n_x·1.0·n_y)`` to keep both engines' IEEE
     rounding identical; counts never multiply in int64."""
     e = load_table(spark, sf_dir, "events")
-    # the cell table is <= |types|·24 rows; localCheckpoint pins it so
-    # the three marginal branches (x, y, grand total) fold the CELLS,
-    # not three more scans of the fact table
-    xy = (
-        e.groupBy("event_type", F.hour("ts").cast("int").alias("hr"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_xy"))
-        .localCheckpoint()
-    )
+    # the cell table is <= |types|·24 rows; the three marginal
+    # branches (x, y, grand total) fold the CELLS, not the raw rows
+    xy = e.groupBy(
+        "event_type", F.hour("ts").cast("int").alias("hr")
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_xy"))
     x = xy.groupBy("event_type").agg(F.sum("n_xy").alias("n_x"))
     y = xy.groupBy("hr").agg(F.sum("n_xy").alias("n_y"))
     tot = xy.agg(F.sum("n_xy").alias("n_all"))

@@ -569,16 +569,16 @@ def quantile_normalized_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop_hits = F.expr(
         f"size(filter(split(text, ' '), x -> x IN ({stoplist})))"
     )
-    # materialized once: the counts branch and the final rank join
-    # both consume the scored stream, and with no exchange between
-    # the scan and either consumer each branch would re-run the
-    # interpreted stop-hit HOF over the whole corpus text (measured
-    # 1.34 → 0.59 s; the checkpoint is 3 narrow columns per doc)
+    # the counts branch and the final rank join both consume the
+    # scored stream; hash-partitioning it on (source, quality) right
+    # after the scan puts one exchange under both (the counts
+    # aggregate and the tie-group window need no other), so the
+    # interpreted stop-hit HOF runs over the corpus text once
     scored = docs.select(
         "doc_id",
         "source",
         F.round(stop_hits / F.size(words()), 4).alias("quality"),
-    ).localCheckpoint()
+    ).repartition("source", "quality")
     counts = scored.groupBy("source", "quality").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -1708,16 +1708,11 @@ def word_bigram_kn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BIGINT count and log2 is evaluated once per type); steady state
     # pays only the per-doc bigram stream + broadcast lookup
     def _build_scores() -> DataFrame:
-        # materialize the (w1, w2, c12) type table ONCE: ctx, prec,
-        # btypes and the final join all derive from it, and without
-        # the checkpoint each branch re-ran the full corpus explode +
-        # (w1,w2) aggregate (4 corpus passes per build — the round-11
-        # bench measured the sf0.1 build at 20.7 s with them, 6.9 s
-        # without). The table is vocab²-bounded (931 rows at sf0.1),
-        # build-time only, so the pinned blocks are trivial.
+        # ctx, prec, btypes and the final join all derive from the
+        # vocab²-bounded (w1, w2, c12) type table (931 rows at sf0.1)
         c12 = bigrams.groupBy("w1", "w2").agg(
             F.count(F.lit(1)).cast("bigint").alias("c12")
-        ).localCheckpoint()
+        )
         ctx = c12.groupBy("w1").agg(
             F.sum("c12").alias("c1"),
             F.count(F.lit(1)).cast("bigint").alias("n1p_fol"),

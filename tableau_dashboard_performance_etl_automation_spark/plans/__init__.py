@@ -5,7 +5,6 @@ from tableau_dashboard_performance_etl_automation_spark.plans.explain import (
     has_cartesian_product,
     pushed_filters,
     range_exchanges,
-    read_schemas,
     shuffle_count,
 )
 
@@ -16,6 +15,5 @@ __all__ = [
     "has_cartesian_product",
     "pushed_filters",
     "range_exchanges",
-    "read_schemas",
     "shuffle_count",
 ]

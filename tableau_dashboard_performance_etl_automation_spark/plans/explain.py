@@ -98,8 +98,3 @@ def range_exchanges(df: DataFrame) -> list[bool]:
 def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters lists that reached a parquet scan."""
     return re.findall(r"PushedFilters: \[([^\]]*)\]", formatted_plan(df))
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    """ReadSchema of each scan — the column-pruning evidence."""
-    return re.findall(r"ReadSchema: (\S+)", formatted_plan(df))

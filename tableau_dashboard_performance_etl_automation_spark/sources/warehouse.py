@@ -11,8 +11,9 @@ The module also owns the engine's one session memo, :func:`session_value`
 (``_MEMO``: name → ((applicationId, tag), value), one entry per name, so
 a new corpus or dial evicts the old value). Disk-scope artifacts
 (:func:`persisted_table`, :func:`bucketed_table`) keep their trusted
-result in it; session-scope values (trained codebooks, rank vectors,
-corpus counts, small checkpointed results) are stored in it directly.
+result in it; session-scope values are driver-side Python values
+(trained codebooks, rank vectors, corpus counts, collected census
+rows) stored in it directly.
 
 Every disk-scope artifact carries one stamp: a small file,
 :data:`STAMP_FILE`, inside its own data directory, holding the tag of
@@ -42,12 +43,6 @@ The memo and the stamps share one contract:
   :func:`invalidate_artifacts`, which empties the memo and deletes the
   stamps of every artifact this process touched, so the next consumer
   rebuilds from the new inputs.
-- **Executor loss.** A session value holding ``localCheckpoint``-ed
-  blocks loses them if an executor dies, and later reads fail loudly
-  rather than silently rebuild: call :func:`invalidate_artifacts` and
-  re-run the query. On ``local[*]`` executor loss cannot happen.
-  Corpus-sized artifacts are disk-backed parquet scans, immune to block
-  loss and free of executor heap.
 - **Local warehouse.** Stamps are read and written with plain file
   calls, as :func:`write_bucketed` already deletes directories with
   ``shutil.rmtree``: the warehouse dir is a local path.

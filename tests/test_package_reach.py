@@ -10,7 +10,9 @@ only unreached definitions mention is unreached too (the scan runs to
 a fixed point), so a helper does not keep itself alive through a dead
 caller. The names that stay unreached on purpose are listed in
 ``TEST_ONLY_KEEP``, each with its reason; anything else the scan finds
-is code to delete along with the tests that alone call it.
+is code to delete along with the tests that alone call it. A package
+``__init__`` that re-exports a name (an import, or its ``__all__``
+string) does not reach it: a re-export is not a caller.
 
 Pure AST: no Spark, no import of the package.
 """
@@ -82,6 +84,13 @@ def _mentioned(stmt: ast.stmt) -> set[str]:
     return out
 
 
+def _is_reexport(stmt: ast.stmt) -> bool:
+    return isinstance(stmt, (ast.Import, ast.ImportFrom)) or (
+        isinstance(stmt, ast.Assign)
+        and [getattr(t, "id", None) for t in stmt.targets] == ["__all__"]
+    )
+
+
 def unreached() -> set[str]:
     """``module path :: name`` of every package definition that no
     live statement outside ``tests/`` mentions; ``TEST_ONLY_KEEP``
@@ -94,6 +103,10 @@ def unreached() -> set[str]:
         rel = os.path.relpath(path, pkg_dir)
         in_pkg = not rel.startswith("..")
         for stmt in tree.body:
+            if in_pkg and os.path.basename(path) == "__init__.py" and (
+                _is_reexport(stmt)
+            ):
+                continue
             names = _defined(stmt) if in_pkg else set()
             keys = {f"{rel}::{n}" for n in names}
             stmts.append((keys, _mentioned(stmt) - names))

@@ -249,10 +249,9 @@ def test_persisted_table_returning_tag_rebuilds(spark):
 
 
 def test_invalidate_artifacts_empties_memo(spark, sf_dir):
-    """One entry of each kind — a persisted artifact, a checkpointed
-    session value, a driver value and a bucketed fact layout — is gone
-    after ``invalidate_artifacts()``, and the next persisted call
-    rebuilds."""
+    """One entry of each kind — a persisted artifact, a driver value and
+    a bucketed fact layout — is gone after ``invalidate_artifacts()``,
+    and the next persisted call rebuilds."""
     from tableau_dashboard_performance_etl_automation_spark.operators import (
         dedup,
         similarity,
@@ -261,12 +260,10 @@ def test_invalidate_artifacts_empties_memo(spark, sf_dir):
     slug = warehouse.corpus_slug(sf_dir)
     digest = slug.rsplit("_", 1)[1]
     dedup.lsh_pair_table(spark, sf_dir)
-    similarity.embedding_covariance(spark, sf_dir)
     similarity.ann_auto_topk(spark, sf_dir)
     warehouse.bucketed_fact(spark, sf_dir, "nation", "n_nationkey", 4)
     kinds = {
         f"lsh_pairs/{slug}": DataFrame,
-        "embedding_covariance": DataFrame,
         "ann_auto_count": int,
         f"fact_nation_{digest}_by_n_nationkey_4b": str,
     }

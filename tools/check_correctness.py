@@ -15,6 +15,11 @@ rounding did NOT guarantee a driver pass (``user_sessionization``,
 Usage::
 
     python tools/check_correctness.py [sf_dir] [query ...]
+
+With ``SPARK_GRAFT_WAREHOUSE_DIR`` unset, the run builds every artifact
+it reads in a fresh temporary warehouse, removed at exit, so the sweep
+checks the artifact builders of this tree rather than trusting files
+that another tree built.
 """
 
 from __future__ import annotations
@@ -91,11 +96,21 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    import atexit
+    import shutil
+    import tempfile
+
     import duckdb
 
     import __spark_entry__ as entry_mod
-    from tableau_dashboard_performance_etl_automation_spark.session import get_spark
+    from tableau_dashboard_performance_etl_automation_spark.session import (
+        ENV_WAREHOUSE_DIR,
+        get_spark,
+    )
 
+    if not os.environ.get(ENV_WAREHOUSE_DIR):
+        os.environ[ENV_WAREHOUSE_DIR] = tempfile.mkdtemp(prefix="tdpe-check-")
+        atexit.register(shutil.rmtree, os.environ[ENV_WAREHOUSE_DIR], True)
     spark = get_spark("check-correctness")
     spark.sparkContext.setLogLevel("ERROR")
 

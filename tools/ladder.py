@@ -36,7 +36,6 @@ line is printed per finished cell, then the whole report.
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import shutil
@@ -59,7 +58,6 @@ from tableau_dashboard_performance_etl_automation_spark.operators.similarity imp
     EMB_DIM,
 )
 from tableau_dashboard_performance_etl_automation_spark.session import (  # noqa: E402
-    ENV_DRIVER_MEM,
     ENV_WAREHOUSE_DIR,
     get_spark,
 )
@@ -405,10 +403,6 @@ def main(argv: list[str] | None = None) -> None:
     if unknown:
         parser.error(f"queries not registered: {unknown}")
 
-    # One JVM runs every cell back-to-back; the roomy heap and the
-    # collections between factors keep pinned checkpoint blocks from
-    # stalling later cells (the same hygiene as bench.py).
-    os.environ.setdefault(ENV_DRIVER_MEM, "24g")
     warehouse_dir = os.path.join(SCALE_ROOT, "warehouse")
     shutil.rmtree(warehouse_dir, ignore_errors=True)
     os.environ[ENV_WAREHOUSE_DIR] = warehouse_dir
@@ -429,8 +423,6 @@ def main(argv: list[str] | None = None) -> None:
             cell = time_cell(spark, registry[name], sf_dir)
             scale["cells"][name] = cell
             print(json.dumps({"factor": factor, "query": name, **cell}), flush=True)
-        gc.collect()
-        spark._jvm.System.gc()
     print(json.dumps(report), flush=True)
     spark.stop()
 
