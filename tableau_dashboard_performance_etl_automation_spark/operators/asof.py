@@ -86,9 +86,20 @@ def purchases_with_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("purchase_id")
 
 
-def purchase_click_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval (range) join: every (purchase, click) pair for the
-    same user with the click inside the hour before the purchase.
+#: Click lookback window: a click at most this many minutes BEFORE a
+#: purchase (same user) pairs with it.
+CLICK_WINDOW_MIN = 60
+
+
+def purchase_click_pairs(
+    spark: SparkSession, sf_dir: str, how: str = "inner"
+) -> DataFrame:
+    """Interval (range) join: each purchase (``purchase_id``,
+    ``user_id``, ``purchase_ts``) with every click (``click_id``,
+    ``click_ts``) of the same user in the ``CLICK_WINDOW_MIN``-minute
+    window ending at the purchase; ``how="left"`` keeps clickless
+    purchases with NULL click columns. The window-join, attribution and
+    multi-touch queries are projections or aggregates of it.
 
     Spark evaluates the equi-part (user_id) as the join key — only the
     time-range predicate is post-join, so this shuffles once on
@@ -96,29 +107,37 @@ def purchase_click_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"),
-        F.col("ts").alias("purchase_ts"),
         F.col("event_id").alias("purchase_id"),
+        "user_id",
+        F.col("ts").alias("purchase_ts"),
     )
     c = e.filter(F.col("event_type") == "click").select(
-        F.col("user_id"),
-        F.col("ts").alias("click_ts"),
         F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("c_user"),
+        F.col("ts").alias("click_ts"),
     )
+    return p.join(
+        c,
+        (F.col("user_id") == F.col("c_user"))
+        & (F.col("click_ts") <= F.col("purchase_ts"))
+        & (
+            F.col("click_ts")
+            >= F.col("purchase_ts")
+            - F.expr(f"INTERVAL {CLICK_WINDOW_MIN} MINUTES")
+        ),
+        how,
+    ).drop("c_user")
+
+
+def purchase_click_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every (purchase, click) pair of :func:`purchase_click_pairs`
+    with the click-to-purchase gap."""
     return (
-        p.join(
-            c,
-            (p.user_id == c.user_id)
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (
-                F.col("click_ts")
-                >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR")
-            ),
-        )
+        purchase_click_pairs(spark, sf_dir)
         .select(
             "purchase_id",
             "click_id",
-            p.user_id.alias("user_id"),
+            "user_id",
             (
                 F.unix_millis("purchase_ts") - F.unix_millis("click_ts")
             ).alias("gap_ms"),
@@ -179,32 +198,13 @@ def multi_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pairs — a click inside two purchases' windows counts for
     each, by design.
 
-    Scale shape: the same single user_id-shuffled interval join as
-    :func:`purchase_click_window_join` (LEFT, so clickless purchases
+    Scale shape: the single user_id-shuffled interval join of
+    :func:`purchase_click_pairs` (LEFT, so clickless purchases
     survive), one per-purchase count aggregate (map-side combinable),
     a CASE projection, and a bounded per-day rollup. No windows, no
     floats."""
-    e = load_table(spark, sf_dir, "events")
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    c = e.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("click_ts"),
-    )
     per = (
-        p.join(
-            c,
-            (p.user_id == F.col("c_user_id"))
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (
-                F.col("click_ts")
-                >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR")
-            ),
-            "left",
-        )
+        purchase_click_pairs(spark, sf_dir, "left")
         .groupBy(
             "purchase_id",
             F.col("purchase_ts").cast("date").alias("d"),

@@ -1,25 +1,27 @@
 """Duplicate-cluster resolution: connected components over candidate
 pairs — the pass that turns pairwise dedup output (minhash/simhash
 pairs) into per-document cluster assignments ("keep one per
-component").
+component") — and the other graph queries over the near-dup graph.
 
-This is the engine's genuinely *iterative* operator: min-label
-propagation to fixpoint, implemented as a driver-side loop over
-distributed joins (the standard large-graph CC shape — GraphX/
-GraphFrames do the same under the hood). Each round is one equi-join
-+ one aggregate; rounds needed = graph diameter (tiny for dedup
-graphs, which are near-cliques). Only the single convergence *count*
-crosses to the driver per round, never data. localCheckpoint truncates
-the growing lineage so round N's plan doesn't replay rounds 1..N-1.
+The graph is pair-mass, not corpus-mass: the MinHash-LSH pair list is
+a few hundred to a few thousand rows where the corpus has thousands of
+documents. So every iterative pass here (components, k-core peel,
+BFS, label propagation, PageRank, Markov power iteration) collects
+its small edge list once and iterates in plain Python on the driver;
+no query runs a loop of Spark jobs, and the cost grows with the pair
+count, not with a job count per round. The near-dup graph is one
+collected session value (:func:`_lsh_graph`) that all its iterative
+readers share.
 
-The DuckDB oracle expresses the same fixpoint as a recursive CTE —
-one of the few operators here where the two engines use genuinely
-different execution strategies for the same semantics.
+The DuckDB oracle expresses components as a recursive CTE — one of the
+few operators here where the two engines use genuinely different
+execution strategies for the same semantics.
 """
 
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -35,98 +37,100 @@ from tableau_dashboard_performance_etl_automation_spark.operators.dedup import (
     lsh_pair_table,
 )
 
-MAX_ROUNDS = 20
+
+def _pairs(pdf) -> list:
+    """The ``doc_a``/``doc_b`` columns of a collected pandas frame as
+    plain int 2-tuples (Row objects cost ~10x the heap)."""
+    return list(zip(pdf["doc_a"].tolist(), pdf["doc_b"].tolist()))
 
 
-def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> DataFrame:
-    """Min-label propagation over an undirected edge list
-    (columns ``doc_a``, ``doc_b``) → (doc_id, cluster_id) where
-    cluster_id is the component's minimum doc id."""
-    if max_rounds < 1:
-        # max_rounds=0 would skip the loop and silently return the
-        # identity labeling — the exact silent-wrong-answer the
-        # non-convergence RuntimeError below exists to prevent
-        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    sym = edges.selectExpr("doc_a AS src", "doc_b AS dst").union(
-        edges.selectExpr("doc_b AS src", "doc_a AS dst")
-    )
-    sym = sym.distinct()
-    labels = (
-        sym.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-    )
-    changed = 0
-    for _ in range(max_rounds):
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.doc_id)
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("neighbor_min"))
+def _min_labels(pairs: list) -> dict:
+    """Union-find over an undirected edge list: node → the minimum node
+    id of its component. The root of every set is its minimum (union
+    links the larger root under the smaller), so a find is the label."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _cc_frame(spark: SparkSession, pairs: list) -> DataFrame:
+    # one partition: the labels are pair-mass, and a label artifact
+    # split into one file per local slice makes every reader scan
+    # several tiny files
+    return spark.createDataFrame(
+        list(_min_labels(pairs).items()), "doc_id BIGINT, cluster_id BIGINT"
+    ).coalesce(1)
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of an undirected edge list (columns
+    ``doc_a``, ``doc_b``) → (doc_id, cluster_id) where cluster_id is
+    the component's minimum doc id. The edge list is collected and
+    labelled by union-find on the driver, which always finishes; call
+    it only on pair-mass edges (candidate or match pairs), and only
+    from an artifact builder, since the collect is a Spark job."""
+    return _cc_frame(edges.sparkSession, _pairs(edges.toPandas()))
+
+
+def _lsh_graph(spark: SparkSession, sf_dir: str) -> tuple[list, dict]:
+    """The MinHash-LSH near-dup graph as driver values, kept per
+    session: the pair list (int 2-tuples, doc_a < doc_b) and the
+    ``lang`` of every graph node. One Arrow collect of the persisted
+    pair table joined to the two endpoints' languages; the k-core,
+    BFS, label-propagation and ``cc_labels`` builds all read it."""
+
+    def collect() -> tuple[list, dict]:
+        lang = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
+        pdf = (
+            lsh_pair_table(spark, sf_dir)
+            .join(lang.toDF("doc_a", "lang_a"), "doc_a")
+            .join(lang.toDF("doc_b", "lang_b"), "doc_b")
+            .toPandas()
         )
-        propagated = labels.join(neighbor_min, "doc_id", "left").select(
-            "doc_id",
-            F.least(
-                F.col("cluster_id"),
-                F.coalesce(F.col("neighbor_min"), F.col("cluster_id")),
-            ).alias("cluster_id"),
-        )
-        # pointer jumping: relabel through the mapping itself
-        # (cluster_id := label(cluster_id)), which shortcuts long
-        # chains — rounds become O(log diameter) instead of
-        # O(diameter). Every cluster_id is a doc_id in the mapping,
-        # so the self-join is total; least() keeps monotonicity.
-        mapping = propagated.selectExpr(
-            "doc_id AS m_id", "cluster_id AS m_cluster"
-        )
-        updated = (
-            propagated.join(
-                mapping, propagated.cluster_id == mapping.m_id
-            )
-            .select(
-                "doc_id",
-                F.least(F.col("cluster_id"), F.col("m_cluster")).alias(
-                    "cluster_id"
-                ),
-            )
-            # LAZY: the changed-count action below materializes this
-            # round's labels while computing the convergence test —
-            # one job per round instead of checkpoint + count
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("l"), "doc_id")
-            .filter(F.col("u.cluster_id") != F.col("l.cluster_id"))
-            .count()
-        )
-        labels = updated
-        if changed == 0:
-            break
-    if changed != 0:
-        # an unconverged mapping silently mislabels downstream dedup
-        # (wrong survivors dropped) — fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} "
-            f"rounds ({changed} labels still changing); raise "
-            f"max_rounds — rounds needed is O(log diameter) with "
-            f"pointer jumping"
-        )
-    return labels
+        langs = dict(zip(pdf["doc_a"].tolist(), pdf["lang_a"].tolist()))
+        langs.update(zip(pdf["doc_b"].tolist(), pdf["lang_b"].tolist()))
+        return _pairs(pdf), langs
+
+    return session_value(spark, "lsh_graph", sf_dir, collect)
+
+
+def _adjacency(pairs: list) -> dict:
+    """node → neighbor list of the undirected graph (both orientations
+    of every pair, duplicates kept, like the oracle's UNION ALL)."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    return adj
 
 
 def _lsh_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Converged (doc_id, cluster_id) labels, persisted as a
-    warehouse parquet table (round-5, like the shingle/band tables):
-    the iterative fixpoint runs once per corpus EVER — any session
-    thereafter reads the stored assignment, which is also what a
-    production pipeline ships downstream to every consumer (survivor
-    pick, size histogram, curation). Min-label CC is deterministic,
-    so the loaded table equals a recompute."""
+    """(doc_id, cluster_id) labels of the LSH graph, persisted as a
+    warehouse parquet table (like the shingle/band tables): components
+    are computed once per corpus, and any session thereafter reads the
+    stored assignment, which is also what a production pipeline ships
+    downstream to every consumer (survivor pick, size histogram,
+    curation). Min-id labels are deterministic, so the loaded table
+    equals a recompute."""
     return persisted_table(
         spark,
         f"cc_labels/{corpus_slug(sf_dir)}",
         sf_dir,
-        lambda: connected_components(lsh_pair_table(spark, sf_dir)),
+        lambda: _cc_frame(spark, _lsh_graph(spark, sf_dir)[0]),
     )
 
 
@@ -1135,8 +1139,8 @@ ORACLE_SQL["event_markov_stationary"] = _markov_oracle()
 #: ``doc_id % LP_SEED_MOD == 0`` carry a trusted label.
 LP_SEED_MOD = 5
 
-#: Synchronous propagation rounds (unrolled — each is one
-#: join+aggregate stage; no driver-side iteration state).
+#: Synchronous propagation rounds (a fixed count, so the oracle
+#: unrolls the same rounds as static SQL).
 LP_ROUNDS = 2
 
 
@@ -1149,73 +1153,37 @@ def lang_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline extends expensive gold labels (human or model-audited)
     across near-duplicate content for free.
 
-    Determinism: the vote is (count DESC, label ASC) via one
-    row_number per candidate doc; once labeled, a doc never flips.
-    Scale shape: edges come from the banded LSH equi-join (never
-    all-pairs, shared band-index memo); each round is
-    edge ⋈ labeled-frontier (hash join on doc id) → hash aggregate
-    on (doc, label) → per-doc top-1 window over ≤ |labels| rows.
-    ``LP_ROUNDS`` is a static unroll with a LAZY localCheckpoint per
-    round: round r+1 reads the label table twice (vote join +
-    settled anti-join) and the final output reads it again, so an
-    un-materialized unroll re-executes each earlier round's votes
-    subtree ~3× per added round — the same barrier discipline as
-    :func:`connected_components`, one Spark job per round."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    edges = lsh_pair_table(spark, sf_dir)
-    sym = edges.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        edges.select(
-            F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-        )
-    )
-    labeled = docs.filter(
-        F.col("doc_id") % LP_SEED_MOD == 0
-    ).select(
+    Determinism: the vote is (count DESC, label ASC) over the labels
+    settled in earlier rounds; once labeled, a doc never flips.
+    Scale shape: the rounds run on the driver over the collected
+    near-dup graph (:func:`_lsh_graph`, pair-mass); the seed rows are
+    a filter of ``documents`` and stay distributed, so no corpus-mass
+    data reaches the driver. The output is the seeds plus the
+    propagated rows, one row per labeled document."""
+    docs = load_table(spark, sf_dir, "documents")
+    seeds = docs.filter(F.col("doc_id") % LP_SEED_MOD == 0).select(
         "doc_id",
         F.col("lang").alias("label"),
         F.lit(0).cast("int").alias("labeled_round"),
     )
+    pairs, lang = _lsh_graph(spark, sf_dir)
+    adj = _adjacency(pairs)
+    label = {v: lang[v] for v in adj if v % LP_SEED_MOD == 0}
+    rows = []
     for rnd in range(1, LP_ROUNDS + 1):
-        votes = (
-            sym.join(
-                labeled.select(
-                    F.col("doc_id").alias("src"), "label"
-                ),
-                "src",
-            )
-            .join(
-                labeled.select(F.col("doc_id").alias("dst")),
-                "dst",
-                "left_anti",
-            )
-            .groupBy(F.col("dst").alias("doc_id"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = Window.partitionBy("doc_id").orderBy(
-            F.col("c").desc(), F.col("label").asc()
-        )
-        picked = (
-            votes.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                "doc_id",
-                "label",
-                F.lit(rnd).cast("int").alias("labeled_round"),
-            )
-        )
-        # materialize each round's label table: round r+1 consumes
-        # `labeled` TWICE (vote join + settled anti-join) and the
-        # final output reads it again, so without the barrier the
-        # round-r votes subtree re-executes ~3× per added round
-        # (measured 1.75 → 1.28 at LP_ROUNDS=2; the lazy checkpoint
-        # keeps it one Spark job per round, the connected_components
-        # discipline)
-        labeled = labeled.unionByName(picked).localCheckpoint(
-            eager=False
-        )
-    return labeled.orderBy("doc_id")
+        picked = {}
+        for v, nbrs in adj.items():
+            if v in label:
+                continue
+            votes = Counter(label[u] for u in nbrs if u in label)
+            if votes:
+                picked[v] = min(votes, key=lambda lab: (-votes[lab], lab))
+        label.update(picked)
+        rows.extend((v, lab, rnd) for v, lab in picked.items())
+    propagated = spark.createDataFrame(
+        rows, "doc_id BIGINT, label STRING, labeled_round INT"
+    )
+    return seeds.unionByName(propagated).orderBy("doc_id")
 
 
 QUERIES["lang_label_propagation"] = lang_label_propagation
@@ -1286,23 +1254,15 @@ def neardup_kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the LSH edge list is pair-mass, not corpus-mass — a
     few thousand rows at sf0.1, ~100k at the 256× decade — so it is
-    collected once and the peel runs as plain Python dicts (integer
-    degree counts: bit-identical by construction) instead of paying a
-    Spark job per round to count a few thousand rows. Rounds are a
+    collected once (:func:`_lsh_graph`) and the peel runs as plain
+    Python dicts (integer degree counts: bit-identical by
+    construction) instead of paying a Spark job per round to count a
+    few thousand rows. Rounds are a
     fixed constant, so the DuckDB oracle unrolls the identical peel as
     ``KCORE_ROUNDS`` nested CTEs — both engines compute all 8 rounds
     even after fixpoint (idempotent peels), keeping the row sets
     identical by construction."""
-    edges = lsh_pair_table(spark, sf_dir).select("doc_a", "doc_b")
-
-    def collect_pairs() -> list:
-        # Arrow transfer + plain int 2-tuples, not collect()'s Row
-        # objects (Rows cost ~10x the heap)
-        pdf = edges.toPandas()
-        return list(zip(pdf["doc_a"].tolist(), pdf["doc_b"].tolist()))
-
-    # the collected edge list is a driver value, kept per session
-    pairs = session_value(spark, "kcore_edges", sf_dir, collect_pairs)
+    pairs = _lsh_graph(spark, sf_dir)[0]
     rows = []
     for rnd in range(1, KCORE_ROUNDS + 1):
         deg: dict = {}
@@ -1493,61 +1453,28 @@ def neardup_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation radius for label spreading, audit coverage, or
     contamination blast-radius questions over the duplicate graph.
 
-    Scale shape: ``BFS_MAX_HOPS`` rounds of frontier expansion — each
-    one equi-join of the (shrinking) frontier against the symmetric
-    edge list plus an anti-join against the settled set, checkpointed
-    per round like :func:`connected_components` so round N never
-    replays 1..N-1; per-round state is (node, dist), never paths.
-    The rounds are a fixed constant, so the DuckDB oracle is a
-    depth-bounded recursive CTE computing the identical MIN(depth)."""
-    edges = lsh_pair_table(spark, sf_dir)
-    # the pair set is distinct with doc_a < doc_b, so its two
-    # orientations never collide: the symmetric list needs no distinct
-    sym = edges.selectExpr("doc_a AS src", "doc_b AS dst").union(
-        edges.selectExpr("doc_b AS src", "doc_a AS dst")
-    )
-    nodes = sym.select(F.col("src").alias("doc_id")).distinct()
-    settled = nodes.filter(F.col("doc_id") % BFS_SEED_MOD == 0).withColumn(
-        "hop", F.lit(0)
-    )
-    frontier = settled
+    Scale shape: at most ``BFS_MAX_HOPS`` frontier expansions on the
+    driver over the collected near-dup graph (:func:`_lsh_graph`,
+    pair-mass), per-node state (node, dist), never paths. The hops
+    are a fixed constant, so the DuckDB oracle is a depth-bounded
+    recursive CTE computing the identical MIN(depth)."""
+    adj = _adjacency(_lsh_graph(spark, sf_dir)[0])
+    dist = {v: 0 for v in adj if v % BFS_SEED_MOD == 0}
+    frontier = list(dist)
     for h in range(1, BFS_MAX_HOPS + 1):
-        reached = (
-            sym.join(
-                frontier.select(F.col("doc_id").alias("src")), "src"
-            )
-            .select(F.col("dst").alias("doc_id"))
-            .distinct()
-        )
-        # LAZY checkpoints + one count per round: the count
-        # materializes this round's frontier (and, via the anti-join,
-        # the previous round's settled union), so round N never
-        # replays rounds 1..N-1
-        frontier = (
-            reached.join(settled.select("doc_id"), "doc_id", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=False)
-        )
-        settled = settled.unionByName(frontier).localCheckpoint(eager=False)
-        if frontier.count() == 0:
-            break
-    hist = settled.groupBy("hop").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    )
-    unreachable = (
-        nodes.join(settled.select("doc_id"), "doc_id", "left_anti")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .select(F.lit(-1).alias("hop"), "n_docs")
-        .filter(F.col("n_docs") > 0)
-    )
-    return (
-        hist.select(F.col("hop").cast("int").alias("hop"), "n_docs")
-        .unionByName(
-            unreachable.select(F.col("hop").cast("int"), "n_docs")
-        )
-        .repartition(1)
-        .orderBy("hop")
-    )
+        reached = []
+        for u in frontier:
+            for w in adj[u]:
+                if w not in dist:
+                    dist[w] = h
+                    reached.append(w)
+        frontier = reached
+    rows = sorted(Counter(dist.values()).items())
+    if len(adj) > len(dist):
+        rows.append((-1, len(adj) - len(dist)))
+    return spark.createDataFrame(
+        rows, "hop INT, n_docs BIGINT"
+    ).repartition(1).orderBy("hop")
 
 
 QUERIES["neardup_bfs_hops"] = neardup_bfs_hops

@@ -186,10 +186,12 @@ def lsh_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries' shared edge list. Disk-backed scan instead of a per-query
     band self-join or pinned ``localCheckpoint`` blocks: heap-free at
     any corpus scale, and the edge list is exactly the table a
-    production dedup pipeline stores anyway. It feeds ELEVEN
-    registered consumers (k-core, triangles, graph stats, degree
-    histogram, link prediction, BFS, CC labels, source-overlap
-    matrix, recall agreement, …). The set is deterministic
+    production dedup pipeline stores anyway. Its registered consumers
+    are the distributed graph queries (triangles, graph stats, degree
+    histogram, link prediction, source-overlap matrix, recall
+    agreement, …) and, through one per-session collect
+    (``clustering._lsh_graph``), the driver-side iterations: k-core,
+    BFS, label propagation and the CC labels. The set is deterministic
     (md5-seeded minhash bands), so the loaded parquet is
     value-identical to a rebuild; row ORDER is not part of the
     contract (every consumer is a join/aggregate; the registered

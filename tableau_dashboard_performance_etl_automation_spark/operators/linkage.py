@@ -559,13 +559,13 @@ def part_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator: dedup candidates, probabilistic match, transitive
     merge, survivor pick.
 
-    Scale shape: match pairs are block-bounded (never N²), the CC
-    fixpoint is pointer-jumped min-label propagation (O(log diameter)
-    rounds, each an equi-join — the same engine as the near-dup
-    clusters), and survivorship is one hash aggregate per cluster
-    plus one equi-join back to ``part`` for the representative's
-    attributes. Nothing in the plan holds more than a cluster's
-    members in one task."""
+    Scale shape: match pairs are block-bounded (never N²) and
+    pair-mass, so the components are one collect of the match pairs
+    and a union-find on the driver (the near-dup clusters' engine),
+    run only when the label artifact is built; survivorship is one
+    hash aggregate per cluster plus one equi-join back to ``part`` for
+    the representative's attributes. Nothing in the plan holds more
+    than a cluster's members in one task."""
     from tableau_dashboard_performance_etl_automation_spark.operators.clustering import (
         connected_components,
     )
@@ -576,17 +576,14 @@ def part_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("fs_weight") >= FS_GOLD_MIN)
             .select(F.col("ka").alias("doc_a"), F.col("kb").alias("doc_b"))
         )
-        return connected_components(edges).select(
-            F.col("doc_id").alias("partkey"),
-            F.col("cluster_id").cast("bigint").alias("cluster_id"),
-        )
+        return connected_components(edges).toDF("partkey", "cluster_id")
 
     # the match-label table is a per-corpus artifact (same discipline
-    # as the LSH cluster labels): the CC fixpoint runs once per corpus
-    # EVER, every later call reads the stored assignment — measured
-    # 6.1 s -> sub-second recurring at sf0.1. The tag folds in the
-    # scoring algorithm hash and FS_GOLD_MIN, not just the corpus: the
-    # labels bake in the blocking keys and threshold (round-6 ADVICE)
+    # as the LSH cluster labels): the components are computed once per
+    # corpus, every later call reads the stored assignment. The tag
+    # folds in the scoring algorithm hash and FS_GOLD_MIN, not just the
+    # corpus: the labels bake in the blocking keys and threshold
+    # (round-6 ADVICE)
     base = corpus_slug(sf_dir)
     labels = persisted_table(
         spark,

@@ -19,6 +19,10 @@ from tableau_dashboard_performance_etl_automation_spark.catalog import load_tabl
 from tableau_dashboard_performance_etl_automation_spark.operators.analytics import (
     SESSION_GAP_MS as _SESSION_GAP_MS,
 )
+from tableau_dashboard_performance_etl_automation_spark.operators.asof import (
+    CLICK_WINDOW_MIN,
+    purchase_click_pairs,
+)
 
 
 def running_profile_final(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,54 +160,29 @@ ORACLE_SQL["closed_sessions_final"] = f"""
 """
 
 
-#: Attribution lookback: clicks within this many minutes BEFORE the
-#: purchase are credited.
-ATTRIB_GAP_MIN = 60
-
-
 def purchase_click_attribution_final(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Click attribution as an interval join: every (purchase, click)
     pair for the same user with the click in the
-    ``ATTRIB_GAP_MIN``-minute window ending at the purchase.
+    ``CLICK_WINDOW_MIN``-minute window ending at the purchase.
 
-    Scale shape: an equi-join on ``user_id`` with the time-range
-    predicate applied inside the join — both sides shuffle once on
-    the user key and each user's pairs materialize within one task;
-    the range never becomes a cross join.
+    Scale shape: :func:`asof.purchase_click_pairs`, an equi-join on
+    ``user_id`` with the time-range predicate applied inside the join —
+    both sides shuffle once on the user key and each user's pairs
+    materialize within one task; the range never becomes a cross join.
     """
-    e = load_table(spark, sf_dir, "events")
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
+    return _attribution(purchase_click_pairs(spark, sf_dir))
+
+
+def _attribution(pairs: DataFrame) -> DataFrame:
+    return pairs.select(
+        "purchase_id",
         "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    c = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    return (
-        p.join(
-            c,
-            (F.col("user_id") == F.col("c_user"))
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (
-                F.col("click_ts")
-                >= F.col("purchase_ts")
-                - F.expr(f"INTERVAL {ATTRIB_GAP_MIN} MINUTES")
-            ),
-        )
-        .select(
-            "purchase_id",
-            "user_id",
-            "click_id",
-            F.unix_millis("purchase_ts").alias("purchase_ms"),
-            F.unix_millis("click_ts").alias("click_ms"),
-        )
-        .orderBy("purchase_id", "click_id")
-    )
+        "click_id",
+        F.unix_millis("purchase_ts").alias("purchase_ms"),
+        F.unix_millis("click_ts").alias("click_ms"),
+    ).orderBy("purchase_id", "click_id")
 
 
 QUERIES["purchase_click_attribution_final"] = (
@@ -221,7 +200,7 @@ ORACLE_SQL["purchase_click_attribution_final"] = f"""
       ON c.user_id = p.user_id
      AND c.event_type = 'click'
      AND c.ts <= p.ts
-     AND c.ts >= p.ts - INTERVAL {ATTRIB_GAP_MIN} MINUTES
+     AND c.ts >= p.ts - INTERVAL {CLICK_WINDOW_MIN} MINUTES
     WHERE p.event_type = 'purchase'
     ORDER BY purchase_id, click_id
 """
@@ -232,7 +211,7 @@ def purchase_click_outer_final(
 ) -> DataFrame:
     """Click attribution as a LEFT OUTER interval join: every
     purchase with its window clicks, or one NULL-padded row when the
-    user had no click in the ``ATTRIB_GAP_MIN`` window — the
+    user had no click in the ``CLICK_WINDOW_MIN`` window — the
     unmatched purchases are the "organic conversion" rows an
     attribution pipeline reports separately.
 
@@ -241,38 +220,7 @@ def purchase_click_outer_final(
     key; range predicate inside the join); the outer rows cost
     nothing extra — they are the probe rows that found no build
     match."""
-    e = load_table(spark, sf_dir, "events")
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    c = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    return (
-        p.join(
-            c,
-            (F.col("user_id") == F.col("c_user"))
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (
-                F.col("click_ts")
-                >= F.col("purchase_ts")
-                - F.expr(f"INTERVAL {ATTRIB_GAP_MIN} MINUTES")
-            ),
-            "left_outer",
-        )
-        .select(
-            "purchase_id",
-            "user_id",
-            "click_id",
-            F.unix_millis("purchase_ts").alias("purchase_ms"),
-            F.unix_millis("click_ts").alias("click_ms"),
-        )
-        .orderBy("purchase_id", "click_id")
-    )
+    return _attribution(purchase_click_pairs(spark, sf_dir, "left"))
 
 
 QUERIES["purchase_click_outer_final"] = purchase_click_outer_final
@@ -287,6 +235,6 @@ ORACLE_SQL["purchase_click_outer_final"] = f"""
     LEFT OUTER JOIN (SELECT * FROM events WHERE event_type = 'click') c
       ON c.user_id = p.user_id
      AND c.ts <= p.ts
-     AND c.ts >= p.ts - INTERVAL {ATTRIB_GAP_MIN} MINUTES
+     AND c.ts >= p.ts - INTERVAL {CLICK_WINDOW_MIN} MINUTES
     ORDER BY purchase_id, click_id
 """

@@ -33,18 +33,6 @@ def read_schemas(df) -> list[str]:
     return re.findall(r"ReadSchema: (\S+)", formatted_plan(df))
 
 
-#: The registered queries whose warm build (the second build on the same
-#: corpus) starts Spark jobs, with the reason. Everything else is pure
-#: plan construction: table and artifact schemas are known, artifacts are
-#: trusted by a file read and driver values come from the session memo.
-#: Only an iteration whose round count depends on an action belongs here.
-BUILD_RUNS_JOBS = {
-    "lang_label_propagation": "each round's lazy checkpoint plans the "
-    "round under adaptive execution, which runs its shuffle stages",
-    "neardup_bfs_hops": "each hop counts its frontier to stop early, "
-    "and its lazy checkpoints run their shuffle stages",
-}
-
 #: The registered queries whose plan keeps a range-partitioning exchange:
 #: their final ``orderBy`` sorts a result that grows with the data, so it
 #: stays spread over many partitions. Grouped by why the output grows.
@@ -196,16 +184,13 @@ QUERIES = __spark_entry__.queries()
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_warm_build_starts_no_spark_job(spark, sf_dir, jobs_started, name):
     """Building a query a second time on the same corpus runs no Spark
-    job before the caller's action, unless ``BUILD_RUNS_JOBS`` names the
-    query and why."""
-    assert set(BUILD_RUNS_JOBS) <= set(QUERIES)
+    job before the caller's action: table and artifact schemas are
+    known, artifacts are trusted by a file read and driver values come
+    from the session memo."""
     build = QUERIES[name]
     build(spark, sf_dir)
     _df, jobs = jobs_started(lambda: build(spark, sf_dir))
-    if name in BUILD_RUNS_JOBS:
-        assert jobs, f"{name} starts no job now: drop it from BUILD_RUNS_JOBS"
-    else:
-        assert jobs == [], f"{name}: {len(jobs)} Spark job(s) while building"
+    assert jobs == [], f"{name}: {len(jobs)} Spark job(s) while building"
 
 
 def test_regressions_baseline_broadcasts(spark, sf_dir):

@@ -1,18 +1,14 @@
 """Round-3 unit tests: self-executing LSH band dial, IVF codebook
-memoization, robust-stats distributed median, zero-scale quantization
-guard, and the connected-components argument contract."""
+memoization, robust-stats distributed median and zero-scale
+quantization guard."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from tableau_dashboard_performance_etl_automation_spark.operators import similarity
 from tableau_dashboard_performance_etl_automation_spark.operators.analytics import (
     _median_from_counts,
-)
-from tableau_dashboard_performance_etl_automation_spark.operators.clustering import (
-    connected_components,
 )
 
 
@@ -96,12 +92,6 @@ def test_quantize_zero_vector_yields_zero_codes(spark):
     by_id = {r.vec_id: r.code for r in out}
     assert by_id[1] == [0, 0, 0, 0]  # no NaN/NULL from 0/0
     assert min(by_id[2]) == -127  # max-|x| element maps to ±127
-
-
-def test_connected_components_rejects_zero_rounds(spark):
-    edges = spark.createDataFrame([(1, 2)], "doc_a bigint, doc_b bigint")
-    with pytest.raises(ValueError, match="max_rounds"):
-        connected_components(edges, max_rounds=0)
 
 
 def test_simhash_width_dial():

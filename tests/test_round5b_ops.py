@@ -132,7 +132,7 @@ def test_attribution_twin_clicks_precede_within_gap(spark):
         spark, SF
     ).collect()
     assert rows, "expected attributed pairs"
-    gap_ms = streaming_twins.ATTRIB_GAP_MIN * 60 * 1000
+    gap_ms = streaming_twins.CLICK_WINDOW_MIN * 60 * 1000
     for r in rows:
         assert 0 <= r.purchase_ms - r.click_ms <= gap_ms
 

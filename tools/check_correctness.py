@@ -88,8 +88,8 @@ def _type_class(arrow_type) -> str:
     return str(t)
 
 
-def _arrow_type_map(tbl) -> dict[str, str]:
-    return {f.name: _type_class(f.type) for f in tbl.schema}
+def _arrow_type_map(schema) -> dict[str, str]:
+    return {f.name: _type_class(f.type) for f in schema}
 
 
 def main() -> int:
@@ -101,6 +101,7 @@ def main() -> int:
     import tempfile
 
     import duckdb
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     import __spark_entry__ as entry_mod
     from tableau_dashboard_performance_etl_automation_spark.session import (
@@ -138,7 +139,9 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
-            stbl = sdf.toArrow()
+            # the arrow schema toArrow() would cast to, without running
+            # the query a second time: collect() is the one action
+            sschema = to_arrow_schema(sdf.schema)
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {exc}")
@@ -151,7 +154,7 @@ def main() -> int:
         try:
             res = con.sql(oracles[name])
             ocols = res.columns
-            otbl = con.sql(oracles[name]).arrow()
+            oschema = con.sql(oracles[name]).arrow().schema
             orows = [tuple(r) for r in res.fetchall()]
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: oracle error: {exc}")
@@ -163,7 +166,7 @@ def main() -> int:
         if sorted(scols) != sorted(ocols):
             problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
         else:
-            stypes, otypes = _arrow_type_map(stbl), _arrow_type_map(otbl)
+            stypes, otypes = _arrow_type_map(sschema), _arrow_type_map(oschema)
             bad = {
                 c: (stypes[c], otypes[c])
                 for c in scols

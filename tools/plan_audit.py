@@ -54,13 +54,12 @@ def audit(sf_dir: str, out_md: str) -> int:
         n_scans = plan.count("Location: InMemoryFileIndex")
         pushed = len(pushed_filters(df))
         # a plan that scans no file but driver-built rows
-        # (createDataFrame over values the build collected) or the lazy
-        # checkpoint of an iteration loop is OPAQUE to this audit — the
-        # stages that produced those rows don't appear in the final
-        # plan, so an all-zero row must be labeled as unaudited-upstream
-        # rather than read as "zero shuffles at scale" (plan contracts
-        # in tests/test_plans cover the upstream shapes of those
-        # operators)
+        # (createDataFrame over values the build collected) is OPAQUE
+        # to this audit — the stages that produced those rows don't
+        # appear in the final plan, so an all-zero row must be labeled
+        # as unaudited-upstream rather than read as "zero shuffles at
+        # scale" (plan contracts in tests/test_plans cover the upstream
+        # shapes of those operators)
         opaque = int(
             n_scans == 0
             and ("ExistingRDD" in plan or "LocalTableScan" in plan)
@@ -90,10 +89,9 @@ def audit(sf_dir: str, out_md: str) -> int:
         "a flag), range sorts (range-partitioning exchanges: each runs",
         "a sampling job over its input stage; a Python stage there is",
         "a flag), parquet scans, pushed parquet filters, and OPAQUE —",
-        "the final plan reads no file, only driver-built rows or a",
-        "loop's lazy checkpoint, so the upstream stages are invisible",
-        "here (their shapes are pinned by plan contracts in",
-        "tests/test_plans.py instead).",
+        "the final plan reads no file, only driver-built rows, so the",
+        "upstream stages are invisible here (their shapes are pinned by",
+        "plan contracts in tests/test_plans.py instead).",
         "",
         "| query | shuffles | bcast | cartesian | py stages | range sorts | scans | pushed filters | opaque |",
         "|---|---|---|---|---|---|---|---|---|",
