@@ -11,11 +11,18 @@ in the engine (these tables and the warehouse artifacts) goes through
 :func:`read_parquet`, which infers a path's schema once and hands it
 to later reads of the unchanged files, so building a query starts no
 Spark job.
+
+A query whose SQL text plans no worse than a DataFrame builder is
+registered as that text alone: :func:`sql_query` binds its ``{table}``
+placeholders to these tables on Spark, and :func:`oracle_text` renders
+the same text with plain table names for the DuckDB oracle.
 """
 
 from __future__ import annotations
 
 import os
+import string
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -150,3 +157,42 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for ``spark.sql`` use."""
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
+
+
+def _placeholders(text: str) -> list[str]:
+    """The ``{table}`` placeholders of a query text; each must name a
+    catalog table."""
+    names = {
+        field for _lit, field, _spec, _conv in string.Formatter().parse(text)
+        if field is not None
+    }
+    unknown = names - set(TABLES)
+    if unknown:
+        raise ValueError(f"placeholders name no catalog table: {sorted(unknown)}")
+    return sorted(names)
+
+
+def sql_query(text: str) -> Callable[[SparkSession, str], DataFrame]:
+    """A query builder that runs ``text`` on Spark, each ``{table}``
+    placeholder bound to :func:`load_table` of the caller's ``sf_dir``.
+
+    The binding is per call: ``spark.sql`` registers each frame under a
+    fresh temporary name while it analyzes the text and drops the names
+    before it returns, so two corpora can be queried in one session and
+    the catalog is left as it was. Analysis reads only schemas, so the
+    build starts no Spark job. The builder carries its text as
+    ``sql_text``.
+    """
+    tables = _placeholders(text)
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(text, **{t: load_table(spark, sf_dir, t) for t in tables})
+
+    build.sql_text = text  # type: ignore[attr-defined]
+    return build
+
+
+def oracle_text(text: str) -> str:
+    """``text`` with each ``{table}`` placeholder replaced by the plain
+    table name, as the DuckDB oracle reads it."""
+    return text.format(**{t: t for t in _placeholders(text)})

@@ -1,16 +1,23 @@
 """Multi-way star/fact joins — the remaining classic warehouse query
 shapes (TPC-H Q5/Q7/Q8/Q10/Q15/Q21 analogs) a migrating analytics
-user expects an engine to run well.
+user expects an engine to run well. All but the Q21 analog are
+registered as their SQL text (``catalog.sql_query``), which the DuckDB
+oracle reads too.
 
-Scale notes (100 TB): every dimension side (region, nation, supplier
-— 25/25/100-row class tables that stay dimension-sized at any fact
-scale) is broadcast, so the only shuffles are the true fact-fact
-edges (lineitem⋈orders on orderkey, orders⋈customer on custkey) and
-the final small-key aggregates. Revenue is accumulated in exact
-integer units (cents × discount-percent) so sums are
-reduction-order-independent and the DuckDB oracle hashes match
-bit-for-bit; the displayed double is one integer→double division,
-identical in both engines.
+Scale notes (100 TB), as Spark plans the texts: every dimension side
+(region, nation, supplier — 5/25/100-row class tables that stay
+dimension-sized at any fact scale) is small enough to broadcast, so
+the optimizer reorders each star around the fact and the only
+shuffles are the true fact-fact edges (lineitem⋈orders on orderkey,
+orders⋈customer on custkey) and the final small-key aggregates;
+filters on a dimension's columns are pushed into its scan before the
+broadcast. Revenue is accumulated in exact integer units (cents ×
+discount-percent) so sums are reduction-order-independent and the
+DuckDB oracle hashes match bit-for-bit; the displayed double is one
+integer→double division by ``1e4``, identical in both engines. The
+Q10 top-20 compiles to TakeOrderedAndProject (per-partition heaps),
+and the Q15 scalar maximum is a 1-row broadcast side joined on
+equality, so ties all surface.
 """
 
 from __future__ import annotations
@@ -18,7 +25,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
+from tableau_dashboard_performance_etl_automation_spark.catalog import (
+    load_table,
+    oracle_text,
+    sql_query,
+)
 
 
 def rev_units() -> Column:
@@ -34,237 +45,11 @@ def rev_units() -> Column:
     )
 
 
-#: DuckDB twin of :func:`rev_units`.
+#: SQL twin of :func:`rev_units`, in the dialect both engines read.
 REV_UNITS_SQL = (
     "CAST(round(l_extendedprice * 100) AS BIGINT)"
     " * (100 - CAST(round(l_discount * 100) AS BIGINT))"
 )
-
-
-def local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: revenue per nation where the customer and the
-    supplier sit in the SAME nation (local fulfilment), within one
-    region and a date window.
-
-    Plan: nation⋈region collapses to a broadcast dim; supplier (100
-    rows) broadcasts into the lineitem scan; the only shuffles are
-    lineitem⋈orders and orders⋈customer on their natural keys. The
-    c_nationkey = s_nationkey locality condition is a residual filter
-    on the already-joined row — no extra join edge.
-    """
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name") == "EUROPE"
-    )
-    dims = F.broadcast(
-        nation.join(region, nation.n_regionkey == region.r_regionkey).select(
-            "n_nationkey", "n_name"
-        )
-    )
-    supp = F.broadcast(
-        load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp_ntz"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.join(supp, li.l_suppkey == F.col("s_suppkey"))
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(dims, F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(F.sum(rev_units()).alias("units"))
-        .select("n_name", (F.col("units") / F.lit(1e4)).alias("revenue"))
-        .repartition(1)
-        .orderBy(F.col("revenue").desc(), "n_name")
-    )
-
-
-def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bilateral trade volume between two nations per
-    ship-year — supplier nation exports to customer nation, both
-    directions kept, grouped by (supp_nation, cust_nation, year).
-
-    Plan: both nation maps broadcast (one onto supplier, one onto
-    customer); the two fact shuffles are the same orderkey/custkey
-    edges as every star query here, and the nation-pair filter prunes
-    rows before the final 3-key aggregate.
-    """
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    pair = ("NATION_1", "NATION_2")
-    supp = F.broadcast(
-        load_table(spark, sf_dir, "supplier")
-        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .filter(F.col("n_name").isin(*pair))
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(nation),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .filter(F.col("n_name").isin(*pair))
-        .select("c_custkey", F.col("n_name").alias("cust_nation"))
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.join(supp, li.l_suppkey == F.col("s_suppkey"))
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == F.col("c_custkey"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
-        )
-        .agg(F.sum(rev_units()).alias("units"))
-        .select(
-            "supp_nation",
-            "cust_nation",
-            "l_year",
-            (F.col("units") / F.lit(1e4)).alias("volume"),
-        )
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: one supplier nation's share of all revenue sold
-    to a region's customers, per order-year — the conditional-sum /
-    total-sum ratio computed in ONE aggregate pass (no second scan,
-    no window).
-
-    Both numerator and denominator are exact integer-unit sums, so
-    the share is a ratio of exact ints — cross-engine safe.
-    """
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    region = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name") == "AMERICA"
-    )
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(
-                nation.join(
-                    region, nation.n_regionkey == region.r_regionkey
-                ).select("n_nationkey")
-            ),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select("c_custkey")
-    )
-    supp = F.broadcast(
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            nation.select("n_nationkey", "n_name"),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("2000-01-01").cast("timestamp_ntz"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    target_units = F.when(
-        F.col("supp_nation") == "NATION_3", rev_units()
-    ).otherwise(F.lit(0).cast("bigint"))
-    return (
-        li.join(supp, li.l_suppkey == F.col("s_suppkey"))
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == F.col("c_custkey"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.sum(target_units).alias("nation_units"),
-            F.sum(rev_units()).alias("all_units"),
-        )
-        .select(
-            "o_year",
-            F.round(F.col("nation_units") / F.col("all_units"), 6).alias(
-                "mkt_share"
-            ),
-        )
-        .repartition(1)
-        .orderBy("o_year")
-    )
-
-
-def returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: top 20 customers by revenue lost to returned
-    lines in a one-year window — the join + aggregate + top-k that
-    should compile to a TakeOrderedAndProject (per-partition heaps,
-    only 20 rows to the driver-side merge), never a full sort.
-    """
-    nation = F.broadcast(
-        load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("2000-01-01").cast("timestamp_ntz"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag") == "R"
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(nation, cust.c_nationkey == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(rev_units()).alias("units"))
-        .select(
-            "c_custkey",
-            "c_name",
-            "n_name",
-            (F.col("units") / F.lit(1e4)).alias("lost_revenue"),
-        )
-        .orderBy(F.col("lost_revenue").desc(), "c_custkey")
-        .limit(20)
-    )
-
-
-def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: the supplier(s) with the maximum revenue over
-    a half-year window. The scalar max is a 1-row broadcast
-    cross-joined into the per-supplier aggregate (the standard
-    scalar-subquery plan) — ties all surface, exactly like the spec's
-    ``= (SELECT MAX(...))``. Exact integer units make the equality
-    well-defined.
-    """
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1998-07-01").cast("timestamp_ntz"))
-    )
-    rev = li.groupBy("l_suppkey").agg(F.sum(rev_units()).alias("units"))
-    mx = F.broadcast(rev.agg(F.max("units").alias("max_units")))
-    supp = F.broadcast(
-        load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    )
-    return (
-        rev.crossJoin(mx)
-        .filter(F.col("units") == F.col("max_units"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            "s_suppkey",
-            "s_name",
-            (F.col("units") / F.lit(1e4)).alias("total_revenue"),
-        )
-        .orderBy("s_suppkey")
-    )
 
 
 def order_last_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,6 +66,10 @@ def order_last_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, one pass over the compacted table, no groupBy+join-back
     (which re-read the table and added a join exchange); uniqueness
     (`n_tied = 1`) replaces the NOT EXISTS.
+
+    Kept as a builder: it reads the persisted ``order_supp_last``
+    artifact, which its text cannot name, and the text (one pass over
+    lineitem) ran 2.1× slower at sf0.1.
     """
     # round-8 squeeze (VERDICT item 6): the (order, supplier,
     # last-ship) pre-aggregate is the only full-fact pass — persist
@@ -330,25 +119,23 @@ def order_last_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES = {
-    "local_supplier_revenue": local_supplier_revenue,
-    "nation_trade_flows": nation_trade_flows,
-    "nation_market_share": nation_market_share,
-    "returned_item_revenue": returned_item_revenue,
-    "top_supplier_revenue": top_supplier_revenue,
-    "order_last_shippers": order_last_shippers,
-}
+#: Shipping SLA (days after order date) for the fill-rate KPI.
+FILL_SLA_DAYS = 7
 
-ORACLE_SQL = {
+#: Queries registered as their SQL text, ``{table}`` placeholders bound
+#: per call (``catalog.sql_query``).
+_TEXTS = {
+    # Q5: revenue per nation where customer and supplier sit in the
+    # SAME nation (local fulfilment), within one region and date window
     "local_supplier_revenue": f"""
-        SELECT n_name,
+        SELECT /*+ REPARTITION(1) */ n_name,
                CAST(SUM({REV_UNITS_SQL}) AS BIGINT) / 1e4 AS revenue
-        FROM lineitem
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
+        FROM {{lineitem}}
+        JOIN {{supplier}} ON l_suppkey = s_suppkey
+        JOIN {{orders}} ON l_orderkey = o_orderkey
+        JOIN {{customer}} ON o_custkey = c_custkey
+        JOIN {{nation}} ON s_nationkey = n_nationkey
+        JOIN {{region}} ON n_regionkey = r_regionkey
         WHERE c_nationkey = s_nationkey
           AND r_name = 'EUROPE'
           AND o_orderdate >= TIMESTAMP '1996-01-01'
@@ -356,25 +143,35 @@ ORACLE_SQL = {
         GROUP BY n_name
         ORDER BY revenue DESC, n_name
     """,
+    # Q7: bilateral trade volume between two nations per ship-year,
+    # both directions kept; each nation pair filter runs on its
+    # dimension side, and the hint keeps the filtered suppliers the
+    # broadcast side (by size estimate alone Spark broadcasts lineitem)
     "nation_trade_flows": f"""
-        SELECT sn.n_name AS supp_nation,
-               cn.n_name AS cust_nation,
+        SELECT /*+ BROADCAST(s) */ supp_nation, cust_nation,
                CAST(year(l_shipdate) AS INTEGER) AS l_year,
                CAST(SUM({REV_UNITS_SQL}) AS BIGINT) / 1e4 AS volume
-        FROM lineitem
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation sn ON s_nationkey = sn.n_nationkey
-        JOIN nation cn ON c_nationkey = cn.n_nationkey
-        WHERE sn.n_name IN ('NATION_1', 'NATION_2')
-          AND cn.n_name IN ('NATION_1', 'NATION_2')
-          AND sn.n_name <> cn.n_name
+        FROM {{lineitem}}
+        JOIN (
+            SELECT s_suppkey, n_name AS supp_nation
+            FROM {{supplier}} JOIN {{nation}} ON s_nationkey = n_nationkey
+            WHERE n_name IN ('NATION_1', 'NATION_2')
+        ) s ON l_suppkey = s_suppkey
+        JOIN {{orders}} ON l_orderkey = o_orderkey
+        JOIN (
+            SELECT c_custkey, n_name AS cust_nation
+            FROM {{customer}} JOIN {{nation}} ON c_nationkey = n_nationkey
+            WHERE n_name IN ('NATION_1', 'NATION_2')
+        ) c ON o_custkey = c_custkey
+        WHERE supp_nation <> cust_nation
         GROUP BY supp_nation, cust_nation, l_year
         ORDER BY supp_nation, cust_nation, l_year
     """,
+    # Q8: one supplier nation's share of a region's revenue per
+    # order-year — conditional sum over total sum in one aggregate pass
     "nation_market_share": f"""
-        SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
+        SELECT /*+ REPARTITION(1) */
+               CAST(year(o_orderdate) AS INTEGER) AS o_year,
                ROUND(
                    CAST(SUM(CASE WHEN sn.n_name = 'NATION_3'
                                  THEN {REV_UNITS_SQL}
@@ -382,26 +179,28 @@ ORACLE_SQL = {
                    / CAST(SUM({REV_UNITS_SQL}) AS BIGINT),
                    6
                ) AS mkt_share
-        FROM lineitem
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation sn ON s_nationkey = sn.n_nationkey
-        JOIN nation cn ON c_nationkey = cn.n_nationkey
-        JOIN region ON cn.n_regionkey = r_regionkey
+        FROM {{lineitem}}
+        JOIN {{supplier}} ON l_suppkey = s_suppkey
+        JOIN {{orders}} ON l_orderkey = o_orderkey
+        JOIN {{customer}} ON o_custkey = c_custkey
+        JOIN {{nation}} sn ON s_nationkey = sn.n_nationkey
+        JOIN {{nation}} cn ON c_nationkey = cn.n_nationkey
+        JOIN {{region}} ON cn.n_regionkey = r_regionkey
         WHERE r_name = 'AMERICA'
           AND o_orderdate >= TIMESTAMP '1996-01-01'
           AND o_orderdate < TIMESTAMP '2000-01-01'
         GROUP BY o_year
         ORDER BY o_year
     """,
+    # Q10: top 20 customers by revenue lost to returned lines in a
+    # one-year window
     "returned_item_revenue": f"""
         SELECT c_custkey, c_name, n_name,
                CAST(SUM({REV_UNITS_SQL}) AS BIGINT) / 1e4 AS lost_revenue
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
+        FROM {{lineitem}}
+        JOIN {{orders}} ON l_orderkey = o_orderkey
+        JOIN {{customer}} ON o_custkey = c_custkey
+        JOIN {{nation}} ON c_nationkey = n_nationkey
         WHERE l_returnflag = 'R'
           AND o_orderdate >= TIMESTAMP '1999-01-01'
           AND o_orderdate < TIMESTAMP '2000-01-01'
@@ -409,19 +208,58 @@ ORACLE_SQL = {
         ORDER BY lost_revenue DESC, c_custkey
         LIMIT 20
     """,
+    # Q15: the supplier(s) with the maximum revenue over a half-year
+    # window; exact integer units make the equality well-defined, and
+    # the 1-row maximum is a broadcast side, so ties all surface
     "top_supplier_revenue": f"""
         WITH rev AS (
             SELECT l_suppkey, CAST(SUM({REV_UNITS_SQL}) AS BIGINT) AS units
-            FROM lineitem
+            FROM {{lineitem}}
             WHERE l_shipdate >= TIMESTAMP '1998-01-01'
               AND l_shipdate < TIMESTAMP '1998-07-01'
             GROUP BY l_suppkey
         )
         SELECT s_suppkey, s_name, units / 1e4 AS total_revenue
-        FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        WHERE units = (SELECT MAX(units) FROM rev)
+        FROM rev
+        JOIN (SELECT MAX(units) AS max_units FROM rev) m
+          ON units = max_units
+        JOIN {{supplier}} ON l_suppkey = s_suppkey
         ORDER BY s_suppkey
     """,
+    # fulfilment KPI: per order priority, the share of orders whose
+    # EVERY line shipped within FILL_SLA_DAYS of the order date — the
+    # all-lines complement of an any-line-late screen
+    "order_fill_rate_sla": f"""
+        WITH last_ship AS (
+            SELECT l_orderkey, MAX(l_shipdate) AS last_ship
+            FROM {{lineitem}} GROUP BY l_orderkey
+        ),
+        flagged AS (
+            SELECT o.o_orderpriority,
+                   CASE WHEN s.last_ship
+                             <= o.o_orderdate + INTERVAL {FILL_SLA_DAYS} DAY
+                        THEN 1 ELSE 0 END AS filled
+            FROM {{orders}} o
+            JOIN last_ship s ON s.l_orderkey = o.o_orderkey
+        )
+        SELECT /*+ REPARTITION(1) */ o_orderpriority,
+               CAST(COUNT(*) AS BIGINT) AS n_orders,
+               CAST(SUM(filled) AS BIGINT) AS n_filled,
+               ROUND(CAST(SUM(filled) AS BIGINT) / CAST(COUNT(*) AS BIGINT), 6)
+                   AS fill_rate
+        FROM flagged
+        GROUP BY o_orderpriority
+        ORDER BY o_orderpriority
+    """,
+}
+
+QUERIES = {
+    **{name: sql_query(text) for name, text in _TEXTS.items()},
+    "order_last_shippers": order_last_shippers,
+}
+
+ORACLE_SQL = {
+    **{name: oracle_text(text) for name, text in _TEXTS.items()},
     "order_last_shippers": """
         WITH per_supp AS (
             SELECT l_orderkey, l_suppkey, MAX(l_shipdate) AS supp_last
@@ -446,77 +284,3 @@ ORACLE_SQL = {
         ORDER BY n_orders DESC, s_name
     """,
 }
-
-
-#: Shipping SLA (days after order date) for the fill-rate KPI.
-FILL_SLA_DAYS = 7
-
-
-def order_fill_rate_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fulfillment KPI: per order priority, the share of orders whose
-    EVERY line item shipped within ``FILL_SLA_DAYS`` of the order date
-    — the completeness complement of the Q4 exists-late screen
-    (`priority_late_orders` asks "any line late?", this asks "all
-    lines on time?", and the two NEVER sum to 1 because both are
-    order-level predicates over different quantifiers).
-
-    Scale shape: one per-order MAX(l_shipdate) aggregate (shuffle on
-    orderkey, map-side combinable) joined back to orders on the same
-    key — co-partitioned, AQE reuses the exchange — then a ≤5-row
-    priority rollup. Fill rate is a ratio of exact integer counts.
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    last_ship = li.groupBy("l_orderkey").agg(
-        F.max("l_shipdate").alias("last_ship")
-    )
-    return (
-        orders.join(
-            last_ship, orders.o_orderkey == last_ship.l_orderkey, "inner"
-        )
-        .select(
-            "o_orderpriority",
-            (
-                F.col("last_ship")
-                <= F.col("o_orderdate") + F.expr(
-                    f"INTERVAL {FILL_SLA_DAYS} DAYS"
-                )
-            ).cast("int").alias("filled"),
-        )
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum("filled").cast("bigint").alias("n_filled"),
-        )
-        .withColumn(
-            "fill_rate",
-            F.round(F.col("n_filled") / F.col("n_orders"), 6),
-        )
-        .repartition(1)
-        .orderBy("o_orderpriority")
-    )
-
-
-QUERIES["order_fill_rate_sla"] = order_fill_rate_sla
-
-ORACLE_SQL["order_fill_rate_sla"] = f"""
-    WITH last_ship AS (
-        SELECT l_orderkey, MAX(l_shipdate) AS last_ship
-        FROM lineitem GROUP BY l_orderkey
-    )
-    SELECT o.o_orderpriority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CASE WHEN s.last_ship
-                              <= o.o_orderdate
-                                 + INTERVAL {FILL_SLA_DAYS} DAY
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_filled,
-           ROUND(SUM(CASE WHEN s.last_ship
-                               <= o.o_orderdate
-                                  + INTERVAL {FILL_SLA_DAYS} DAY
-                          THEN 1 ELSE 0 END)
-                 / CAST(COUNT(*) AS DOUBLE), 6) AS fill_rate
-    FROM orders o
-    JOIN last_ship s ON s.l_orderkey = o.o_orderkey
-    GROUP BY o.o_orderpriority
-    ORDER BY o.o_orderpriority
-"""

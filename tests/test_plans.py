@@ -396,10 +396,10 @@ def test_starjoin_dims_broadcast_facts_shuffle(spark, sf_dir):
     from tableau_dashboard_performance_etl_automation_spark.operators import starjoins
 
     for fn in (
-        starjoins.local_supplier_revenue,
-        starjoins.nation_trade_flows,
-        starjoins.nation_market_share,
-        starjoins.returned_item_revenue,
+        starjoins.QUERIES["local_supplier_revenue"],
+        starjoins.QUERIES["nation_trade_flows"],
+        starjoins.QUERIES["nation_market_share"],
+        starjoins.QUERIES["returned_item_revenue"],
     ):
         df = fn(spark, sf_dir)
         assert has_broadcast_hash_join(df), fn.__name__
@@ -415,7 +415,7 @@ def test_returned_items_topk_is_heap_not_sort(spark, sf_dir):
     (per-partition heaps), never a global sort of all customers."""
     from tableau_dashboard_performance_etl_automation_spark.operators import starjoins
 
-    plan = formatted_plan(starjoins.returned_item_revenue(spark, sf_dir))
+    plan = formatted_plan(starjoins.QUERIES["returned_item_revenue"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -425,10 +425,10 @@ def test_top_supplier_scalar_max_broadcasts(spark, sf_dir):
     feeding a sort."""
     from tableau_dashboard_performance_etl_automation_spark.operators import starjoins
 
-    plan = formatted_plan(starjoins.top_supplier_revenue(spark, sf_dir))
+    plan = formatted_plan(starjoins.QUERIES["top_supplier_revenue"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert not has_cartesian_product(
-        starjoins.top_supplier_revenue(spark, sf_dir)
+        starjoins.QUERIES["top_supplier_revenue"](spark, sf_dir)
     )
 
 
@@ -469,7 +469,7 @@ def test_fk_audit_anti_joins_broadcast_dimension_parents(spark, sf_dir):
     parents (nation/region/part/supplier/customer) broadcast."""
     from tableau_dashboard_performance_etl_automation_spark.operators import history
 
-    df = history.fk_integrity_audit(spark, sf_dir)
+    df = history.QUERIES["fk_integrity_audit"](spark, sf_dir)
     plan = formatted_plan(df)
     assert not has_cartesian_product(df)
     assert "LeftAnti" in plan
@@ -482,7 +482,7 @@ def test_priority_return_orders_is_left_semi(spark, sf_dir):
     the lineitem scan."""
     from tableau_dashboard_performance_etl_automation_spark.operators import subqueries
 
-    df = subqueries.priority_return_orders(spark, sf_dir)
+    df = subqueries.QUERIES["priority_return_orders"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "LeftSemi" in plan
     assert not has_cartesian_product(df)
@@ -507,7 +507,7 @@ def test_min_cost_supplier_no_window_no_join_back(spark, sf_dir):
 def test_nation_year_profit_dims_broadcast(spark, sf_dir):
     from tableau_dashboard_performance_etl_automation_spark.operators import subqueries
 
-    df = subqueries.nation_year_profit(spark, sf_dir)
+    df = subqueries.QUERIES["nation_year_profit"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan
     assert not has_cartesian_product(df)
@@ -518,7 +518,7 @@ def test_disjunctive_band_revenue_pushes_envelope(spark, sf_dir):
     the join must stay an equi-join on partkey."""
     from tableau_dashboard_performance_etl_automation_spark.operators import subqueries
 
-    df = subqueries.disjunctive_band_revenue(spark, sf_dir)
+    df = subqueries.QUERIES["disjunctive_band_revenue"](spark, sf_dir)
     pushed = " ".join(pushed_filters(df))
     assert "l_quantity" in pushed
     assert "p_size" in pushed

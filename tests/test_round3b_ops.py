@@ -127,7 +127,7 @@ def test_priority_return_orders_matches_distinct_join(spark, sf_dir):
 
     got = {
         r["o_orderpriority"]: r["n_orders"]
-        for r in subqueries.priority_return_orders(spark, sf_dir).collect()
+        for r in subqueries.QUERIES["priority_return_orders"](spark, sf_dir).collect()
     }
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01"))
@@ -150,14 +150,14 @@ def test_priority_return_orders_matches_distinct_join(spark, sf_dir):
 
 
 def test_disjunctive_band_revenue_branches(spark, sf_dir):
-    rows = subqueries.disjunctive_band_revenue(spark, sf_dir).collect()
+    rows = subqueries.QUERIES["disjunctive_band_revenue"](spark, sf_dir).collect()
     brands = {r["p_brand"] for r in rows}
     assert brands <= {"Brand#12", "Brand#23", "Brand#15"}
     assert all(r["revenue"] > 0 and r["n_lines"] > 0 for r in rows)
 
 
 def test_nation_year_profit_shape(spark, sf_dir):
-    rows = subqueries.nation_year_profit(spark, sf_dir).collect()
+    rows = subqueries.QUERIES["nation_year_profit"](spark, sf_dir).collect()
     assert rows
     keys = [(r["n_name"], r["o_year"]) for r in rows]
     assert len(keys) == len(set(keys))
@@ -170,7 +170,7 @@ def test_nation_year_profit_shape(spark, sf_dir):
 
 
 def test_important_parts_value_threshold(spark, sf_dir):
-    rows = subqueries.important_parts_value(spark, sf_dir).collect()
+    rows = subqueries.QUERIES["important_parts_value"](spark, sf_dir).collect()
     assert rows
     # every survivor is above 1.4x the average share (1/n_parts)
     n_parts = len(
@@ -193,7 +193,7 @@ def test_important_parts_value_threshold(spark, sf_dir):
 
 
 def test_excess_stock_suppliers_relative_cutoff(spark, sf_dir):
-    rows = subqueries.excess_stock_suppliers(spark, sf_dir).collect()
+    rows = subqueries.QUERIES["excess_stock_suppliers"](spark, sf_dir).collect()
     for r in rows:
         assert r["red_qty"] > 0
         assert r["s_name"] and r["n_name"]

@@ -25,7 +25,7 @@ from tableau_dashboard_performance_etl_automation_spark.plans import (
 
 
 def test_sole_late_suppliers_broadcasts_dims_no_cartesian(spark, sf_dir):
-    df = subqueries.sole_late_suppliers(spark, sf_dir)
+    df = subqueries.QUERIES["sole_late_suppliers"](spark, sf_dir)
     assert not has_cartesian_product(df)
     plan = formatted_plan(df)
     # supplier + nation are dimension-class: they must broadcast

@@ -429,7 +429,7 @@ def test_knn_accuracy_totals_match_query_count(spark, sf_dir):
 def test_fill_rate_bounds_and_counts(spark, sf_dir):
     from tableau_dashboard_performance_etl_automation_spark.operators import starjoins
 
-    rows = starjoins.order_fill_rate_sla(spark, sf_dir).collect()
+    rows = starjoins.QUERIES["order_fill_rate_sla"](spark, sf_dir).collect()
     assert len(rows) > 0
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

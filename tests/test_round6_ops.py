@@ -165,7 +165,7 @@ def test_snapshot_diff_classes_match_construction(spark):
 
     rows = {
         r.diff_class: r.n_rows
-        for r in history.snapshot_table_diff(spark, SF).collect()
+        for r in history.QUERIES["snapshot_table_diff"](spark, SF).collect()
     }
     cust = load_table(spark, SF, "customer")
     keys = [r.c_custkey for r in cust.select("c_custkey").collect()]
@@ -211,7 +211,7 @@ def test_incremental_refresh_equals_full_recompute(spark):
     want = {tuple(r) for r in full.collect()}
     got = {
         tuple(r)
-        for r in history.incremental_agg_refresh(spark, SF).collect()
+        for r in history.QUERIES["incremental_agg_refresh"](spark, SF).collect()
     }
     assert got == want
 

@@ -154,7 +154,9 @@ def main() -> int:
         try:
             res = con.sql(oracles[name])
             ocols = res.columns
-            oschema = con.sql(oracles[name]).arrow().schema
+            # the result's arrow types from a LIMIT 0 run of the
+            # oracle, not a second full run
+            oschema = res.limit(0).arrow().schema
             orows = [tuple(r) for r in res.fetchall()]
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: oracle error: {exc}")

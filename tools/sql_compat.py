@@ -4,6 +4,11 @@ Every registered query carries an ANSI-SQL oracle written for DuckDB.
 This tool feeds each oracle string to ``spark.sql(...)`` with the ten
 test tables registered as temp views, and buckets the outcome:
 
+- ``adopted``    — the query is registered as this text
+                   (``catalog.sql_query``), so Spark already runs it
+                   and a compare with the builder would compare the
+                   text with itself; the oracle sweep checks it
+                   against DuckDB;
 - ``match``      — parses, runs, and the result equals the DataFrame
                    query's own output (exact multiset after the same
                    column-name sort the driver gate uses);
@@ -20,7 +25,9 @@ can run the portable subset verbatim. Usage:
     python tools/sql_compat.py [sf_dir] [name ...]
 
 Writes COMPAT.md at the repo root with the bucket counts and the
-error-category histogram.
+error-category histogram, and COMPAT_ERRORS.json with each rejection.
+The section of COMPAT.md from ``## Notes`` on is hand-written: a
+re-run carries it over unchanged.
 """
 
 from __future__ import annotations
@@ -38,6 +45,9 @@ sys.path.insert(0, ROOT)
 os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 _INTEGRAL_DTYPES = {"tinyint", "smallint", "int", "bigint"}
+
+#: First line of COMPAT.md's hand-written tail, which a re-run keeps.
+_NOTES_HEADING = "## Notes"
 
 #: Root-caused dialect divergences (diagnosed by running the oracle
 #: text in both engines and diffing rows). These queries' DataFrame
@@ -193,13 +203,18 @@ def main() -> None:
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
-    buckets: dict[str, list[str]] = {"match": [], "mismatch": [], "error": []}
+    buckets: dict[str, list[str]] = {
+        "adopted": [], "match": [], "mismatch": [], "error": []
+    }
     regrown: list[str] = []  # known-divergent names exceeding their tol
     err_hist: Counter = Counter()
     err_detail: dict[str, tuple] = {}
     t0 = time.time()
     names = [n for n in queries if n in oracles and (not only or n in only)]
     for i, name in enumerate(names):
+        if hasattr(queries[name], "sql_text"):
+            buckets["adopted"].append(name)
+            continue
         sql = oracles[name]
         try:
             odf = spark.sql(sql)
@@ -247,12 +262,13 @@ def main() -> None:
         f"Each registered query's DuckDB oracle SQL fed verbatim to "
         f"`spark.sql(...)` over the same parquet views ({sf_dir}), "
         f"compared (exact multiset, 9-sig-digit floats) against the "
-        f"DataFrame query's own output.",
+        f"DataFrame query's own output. An `adopted` query is "
+        f"registered as its text, so Spark runs the text already.",
         "",
         f"| bucket | count | share |",
         f"|---|---|---|",
     ]
-    for b in ("match", "mismatch", "error"):
+    for b in buckets:
         lines.append(f"| {b} | {len(buckets[b])} | {len(buckets[b])/max(n,1):.0%} |")
     lines += ["", "## Spark-rejection categories", ""]
     for cat, c in err_hist.most_common():
@@ -287,11 +303,16 @@ def main() -> None:
                 f"UNEXPLAINED: {unexplained} — diagnose and add to "
                 f"_KNOWN_DIVERGENCES in tools/sql_compat.py"
             )
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "COMPAT.md"
-    )
+    out = os.path.join(ROOT, "COMPAT.md")
+    notes = ""
+    if os.path.exists(out):
+        with open(out) as fh:
+            old = fh.read()
+        at = old.find("\n" + _NOTES_HEADING)
+        if at >= 0:
+            notes = old[at:]
     with open(out, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+        fh.write("\n".join(lines) + "\n" + notes)
     # per-name rejection detail (category + first error line) beside
     # the histogram, so "is a portable spelling free here?" is
     # answerable without re-running the sweep
