@@ -31,6 +31,11 @@ lookup checks that the stamp still exists before it trusts its memo
 entry, so the next lookup rebuilds instead of trusting a missing path,
 in a new session or in the one that deleted it.
 
+Artifacts are written with the session's parquet codec (zstd, set once
+in ``session.get_spark``). A stamp names the inputs, not the codec, so
+it trusts an artifact whatever codec wrote it: files that an older
+session wrote as snappy are read as they are and not rebuilt.
+
 The memo and the stamps share one contract:
 
 - **Immutable inputs.** A tag names the inputs a value was built from:

@@ -67,3 +67,15 @@ def test_text_on_empty_tables_matches_oracle(spark, empty_dir, name):
     that a global aggregate returns."""
     got = entry.queries()[name](spark, empty_dir)
     assert _spark_rows(got) == _oracle_rows(empty_dir, name)
+
+
+def test_nation_trade_flows_matches_oracle_where_trade_exists(spark, sf_dir):
+    """``nation_trade_flows`` returns no rows at sf0.001 (no NATION_1 ↔
+    NATION_2 trade there), so the smoke corpus checks none of its
+    arithmetic. At sf0.01 it returns 14 rows, which must equal DuckDB's
+    rows for the same text (its ``oracle_text`` rendering)."""
+    name = "nation_trade_flows"
+    larger_dir = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    got = _spark_rows(entry.queries()[name](spark, larger_dir))
+    assert len(got) == 14
+    assert got == _oracle_rows(larger_dir, name)

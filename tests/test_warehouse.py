@@ -4,9 +4,12 @@ Plan-level evidence, not assertion by analogy."""
 
 from __future__ import annotations
 
+import glob
 import uuid
 from collections import Counter
 
+import duckdb
+import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
@@ -17,6 +20,7 @@ from tableau_dashboard_performance_etl_automation_spark.catalog import (
 )
 from tableau_dashboard_performance_etl_automation_spark.plans import formatted_plan
 from tableau_dashboard_performance_etl_automation_spark.sources import warehouse
+from tools.check_correctness import row_multiset
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
@@ -529,6 +533,80 @@ def test_trusted_lookup_starts_no_spark_job(spark, sf_dir, jobs_started, kind):
 
 def _rows(df) -> Counter:
     return Counter(tuple(r) for r in df.collect())
+
+
+CODEC = "spark.sql.parquet.compression.codec"
+
+
+def _codecs(path: str) -> set[str]:
+    """The codec of every column chunk in the parquet files under ``path``."""
+    out = set()
+    for f in glob.glob(f"{path}/**/*.parquet", recursive=True):
+        md = pq.ParquetFile(f).metadata
+        out |= {
+            md.row_group(g).column(c).compression
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        }
+    return out
+
+
+@pytest.mark.parametrize("kind", ["bucketed_table", "persisted_table"])
+def test_artifacts_are_zstd_and_read_back_equal(spark, sf_dir, kind):
+    """The session writes parquet as zstd, so every column chunk of an
+    artifact is ZSTD, and Spark, pyarrow and DuckDB read its rows back
+    equal."""
+    assert spark.conf.get(CODEC) == "zstd"
+
+    def build():
+        # DATE, not TIMESTAMP: all three readers return datetime.date
+        return load_table(spark, sf_dir, "orders").withColumn(
+            "o_orderdate", F.col("o_orderdate").cast("date")
+        )
+
+    suffix = uuid.uuid4().hex[:8]
+    if kind == "persisted_table":
+        name = f"test_artifact/zstd_{suffix}"
+        df = warehouse.persisted_table(spark, name, sf_dir, build)
+    else:
+        name = f"zstd_orders_{suffix}"
+        df = warehouse.bucketed_table(spark, name, sf_dir, build, "o_orderkey", 4)
+    path = warehouse._artifact_path(spark, name)
+    assert _codecs(path) == {"ZSTD"}
+
+    want = row_multiset(df.columns, [tuple(r) for r in df.collect()])
+    assert len(want) == load_table(spark, sf_dir, "orders").count()
+    table = pq.read_table(path)
+    assert row_multiset(
+        table.column_names, [tuple(r.values()) for r in table.to_pylist()]
+    ) == want
+    con = duckdb.connect()
+    res = con.sql(f"SELECT * FROM read_parquet('{path}/*.parquet')")
+    assert row_multiset(res.columns, res.fetchall()) == want
+
+
+@pytest.mark.parametrize("kind", sorted(ARTIFACT_KINDS))
+def test_snappy_artifact_stays_trusted_under_zstd(spark, sf_dir, kind):
+    """A stamp does not depend on the codec: an artifact written while
+    the session wrote snappy is still trusted once it writes zstd. The
+    lookup logs a hit and rebuilds nothing, and the files stay snappy."""
+    name, lookup, _delete = ARTIFACT_KINDS[kind](spark, sf_dir)
+    codec = spark.conf.get(CODEC)
+    try:
+        spark.conf.set(CODEC, "snappy")
+        want = _rows(lookup())
+    finally:
+        spark.conf.set(CODEC, codec)
+    path = warehouse._artifact_path(spark, name)
+    assert _codecs(path) == {"SNAPPY"}
+    built = warehouse.BUILD_LOG[name]
+
+    warehouse._MEMO.pop(name)
+    n0 = len(warehouse.ARTIFACT_EVENTS)
+    assert _rows(lookup()) == want
+    assert warehouse.ARTIFACT_EVENTS[n0:] == [(name, "hit")]
+    assert warehouse.BUILD_LOG[name] == built
+    assert _codecs(path) == {"SNAPPY"}
 
 
 def test_read_parquet_second_read_starts_no_job(
