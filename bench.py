@@ -280,8 +280,8 @@ def main() -> None:
             "queries": timings,
             # cold-vs-warm transparency: first timed sample per query
             # (contains any one-time artifact build) next to the
-            # min-of-2 steady state, plus the per-artifact build wall
-            # recorded inside persisted_table/bucketed_fact
+            # min-of-2 steady state, plus the per-artifact build self
+            # time recorded inside persisted_table/bucketed_fact
             "first_sample": first_sample,
             "artifact_builds": timed_builds,
             "warmup_artifact_builds": warm_builds,

@@ -6,9 +6,8 @@ altitude: cohorts, funnels, Pareto curves, RFM segments).
 
 Scale discipline shared by the file: aggregates are keyed on bounded
 or per-user domains (map-side combinable), order statistics run over
-VALUE-DOMAIN compactions (the ``analytics._median_from_counts`` /
-``relational_ext.order_quartiles`` shape — windows sort distinct
-values, never rows), and every money/ratio number stays in exact
+VALUE-DOMAIN compactions (the ``relational_ext.order_quartiles``
+shape — windows sort distinct values, never rows), and every money/ratio number stays in exact
 integer cents until a single final division so both engines produce
 bit-identical doubles.
 """
@@ -336,8 +335,8 @@ def segment_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds on; both run off the same LAG-gap decomposition.
 
     The lag window partitions per customer (bounded state); median
-    and p90 come from the value-domain compaction
-    (``analytics._median_from_counts`` discipline) — windows sort distinct
+    and p90 come from the value-domain compaction (the
+    ``relational_ext.order_quartiles`` shape) — windows sort distinct
     gap values, never rows."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")

@@ -351,8 +351,8 @@ def order_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact NTILE(4) price quartiles within each order priority,
     rolled up to per-(priority, quartile) stats — computed WITHOUT a
     per-key row sort (tabjolt_email.py has no window ops; this is the
-    engine's scale-safe exact-ntile shape, same discipline as
-    ``analytics._median_from_counts``).
+    engine's scale-safe exact-ntile shape: windows sort the distinct
+    values of a key with their counts, never its rows).
 
     Exact-ntile-without-row-sort argument: compact to
     (priority, price, count) — a hash aggregate with map-side combine

@@ -114,11 +114,15 @@ _MEMO: dict[str, tuple[tuple[str, str], object]] = {}
 #: in this process, keyed by artifact name — the corpus slug is part
 #: of the name). bench.py emits this next to the warm per-query
 #: timings so steady-state numbers carry their amortized build cost
-#: in plain sight. Builds NEST (lsh_pairs builds bands builds sigs
-#: builds shingles), so an outer artifact's wall INCLUDES its
-#: dependencies' first builds — read the deepest chain's largest
-#: entry as the true end-to-end cold cost, not the sum.
+#: in plain sight. Builds nest (lsh_pairs builds bands builds sigs
+#: builds shingles); each entry is a build's self time, its wall minus
+#: the walls of the builds nested inside it, so the sum of the entries
+#: is the cold cost and counts each build once.
 BUILD_LOG: dict[str, float] = {}
+
+#: One accumulator per build in progress, innermost last: the wall of
+#: the builds nested inside it so far.
+_NESTED_WALLS: list[float] = []
 
 #: Append-only artifact event stream: ``(name, event)`` with event in
 #: {"hit", "build", "register"}.  bench.py snapshots the length around
@@ -177,9 +181,10 @@ def _stamped_artifact(
     holds ``tag`` the files are trusted, and the routine logs the event
     ``reuse()`` returns (``"hit"`` without one). When it does not, the
     routine logs ``"build"``, deletes the stale stamp, runs
-    ``write(path)`` (its wall is added to :data:`BUILD_LOG`) and then
-    stamps ``tag``. ``write`` must be deterministic, so trusted files
-    are bit-identical to a rebuild."""
+    ``write(path)`` (its self time, the wall less the builds nested
+    in it, is added to :data:`BUILD_LOG`) and then stamps ``tag``.
+    ``write`` must be deterministic, so trusted files are bit-identical
+    to a rebuild."""
     path = _artifact_path(spark, name)
     stamp = os.path.join(path, STAMP_FILE)
     resolved = []
@@ -193,13 +198,20 @@ def _stamped_artifact(
         ARTIFACT_EVENTS.append((name, "build"))
         _remove_stamp(stamp)
         t0 = time.time()
-        write(path)
+        _NESTED_WALLS.append(0.0)
+        try:
+            write(path)
+        finally:
+            nested = _NESTED_WALLS.pop()
         # "_"-prefixed, so Spark's listing skips a temp left by a crash
         tmp = stamp + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
             f.write(tag)
         os.replace(tmp, stamp)
-        BUILD_LOG[name] = round(BUILD_LOG.get(name, 0.0) + time.time() - t0, 3)
+        wall = time.time() - t0
+        if _NESTED_WALLS:
+            _NESTED_WALLS[-1] += wall
+        BUILD_LOG[name] = round(BUILD_LOG.get(name, 0.0) + wall - nested, 3)
         return value(path)
 
     # a memo entry cannot outlive its files: one stat per call, no job

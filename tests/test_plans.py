@@ -221,7 +221,7 @@ def test_daily_frame_scans_events_once(spark, sf_dir):
 
 
 def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):
-    df = analytics.pricing_summary(spark, sf_dir)
+    df = analytics.QUERIES["pricing_summary"](spark, sf_dir)
     pushed = " ".join(pushed_filters(df))
     assert "l_shipdate" in pushed  # date filter reaches the scan
     schemas = " ".join(read_schemas(df))
@@ -231,7 +231,7 @@ def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):
 
 
 def test_star_join_broadcasts_dimensions(spark, sf_dir):
-    df = analytics.region_revenue(spark, sf_dir)
+    df = analytics.QUERIES["region_revenue"](spark, sf_dir)
     plan = formatted_plan(df)
     assert plan.count("BroadcastExchange") >= 1
     assert not has_cartesian_product(df)
@@ -324,7 +324,7 @@ def test_rolling_window_sees_daily_rows_not_events(spark, sf_dir):
     """The moving-average window must sit above the daily aggregate:
     a hash aggregate appears below the window sort, so the
     single-partition section only ever handles ~days rows."""
-    df = analytics.rolling_value_7d(spark, sf_dir)
+    df = analytics.QUERIES["rolling_value_7d"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "Window" in plan
     agg_pos = plan.find("HashAggregate")
@@ -335,14 +335,14 @@ def test_rolling_window_sees_daily_rows_not_events(spark, sf_dir):
 def test_forecast_revenue_predicates_reach_scan(spark, sf_dir):
     """Q6's selectivity only pays off if the band predicates push to
     parquet — all three filter columns must appear in PushedFilters."""
-    df = analytics.forecast_revenue(spark, sf_dir)
+    df = analytics.QUERIES["forecast_revenue"](spark, sf_dir)
     pushed = " ".join(pushed_filters(df))
     for col in ("l_shipdate", "l_discount", "l_quantity"):
         assert col in pushed, col
 
 
 def test_shipping_priority_broadcasts_customers(spark, sf_dir):
-    df = analytics.shipping_priority(spark, sf_dir)
+    df = analytics.QUERIES["shipping_priority"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "BroadcastExchange" in plan
     assert not has_cartesian_product(df)
@@ -371,7 +371,7 @@ def test_new_tpch_shapes_broadcast_and_no_cartesian(spark, sf_dir):
 
 
 def test_new_users_daily_pushes_purchase_filter(spark, sf_dir):
-    df = analytics.new_users_daily(spark, sf_dir)
+    df = analytics.QUERIES["new_users_daily"](spark, sf_dir)
     pushed = " ".join(pushed_filters(df))
     assert "event_type" in pushed  # purchase filter reaches the scan
     schemas = " ".join(read_schemas(df))
@@ -381,13 +381,10 @@ def test_new_users_daily_pushes_purchase_filter(spark, sf_dir):
 def test_robust_stats_has_no_python_stage(spark, sf_dir):
     """The round-3 rewrite must keep median/MAD fully JVM-side — no
     Arrow/Python evaluation anywhere in the plan."""
-    for fn in (
-        analytics.event_type_robust_stats,
-        analytics.value_robust_outlier_rates,
-    ):
-        plan = formatted_plan(fn(spark, sf_dir))
-        assert "ArrowEvalPython" not in plan, fn.__name__
-        assert "FlatMapGroupsInPandas" not in plan, fn.__name__
+    for name in ("event_type_robust_stats", "value_robust_outlier_rates"):
+        plan = formatted_plan(analytics.QUERIES[name](spark, sf_dir))
+        assert "ArrowEvalPython" not in plan, name
+        assert "FlatMapGroupsInPandas" not in plan, name
 
 
 def test_starjoin_dims_broadcast_facts_shuffle(spark, sf_dir):

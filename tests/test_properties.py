@@ -164,21 +164,21 @@ def test_struct_argmax_equals_rank_window_top1(spark, rows):
 )
 @_SETTINGS
 def test_grouped_median_matches_quantile_cont(spark, rows):
-    """The distributed weighted-median parts, computed from the
-    (k, v, cnt) compaction the query sites build, must reproduce
-    statistics.median (== quantile_cont 0.5) for arbitrary grouped
-    integer multisets — including ties, negatives, and 1-row groups."""
+    """The grouped median the robust-statistics texts compute,
+    ``percentile_cont(0.5) WITHIN GROUP (ORDER BY v)`` on Spark, must
+    equal statistics.median (== DuckDB's quantile_cont 0.5) for
+    arbitrary grouped integer multisets — including ties, negatives,
+    and 1-row groups."""
     import statistics
 
-    from tableau_dashboard_performance_etl_automation_spark.operators.analytics import (
-        _median_from_counts,
-    )
-
     df = spark.createDataFrame(rows, "k string, v bigint")
-    counts = df.groupBy("k", "v").agg(F.count(F.lit(1)).alias("cnt"))
     got = {
-        r.k: ((r.m1 + r.m2) / 2, r.n)
-        for r in _median_from_counts(counts, "k", "v").collect()
+        r.k: (r.med, r.n)
+        for r in spark.sql(
+            "SELECT k, percentile_cont(0.5) WITHIN GROUP (ORDER BY v) AS med,"
+            " COUNT(*) AS n FROM {df} GROUP BY k",
+            df=df,
+        ).collect()
     }
     by_key: dict[str, list[int]] = {}
     for k, v in rows:

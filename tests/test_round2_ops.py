@@ -42,7 +42,7 @@ def test_event_funnel_monotone(spark, sf_dir):
 
 
 def test_rolling_value_7d_window_bounds(spark, sf_dir):
-    rows = analytics.rolling_value_7d(spark, sf_dir).collect()
+    rows = analytics.QUERIES["rolling_value_7d"](spark, sf_dir).collect()
     assert rows
     assert rows[0].n_days == 1
     # trailing window: first row's MA equals its own daily value

@@ -1,15 +1,12 @@
 """Round-3 unit tests: self-executing LSH band dial, IVF codebook
-memoization, robust-stats distributed median and zero-scale
-quantization guard."""
+memoization, robust-stats median and zero-scale quantization
+guard."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from tableau_dashboard_performance_etl_automation_spark.operators import similarity
-from tableau_dashboard_performance_etl_automation_spark.operators.analytics import (
-    _median_from_counts,
-)
 
 
 def test_lsh_band_bits_dial_turns_itself():
@@ -55,16 +52,22 @@ def test_codebook_is_memoized_per_session(spark, sf_dir):
 
 
 def test_grouped_median_matches_statistics_median(spark):
+    """``percentile_cont(0.5)`` per group, the median of the
+    robust-statistics texts, is the exact middle (or mean of the two
+    middles) of each group's values."""
     import statistics
 
     data = [("a", v) for v in [5, 1, 9, 3, 3, 7]] + [
         ("b", v) for v in [10, 20, 30]
     ]
     df = spark.createDataFrame(data, "k string, v bigint")
-    counts = df.groupBy("k", "v").agg(F.count(F.lit(1)).alias("cnt"))
     got = {
-        r.k: (r.m1 + r.m2) / 2
-        for r in _median_from_counts(counts, "k", "v").collect()
+        r.k: r.med
+        for r in spark.sql(
+            "SELECT k, percentile_cont(0.5) WITHIN GROUP (ORDER BY v) AS med"
+            " FROM {df} GROUP BY k",
+            df=df,
+        ).collect()
     }
     assert got["a"] == statistics.median([5, 1, 9, 3, 3, 7])
     assert got["b"] == statistics.median([10, 20, 30])

@@ -262,7 +262,7 @@ def test_daily_anomaly_scores_warmup_and_flags(spark, sf_dir):
         analytics,
     )
 
-    out = analytics.daily_anomaly_scores(spark, sf_dir).collect()
+    out = analytics.QUERIES["daily_anomaly_scores"](spark, sf_dir).collect()
     assert len(out) > analytics.ANOMALY_WINDOW_DAYS
     for i, r in enumerate(out):
         if i < analytics.ANOMALY_WINDOW_DAYS:

@@ -233,7 +233,7 @@ def test_transition_matrix_rows_normalize_and_conserve(spark, sf_dir):
 def test_equidepth_bins_balanced_and_ordered(spark, sf_dir):
     from tableau_dashboard_performance_etl_automation_spark.operators import analytics as an
 
-    rows = an.equidepth_value_bins(spark, sf_dir).collect()
+    rows = an.QUERIES["equidepth_value_bins"](spark, sf_dir).collect()
     by_type: dict = {}
     for r in rows:
         by_type.setdefault(r.event_type, []).append(r)

@@ -22,7 +22,7 @@ from tableau_dashboard_performance_etl_automation_spark.plans import (
 
 
 def test_monthly_growth_first_month_null_and_sorted(spark, sf_dir):
-    rows = analytics.monthly_revenue_growth(spark, sf_dir).collect()
+    rows = analytics.QUERIES["monthly_revenue_growth"](spark, sf_dir).collect()
     assert rows[0].growth_pct is None and rows[0].prev_revenue is None
     months = [r.month for r in rows]
     assert months == sorted(months)

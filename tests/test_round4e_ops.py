@@ -172,7 +172,7 @@ def test_grouped_reservoir_exactly_k_per_source(spark, sf_dir):
 def test_event_run_lengths_conservation(spark, sf_dir):
     from tableau_dashboard_performance_etl_automation_spark.operators import analytics
 
-    rows = analytics.event_run_lengths(spark, sf_dir).collect()
+    rows = analytics.QUERIES["event_run_lengths"](spark, sf_dir).collect()
     e = load_table(spark, sf_dir, "events")
     per_type = {
         r.event_type: r.n

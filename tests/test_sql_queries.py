@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 
 import duckdb
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -67,6 +68,36 @@ def test_text_on_empty_tables_matches_oracle(spark, empty_dir, name):
     that a global aggregate returns."""
     got = entry.queries()[name](spark, empty_dir)
     assert _spark_rows(got) == _oracle_rows(empty_dir, name)
+
+
+def _kept_when_null(column: str) -> bool:
+    """The columns the all-NULL corpus keeps: the event time and the
+    keys that join the tables."""
+    return column == "ts" or column.endswith("key") or column.endswith("_id")
+
+
+@pytest.fixture(scope="module")
+def all_null_dir(sf_dir, tmp_path_factory):
+    """The sf0.001 tables with every column NULL except ``ts`` and the
+    ``*key`` / ``*_id`` columns, so joins and time buckets still find
+    rows while every measure, label and filter column is NULL."""
+    out = tmp_path_factory.mktemp("all-null-tables")
+    for table in TABLES:
+        data = pq.read_table(f"{sf_dir}/{table}.parquet")
+        columns = [
+            col if _kept_when_null(field.name) else pa.nulls(len(col), field.type)
+            for field, col in zip(data.schema, data.columns)
+        ]
+        pq.write_table(pa.table(columns, schema=data.schema), out / f"{table}.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize("name", TEXT_BUILT)
+def test_text_on_all_null_columns_matches_oracle(spark, all_null_dir, name):
+    """With every non-key column NULL, Spark and DuckDB return the same
+    rows: NULL groups, NULL aggregates and dropped join keys agree."""
+    got = entry.queries()[name](spark, all_null_dir)
+    assert _spark_rows(got) == _oracle_rows(all_null_dir, name)
 
 
 def test_nation_trade_flows_matches_oracle_where_trade_exists(spark, sf_dir):

@@ -5,8 +5,10 @@ Plan-level evidence, not assertion by analogy."""
 from __future__ import annotations
 
 import glob
+import time
 import uuid
 from collections import Counter
+from types import SimpleNamespace
 
 import duckdb
 import pyarrow.parquet as pq
@@ -433,6 +435,40 @@ def test_persisted_table_events_tags_and_trust(spark, sf_dir, tmp_path):
     persisted_table(spark, name, "tag|dial=2", build).count()
     assert events_since(n3) == ["build"]
     assert builds == [1, 1, 1]
+
+
+def test_nested_build_logs_self_time(spark, monkeypatch):
+    """An artifact whose build reads another artifact logs its self
+    time: its wall less the inner build's. The two ``BUILD_LOG``
+    entries sum to the outer wall (each entry is rounded to the
+    millisecond), so summing the log counts the inner build once."""
+    stamps = []
+
+    def clock() -> float:
+        stamps.append(time.time())
+        return stamps[-1]
+
+    monkeypatch.setattr(warehouse, "time", SimpleNamespace(time=clock))
+    run = uuid.uuid4().hex[:8]
+    inner_name, outer_name = f"nest_probe/inner_{run}", f"nest_probe/outer_{run}"
+
+    def inner_build():
+        time.sleep(0.2)
+        return spark.range(5).withColumnRenamed("id", "v")
+
+    def outer_build():
+        inner = warehouse.persisted_table(spark, inner_name, "t", inner_build)
+        time.sleep(0.1)
+        return inner.select((F.col("v") * 2).alias("v"))
+
+    df = warehouse.persisted_table(spark, outer_name, "t", outer_build)
+    assert df.count() == 5
+    # clock reads: outer start, inner start, inner end, outer end
+    assert len(stamps) == 4
+    outer_wall = stamps[3] - stamps[0]
+    inner, outer = warehouse.BUILD_LOG[inner_name], warehouse.BUILD_LOG[outer_name]
+    assert inner >= 0.2 and outer >= 0.1
+    assert abs(inner + outer - outer_wall) <= 0.002
 
 
 def _region_fact(spark, sf_dir):
