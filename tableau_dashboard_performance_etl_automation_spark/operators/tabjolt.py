@@ -21,44 +21,40 @@ Every builder takes ``(spark, sf_dir)`` and returns a DataFrame whose
 column names/types exactly match its DuckDB oracle twin in
 ``ORACLE_SQL`` (same module, kept adjacent so they evolve together).
 
-Eight of the nine are projections or global aggregates over two shared
-frames, built from one ``events`` read by ``report_frames``:
+``pipeline.run_report`` runs the report as two Spark actions:
 
-- the **daily frame** (``_daily``): one row per event date with the
-  day's avg/max/min and, from an unpartitioned window over those
-  ≤#days rows, the anchor-day flag, the historic average and the last
-  event time — every summary scalar plus the trend series;
-- the **changes frame** (``_changes``): the baseline-vs-current
-  comparison over the 3-day window, holding both the "today" rows
-  slower than their baseline (regressions) and the rows more than 40%
-  faster (improvements), flagged by ``regression``. It is not sorted.
-
-``pipeline.run_report`` collects each frame once; the registered
-builders read the same frames, so there is one code path.
-``q_samples_today`` stays its own query.
+- the **summary** (``_summary``, registered as ``q_report_summary``):
+  one ``groupingSets`` aggregate over one ``events`` scan. Its day set
+  gives one row per event date with the day's avg/max/min, and a
+  window over those ≤#days rows adds the anchor-day flag, the historic
+  average and the last event time. Its key set gives the per-key
+  all-history baseline of Q7/Q8. The five summary scalars and the
+  trend series are projections of its day rows;
+- the **window scan** (``window_rows``): the 3-day window of the
+  key-filtered rows, anchored on the summary's anchor day as a DATE
+  literal, with the collected baselines as a map literal. It flags
+  each row as a regression, an improvement and/or a sample, keeps the
+  flagged rows and runs as one job with no exchange. It is not sorted.
 
 Where the anchor date comes from, and who sorts:
 
 - the registered builders derive it in the plan (``_with_anchor``, a
   1-row ``max(event_date)`` aggregate broadcast into the fact scan: no
-  driver round trip), and Q7/Q8 sort with ``orderBy`` like their
-  DuckDB twins;
-- ``pipeline.run_report`` has already collected the daily frame, whose
-  ``is_anchor`` row holds the anchor date, so it builds the changes
-  frame with that date as a DATE literal (``report_frames``) and sorts
-  the collected rows on the driver. That drops the aggregate, its
-  broadcast and the cross join, and the Spark jobs they cost.
+  driver round trip), and Q7/Q8 and ``q_samples_today`` sort with
+  ``orderBy`` like their DuckDB twins;
+- ``pipeline.run_report`` has already collected the summary, so the
+  window scan needs neither the anchor aggregate nor the baseline
+  join, and the report sorts the collected rows on the driver.
 
-Scale notes: the baseline-vs-current comparison joins a
-≤#distinct-keys row aggregate against the fact table — the small side
-is explicitly broadcast so the fact side never shuffles.
+Scale notes: the registered Q7/Q8 join a ≤#distinct-keys row baseline
+against the fact table — the small side is explicitly broadcast so the
+fact side never shuffles. The report's map literal holds the same
+≤#distinct-keys rows, shipped through the driver instead.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
 from tableau_dashboard_performance_etl_automation_spark.functions.expressions import (
@@ -100,11 +96,15 @@ def _with_anchor(e: DataFrame) -> DataFrame:
     return e.crossJoin(F.broadcast(anchor))
 
 
-def _key_filter(df: DataFrame) -> DataFrame:
-    return df.filter(
-        F.col("event_type").ilike(KEY_ILIKE)
-        & ~F.col("event_type").ilike(KEY_NOT_ILIKE)
+def _is_key() -> Column:
+    """True for the rows whose ``event_type`` the report compares."""
+    return F.col("event_type").ilike(KEY_ILIKE) & ~F.col("event_type").ilike(
+        KEY_NOT_ILIKE
     )
+
+
+def _key_filter(df: DataFrame) -> DataFrame:
+    return df.filter(_is_key())
 
 
 def _current_window(e_anchored: DataFrame, lookback_days: int = 0) -> DataFrame:
@@ -132,44 +132,87 @@ COMPARISON_COLUMNS = (
     "percentage_difference",
 )
 
+#: The samples' ``props`` check (tabjolt_email.py:383).
+_SAMPLE_PROPS_RE = '"k": [0-9]+'
 
-def _daily(e: DataFrame) -> DataFrame:
-    """One row per event date (the NULL date included), sorted by date.
 
-    ``summary_value``/``max_value``/``min_value`` are the day's
-    floor-int avg/max/min; the avg is rounded before the floor so float
-    noise cannot differ between Spark and DuckDB (see
-    functions.expressions.floor_int). The unpartitioned window runs
-    over the ≤#days aggregate rows, not over events: it adds
+def _summary(e: DataFrame) -> DataFrame:
+    """The day rows and the baseline rows of the report, from one
+    ``groupingSets`` aggregate over one scan, sorted day rows first.
+
+    A **day row** (``response`` NULL) holds one event date, the NULL
+    date included: ``summary_value``/``max_value``/``min_value`` are the
+    day's floor-int avg/max/min; the avg is rounded before the floor so
+    float noise cannot differ between Spark and DuckDB (see
+    functions.expressions.floor_int). A window over the day rows adds
     ``is_anchor`` (the max-date day, the CURRENT_DATE stand-in), the
     all-time average of the daily avg and the last event time, which
-    are the same on every row.
+    are the same on every day row.
+
+    A **baseline row** holds one key that passes the key filter and its
+    all-history ``avg_elapsed_ms`` (subquery ``aa`` of
+    tabjolt_email.py:385: AVG of int-cast values grouped by key). The
+    aggregate's second grouping set groups every row by that key, NULL
+    for the rows that fail the filter; that NULL group is dropped.
+
+    Each row holds NULL in the other kind's columns.
     """
-    all_days = Window.partitionBy()
-    days = e.groupBy("event_date").agg(
-        F.round(F.avg("value"), 4).alias("daily_avg"),
-        F.max("value").alias("day_max"),
-        F.min("value").alias("day_min"),
-        F.max("ts").alias("day_last_ts"),
+    grouped = (
+        e.select(
+            "event_date",
+            "value",
+            "ts",
+            F.when(_is_key(), F.col("event_type")).alias("response"),
+        )
+        .groupingSets([["event_date"], ["response"]], "event_date", "response")
+        .agg(
+            F.grouping_id().alias("grouping_set"),
+            F.round(F.avg("value"), 4).alias("daily_avg"),
+            F.max("value").alias("day_max"),
+            F.min("value").alias("day_min"),
+            F.max("ts").alias("day_last_ts"),
+            F.round(F.avg(floor_int(F.col("value"))), 4).alias("avg_elapsed_ms"),
+        )
     )
+    # grouping_id is 1 for the event_date set, 2 for the key set
+    day = F.col("grouping_set") == 1
+    per_set = Window.partitionBy("grouping_set")
+
+    def on_days(col: Column) -> Column:
+        return F.when(day, col)
+
     # one partition before the window: the window needs no exchange of
     # its own, and the final sort no range exchange, also where a
     # projection (q_trend_series) prunes the window away
-    return days.repartition(1).select(
-        F.date_format("event_date", "yyyy-MM-dd").alias("summary_date"),
-        floor_int(F.col("daily_avg")).alias("summary_value"),
-        floor_int(F.col("day_max")).alias("max_value"),
-        floor_int(F.col("day_min")).alias("min_value"),
-        (F.col("event_date") == F.max("event_date").over(all_days)).alias(
-            "is_anchor"
-        ),
-        floor_int(F.round(F.avg("daily_avg").over(all_days), 4)).alias(
-            "average_summary_value"
-        ),
-        F.date_format(
-            F.max("day_last_ts").over(all_days), "yyyy-MM-dd HH:mm:ss.SSSSSS"
-        ).alias("last_run_ts"),
-    ).orderBy("summary_date")
+    return (
+        grouped.filter(day | F.col("response").isNotNull())
+        .repartition(1)
+        .select(
+            F.date_format("event_date", "yyyy-MM-dd").alias("summary_date"),
+            floor_int(on_days(F.col("daily_avg"))).alias("summary_value"),
+            floor_int(on_days(F.col("day_max"))).alias("max_value"),
+            floor_int(on_days(F.col("day_min"))).alias("min_value"),
+            (F.col("event_date") == F.max("event_date").over(per_set)).alias(
+                "is_anchor"
+            ),
+            floor_int(
+                on_days(F.round(F.avg("daily_avg").over(per_set), 4))
+            ).alias("average_summary_value"),
+            on_days(
+                F.date_format(
+                    F.max("day_last_ts").over(per_set), "yyyy-MM-dd HH:mm:ss.SSSSSS"
+                )
+            ).alias("last_run_ts"),
+            "response",
+            F.when(~day, F.col("avg_elapsed_ms")).alias("avg_elapsed_ms"),
+        )
+        .orderBy("response", "summary_date")
+    )
+
+
+def _days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The summary's day rows."""
+    return _summary(_events(spark, sf_dir)).filter(F.col("response").isNull())
 
 
 def _baseline(e: DataFrame) -> DataFrame:
@@ -184,10 +227,10 @@ def _baseline(e: DataFrame) -> DataFrame:
     )
 
 
-def _changes(e: DataFrame, e_anchored: DataFrame) -> DataFrame:
+def _registered_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The aa ⋈ bb comparisons of Q7 and Q8 (tabjolt_email.py:385,387)
-    in one frame, unsorted. ``e_anchored`` is ``e`` with an
-    ``anchor_date`` column, from ``_with_anchor`` or a literal.
+    in one frame, anchored in the plan and sorted worst-first, like
+    their DuckDB twins.
 
     bb is the 3-day window of Q8; ``today`` marks its rows inside Q7's
     window (at or after the anchor midnight). A row is kept when it is
@@ -203,11 +246,12 @@ def _changes(e: DataFrame, e_anchored: DataFrame) -> DataFrame:
     keeping the fact table shuffle-free; the DuckDB oracle retains the
     literal LEFT OUTER text and hash-matches.
     """
+    e = _events(spark, sf_dir)
     # aa never references the anchor — build it from the bare scan so
     # Catalyst doesn't drag a degenerate anchor cross-join (and a
     # second full table scan) into the baseline side.
     aa = _baseline(e)
-    bb = _key_filter(_current_window(e_anchored, lookback_days=3)).select(
+    bb = _key_filter(_current_window(_with_anchor(e), lookback_days=3)).select(
         floor_int(F.col("value")).alias("current_elapsed_ms"),
         F.col("event_type").alias("response_message"),
         (
@@ -229,48 +273,71 @@ def _changes(e: DataFrame, e_anchored: DataFrame) -> DataFrame:
             F.col("regression")
             | ((avg > cur) & (F.col("percentage_difference") < -40.0))
         )
-    )
-
-
-def _registered_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The changes frame the registered Q7/Q8 builders read: anchored in
-    the plan and sorted worst-first, like their DuckDB twins."""
-    e = _events(spark, sf_dir)
-    return (
-        _changes(e, _with_anchor(e))
         .repartition(1)
         .orderBy(F.col("percentage_difference").desc())
     )
 
 
-def report_frames(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, Callable[[str | None], DataFrame]]:
-    """The daily frame, and the changes frame for a given anchor date,
-    over one ``events`` read.
+def window_rows(
+    spark: SparkSession,
+    sf_dir: str,
+    anchor_date: str,
+    baselines: dict[str, float | None],
+) -> DataFrame:
+    """The report's rows of the 3-day window before ``anchor_date``
+    (``yyyy-MM-dd``, the summary's anchor day), as one scan with no
+    exchange, unsorted.
 
-    The anchor date is the daily frame's ``is_anchor`` ``summary_date``
-    (``yyyy-MM-dd``), cast to a DATE literal; ``None`` (no such row)
-    selects no changes, as the NULL in-plan anchor does.
+    ``baselines`` maps each key to its collected baseline; the keys are
+    every ``event_type`` that passes the key filter, so ``isin`` stands
+    in for it, and a key whose baseline is NULL still yields its
+    samples. The map literal replaces Q7/Q8's broadcast join. Each row
+    is flagged ``regression`` (today and slower than its baseline),
+    ``improvement`` (faster and below -40%) and ``sample`` (today, with
+    a ``props`` key: Q6, tabjolt_email.py:382-383); only flagged rows
+    are kept.
     """
-    e = _events(spark, sf_dir)
-
-    def changes_at(anchor_date: str | None) -> DataFrame:
-        return _changes(
-            e, e.withColumn("anchor_date", F.lit(anchor_date).cast("date"))
-        )
-
-    return _daily(e), changes_at
+    e = _events(spark, sf_dir).withColumn(
+        "anchor_date", F.lit(anchor_date).cast("date")
+    )
+    base = F.create_map(
+        *(c for k, v in baselines.items() for c in (F.lit(k), F.lit(v).cast("double")))
+    )[F.col("event_type")]
+    cur = floor_int(F.col("value"))
+    pct = guarded_pct_diff(base, cur)
+    today = ts_from_epoch_ms_string(F.col("ts_ms")) >= F.col("anchor_date").cast(
+        "timestamp"
+    )
+    rows = _current_window(e, lookback_days=3).filter(
+        F.col("event_type").isin(list(baselines))
+    ).select(
+        base.alias("avg_elapsed_ms"),
+        cur.alias("current_elapsed_ms"),
+        "event_type",
+        "user_id",
+        "props",
+        pct.alias("percentage_difference"),
+        (today & (base < cur)).alias("regression"),
+        ((base > cur) & (pct < -40.0)).alias("improvement"),
+        (today & F.col("props").rlike(_SAMPLE_PROPS_RE)).alias("sample"),
+    )
+    return rows.filter(F.col("regression") | F.col("improvement") | F.col("sample"))
 
 
 # --- §2.7 queries ---------------------------------------------------------
 
 
+def q_report_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The report's first action: the day rows and the per-key
+    baselines of ``_summary``."""
+    return _summary(_events(spark, sf_dir))
+
+
 def _anchor_day(spark: SparkSession, sf_dir: str, column: str) -> DataFrame:
-    """One daily-frame column on the anchor day, as a one-row global
+    """One day-row column on the anchor day, as a one-row global
     aggregate (NULL when there is no anchor day)."""
     return (
-        _daily(_events(spark, sf_dir))
+        _days(spark, sf_dir)
         .filter(F.col("is_anchor"))
         .agg(F.max(column).alias("summary_value"))
     )
@@ -295,14 +362,12 @@ def q_last_run_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``SELECT max(summary_timestamp)`` (tabjolt_email.py:378);
     rendered as a string so Spark/DuckDB timestamp types can't skew
     the schema comparison."""
-    return _daily(_events(spark, sf_dir)).agg(
-        F.max("last_run_ts").alias("last_run_ts")
-    )
+    return _days(spark, sf_dir).agg(F.max("last_run_ts").alias("last_run_ts"))
 
 
 def q_historic_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-time average of the daily Avg (tabjolt_email.py:379)."""
-    return _daily(_events(spark, sf_dir)).agg(
+    return _days(spark, sf_dir).agg(
         F.max("average_summary_value").alias("average_summary_value")
     )
 
@@ -310,7 +375,7 @@ def q_historic_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_trend_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(date, avg) day-wise trend series for the chart
     (tabjolt_email.py:86)."""
-    return _daily(_events(spark, sf_dir)).select("summary_date", "summary_value")
+    return _days(spark, sf_dir).select("summary_date", "summary_value")
 
 
 def q_samples_today(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,7 +386,7 @@ def q_samples_today(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _current_window(_with_anchor(_events(spark, sf_dir)))
     return (
         _key_filter(e)
-        .filter(F.col("props").rlike('"k": [0-9]+'))
+        .filter(F.col("props").rlike(_SAMPLE_PROPS_RE))
         .select(
             floor_int(F.col("value")).alias("elapsed_time"),
             "user_id",
@@ -376,6 +441,7 @@ QUERIES = {
     "q_regressions": q_regressions,
     "q_regressions_flagged": q_regressions_flagged,
     "q_improvements": q_improvements,
+    "q_report_summary": q_report_summary,
 }
 
 # --- DuckDB oracle twins (ANSI-ish SQL, DuckDB dialect) -------------------
@@ -414,6 +480,37 @@ def _cmp_sql(window_start_sql: str, cmp_op: str) -> str:
     LEFT OUTER JOIN ({_current_sql(window_start_sql)}) bb
       ON aa.response = bb.response_message
     WHERE avg_elapsed_ms {cmp_op} current_elapsed_ms
+"""
+
+
+#: ``_summary``'s twin: the two GROUP BYs of its grouping sets, the
+#: window over the day rows, and NULL in the other kind's columns.
+_REPORT_SUMMARY_SQL = f"""
+    WITH days AS (
+        SELECT CAST(ts AS DATE) AS event_date,
+               ROUND(AVG(value), 4) AS daily_avg,
+               MAX(value) AS day_max,
+               MIN(value) AS day_min,
+               MAX(ts) AS day_last_ts
+        FROM events
+        GROUP BY CAST(ts AS DATE)
+    )
+    SELECT CAST(event_date AS STRING) AS summary_date,
+           CAST(FLOOR(daily_avg) AS INTEGER) AS summary_value,
+           CAST(FLOOR(day_max) AS INTEGER) AS max_value,
+           CAST(FLOOR(day_min) AS INTEGER) AS min_value,
+           event_date = MAX(event_date) OVER () AS is_anchor,
+           CAST(FLOOR(ROUND(AVG(daily_avg) OVER (), 4)) AS INTEGER)
+               AS average_summary_value,
+           strftime(MAX(day_last_ts) OVER (), '%Y-%m-%d %H:%M:%S.%f')
+               AS last_run_ts,
+           CAST(NULL AS STRING) AS response,
+           CAST(NULL AS DOUBLE) AS avg_elapsed_ms
+    FROM days
+    UNION ALL
+    SELECT NULL, NULL, NULL, NULL, NULL, NULL, NULL, response, avg_elapsed_ms
+    FROM ({_BASELINE_SQL}) aa
+    ORDER BY response NULLS FIRST, summary_date NULLS FIRST
 """
 
 
@@ -480,4 +577,5 @@ ORACLE_SQL = {
         WHERE percentage_difference < -40.0
         ORDER BY percentage_difference DESC
     """,
+    "q_report_summary": _REPORT_SUMMARY_SQL,
 }

@@ -12,19 +12,24 @@ step), loads are the PERMISSIVE reject-capturing reader
 ever collected.
 
 The reference runs its nine queries as nine round trips. Here they
-are three Spark actions: ``q_samples_today``, then the daily frame
-(five summary metrics and the trend series) and the changes frame
-(regressions and improvements), both built from one ``events`` read
-by ``tabjolt.report_frames``. The registered builders of the other
-eight queries are projections of those two frames, so the report and
-the registry share one code path.
+are two Spark actions (operators/tabjolt.py):
 
-The changes frame is built after the daily frame is collected: its
-anchor date (the CURRENT_DATE stand-in) is the date of the daily
-frame's ``is_anchor`` row, passed as a literal, so the changes plan
-does not derive it again. The collected changes are sorted here, on
-the driver, in the order Spark's ``percentage_difference DESC`` gives
-the registered Q7/Q8 builders: descending, NULLs last.
+1. the **summary**, ``q_report_summary``, called through
+   ``tabjolt.QUERIES``: one grouping-sets aggregate over one
+   ``events`` scan gives the day rows (the five summary metrics and
+   the trend series) and the per-key baselines of Q7/Q8;
+2. the **window scan**, ``tabjolt.window_rows``: one scan of the 3-day
+   window with no exchange, anchored on the summary's anchor day (the
+   CURRENT_DATE stand-in) as a DATE literal and given the collected
+   baselines as a map literal. It returns the regressions, the
+   improvements and today's samples, flagged.
+
+The registered builders of the five metrics and the trend series are
+projections of the summary, so the report and the registry share one
+code path; the registered Q6-Q8 derive the anchor in the plan and
+match the report's rows. The collected rows are sorted here, on the
+driver, in the order Spark's ``DESC`` gives the registered builders:
+descending, NULLs last.
 """
 
 from __future__ import annotations
@@ -65,11 +70,22 @@ def _field(row, name: str):
     return None if row is None else row[name]
 
 
-def _worst_first(row) -> tuple:
-    """Sort key for ``percentage_difference`` descending, NULLs last
-    (a zero baseline gives a NULL percentage)."""
-    pct = row.percentage_difference
-    return (pct is None, 0.0 if pct is None else -pct)
+def _sorted_desc(rows: list, column: str) -> list:
+    """``rows`` by ``column`` descending, NULLs last (a zero baseline
+    gives a NULL percentage, a NULL value a NULL elapsed time)."""
+    return sorted(
+        rows, key=lambda r: (r[column] is None, 0 if r[column] is None else -r[column])
+    )
+
+
+def _comparison(row) -> tuple:
+    """A window row as a Q7/Q8 row (``tabjolt.COMPARISON_COLUMNS``)."""
+    return (
+        row.avg_elapsed_ms,
+        row.current_elapsed_ms,
+        row.event_type,
+        row.percentage_difference,
+    )
 
 
 def run_report(
@@ -85,17 +101,19 @@ def run_report(
     is an explicit opt-in with real credentials, mirroring the
     reference's config-driven send (tabjolt_email.py:389-394).
     """
-    # Through the registry, and first: callers that wrap
-    # ``tabjolt.QUERIES`` (the benchmark's probe) then see the report's
-    # whole query time.
-    samples = [
-        tuple(r) for r in tabjolt.QUERIES["q_samples_today"](spark, sf_dir).collect()
-    ]
-    daily_df, changes_at = tabjolt.report_frames(spark, sf_dir)
-    daily = daily_df.collect()
+    # Through the registry: callers that wrap ``tabjolt.QUERIES`` (the
+    # benchmark's probe) then see the report's whole query time.
+    summary = tabjolt.QUERIES["q_report_summary"](spark, sf_dir).collect()
+    daily = [r for r in summary if r.response is None]
+    baselines = {
+        r.response: r.avg_elapsed_ms for r in summary if r.response is not None
+    }
     anchor = next((d for d in daily if d.is_anchor), None)
-    changes = sorted(
-        changes_at(_field(anchor, "summary_date")).collect(), key=_worst_first
+    # without an anchor day or a key, the window holds no row
+    rows = (
+        tabjolt.window_rows(spark, sf_dir, anchor.summary_date, baselines).collect()
+        if anchor and baselines
+        else []
     )
 
     overall = daily[0] if daily else None
@@ -106,9 +124,14 @@ def run_report(
         ("Latest event at", _field(overall, "last_run_ts")),
         ("Historic average (ms)", _field(overall, "average_summary_value")),
     ]
-    cols = tabjolt.COMPARISON_COLUMNS
-    regressions = [tuple(r[c] for c in cols) for r in changes if r.regression]
-    improvements = [tuple(r[c] for c in cols) for r in changes if not r.regression]
+    changes = _sorted_desc(rows, "percentage_difference")
+    regressions = [_comparison(r) for r in changes if r.regression]
+    improvements = [_comparison(r) for r in changes if r.improvement]
+    samples = [
+        (r.current_elapsed_ms, r.user_id, r.event_type, r.props)
+        for r in _sorted_desc(rows, "current_elapsed_ms")
+        if r.sample
+    ]
     trend_rows = [(d.summary_date, d.summary_value) for d in daily]
 
     chart_path = (

@@ -31,8 +31,10 @@ def has_cartesian_product(df: DataFrame) -> bool:
 
 
 def shuffle_count(df: DataFrame) -> int:
-    """Number of Exchange nodes (shuffles) in the physical plan."""
-    return len(re.findall(r"\bExchange\b", formatted_plan(df)))
+    """Number of Exchange nodes (shuffles) in the physical plan: one per
+    node's details header, so a node's tree line does not count it
+    twice, and broadcasts (``BroadcastExchange``) do not count."""
+    return len(re.findall(r"^\(\d+\) Exchange$", formatted_plan(df), re.M))
 
 
 #: Physical nodes that run Python code (pandas UDFs and row-at-a-time UDFs).

@@ -25,6 +25,7 @@ from tableau_dashboard_performance_etl_automation_spark.plans import (
     has_cartesian_product,
     pushed_filters,
     range_exchanges,
+    shuffle_count,
 )
 
 
@@ -194,30 +195,50 @@ def test_warm_build_starts_no_spark_job(spark, sf_dir, jobs_started, name):
 
 
 def test_regressions_baseline_broadcasts(spark, sf_dir):
-    _daily, changes_at = tabjolt.report_frames(spark, sf_dir)
-    changes = changes_at("2024-07-30")
-    for df in (tabjolt.q_regressions(spark, sf_dir), changes):
-        plan = formatted_plan(df)
-        # the ≤#keys baseline side must broadcast-hash-join into the fact
-        assert "BroadcastHashJoin" in plan
-        # fact side must not shuffle for the join: no sort-merge join
-        assert "SortMergeJoin" not in plan
-    # the report's anchor is a literal: no max(event_date) aggregate
-    # broadcast and cross-joined into the fact scan
-    plan = formatted_plan(changes)
+    plan = formatted_plan(tabjolt.q_regressions(spark, sf_dir))
+    # the ≤#keys baseline side must broadcast-hash-join into the fact
+    assert "BroadcastHashJoin" in plan
+    # fact side must not shuffle for the join: no sort-merge join
+    assert "SortMergeJoin" not in plan
+
+
+def test_shuffle_count_counts_each_exchange_once(spark):
+    """Two shuffles (a round-robin repartition and the aggregate's hash
+    exchange) and one broadcast, which is not a shuffle."""
+    from pyspark.sql import functions as F
+
+    df = (
+        spark.range(100)
+        .repartition(4)
+        .join(F.broadcast(spark.range(10)), "id")
+        .groupBy((F.col("id") % 3).alias("k"))
+        .count()
+    )
+    assert "BroadcastExchange" in formatted_plan(df)
+    assert shuffle_count(df) == 2
+
+
+def test_report_summary_is_one_scan_one_expand(spark, sf_dir):
+    """The five summary metrics, the trend series and the per-key
+    baselines come from one grouping-sets aggregate over one scan of
+    ``events``: one Expand, the aggregate's exchange and the
+    one-partition exchange under the window."""
+    plan = formatted_plan(tabjolt.q_report_summary(spark, sf_dir))
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
+    assert len(re.findall(r"^\(\d+\) Expand", plan, re.M)) == 1, plan
+    assert shuffle_count(tabjolt.q_report_summary(spark, sf_dir)) == 2, plan
+    assert "Join" not in plan
+
+
+def test_report_window_scan_has_no_exchange(spark, sf_dir):
+    """The report's window scan takes its anchor and baselines as
+    literals: no exchange, no max(event_date) aggregate broadcast and
+    cross-joined into the fact scan."""
+    df = tabjolt.window_rows(spark, sf_dir, "2024-01-30", {"view": 50.3, "error": None})
+    plan = formatted_plan(df)
+    assert "Exchange" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert not re.search(r"max\(event_date", plan), plan
-
-
-def test_daily_frame_scans_events_once(spark, sf_dir):
-    """The five summary metrics and the trend series come from one
-    aggregate over one scan of ``events``: the anchor date, historic
-    average and last event time are windowed over the per-day rows,
-    not re-derived from the fact table."""
-    daily, _changes = tabjolt.report_frames(spark, sf_dir)
-    plan = formatted_plan(daily)
-    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
-    assert "Join" not in plan
 
 
 def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):

@@ -212,23 +212,39 @@ def test_run_report_end_to_end(spark, sf_dir):
 
 
 def test_run_report_spark_jobs(spark, sf_dir, jobs_started):
-    """A warm ``run_report`` runs 10 Spark jobs at sf0.001: the changes
-    frame takes its anchor date from the collected daily frame, so its
-    plan has no ``max(event_date)`` aggregate to broadcast (15 jobs
-    when it derived the anchor in the plan), and ``q_samples_today``
-    sorts on one partition, so its collect starts no range-bounds
-    sampling job (11 jobs with a global ``orderBy``)."""
+    """A warm ``run_report`` runs 4 Spark jobs at sf0.001, in two
+    actions: the summary's grouping-sets aggregate (its two shuffle
+    stages and the result stage) and the window scan, which takes the
+    anchor day and the baselines as literals and runs as one job with
+    no exchange (10 jobs when the samples, the daily frame and the
+    changes frame were three actions)."""
     pipeline.run_report(spark, sf_dir)
     _res, jobs = jobs_started(lambda: pipeline.run_report(spark, sf_dir))
-    assert len(jobs) == 10, jobs
+    assert len(jobs) == 4, jobs
+
+
+#: ``event_type`` values the report's map and ``isin`` literals must
+#: carry unchanged: a quote, a backslash and non-ASCII text, each still
+#: passing the key filter.
+_ODD_KEYS = {"view": "vi'ew", "error": "err\\or", "purchase": "pürchase ünïcode"}
 
 
 def _degenerate_events(e, kind: str):
     day = F.col("ts").cast("date")
     if kind == "empty":
         return e.limit(0)
+    if kind in ("single_day", "stale_key", "null_anchor_values"):
+        last = e.agg(F.max(day)).first()[0]
     if kind == "single_day":
-        return e.filter(day == e.agg(F.max(day)).first()[0])
+        return e.filter(day == last)
+    if kind == "stale_key":
+        # a key with history but no row in the 3-day window
+        return e.filter(~((F.col("event_type") == "purchase") & (F.datediff(F.lit(last), day) <= 3)))
+    if kind == "null_anchor_values":
+        # every value NULL on the anchor day, which still has samples
+        return e.withColumn("value", F.when(day != last, F.col("value")))
+    if kind == "odd_keys":
+        return e.replace(_ODD_KEYS, subset=["event_type"])
     if kind == "null_value":
         return e.withColumn("value", F.lit(None).cast("double"))
     # null_ts: a third of the rows fall into the NULL event_date group
@@ -237,12 +253,25 @@ def _degenerate_events(e, kind: str):
     )
 
 
-@pytest.mark.parametrize("kind", ["empty", "single_day", "null_value", "null_ts"])
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "empty",
+        "single_day",
+        "null_value",
+        "null_ts",
+        "odd_keys",
+        "stale_key",
+        "null_anchor_values",
+    ],
+)
 def test_run_report_degenerate_events(spark, sf_dir, tmp_path, kind):
     """``run_report`` on an empty table, a single day, an all-NULL
-    ``value`` column and NULL timestamps: the metrics that have no
-    input come back None, and every section equals both the registered
-    builders and their DuckDB twins."""
+    ``value`` column, NULL timestamps, keys with a quote, a backslash
+    and non-ASCII text, a key with history but no row in the window,
+    and an anchor day whose values are all NULL: the metrics that have
+    no input come back None, and every section equals both the
+    registered builders and their DuckDB twins."""
     events = tmp_path / "events.parquet"
     _degenerate_events(load_table(spark, sf_dir, "events"), kind).write.parquet(str(events))
     res = pipeline.run_report(spark, str(tmp_path), chart_out=str(tmp_path / "g.png"))
@@ -261,6 +290,15 @@ def test_run_report_degenerate_events(spark, sf_dir, tmp_path, kind):
         assert all(v is None for _d, v in res.trend)
     elif kind == "single_day":
         assert len(res.trend) == 1 and None not in values
+    elif kind == "odd_keys":
+        keys = {r[2] for r in res.regressions + res.improvements + res.samples}
+        assert keys <= set(_ODD_KEYS.values()) and len(keys) > 1, keys
+    elif kind == "stale_key":
+        keys = {r[2] for r in res.regressions + res.improvements + res.samples}
+        assert "purchase" not in keys and keys, keys
+    elif kind == "null_anchor_values":
+        assert values[:3] == [None] * 3 and res.samples
+        assert all(r[0] is None for r in res.samples)
     else:
         assert (None, res.trend[0][1]) == res.trend[0]  # NULL date sorts first
         assert None not in values
