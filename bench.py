@@ -123,17 +123,25 @@ def main() -> None:
 
     # Full untimed warm-up pass: one execution of EVERY query before
     # any timing. This moves the one-time costs that are not per-query
-    # properties — tiered-JIT compilation of the hot paths and
-    # whole-stage-codegen class compilation — outside every timed
-    # window. Without it the run-order-earliest queries absorb the
-    # whole JVM's warm-up inside BOTH min-of-2 samples (measured:
+    # properties — tiered-JIT compilation of the hot paths and class
+    # loading — outside every timed window (the block after it warms
+    # the timed corpus's artifact files). Without it the
+    # run-order-earliest queries absorb the whole JVM's warm-up inside
+    # BOTH min-of-2 samples (measured:
     # dsir_target_scores 13.1 s at run slot 46 of a cold session vs
     # 1.5 s steady-state; inflation clustered in the first ~100 run
     # slots and vanished later in the same session; full-surface total
-    # 278.6 s -> 234.2 s with identical plans).
+    # 278.6 s -> 234.2 s with identical plans). It does not keep the
+    # whole-stage-codegen classes: Spark's generated-class cache
+    # (spark.sql.codegen.cache.maxEntries) holds 100 entries, which
+    # the pass cycles through many times, so each query's first timed
+    # sample still compiles its classes and the min-of-2 reads the
+    # second (a warm pass of perfbench's 8-query query_mix recompiled
+    # 26 classes on every pass, counted with CodegenMetrics'
+    # compilation timer).
     #
     # The warm-up runs at a SMALLER scale factor when one is available:
-    # JIT/codegen warmth is a property of the plan SHAPES, which are
+    # JIT warmth is a property of the plan SHAPES, which are
     # sf-independent, and a sf0.01 pass costs ~2 min vs ~6 at sf0.1 —
     # keeping total bench wall inside the driver's patience. (Persisted
     # per-corpus artifacts for the timed sf still build inside the

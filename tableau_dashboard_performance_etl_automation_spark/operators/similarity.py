@@ -2056,17 +2056,24 @@ def _pq_assign(sub: DataFrame, cb_rows: list) -> DataFrame:
     )
 
 
-def _train_pq(sub: DataFrame) -> list:
+def _train_pq(e: DataFrame) -> list:
     """Grouped Lloyd: all PQ_M codebooks train simultaneously (the
     subspace index is just another group key). Means accumulate exact
     integer micro-units, so the trained codebooks are the same doubles
     in Spark and the oracle replay; the K×M×SUBDIM codebook collects
     to the driver each round (1 KB) — the standard k-means broadcast
-    step."""
-    train = sub.filter((F.col("vec_id") % TRAIN_MOD) < TRAIN_KEEP)
+    step.
+
+    The training sample and the ``vec_id < PQ_K`` init rows (some of
+    which fall outside the sample) are filtered from the embeddings
+    ``e`` before the :func:`_subvectors` kernel, which no filter can
+    cross: each Lloyd round runs the kernel over the sample only. The
+    kernel maps each vector on its own, so filtering first changes no
+    row of its output."""
+    train = _subvectors(e.filter((F.col("vec_id") % TRAIN_MOD) < TRAIN_KEEP))
     cb_rows = [
         (r.m, r.vec_id, r.sv)
-        for r in sub.filter(F.col("vec_id") < PQ_K).collect()
+        for r in _subvectors(e.filter(F.col("vec_id") < PQ_K)).collect()
     ]
     for _ in range(PQ_ITERS):
         asg = _pq_assign(train, cb_rows)
@@ -2167,7 +2174,7 @@ def _pq_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         # training keeps loaded artifacts bit-identical to a rebuild.
         def _train() -> DataFrame:
             return spark.createDataFrame(
-                _train_pq(_subvectors(e)),
+                _train_pq(e),
                 "m INT, cent_id BIGINT, cvec ARRAY<DOUBLE>",
             )
 

@@ -1,10 +1,14 @@
 """Queries registered as their SQL text (``catalog.sql_query``): Spark
 and the DuckDB oracle run one text, with its ``{table}`` placeholders
 bound per call on Spark and rendered as plain table names on DuckDB.
+The degenerate corpora also check ``order_last_shippers``, a builder
+that decides ties with one aggregate where its oracle joins
+per-supplier maxima.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import duckdb
@@ -20,6 +24,10 @@ from tools.check_correctness import row_multiset
 TEXT_BUILT = sorted(
     name for name, build in entry.queries().items() if hasattr(build, "sql_text")
 )
+
+#: Builders whose oracle is an independent text, checked on the same
+#: degenerate corpora as the text-built queries.
+DEGENERATE_CHECKED = TEXT_BUILT + ["order_last_shippers"]
 
 
 def _oracle_rows(sf_dir: str, name: str) -> list[str]:
@@ -61,7 +69,7 @@ def empty_dir(sf_dir, tmp_path_factory):
     return str(out)
 
 
-@pytest.mark.parametrize("name", TEXT_BUILT)
+@pytest.mark.parametrize("name", DEGENERATE_CHECKED)
 def test_text_on_empty_tables_matches_oracle(spark, empty_dir, name):
     """With every table empty, Spark and DuckDB return the same rows:
     an empty result, or the one row per edge or class of zero counts
@@ -92,7 +100,7 @@ def all_null_dir(sf_dir, tmp_path_factory):
     return str(out)
 
 
-@pytest.mark.parametrize("name", TEXT_BUILT)
+@pytest.mark.parametrize("name", DEGENERATE_CHECKED)
 def test_text_on_all_null_columns_matches_oracle(spark, all_null_dir, name):
     """With every non-key column NULL, Spark and DuckDB return the same
     rows: NULL groups, NULL aggregates and dropped join keys agree."""
@@ -110,3 +118,81 @@ def test_nation_trade_flows_matches_oracle_where_trade_exists(spark, sf_dir):
     got = _spark_rows(entry.queries()[name](spark, larger_dir))
     assert len(got) == 14
     assert got == _oracle_rows(larger_dir, name)
+
+
+#: Small ``lineitem`` corpora for ``order_last_shippers``, one per rule
+#: its one-aggregate form decides without the oracle's per-supplier join:
+#: ``(order, supplier, ship day)`` rows, and the ``(s_name, n_orders)``
+#: rows both engines must return. Each corpus keeps one order whose
+#: laggard counts, so an empty result cannot pass.
+LAST_SHIPPER_CASES = {
+    # suppliers 1 and 2 both ship last on day 2: no unique laggard
+    "ship_date_tie": (
+        [(1, 1, 2), (1, 2, 2), (1, 3, 1), (2, 1, 1), (2, 2, 3)],
+        [("S2", 1)],
+    ),
+    # a NULL supplier tied last blocks the laggard; a NULL supplier is a
+    # second supplier; a NULL supplier shipping last is no laggard
+    "tie_with_null_supplier": (
+        [(1, 1, 3), (1, None, 3), (2, None, 1), (2, 3, 2), (3, None, 4),
+         (3, 1, 2)],
+        [("S3", 1)],
+    ),
+    # a supplier with no ship date still counts as a supplier and never
+    # ships last; an order with no ship date has no laggard
+    "null_ship_date": (
+        [(1, 1, 1), (1, 2, None), (2, 1, None), (2, 2, None), (3, 1, 1),
+         (3, 2, None), (3, 2, 2)],
+        [("S1", 1), ("S2", 1)],
+    ),
+    # one supplier, one NULL supplier or one line per order: no laggard;
+    # lines without an order key are no order
+    "one_supplier_per_order": (
+        [(1, 1, 1), (1, 1, 2), (2, 2, 1), (3, None, 1), (3, None, 2),
+         (4, 1, 1), (4, 3, 2), (None, 1, 1), (None, 2, 2)],
+        [("S3", 1)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(LAST_SHIPPER_CASES))
+def test_order_last_shippers_decides_like_oracle(spark, sf_dir, tmp_path, case):
+    """Ship-date ties, NULL suppliers, NULL ship dates and single-supplier
+    orders: the one-aggregate builder and its oracle text name the same
+    laggards."""
+    lines, expected = LAST_SHIPPER_CASES[case]
+    for table in TABLES:
+        if table not in ("lineitem", "supplier"):
+            os.symlink(f"{sf_dir}/{table}.parquet", tmp_path / f"{table}.parquet")
+    day0 = datetime.datetime(2000, 1, 1)
+    li_schema = pq.read_schema(f"{sf_dir}/lineitem.parquet")
+    columns = {
+        "l_orderkey": [o for o, _, _ in lines],
+        "l_suppkey": [s for _, s, _ in lines],
+        "l_shipdate": [
+            None if d is None else day0 + datetime.timedelta(days=d)
+            for _, _, d in lines
+        ],
+    }
+    pq.write_table(
+        pa.table(
+            [
+                pa.array(columns.get(f.name, [None] * len(lines)), f.type)
+                for f in li_schema
+            ],
+            schema=li_schema,
+        ),
+        tmp_path / "lineitem.parquet",
+    )
+    supp_schema = pq.read_schema(f"{sf_dir}/supplier.parquet")
+    supp = {"s_suppkey": [1, 2, 3], "s_name": ["S1", "S2", "S3"]}
+    pq.write_table(
+        pa.table(
+            [pa.array(supp.get(f.name, [None] * 3), f.type) for f in supp_schema],
+            schema=supp_schema,
+        ),
+        tmp_path / "supplier.parquet",
+    )
+    got = entry.queries()["order_last_shippers"](spark, str(tmp_path))
+    assert [tuple(r) for r in got.collect()] == expected
+    assert _spark_rows(got) == _oracle_rows(str(tmp_path), "order_last_shippers")
